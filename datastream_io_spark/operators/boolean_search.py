@@ -37,9 +37,11 @@ exact BM25 summed over the query's POSITIVE terms that each candidate
 contains (sorted term order — same determinism contract as Q3).
 
 Execution: one bucket-pruned postings scan over ALL tree terms →
-per-split ``applyInPandas`` kernel evaluates the tree with sorted-array
-set ops (intersect/union/setdiff) over decoded doc ids, applies
-positional phrase filters, exact-scores ≤k survivors → global top-k.
+per-split kernel evaluates the tree with sorted-array set ops
+(intersect/union/setdiff) over decoded doc ids, applies positional
+phrase filters, exact-scores ≤k survivors → global top-k. Under the
+single-task gate the scan and kernels run on the driver (zero Spark
+jobs); past it the kernel is a per-split ``applyInPandas``.
 The AST is plain nested tuples, so the kernel closure pickles cleanly.
 """
 
@@ -61,14 +63,18 @@ from datastream_io_spark.operators.indexed_search import (
     _and_candidates,
     _near_filter,
     _check_format,
+    _driver_gate,
     _drop_dead,
+    _est_postings,
     _exact_scores,
     _phrase_filter,
+    _rank_on_driver,
     _restrict_to_term,
     _tombstone_state,
     _tv_from,
     _with_tomb,
     global_topk,
+    lookup_terms,
     postings_rows,
 )
 
@@ -457,49 +463,31 @@ def search_boolean(spark: SparkSession, index_dir: str, query: str,
     # the positives, but the df sum feeds the single-task payload gate
     # — and lookup_terms' driver-side fast path makes it job-free on
     # small dictionaries
-    from datastream_io_spark.operators.indexed_search import (
-        SINGLE_TASK_MAX_POSTINGS,
-        _est_postings,
-        lookup_terms,
-    )
-
     rows_all = lookup_terms(spark, index_dir, sorted(all_terms),
                             n_buckets)
     idf = {r["term"]: float(r["idf"]) for r in rows_all
            if r["term"] in positives}
-
     tomb, tomb_join = _tombstone_state(spark, index_dir)
-    prows = _with_tomb(
-        postings_rows(spark, index_dir, buckets, sorted(all_terms)),
-        tomb_join)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         blocks_of = {r.term: list(r.blocks) for r in pdf.itertuples()}
         tv = _tv_from(pdf, tomb)
         return score_tree_split(tree, idf, avgdl, k, blocks_of, {}, tv)
 
-    est = _est_postings(rows_all)
-    if (tomb_join is None and est is not None
-            and 0 < est <= SINGLE_TASK_MAX_POSTINGS):
-        # small query by dictionary statistics → 1-task, 0-Exchange
-        # rank job (identical per-split output; see _wand_topk)
-        def kernel_single(it):
-            pdfs = [p for p in it if len(p)]
-            if not pdfs:
-                return
-            pdf = (pd.concat(pdfs, ignore_index=True)
-                   if len(pdfs) > 1 else pdfs[0])
-            outs = [kernel(g)
-                    for _, g in pdf.groupby("split_id", sort=False)]
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-        cand = prows.coalesce(1).mapInPandas(
-            kernel_single, "doc_id long, score double")
+    # small query by dictionary statistics → answered on the driver,
+    # zero Spark jobs (see _wand_topk)
+    on_driver = _driver_gate(_est_postings(rows_all), tomb_join)
+    if on_driver:
+        cand = _rank_on_driver(spark, index_dir, buckets,
+                               sorted(all_terms), kernel, k)
     else:
+        prows = _with_tomb(
+            postings_rows(spark, index_dir, buckets, sorted(all_terms)),
+            tomb_join)
         cand = prows.groupBy("split_id").applyInPandas(
             kernel, "doc_id long, score double")
-    return global_topk(spark, index_dir, cand, k, with_doc_cols)
+    return global_topk(spark, index_dir, cand, k, with_doc_cols,
+                       ranked=on_driver)
 
 
 def count_boolean(spark: SparkSession, index_dir: str,

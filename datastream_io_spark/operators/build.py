@@ -336,14 +336,51 @@ def _with_split(corpus: DataFrame, n_splits: int) -> DataFrame:
     the partition column and Spark prunes directories, so staging
     reads each row once no matter how many tasks run. The column MUST
     be a function of the doc key (all duplicates of a key in one
-    split) with values in [0, n_splits) — stage_plan verifies BOTH
-    (out-of-range values raise there; a key whose duplicates straddle
-    splits raises there too, because split-local dedupe would
-    otherwise index it once per split under two doc_ids). Otherwise
-    derive the hash split."""
+    split) with values in [0, n_splits) — stage_plan and stage_corpus
+    verify BOTH (:func:`_split_key_counts`: out-of-range values raise;
+    a key whose duplicates straddle splits raises too, because
+    split-local dedupe would otherwise index it once per split under
+    two doc_ids). Otherwise derive the hash split."""
     if "split_id" in corpus.columns:
         return corpus
     return corpus.withColumn("split_id", _doc_key_split(n_splits))
+
+
+def _split_key_counts(corpus: DataFrame, n_splits: int) -> dict[int, int]:
+    """Distinct doc keys per split, in ONE aggregation job — and the
+    validation a source-supplied ``split_id`` column needs (see
+    :func:`_with_split`): its values must fall in ``[0, n_splits)``,
+    and it must be a function of the doc key. Per key first: a key
+    whose duplicates straddle splits would otherwise be counted once
+    per split AND staged once per split by the split-local dedupe —
+    counts match and the doc is silently indexed twice under two
+    doc_ids."""
+    per_key = (
+        _with_split(corpus, n_splits)
+        .groupBy("repo", "path", "commit")
+        .agg(F.min("split_id").alias("split_id"),
+             F.countDistinct("split_id").alias("_n_splits_of_key"))
+    )
+    rows = (per_key.groupBy("split_id")
+            .agg(F.count("*").alias("n"),
+                 F.max("_n_splits_of_key").alias("mx"))
+            .collect())
+    straddling = [int(r["split_id"]) for r in rows if int(r["mx"]) > 1]
+    if straddling:
+        raise ValueError(
+            "the source's split_id column is not a pure function of "
+            "(repo, path, commit): duplicate keys straddle splits "
+            f"(seen from splits {straddling[:5]}) — split-local dedupe "
+            "would index such docs once per split; fix the source "
+            "partitioning or drop the column to use the hash split")
+    counts = {int(r["split_id"]): int(r["n"]) for r in rows}
+    bad = [s for s in counts if not 0 <= s < n_splits]
+    if bad:
+        raise ValueError(
+            f"source split_id values {bad[:5]} fall outside "
+            f"[0, {n_splits}) — the source's split partition column "
+            "does not match the requested n_splits")
+    return counts
 
 
 def stage_corpus(
@@ -373,6 +410,10 @@ def stage_corpus(
             f"{index_dir} has a sharded staging in progress "
             "(staging_plan.json) — finish it via stage_split workers + "
             "stage_commit, or remove the plan to restage monolithically")
+    if "split_id" in corpus.columns:
+        # a source-supplied split column is validated like stage_plan
+        # does (one aggregation job, paid only by such sources)
+        _split_key_counts(corpus, n_splits)
     os.makedirs(index_dir, exist_ok=True)
 
     # ONE job, ONE exchange (r6): the old shape ran a count job (full
@@ -528,38 +569,7 @@ def stage_plan(
                       positions, store_content)
         return plan
     os.makedirs(index_dir, exist_ok=True)
-    # per-key first: a key whose duplicates straddle splits (a
-    # source-provided split_id that is NOT a pure function of the key)
-    # would otherwise be counted once per split here AND staged once
-    # per split by the split-local dedupe in stage_splits — counts
-    # match and the doc is silently indexed twice under two doc_ids.
-    # The per-key countDistinct costs the same shuffle the old
-    # per-split countDistinct paid; the second aggregation is tiny.
-    per_key = (
-        _with_split(corpus, n_splits)
-        .groupBy("repo", "path", "commit")
-        .agg(F.min("split_id").alias("split_id"),
-             F.countDistinct("split_id").alias("_n_splits_of_key"))
-    )
-    rows = (per_key.groupBy("split_id")
-            .agg(F.count("*").alias("n"),
-                 F.max("_n_splits_of_key").alias("mx"))
-            .collect())
-    straddling = [int(r["split_id"]) for r in rows if int(r["mx"]) > 1]
-    if straddling:
-        raise ValueError(
-            "the source's split_id column is not a pure function of "
-            "(repo, path, commit): duplicate keys straddle splits "
-            f"(seen from splits {straddling[:5]}) — split-local dedupe "
-            "would index such docs once per split; fix the source "
-            "partitioning or drop the column to use the hash split")
-    counts = {int(r["split_id"]): int(r["n"]) for r in rows}
-    bad = [s for s in counts if not 0 <= s < n_splits]
-    if bad:
-        raise ValueError(
-            f"source split_id values {bad[:5]} fall outside "
-            f"[0, {n_splits}) — the source's split partition column "
-            "does not match the requested n_splits")
+    counts = _split_key_counts(corpus, n_splits)
     offsets, acc = {}, 0
     for s in range(n_splits):
         offsets[s] = acc

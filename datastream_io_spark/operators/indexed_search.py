@@ -15,6 +15,18 @@ doc_id range. A query fans out as
       → physical TakeOrderedAndProject (no global sort)
   → optional broadcast join back to docs/ for display columns (J1).
 
+Small queries skip Spark entirely. When the dictionary says a query's
+match payload (Σ df over its terms) fits ``SINGLE_TASK_MAX_POSTINGS``,
+the same pruned postings read happens on the driver with pyarrow, the
+same per-split kernels run in-process, and the same (score desc,
+doc_id asc) cut comes back as a local relation: zero Spark jobs for
+the query and for its ``collect()``. One Python task would cost more
+than the kernels it runs — a no-op 10-row ``mapInPandas`` task burns
+~200 ms of worker CPU (4-vCPU host), against 14-32 ms for the WAND
+kernels of a typical and/or/phrase query on the driver. Hot or large
+queries, ``where``-filtered queries and split-joined tombstone sets
+keep the distributed path above.
+
 Block-max usage (Ding & Suel, SIGIR 2011 / Turtle & Flood MaxScore,
 adapted to vectorized batch execution): each block stores
 (max_tf, min_dl); since BM25's tf-normalization is increasing in tf and
@@ -48,11 +60,13 @@ capped at ~10^9 docs and stale-prone across rebuilds).
 from __future__ import annotations
 
 import os
+import threading
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from datastream_io_spark import B, K1
 from datastream_io_spark.operators.build import read_stats
@@ -79,24 +93,39 @@ from datastream_io_spark.operators.relational_search import (
 AUTO_DICT_DRIVER_MAX_TERMS = 4_000_000
 
 # single-task rank gate: when the dictionary says a query's total match
-# payload (Σ df over its terms) is at most this many postings, the rank
-# job runs as ONE task with no exchange (the per-split kernels execute
-# sequentially inside it — identical results). 2M postings is ~8-20 MB
-# of compressed blocks and a few ms of numpy decode: far below where
-# per-split parallelism starts to pay for its shuffle + extra stage.
-# Driven by plan-time dictionary statistics, so the same gate is valid
-# at any corpus scale; hot terms overflow it and keep the parallel
-# per-split kernel. Override via env for clusters whose task memory
-# budgets differ.
+# payload (Σ df over its terms) is at most this many postings, the
+# query runs on the DRIVER (:func:`_rank_on_driver`): the bucket-pruned
+# postings files are read with pyarrow and the per-split kernels run
+# in-process — zero Spark jobs, identical results. 2M postings is
+# ~8-20 MB of compressed blocks and a few ms of numpy decode: far
+# below what one Python task costs (a no-op 10-row mapInPandas task
+# burns ~200 ms of worker CPU, half of it pyspark's per-task
+# importlib.invalidate_caches() over pyspark.zip, ~30 ms its per-task
+# gc.collect()). Driven by plan-time dictionary statistics, so the
+# same gate is valid at any corpus scale; hot terms overflow it and
+# keep the parallel per-split kernel. Override via env for drivers
+# whose memory budgets differ.
 SINGLE_TASK_MAX_POSTINGS = int(os.environ.get(
     "SPARK_GRAFT_SINGLE_TASK_MAX_POSTINGS", str(2_000_000)))
+
+# set by _rank_on_driver: the frame a plan build returned holds
+# RESULTS, so Searcher._cached_plan must not keep it
+_DRIVER_RAN = threading.local()
+
+_SCORES_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType()),
+                               T.StructField("score", T.DoubleType())])
+_MANY_SCHEMA = T.StructType([T.StructField("query_id", T.StringType())]
+                            + _SCORES_SCHEMA.fields)
 
 
 class Searcher:
     """Warm query handle over a built index: stats and the dictionary
-    are loaded once, so each query costs ONE Spark job (bucket-pruned
-    postings scan → per-split WAND → top-k) plus an optional broadcast
-    join for display columns.
+    are loaded once. A query under the single-task gate then runs on
+    the driver and costs ZERO Spark jobs (pruned pyarrow postings read
+    → per-split WAND → top-k as a local relation); a query over it
+    costs ONE Spark job (bucket-pruned postings scan → per-split WAND
+    → top-k). ``with_doc_cols`` adds a broadcast join for the display
+    columns either way.
 
     ``dict_cache`` — 'auto' (default) caches the dictionary on the
     driver when it has ≤ AUTO_DICT_DRIVER_MAX_TERMS terms (read from
@@ -152,12 +181,14 @@ class Searcher:
             os.path.join(index_dir, "postings"))
         self._docs_df = spark.read.parquet(
             os.path.join(index_dir, "docs"))
-        # warm PLAN cache: building a rank DataFrame costs ~60-100 ms of
-        # py4j + Catalyst analysis per call; identical (query, k, mode)
-        # requests reuse the lazy plan — every collect still executes
-        # from the index files (plans, never results, are cached). Only
-        # live when the index has no tombstones: tombstone state is
-        # resolved at plan-build time and deletes must stay LIVE, so
+        # warm PLAN cache: building a distributed rank DataFrame costs
+        # ~60-100 ms of py4j + Catalyst analysis per call; identical
+        # (query, k, mode) requests reuse the lazy plan — every collect
+        # still executes from the index files (plans, never results,
+        # are cached). A build that ran on the driver returned results,
+        # so it is never cached: the next call re-reads the postings.
+        # Only live when the index has no tombstones: tombstone state
+        # is resolved at plan-build time and deletes must stay LIVE, so
         # any tombstone presence bypasses AND clears the cache (cheap
         # existence probes per call).
         self._plan_cache: dict = {}
@@ -169,9 +200,12 @@ class Searcher:
             return build()
         df = self._plan_cache.get(key)
         if df is None:
-            if len(self._plan_cache) >= 512:
-                self._plan_cache.pop(next(iter(self._plan_cache)))
-            df = self._plan_cache[key] = build()
+            _DRIVER_RAN.flag = False
+            df = build()
+            if not _DRIVER_RAN.flag:
+                if len(self._plan_cache) >= 512:
+                    self._plan_cache.pop(next(iter(self._plan_cache)))
+                self._plan_cache[key] = df
         return df
 
     def _empty_scores(self) -> DataFrame:
@@ -385,7 +419,8 @@ class Searcher:
         """Q13 on the warm path — every batched mode with ALL planning
         (term lookup, boolean idf, wildcard/fuzzy/regex expansion,
         near windows) resolved from the driver-cached dict: the whole
-        batch costs ONE Spark job regardless of mode. Results identical
+        batch costs at most ONE Spark job regardless of mode (none
+        under the single-task gate). Results identical
         to the module-level :func:`search_many` (parity-tested per
         mode)."""
         if mode not in ("and", "or", "phrase", "boolean", "wildcard",
@@ -1196,9 +1231,11 @@ def search_many(spark: SparkSession, index_dir: str,
                 mode: str = "and", max_dist: int = 1,
                 max_expansions: int = 128, slop: int = 2,
                 ordered: bool = False) -> DataFrame:
-    """Q13 — batched serving: answer MANY queries in ONE Spark job.
+    """Q13 — batched serving: answer MANY queries in ONE Spark job
+    (none when the batch's Σ df fits the single-task gate: the batch
+    then runs on the driver like a small single query).
 
-    A single-query search pays a fixed job-launch cost (~hundreds of ms
+    A distributed search pays a fixed job-launch cost (~hundreds of ms
     in local mode, scheduler round-trips on a cluster); a serving
     workload should amortize it. One bucket-pruned postings scan covers
     the UNION of all query terms; inside each split the per-query
@@ -1379,9 +1416,6 @@ def _search_many_wand_tail(spark: SparkSession, index_dir: str,
                       for fi, _, _, _ in plans_w.values() for t in fi})
     needed = sorted({t for fi, _, _, _ in plans_w.values() for t in fi})
     tomb, tomb_join = _tombstone_state(spark, index_dir)
-    prows = _with_tomb(
-        postings_rows(spark, index_dir, buckets, needed,
-                      postings_df=postings_df), tomb_join)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         rows_by_term = {r.term: (r.term, list(r.blocks))
@@ -1401,9 +1435,10 @@ def _search_many_wand_tail(spark: SparkSession, index_dir: str,
                 outs.append(out)
         return _concat_query_outs(outs)
 
-    est = (None if df_by_term is None or tomb_join is not None
+    est = (None if df_by_term is None
            else sum(df_by_term.get(t, 0) for t in needed))
-    return _rank_many(spark, prows, kernel, k, est_postings=est)
+    return _rank_many(spark, index_dir, buckets, needed, postings_df,
+                      tomb_join, kernel, k, est)
 
 
 def _search_many_boolean_tail(spark: SparkSession, index_dir: str,
@@ -1421,9 +1456,6 @@ def _search_many_boolean_tail(spark: SparkSession, index_dir: str,
     n_buckets = int(stats["n_buckets"])
     buckets = sorted({term_bucket(t, n_buckets) for t in all_terms})
     tomb, tomb_join = _tombstone_state(spark, index_dir)
-    prows = _with_tomb(postings_rows(spark, index_dir, buckets,
-                                     all_terms, postings_df=postings_df),
-                       tomb_join)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         blocks_of = {r.term: list(r.blocks) for r in pdf.itertuples()}
@@ -1441,44 +1473,23 @@ def _search_many_boolean_tail(spark: SparkSession, index_dir: str,
     # df_by_term must cover every ALL_TERMS member the dict knows (NOT
     # leaves included — their postings are read too); absent-from-dict
     # terms have no posting rows and correctly count 0
-    est = (None if df_by_term is None or tomb_join is not None
+    est = (None if df_by_term is None
            else sum(df_by_term.get(t, 0) for t in all_terms))
-    return _rank_many(spark, prows, kernel, k, est_postings=est)
+    return _rank_many(spark, index_dir, buckets, all_terms, postings_df,
+                      tomb_join, kernel, k, est)
 
 
-def _rank_many(spark: SparkSession, prows: DataFrame, kernel,
-               k: int, est_postings: int | None = None) -> DataFrame:
-    if (est_postings is not None
-            and 0 < est_postings <= SINGLE_TASK_MAX_POSTINGS):
-        # SMALL batch, by dictionary statistics: one task sees every
-        # split's rows, runs the per-split kernels sequentially
-        # (identical per-split output) and applies the per-query
-        # global cut + final ordering in pandas — a 1-stage,
-        # 0-Exchange job instead of scan → split shuffle → rank-window
-        # shuffle → global sort (4 stages). Output rows and order are
-        # identical: same (score desc, doc_id asc) cut per query_id,
-        # same (query_id, score desc, doc_id asc) presentation order
-        # (single partition ⇒ row order is total).
-        def kernel_single(it):
-            pdfs = [p for p in it if len(p)]
-            pdf = (pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1
-                   else (pdfs[0] if pdfs else pd.DataFrame(
-                       {"split_id": [], "term": [], "blocks": []})))
-            outs = [kernel(g)
-                    for _, g in pdf.groupby("split_id", sort=False)]
-            allq = _concat_query_outs(outs)
-            if not len(allq):
-                return
-            cut = (allq.sort_values(
-                       ["query_id", "score", "doc_id"],
-                       ascending=[True, False, True], kind="mergesort")
-                   .groupby("query_id", sort=False).head(k)
-                   .reset_index(drop=True))
-            yield cut
-
-        return prows.coalesce(1).mapInPandas(
-            kernel_single, "query_id string, doc_id long, score double")
-
+def _rank_many(spark: SparkSession, index_dir: str, buckets: list,
+               terms: list[str], postings_df, tomb_join, kernel, k: int,
+               est_postings: int | None) -> DataFrame:
+    """Per-query top-k over a batch's per-split kernel output: on the
+    driver under the single-task gate (:func:`_rank_on_driver`), else
+    the per-split parallel kernel with a per-query rank window."""
+    if _driver_gate(est_postings, tomb_join):
+        return _rank_on_driver(spark, index_dir, buckets, terms, kernel,
+                               k, _MANY_SCHEMA)
+    prows = _with_tomb(postings_rows(spark, index_dir, buckets, terms,
+                                     postings_df=postings_df), tomb_join)
     cand = prows.groupBy("split_id").applyInPandas(
         kernel, "query_id string, doc_id long, score double")
     # per-query candidates are ≤ k × n_splits rows — the rank window is
@@ -1971,9 +1982,6 @@ def _facet_counts_impl(spark, index_dir, stats, query, facet_col, mode,
     idf = {r["term"]: float(r["idf"]) for r in dict_rows}
     buckets = sorted({int(r["term_bucket"]) for r in dict_rows})
     tomb, tomb_join = _tombstone_state(spark, index_dir)
-    prows = _with_tomb(
-        postings_rows(spark, index_dir, buckets, sorted(idf),
-                      postings_df=postings_df), tomb_join)
     avgdl, n_terms = float(stats["avgdl"]), len(terms)
 
     def kernel_all(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1982,27 +1990,16 @@ def _facet_counts_impl(spark, index_dir, stats, query, facet_col, mode,
         return _wand_split(pdf, idf, avgdl, None, mode, n_terms, phrase,
                            tomb=tomb, score=False)
 
-    est = _est_postings(dict_rows)
-    if (tomb_join is None and est is not None
-            and 0 < est <= SINGLE_TASK_MAX_POSTINGS):
-        # small query by dictionary statistics → one task enumerates
-        # every split's match set with no exchange (see _wand_topk)
-        def kernel_single(it):
-            pdfs = [p for p in it if len(p)]
-            if not pdfs:
-                return
-            pdf = (pd.concat(pdfs, ignore_index=True)
-                   if len(pdfs) > 1 else pdfs[0])
-            outs = [kernel_all(g)
-                    for _, g in pdf.groupby("split_id", sort=False)]
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-        cand = prows.coalesce(1).mapInPandas(
-            kernel_single, "doc_id long, score double").select("doc_id")
+    if _driver_gate(_est_postings(dict_rows), tomb_join):
+        cand = _rank_on_driver(spark, index_dir, buckets, sorted(idf),
+                               kernel_all, None)
     else:
+        prows = _with_tomb(
+            postings_rows(spark, index_dir, buckets, sorted(idf),
+                          postings_df=postings_df), tomb_join)
         cand = prows.groupBy("split_id").applyInPandas(
-            kernel_all, "doc_id long, score double").select("doc_id")
+            kernel_all, "doc_id long, score double")
+    cand = cand.select("doc_id")
     docs = docs_df
     if where is not None:
         docs = docs.where(where)
@@ -2476,15 +2473,80 @@ def postings_rows(spark: SparkSession, index_dir: str, buckets: list,
     ).select("split_id", "term", "blocks")
 
 
+def _driver_gate(est_postings: int | None, tomb_join) -> bool:
+    """The single-task gate: the query's match payload (Σ df over every
+    term it scans) is known and at most ``SINGLE_TASK_MAX_POSTINGS``,
+    and its tombstones (if any) are a broadcast-size array — a
+    split-joined set stays with the per-split kernels that own it."""
+    return (tomb_join is None and est_postings is not None
+            and 0 < est_postings <= SINGLE_TASK_MAX_POSTINGS)
+
+
+def _read_postings_local(index_dir: str, buckets: list,
+                         terms: list[str]) -> pd.DataFrame:
+    """:func:`postings_rows` read on the driver: pyarrow opens only the
+    query's ``postings/term_bucket=K`` directories and pushes
+    ``term IN q`` into the row-group statistics — the same pruned read
+    :func:`lookup_terms` makes of ``dict/``."""
+    import pyarrow.parquet as pq
+
+    parts = []
+    for b in buckets:
+        bdir = os.path.join(index_dir, "postings", f"term_bucket={b}")
+        if not os.path.isdir(bdir):
+            continue
+        t = pq.read_table(bdir, columns=["split_id", "term", "blocks"],
+                          filters=[("term", "in", list(terms))])
+        if t.num_rows:
+            parts.append(t.to_pandas())
+    if not parts:
+        return pd.DataFrame({"split_id": [], "term": [], "blocks": []})
+    return pd.concat(parts, ignore_index=True)
+
+
+def _rank_on_driver(spark: SparkSession, index_dir: str, buckets: list,
+                    terms: list[str], kernel, k: int | None,
+                    schema: T.StructType = _SCORES_SCHEMA) -> DataFrame:
+    """Answer a gated query in-process: read its pruned postings rows
+    (:func:`_read_postings_local`), run the same per-split ``kernel``
+    the distributed path runs per ``split_id`` group, then apply the
+    same cut and order — (score desc, doc_id asc), per ``query_id``
+    for batches (``schema`` leads with it); ``k=None`` keeps every
+    row. Returns the rows as a local relation (a LocalTableScan, so
+    its collect launches no job). It holds results, not a plan: the
+    flag it sets keeps the frame out of ``Searcher._cached_plan``."""
+    import pyarrow as pa
+
+    pdf = _read_postings_local(index_dir, buckets, terms)
+    outs = [kernel(g) for _, g in pdf.groupby("split_id", sort=False)]
+    names = schema.names
+    out = (pd.concat(outs, ignore_index=True) if outs
+           else pd.DataFrame({c: [] for c in names}))
+    if k is not None and len(out):
+        qid = names[:-2]
+        out = out.sort_values(qid + ["score", "doc_id"],
+                              ascending=[True] * len(qid) + [False, True],
+                              kind="mergesort")
+        out = (out.groupby(qid, sort=False).head(k) if qid
+               else out.head(k))
+    _DRIVER_RAN.flag = True
+    return spark.createDataFrame(
+        pa.Table.from_pandas(out[names], preserve_index=False), schema)
+
+
 def global_topk(spark: SparkSession, index_dir: str, cand: DataFrame,
                 k: int, with_doc_cols: bool,
-                docs_df: DataFrame | None = None) -> DataFrame:
+                docs_df: DataFrame | None = None,
+                ranked: bool = False) -> DataFrame:
     """The Q6 cut + optional display join every query path shares —
     keeps the (score desc, doc_id asc) tie-break contract and the
     broadcast-small-side convention in one place. ``docs_df`` lets a
     warm Searcher reuse one resolved docs scan (same directory-listing
-    cost as the postings scan — see :func:`postings_rows`)."""
-    topk = cand.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    cost as the postings scan — see :func:`postings_rows`).
+    ``ranked`` marks ``cand`` as an already cut and ordered top-k (a
+    driver-computed frame), so only the display join is planned."""
+    topk = (cand if ranked
+            else cand.orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
     if with_doc_cols:
         docs = (docs_df if docs_df is not None else spark.read.parquet(
             os.path.join(index_dir, "docs"))).select(
@@ -2569,6 +2631,24 @@ def _wand_topk(spark, index_dir, idf, buckets, avgdl, n_terms, k,
                est_postings=None):
     found_terms = sorted(idf)
     tomb, tomb_join = _tombstone_state(spark, index_dir)
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _wand_split(pdf, idf, avgdl, k, mode, n_terms, phrase,
+                           tomb=tomb)
+
+    if where is None and _driver_gate(est_postings, tomb_join):
+        # SMALL query, by dictionary statistics (Σ df over the query's
+        # terms): answered on the driver, zero Spark jobs. Large/hot
+        # queries, filtered queries and tombstone split-joins keep the
+        # per-split parallel kernel below — the decode work there is
+        # real and must spread across the cluster.
+        cand = _rank_on_driver(spark, index_dir, buckets, found_terms,
+                               kernel, k)
+        if cand_only:
+            return cand
+        return global_topk(spark, index_dir, cand, k, with_doc_cols,
+                           docs_df=docs_df, ranked=True)
+
     prows = _with_tomb(
         postings_rows(spark, index_dir, buckets, found_terms,
                       postings_df=postings_df), tomb_join)
@@ -2576,44 +2656,6 @@ def _wand_topk(spark, index_dir, idf, buckets, avgdl, n_terms, k,
         return _filtered_topk(spark, index_dir, prows, idf, avgdl,
                               n_terms, k, mode, with_doc_cols, phrase,
                               where, tomb, docs_df=docs_df)[0]
-    kernel_k = k
-
-    if (tomb_join is None and est_postings is not None
-            and 0 < est_postings <= SINGLE_TASK_MAX_POSTINGS
-            and not (len(found_terms) == 1 and n_terms == 1)):
-        # SMALL query, by dictionary statistics (Σ df over the query's
-        # terms): every matched posting fits one task, so skip the
-        # groupBy(split_id) exchange entirely — one task reads the
-        # pruned files, groups rows by split in pandas (per-split
-        # results are IDENTICAL to the shuffled kernel) and the k-cut +
-        # TakeOrdered run in the same stage: a 1-stage, 0-Exchange rank
-        # job instead of 2 stages. Large/hot queries (or a tombstone
-        # split-join) keep the shuffled per-split parallel kernel —
-        # the decode work there is real and must spread across the
-        # cluster. The gate is plan-time metadata, not a config tuned
-        # to local core counts: at any scale it keys on the estimated
-        # decode payload.
-        def kernel_single(it):
-            pdfs = [p for p in it if len(p)]
-            if not pdfs:
-                return
-            pdf = (pd.concat(pdfs, ignore_index=True)
-                   if len(pdfs) > 1 else pdfs[0])
-            outs = [
-                _wand_split(g, idf, avgdl, kernel_k, mode, n_terms,
-                            phrase, tomb=tomb)
-                for _, g in pdf.groupby("split_id", sort=False)
-            ]
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-        cand = prows.coalesce(1).mapInPandas(
-            kernel_single, "doc_id long, score double")
-        if cand_only:
-            return cand
-        return global_topk(spark, index_dir, cand, k, with_doc_cols,
-                           docs_df=docs_df)
-
     if len(found_terms) == 1 and n_terms == 1:
         # single-term fast path: no cross-term alignment needed, so skip
         # the per-split shuffle — score each posting row where it is
@@ -2622,20 +2664,12 @@ def _wand_topk(spark, index_dir, idf, buckets, avgdl, n_terms, k,
         # inside one doc, and a doc's postings live in one split row.
         def kernel1(it):
             for pdf in it:
-                outs = [
-                    _wand_split(pdf.iloc[[i]], idf, avgdl, kernel_k, mode,
-                                1, phrase, tomb=tomb)
-                    for i in range(len(pdf))
-                ]
+                outs = [kernel(pdf.iloc[[i]]) for i in range(len(pdf))]
                 if outs:
                     yield pd.concat(outs, ignore_index=True)
 
         cand = prows.mapInPandas(kernel1, "doc_id long, score double")
     else:
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _wand_split(pdf, idf, avgdl, kernel_k, mode, n_terms,
-                               phrase, tomb=tomb)
-
         cand = prows.groupBy("split_id").applyInPandas(
             kernel, "doc_id long, score double")
     if cand_only:

@@ -7,6 +7,7 @@ comparisons are stable, zstd parquet.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -87,20 +88,25 @@ def _warm_python_workers(spark: SparkSession) -> None:
         spark.range(0, n, 1, n).mapInPandas(_imports, "id long").count()
         _warm_engine_paths(spark)
     except Exception:
-        pass  # warmup is best-effort; never fail session creation
+        # warmup is best-effort; never fail session creation — but say
+        # why the first real job will pay the warm-up cost instead
+        logging.getLogger(__name__).warning(
+            "Spark worker/engine warm-up failed; continuing cold",
+            exc_info=True)
     spark._dsio_workers_warm = True
 
 
 def _warm_engine_paths(spark: SparkSession) -> None:
     """Run a 64-doc throwaway build + one query at session creation so
     the JVM compiles the engine's plan shapes (sha2/window staging,
-    Arrow tokenize/encode kernels, partitioned parquet writes, the
-    pruned rank plan) BEFORE the first real job. Pure JIT/codegen and
-    commit-protocol warmup over synthetic literals: no user input is
-    read and nothing survives the call — the first production build
-    otherwise pays several seconds of one-time compilation inside its
-    own wall-clock. Disable with SPARK_GRAFT_NO_ENGINE_WARMUP=1 (e.g.
-    short-lived sessions that never build an index)."""
+    Arrow tokenize/encode kernels, partitioned parquet writes) and the
+    driver warms its small-query path BEFORE the first real job. Pure
+    JIT/codegen and commit-protocol warmup over synthetic literals: no
+    user input is read and nothing survives the call — the first
+    production build otherwise pays several seconds of one-time
+    compilation inside its own wall-clock. Disable with
+    SPARK_GRAFT_NO_ENGINE_WARMUP=1 (e.g. short-lived sessions that
+    never build an index)."""
     if os.environ.get("SPARK_GRAFT_NO_ENGINE_WARMUP"):
         return
     import shutil
@@ -125,6 +131,8 @@ def _warm_engine_paths(spark: SparkSession) -> None:
         build_index(spark, spark.read.parquet(src), idx, n_splits=2,
                     n_buckets=4, tokenizer="simple", positions=True,
                     max_concurrent_splits=2)
+        # the warm-up index is tiny, so this query takes the driver's
+        # small-query path (pyarrow postings read + in-process kernels)
         Searcher(spark, idx).search("alpha beta", 3, "and").collect()
         # second micro-build through the code tokenizer (the other
         # Arrow kernel family) — non-positional, so both codec shapes

@@ -71,3 +71,42 @@ def docs_with_text(spark, index_dir, corpus):
     return docs.join(corpus, ["repo", "path", "commit"]).select(
         "doc_id", F.col("content").alias("text")
     )
+
+
+@pytest.fixture()
+def arrow_reads(monkeypatch):
+    """Every path the driver hands to ``pyarrow.parquet.read_table``
+    while the test runs (the driver-side dict and postings reads)."""
+    import pyarrow.parquet as pq
+
+    seen: list[str] = []
+    real = pq.read_table
+
+    def spy(source, *args, **kwargs):
+        seen.append(str(source))
+        return real(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", spy)
+    return seen
+
+
+def bucket_dirs(index_dir, terms, sub="postings"):
+    """The ``<sub>/term_bucket=K`` directories holding ``terms``."""
+    import json
+    import os
+
+    from datastream_io_spark.functions.xxhash import term_bucket
+
+    with open(os.path.join(index_dir, "stats.json")) as f:
+        n_buckets = int(json.load(f)["n_buckets"])
+    return {os.path.join(index_dir, sub,
+                         f"term_bucket={term_bucket(t, n_buckets)}")
+            for t in terms}
+
+
+def reads_under(paths, index_dir, sub="postings"):
+    """The subset of recorded read paths under ``index_dir/<sub>``."""
+    import os
+
+    root = os.path.join(index_dir, sub) + os.sep
+    return {p for p in paths if p.startswith(root)}

@@ -283,3 +283,48 @@ def test_searcher_caches_resolved_scans(spark, doc_index):
     cold = search_indexed(spark, doc_index, "scan", 5, "and",
                           with_doc_cols=True).collect()
     assert [tuple(r) for r in warm] == [tuple(r) for r in cold]
+
+
+def test_freeze_golden_ids_are_global(spark, doc_index):
+    """The golden freezer scores in the BUILT index's doc-id space:
+    staging writes split-local ids, so the freezer must add each
+    split's frozen offset like the build does. doc_index is built with
+    the freezer's documents settings (3 splits, 8 buckets, simple)."""
+    import importlib.util
+
+    path = os.path.join(os.path.dirname(__file__), "..", "scripts",
+                        "freeze_golden.py")
+    spec = importlib.util.spec_from_file_location("freeze_golden", path)
+    fg = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(fg)
+
+    frozen = fg.staged_docs(spark, documents_as_corpus(spark, SF0001),
+                            3, 8, "simple")
+    key = ["doc_id", "repo", "path", "commit"]
+    docs = spark.read.parquet(f"{doc_index}/docs")
+    assert docs.select("split_id").distinct().count() >= 2
+    want = sorted(tuple(r) for r in docs.select(key).collect())
+    got = sorted(tuple(r) for r in frozen[key].itertuples(index=False))
+    assert got == want
+
+
+def test_warm_up_failure_is_logged(caplog):
+    """Session warm-up stays best-effort, but a failure is logged with
+    its cause instead of vanishing."""
+    import logging
+
+    from datastream_io_spark.session import _warm_python_workers
+
+    class _Session:
+        class sparkContext:
+            defaultParallelism = 1
+
+        def range(self, *args):
+            raise RuntimeError("no workers here")
+
+    fake = _Session()
+    with caplog.at_level(logging.WARNING):
+        _warm_python_workers(fake)
+    assert fake._dsio_workers_warm
+    assert "warm-up failed" in caplog.text
+    assert "no workers here" in caplog.text

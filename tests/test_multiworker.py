@@ -324,3 +324,27 @@ def test_stage_plan_rejects_cross_split_duplicate_keys(spark, tmp_path):
         raise AssertionError("cross-split duplicate keys accepted")
     except ValueError as e:
         assert "not a pure function" in str(e)
+
+
+def test_stage_corpus_validates_source_split_column(spark, tmp_path):
+    """The monolithic stage_corpus checks a source-supplied split_id
+    column like stage_plan does: a duplicate key straddling two splits
+    and out-of-range values both raise before anything is staged."""
+    corpus = documents_as_corpus(spark, SF0001)
+    straddle = corpus.withColumn("split_id", F.lit(0)).unionByName(
+        corpus.orderBy("repo", "path", "commit").limit(3)
+        .withColumn("split_id", F.lit(1)))
+    idx = tmp_path / "straddle"
+    try:
+        stage_corpus(spark, straddle, str(idx), 4, 8, "simple")
+        raise AssertionError("cross-split duplicate keys accepted")
+    except ValueError as e:
+        assert "not a pure function" in str(e)
+    assert not (idx / "staged_corpus").exists()
+
+    try:
+        stage_corpus(spark, corpus.withColumn("split_id", F.lit(7)),
+                     str(tmp_path / "range"), 4, 8, "simple")
+        raise AssertionError("out-of-range split_id accepted")
+    except ValueError as e:
+        assert "outside" in str(e)

@@ -16,7 +16,7 @@ from datastream_io_spark.operators.codec import (
     varint_encode,
 )
 from datastream_io_spark.plans import plan_summary, scan_info
-from tests.conftest import SF0001, load_table
+from tests.conftest import SF0001, bucket_dirs, load_table, reads_under
 
 
 def test_postings_scan_prunes_buckets_and_pushes_term(spark, doc_index):
@@ -29,10 +29,21 @@ def test_postings_scan_prunes_buckets_and_pushes_term(spark, doc_index):
     assert "term" in scans[0]["PushedFilters"]
 
 
-def test_topk_is_take_ordered_not_global_sort(spark, doc_index):
-    from datastream_io_spark.operators.indexed_search import search_indexed
+def test_topk_is_take_ordered_not_global_sort(spark, doc_index,
+                                            arrow_reads, monkeypatch):
+    from datastream_io_spark.operators import indexed_search as IX
 
-    topk = search_indexed(spark, doc_index, "window agg", 10, "and")
+    # under the single-task gate the query runs on the driver and
+    # reads only the query terms' bucket directories
+    assert IX.search_indexed(spark, doc_index, "window agg", 10,
+                             "and").collect()
+    want = bucket_dirs(doc_index, ["window", "agg"])
+    got = reads_under(arrow_reads, doc_index)
+    assert got and got <= want, (got, want)
+
+    # over the gate: the distributed plan's top-k is a TakeOrdered
+    monkeypatch.setattr(IX, "SINGLE_TASK_MAX_POSTINGS", 0)
+    topk = IX.search_indexed(spark, doc_index, "window agg", 10, "and")
     s = plan_summary(topk)
     assert s["take_ordered"], "top-k compiled to a global sort"
 
@@ -157,13 +168,24 @@ def test_match_positions_plan_is_shuffle_free(spark, pos_index):
     assert scans and "term_bucket" in scans[0]["PartitionFilters"]
 
 
-def test_boolean_search_scans_are_pruned(spark, pos_index):
+def test_boolean_search_scans_are_pruned(spark, pos_index, arrow_reads,
+                                        monkeypatch):
     """Q11 reads only the tree terms' bucket directories (postings AND
-    dict)."""
+    dict) — on the driver under the single-task gate, and in the
+    distributed plan over it."""
+    from datastream_io_spark.operators import indexed_search as IX
     from datastream_io_spark.operators.boolean_search import search_boolean
 
-    df = search_boolean(spark, pos_index,
-                        "window AND (agg OR scan) NOT merge", 10)
+    query = "window AND (agg OR scan) NOT merge"
+    terms = ["window", "agg", "scan", "merge"]
+    assert search_boolean(spark, pos_index, query, 10).collect()
+    for sub in ("postings", "dict"):
+        want = bucket_dirs(pos_index, terms, sub)
+        got = reads_under(arrow_reads, pos_index, sub)
+        assert got and got <= want, (sub, got, want)
+
+    monkeypatch.setattr(IX, "SINGLE_TASK_MAX_POSTINGS", 0)
+    df = search_boolean(spark, pos_index, query, 10)
     scans = scan_info(df)
     assert scans, "no FileScan found"
     for s in scans:

@@ -45,14 +45,32 @@ def test_single_task_gate_parity_all_modes(spark, pos_index,
     assert outs[gates[0]] == outs[gates[1]]
 
 
-def test_single_task_plan_has_no_exchange(spark, pos_index):
-    """Under the gate the rank plan is scan → mapInPandas → TakeOrdered:
-    zero Exchange nodes (the before-plan had one per rank job)."""
+def test_single_task_plan_has_no_exchange(spark, pos_index, arrow_reads,
+                                          monkeypatch):
+    """Under the gate the query has no rank plan at all: the driver
+    reads the query terms' bucket directories and returns a local
+    relation (zero Exchange, zero FileScan). Over the gate, a
+    single-term query keeps the exchange-free scan → mapInPandas →
+    TakeOrdered plan, and a multi-term query pays exactly one
+    Exchange — the per-split shuffle, no range exchange for the
+    top-k."""
     from datastream_io_spark.plans import plan_summary
+    from tests.conftest import bucket_dirs, reads_under
 
     s = IX.Searcher(spark, pos_index)
     df = s.search("window agg", 10, "and")
-    assert plan_summary(df)["n_exchanges"] == 0
+    summary = plan_summary(df)
+    assert summary["n_exchanges"] == 0 and not summary["scans"]
+    got = reads_under(arrow_reads, pos_index)
+    assert got and got <= bucket_dirs(pos_index, ["window", "agg"])
+
+    monkeypatch.setattr(IX, "SINGLE_TASK_MAX_POSTINGS", 0)
+    s = IX.Searcher(spark, pos_index)
+    one = plan_summary(s.search("window", 10, "and"))
+    assert one["n_exchanges"] == 0 and one["take_ordered"]
+    assert "term_bucket" in one["scans"][0]["PartitionFilters"]
+    assert plan_summary(s.search("window agg", 10, "and"))[
+        "n_exchanges"] == 1
 
 
 def test_plan_cache_keeps_deletes_live(spark, tmp_path):
