@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from datastream_io_spark.operators.build import build_index
 from datastream_io_spark.operators.indexed_search import search_indexed
+from datastream_io_spark.session import aqe_disabled
 
 _MANIFEST = "partitioned.json"
 _SAFE = re.compile(r"^[A-Za-z0-9_.\-]+$")
@@ -88,11 +89,12 @@ def read_partitioned(root: str) -> dict:
         return json.load(f)
 
 
-# facet_counts_partitioned / search_all_partitions toggle the
-# SESSION-global AQE flag around their collects; without mutual
+# facet_counts_partitioned / search_all_partitions set the
+# SESSION-global shuffle width around their collects; without mutual
 # exclusion two concurrent callers can interleave save/restore and
-# leave AQE off for the whole session.
-_AQE_TOGGLE_LOCK = threading.Lock()
+# leave it changed for the whole session. AQE goes through the shared
+# re-entrant scope (session.aqe_disabled) that builds use too.
+_SHUFFLE_WIDTH_LOCK = threading.Lock()
 
 
 def _collect_no_aqe(spark: SparkSession, df: DataFrame,
@@ -105,17 +107,14 @@ def _collect_no_aqe(spark: SparkSession, df: DataFrame,
     know their true group count pass ``shuffle_partitions`` — on a
     plain 200-partition session a 5-subindex union otherwise runs
     5 × 200 mostly-empty reduce tasks."""
-    with _AQE_TOGGLE_LOCK:
-        aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    with _SHUFFLE_WIDTH_LOCK, aqe_disabled(spark):
         sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
         if shuffle_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions",
                            str(max(1, int(shuffle_partitions))))
         try:
             return df.collect()
         finally:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe)
             spark.conf.set("spark.sql.shuffle.partitions", sp)
 
 

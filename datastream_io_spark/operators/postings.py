@@ -61,6 +61,55 @@ def term_freq_positional(pos_terms_df: DataFrame, doc_col: str = "doc_id",
         F.sort_array(F.collect_list("pos")).alias("positions"))
 
 
+def term_stats_frame(pdf, mode: str, positions: bool,
+                     doc_col: str = "doc_id"):
+    """The fused tokenize+tf kernel over ONE pandas batch of
+    (doc_id, content): rows (doc_id, term, tf, dl[, positions]) per
+    (doc, term), or None when the batch has no tokens. Module-level so
+    the Spark wrapper (:func:`term_stats_fused`) and the in-process
+    build (``driver_build``) run the same code; a doc's rows depend only
+    on its own content, so batching never changes them."""
+    import numpy as np
+    import pandas as pd
+
+    from datastream_io_spark.functions.tokenize import tokenize_series
+
+    if len(pdf) == 0:
+        return None
+    toks = tokenize_series(pdf["content"], mode)
+    lens = np.fromiter((len(t) for t in toks), dtype=np.int64,
+                       count=len(toks))
+    total = int(lens.sum())
+    if total == 0:
+        return None
+    doc_ids = pdf[doc_col].to_numpy(np.int64)
+    flat = np.empty(total, dtype=object)
+    k = 0
+    for t in toks:
+        n = len(t)
+        flat[k:k + n] = t
+        k += n
+    doc_idx = np.repeat(np.arange(len(toks)), lens)
+    offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
+    pos = (np.arange(total) - np.repeat(offs, lens)).astype(np.int32)
+    codes, uniques = pd.factorize(flat)
+    order = np.lexsort((pos, codes, doc_idx))
+    d_s, c_s, p_s = doc_idx[order], codes[order], pos[order]
+    change = np.flatnonzero(
+        (d_s[1:] != d_s[:-1]) | (c_s[1:] != c_s[:-1])) + 1
+    starts = np.concatenate(([0], change))
+    ends = np.concatenate((change, [total]))
+    out = {
+        doc_col: doc_ids[d_s[starts]],
+        "term": uniques.take(c_s[starts]),
+        "tf": (ends - starts).astype(np.int64),
+        "dl": lens[d_s[starts]],
+    }
+    if positions:
+        out["positions"] = np.split(p_s, change)
+    return pd.DataFrame(out)
+
+
 def term_stats_fused(df: DataFrame, mode: str, positions: bool,
                      doc_col: str = "doc_id") -> DataFrame:
     """T1+T2+T3(+T4) fused into ONE mapInPandas kernel:
@@ -76,50 +125,14 @@ def term_stats_fused(df: DataFrame, mode: str, positions: bool,
     needs anyway. At 10^12 files that deletes the largest shuffle of
     the build (BASELINE.json north_star: vectorized Arrow/pandas UDFs,
     partitioning/shuffle handled explicitly)."""
-    from datastream_io_spark.functions.tokenize import tokenize_series
-
     out_schema = f"{doc_col} long, term string, tf long, dl long" + (
         ", positions array<int>" if positions else "")
 
     def kernel(it):
-        import numpy as np
-        import pandas as pd
-
         for pdf in it:
-            if len(pdf) == 0:
-                continue
-            toks = tokenize_series(pdf["content"], mode)
-            lens = np.fromiter((len(t) for t in toks), dtype=np.int64,
-                               count=len(toks))
-            total = int(lens.sum())
-            if total == 0:
-                continue
-            doc_ids = pdf[doc_col].to_numpy(np.int64)
-            flat = np.empty(total, dtype=object)
-            k = 0
-            for t in toks:
-                n = len(t)
-                flat[k:k + n] = t
-                k += n
-            doc_idx = np.repeat(np.arange(len(toks)), lens)
-            offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            pos = (np.arange(total) - np.repeat(offs, lens)).astype(np.int32)
-            codes, uniques = pd.factorize(flat)
-            order = np.lexsort((pos, codes, doc_idx))
-            d_s, c_s, p_s = doc_idx[order], codes[order], pos[order]
-            change = np.flatnonzero(
-                (d_s[1:] != d_s[:-1]) | (c_s[1:] != c_s[:-1])) + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [total]))
-            out = {
-                doc_col: doc_ids[d_s[starts]],
-                "term": uniques.take(c_s[starts]),
-                "tf": (ends - starts).astype(np.int64),
-                "dl": lens[d_s[starts]],
-            }
-            if positions:
-                out["positions"] = np.split(p_s, change)
-            yield pd.DataFrame(out)
+            out = term_stats_frame(pdf, mode, positions, doc_col)
+            if out is not None:
+                yield out
 
     return df.mapInPandas(kernel, out_schema)
 

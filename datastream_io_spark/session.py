@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import logging
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -65,6 +67,37 @@ def get_spark(
     return spark
 
 
+_AQE_LOCK = threading.Lock()
+_AQE_SCOPES: dict[int, list] = {}  # id(session) -> [depth, saved value]
+
+
+@contextmanager
+def aqe_disabled(spark: SparkSession):
+    """Scope with adaptive query execution off on ``spark``. AQE is a
+    session-global conf, so overlapping scopes (concurrent builds,
+    finalize inside a build, other threads) share one saved value:
+    the first scope to enter saves and disables, the last to leave
+    restores. A raw save/set/restore per scope could restore "on"
+    under a still-running scope, or save another scope's "off" and
+    leave AQE disabled for good."""
+    key = id(spark)
+    with _AQE_LOCK:
+        scope = _AQE_SCOPES.get(key)
+        if scope is None:
+            scope = _AQE_SCOPES[key] = [
+                0, spark.conf.get("spark.sql.adaptive.enabled", "true")]
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+        scope[0] += 1
+    try:
+        yield
+    finally:
+        with _AQE_LOCK:
+            scope[0] -= 1
+            if scope[0] == 0:
+                del _AQE_SCOPES[key]
+                spark.conf.set("spark.sql.adaptive.enabled", scope[1])
+
+
 def _warm_python_workers(spark: SparkSession) -> None:
     """Spawn the session's Python worker pool once, at session
     creation: one task per core imports numpy/pandas/pyarrow so the
@@ -100,11 +133,13 @@ def _warm_engine_paths(spark: SparkSession) -> None:
     """Run a 64-doc throwaway build + one query at session creation so
     the JVM compiles the engine's plan shapes (sha2/window staging,
     Arrow tokenize/encode kernels, partitioned parquet writes) and the
-    driver warms its small-query path BEFORE the first real job. Pure
-    JIT/codegen and commit-protocol warmup over synthetic literals: no
-    user input is read and nothing survives the call — the first
-    production build otherwise pays several seconds of one-time
-    compilation inside its own wall-clock. Disable with
+    driver warms its small-query path BEFORE the first real job. The
+    builds call the distributed phases directly: ``build_index`` would
+    build a corpus this small in-process and warm nothing in the JVM.
+    Pure JIT/codegen and commit-protocol warmup over synthetic
+    literals: no user input is read and nothing survives the call —
+    the first production build otherwise pays several seconds of
+    one-time compilation inside its own wall-clock. Disable with
     SPARK_GRAFT_NO_ENGINE_WARMUP=1 (e.g. short-lived sessions that
     never build an index)."""
     if os.environ.get("SPARK_GRAFT_NO_ENGINE_WARMUP"):
@@ -112,10 +147,22 @@ def _warm_engine_paths(spark: SparkSession) -> None:
     import shutil
     import tempfile
 
-    from datastream_io_spark.operators.build import build_index
+    from datastream_io_spark.operators.build import (
+        build_segment,
+        finalize_index,
+        stage_corpus,
+    )
     from datastream_io_spark.operators.indexed_search import (
         Searcher,
     )
+
+    def build(idx, tokenizer, positions):
+        info = stage_corpus(spark, spark.read.parquet(src), idx, 2, 4,
+                            tokenizer, positions=positions)
+        with aqe_disabled(spark):
+            for s in range(2):
+                build_segment(spark, idx, s, info, bucket_layout=False)
+        finalize_index(spark, idx, info)
 
     tmp = tempfile.mkdtemp(prefix="dsio_warm_")
     try:
@@ -128,17 +175,13 @@ def _warm_engine_paths(spark: SparkSession) -> None:
                   "lang string, content string"
         ).repartition(2).write.mode("overwrite").parquet(src)
         idx = os.path.join(tmp, "idx")
-        build_index(spark, spark.read.parquet(src), idx, n_splits=2,
-                    n_buckets=4, tokenizer="simple", positions=True,
-                    max_concurrent_splits=2)
+        build(idx, "simple", True)
         # the warm-up index is tiny, so this query takes the driver's
         # small-query path (pyarrow postings read + in-process kernels)
         Searcher(spark, idx).search("alpha beta", 3, "and").collect()
         # second micro-build through the code tokenizer (the other
         # Arrow kernel family) — non-positional, so both codec shapes
         # are compiled too
-        build_index(spark, spark.read.parquet(src),
-                    os.path.join(tmp, "idx2"), n_splits=2, n_buckets=4,
-                    tokenizer="code", max_concurrent_splits=2)
+        build(os.path.join(tmp, "idx2"), "code", False)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

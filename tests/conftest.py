@@ -1,13 +1,29 @@
 import pytest
 
 from datastream_io_spark.corpus import corpus_df
-from datastream_io_spark.operators.build import build_index
+from datastream_io_spark.operators import build as B
 from datastream_io_spark.session import get_spark
 from datastream_io_spark.sources.scan import documents_as_corpus, load_table
 
 SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
 CORPUS_SMALL_N = 600
+
+
+def build_index(spark, corpus, idx, **kw):
+    """``build_index`` through the DISTRIBUTED phases (in-process gate
+    at 0): the shared fixture indexes keep exercising the Spark build,
+    which the suites' plan, layout and fleet assertions pin."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(B, "DRIVER_BUILD_MAX_DOCS", 0)
+        return B.build_index(spark, corpus, idx, **kw)
+
+
+@pytest.fixture()
+def distributed_build(monkeypatch):
+    """Force every build_index of a test through the distributed
+    phases."""
+    monkeypatch.setattr(B, "DRIVER_BUILD_MAX_DOCS", 0)
 
 
 @pytest.fixture(scope="session")

@@ -112,10 +112,12 @@ def test_doc_ids_dense_and_ordered(spark, doc_index):
         assert keys == sorted(keys)
 
 
-def test_salting_was_exercised_and_equals_unsalted(spark, tmp_path):
+def test_salting_was_exercised_and_equals_unsalted(spark, tmp_path,
+                                                  distributed_build):
     """documents is adversarially all-hot (FIXTURES.md) — with a tiny
     threshold every term salts; the final index must equal a build with
-    salting disabled."""
+    salting disabled. Distributed build: the in-process one is pinned
+    equal to it by test_driver_build."""
     corpus = documents_as_corpus(spark, SF0001)
     salted_dir, plain_dir = str(tmp_path / "salted"), str(tmp_path / "plain")
     build_index(spark, corpus, salted_dir, n_splits=2, n_buckets=4,
@@ -328,3 +330,43 @@ def test_warm_up_failure_is_logged(caplog):
     assert fake._dsio_workers_warm
     assert "warm-up failed" in caplog.text
     assert "no workers here" in caplog.text
+
+
+def test_aqe_scope_is_reentrant_across_threads(spark):
+    """Overlapping AQE-off scopes on one session (concurrent builds,
+    finalize inside a build) share one saved value: a scope that leaves
+    while another is open must not switch AQE back on under it, and the
+    last one out restores the session's setting."""
+    import threading
+
+    from datastream_io_spark.session import aqe_disabled
+
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    a_in, b_in, a_out = (threading.Event() for _ in range(3))
+    seen = {}
+
+    def a():
+        with aqe_disabled(spark):
+            a_in.set()
+            assert b_in.wait(30)
+        a_out.set()
+
+    def b():
+        assert a_in.wait(30)
+        with aqe_disabled(spark):
+            b_in.set()
+            assert a_out.wait(30)
+            seen["after_a_left"] = spark.conf.get(key)
+            with aqe_disabled(spark):  # re-entrant on one thread too
+                pass
+            seen["after_nested"] = spark.conf.get(key)
+
+    threads = [threading.Thread(target=f) for f in (a, b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+    assert seen == {"after_a_left": "false", "after_nested": "false"}
+    assert spark.conf.get(key) == before == "true"
+

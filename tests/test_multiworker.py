@@ -3,6 +3,7 @@ workers building disjoint split subsets of a shared index, then a
 separate finalize, must produce an index identical to a single-process
 build — the basis of the N→4N executor scaling evidence."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from datastream_io_spark.operators.build import (
@@ -14,6 +15,11 @@ from datastream_io_spark.operators.build import (
 from datastream_io_spark.sources.manifest import done_splits, pending_splits
 from datastream_io_spark.sources.scan import documents_as_corpus
 from tests.conftest import SF0001
+
+# these tests pin the DISTRIBUTED build (Spark phases, their resume,
+# parallelism invariance, fleets); the in-process gate would otherwise
+# move their small corpora to the driver
+pytestmark = pytest.mark.usefixtures("distributed_build")
 
 
 def _fingerprint(spark, index_dir):

@@ -12,6 +12,11 @@ from datastream_io_spark.sources.manifest import done_splits, pending_splits
 from datastream_io_spark.sources.scan import documents_as_corpus
 from tests.conftest import SF0001
 
+# these tests pin the DISTRIBUTED build (Spark phases, their resume,
+# parallelism invariance, fleets); the in-process gate would otherwise
+# move their small corpora to the driver
+pytestmark = pytest.mark.usefixtures("distributed_build")
+
 
 def _index_fingerprint(spark, index_dir):
     post = spark.read.parquet(f"{index_dir}/postings")

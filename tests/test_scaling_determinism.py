@@ -4,12 +4,18 @@ of input partitioning and shuffle-partition count. (local[8] vs
 local[32] process-level evidence lives in the bench job — this test
 varies every knob available inside one session.)"""
 
+import pytest
 from pyspark.sql import functions as F
 
 from datastream_io_spark.corpus import corpus_df
 from datastream_io_spark.operators.build import build_index
 from datastream_io_spark.operators.indexed_search import search_indexed
 from tests.queries_golden import CODE_QUERIES, K
+
+# these tests pin the DISTRIBUTED build (Spark phases, their resume,
+# parallelism invariance, fleets); the in-process gate would otherwise
+# move their small corpora to the driver
+pytestmark = pytest.mark.usefixtures("distributed_build")
 
 N = 400
 
