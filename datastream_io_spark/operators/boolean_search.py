@@ -43,39 +43,28 @@ phrase filters, exact-scores ≤k survivors → global top-k. Under the
 single-task gate the scan and kernels run on the driver (zero Spark
 jobs); past it the kernel is a per-split ``applyInPandas``.
 The AST is plain nested tuples, so the kernel closure pickles cleanly.
+Planning and execution live in
+:meth:`~datastream_io_spark.operators.indexed_search.Searcher.search_boolean`
+/ ``.count_boolean``; this module's functions are one-shot Searchers.
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from datastream_io_spark.functions.tokenize import tokenizer_for
-from datastream_io_spark.functions.xxhash import term_bucket
-from datastream_io_spark.operators.build import read_stats
 from datastream_io_spark.operators.codec import decode_block_docs
 from datastream_io_spark.operators.indexed_search import (
     NearSpec,
+    Searcher,
     _and_candidates,
     _near_filter,
-    _check_format,
-    _driver_gate,
     _drop_dead,
-    _est_postings,
     _exact_scores,
     _phrase_filter,
-    _rank_on_driver,
     _restrict_to_term,
-    _tombstone_state,
-    _tv_from,
-    _with_tomb,
-    global_topk,
-    lookup_terms,
-    postings_rows,
 )
 
 # AST node shapes (nested tuples — picklable):
@@ -243,8 +232,8 @@ def tree_has_expansion(node: tuple) -> bool:
 
 def expand_tree(node: tuple, expander) -> tuple:
     """Rewrite wildcard/fuzzy leaves to the OR of their index-term
-    expansions via ``expander(mode, base, dist) -> [terms]`` (cold dict
-    scan, sidecar range scan, or the warm driver cache — same cap and
+    expansions via ``expander(mode, base, dist) -> [terms]`` (dict
+    scan, sidecar range scan, or a driver-cached dict — same cap and
     (df desc, term asc) order as the standalone Q18/Q20 surfaces). An
     empty expansion becomes ``("term", "")`` — the empty string can
     never be an index term, so the leaf evaluates to the empty set
@@ -436,58 +425,15 @@ def cold_expander(spark: SparkSession, index_dir: str,
                   max_expansions: int = 128):
     """The dict-backed leaf expander (sidecar-aware, same caps as the
     standalone wildcard/fuzzy surfaces)."""
-    from datastream_io_spark.operators.indexed_search import (
-        _expansion_rows_cold,
-    )
-
-    def expand(mode, base, dist):
-        rows = _expansion_rows_cold(spark, index_dir, base, mode, dist,
-                                    max_expansions)
-        return [r["term"] for r in rows]
-
-    return expand
+    return Searcher(spark, index_dir, dict_cache="spark")._expander(
+        max_expansions)
 
 
 def search_boolean(spark: SparkSession, index_dir: str, query: str,
                    k: int = 10, with_doc_cols: bool = False) -> DataFrame:
     """Q11 — boolean-filtered BM25 top-k over the built index."""
-    stats = read_stats(index_dir)
-    _check_format(stats, index_dir)
-    tree, positives, all_terms = plan_boolean(
-        query, stats, expander=cold_expander(spark, index_dir))
-    n_buckets = int(stats["n_buckets"])
-    avgdl = float(stats["avgdl"])
-    buckets = sorted({term_bucket(t, n_buckets) for t in all_terms})
-
-    # one lookup over ALL leaves (NOT leaves included): idf only needs
-    # the positives, but the df sum feeds the single-task payload gate
-    # — and lookup_terms' driver-side fast path makes it job-free on
-    # small dictionaries
-    rows_all = lookup_terms(spark, index_dir, sorted(all_terms),
-                            n_buckets)
-    idf = {r["term"]: float(r["idf"]) for r in rows_all
-           if r["term"] in positives}
-    tomb, tomb_join = _tombstone_state(spark, index_dir)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        blocks_of = {r.term: list(r.blocks) for r in pdf.itertuples()}
-        tv = _tv_from(pdf, tomb)
-        return score_tree_split(tree, idf, avgdl, k, blocks_of, {}, tv)
-
-    # small query by dictionary statistics → answered on the driver,
-    # zero Spark jobs (see _wand_topk)
-    on_driver = _driver_gate(_est_postings(rows_all), tomb_join)
-    if on_driver:
-        cand = _rank_on_driver(spark, index_dir, buckets,
-                               sorted(all_terms), kernel, k)
-    else:
-        prows = _with_tomb(
-            postings_rows(spark, index_dir, buckets, sorted(all_terms)),
-            tomb_join)
-        cand = prows.groupBy("split_id").applyInPandas(
-            kernel, "doc_id long, score double")
-    return global_topk(spark, index_dir, cand, k, with_doc_cols,
-                       ranked=on_driver)
+    return Searcher(spark, index_dir, dict_cache="spark").search_boolean(
+        query, k, with_doc_cols)
 
 
 def count_boolean(spark: SparkSession, index_dir: str,
@@ -499,33 +445,5 @@ def count_boolean(spark: SparkSession, index_dir: str,
     :func:`~datastream_io_spark.operators.indexed_search.match_count`
     (the "about N results" display primitive). Wildcard/fuzzy leaves
     and quoted/proximity phrases all apply."""
-    import pandas as pd
-
-    from datastream_io_spark.operators.indexed_search import (
-        _drop_dead,
-    )
-
-    stats = read_stats(index_dir)
-    _check_format(stats, index_dir)
-    tree, _positives, all_terms = plan_boolean(
-        query, stats, expander=cold_expander(spark, index_dir))
-    all_terms = {t for t in all_terms if t}
-    if not all_terms:
-        return 0
-    n_buckets = int(stats["n_buckets"])
-    buckets = sorted({term_bucket(t, n_buckets) for t in all_terms})
-    tomb, tomb_join = _tombstone_state(spark, index_dir)
-    prows = _with_tomb(
-        postings_rows(spark, index_dir, buckets, sorted(all_terms)),
-        tomb_join)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        blocks_of = {r.term: list(r.blocks) for r in pdf.itertuples()}
-        tv = _tv_from(pdf, tomb)
-        cand = _drop_dead(_eval_node(tree, blocks_of, {}), tv)
-        return pd.DataFrame({"n": pd.Series([int(cand.size)],
-                                            dtype="int64")})
-
-    rows = (prows.groupBy("split_id")
-            .applyInPandas(kernel, "n long").collect())
-    return int(sum(r["n"] for r in rows))
+    return Searcher(spark, index_dir, dict_cache="spark").count_boolean(
+        query)

@@ -61,6 +61,8 @@ from __future__ import annotations
 
 import os
 import threading
+from functools import cached_property
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -118,23 +120,83 @@ _MANY_SCHEMA = T.StructType([T.StructField("query_id", T.StringType())]
                             + _SCORES_SCHEMA.fields)
 
 
+def _check_mode(mode: str) -> None:
+    if mode not in ("and", "or", "phrase"):
+        raise ValueError(
+            f"mode must be 'and', 'or' or 'phrase', got {mode!r}")
+
+
+def _empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """An empty frame of ``schema`` (DDL string or StructType), built
+    from an empty Arrow table: a local relation, so collecting it runs
+    no Spark job (``createDataFrame([], schema)`` is RDD-backed and
+    costs one)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(),
+                                 schema)
+
+
+class _Plan(NamedTuple):
+    """One resolved query: the kernel mode ('and' | 'or' | 'phrase'),
+    the number of distinct terms a match needs, the phrase sequence or
+    :class:`NearSpec` (None otherwise), and idf / df per found term
+    with the bucket set those terms live in."""
+
+    mode: str
+    n_terms: int
+    phrase: object
+    idf: dict
+    df: dict
+    buckets: list
+
+    @property
+    def est(self) -> int:
+        """Σ df — the match-payload estimate the single-task gate keys
+        on."""
+        return sum(self.df.values())
+
+
+def _resolve(mode: str, terms: list, phrase, rows: list) -> _Plan | None:
+    """Plan one parsed query from its dictionary ``rows``; None when it
+    can match nothing — no term is in the dictionary, or a conjunctive
+    mode (and / phrase / near) misses one."""
+    if not rows or (mode in ("and", "phrase") and len(rows) < len(terms)):
+        return None
+    return _Plan(mode, len(terms), phrase,
+                 {r["term"]: float(r["idf"]) for r in rows},
+                 {r["term"]: int(r["df"]) for r in rows},
+                 sorted({int(r["term_bucket"]) for r in rows}))
+
+
+def _or_plan(rows: list) -> _Plan | None:
+    """OR-mode plan over expansion / selection rows (the multi-term
+    rewrite)."""
+    return _resolve("or", [r["term"] for r in rows], None, rows)
+
+
 class Searcher:
-    """Warm query handle over a built index: stats and the dictionary
-    are loaded once. A query under the single-task gate then runs on
-    the driver and costs ZERO Spark jobs (pruned pyarrow postings read
-    → per-split WAND → top-k as a local relation); a query over it
-    costs ONE Spark job (bucket-pruned postings scan → per-split WAND
-    → top-k). ``with_doc_cols`` adds a broadcast join for the display
-    columns either way.
+    """Query handle over a built index — the one place a query is
+    planned. Stats (and, per ``dict_cache``, the dictionary) load once.
+    A query under the single-task gate then runs on the driver and
+    costs ZERO Spark jobs (pruned pyarrow postings read → per-split
+    WAND → top-k as a local relation); a query over it costs ONE Spark
+    job (bucket-pruned postings scan → per-split WAND → top-k).
+    ``with_doc_cols`` adds a broadcast join for the display columns
+    either way. The module-level search functions are one-shot
+    Searchers with ``dict_cache='spark'``.
 
     ``dict_cache`` — 'auto' (default) caches the dictionary on the
     driver when it has ≤ AUTO_DICT_DRIVER_MAX_TERMS terms (read from
     the build's recorded n_terms; counted once if absent) and keeps it
     in Spark otherwise, so a 10^12-file corpus can't accidentally pull
     a 10^9-term dictionary into driver memory. 'driver' / 'spark'
-    force either behavior. In Spark mode Q2 is a bucket-pruned lookup
-    job per query; warm wildcard/fuzzy fall back to the sidecar/cold
-    expansion scans.
+    force either behavior. In Spark mode term lookup is
+    :func:`lookup_terms` per query (a pruned pyarrow read on small
+    dictionaries, else a bucket-pruned Spark job) and wildcard / fuzzy
+    / regex expansion scans the sidecar or dictionary with Spark.
 
     Staleness contract: tombstone deletes are LIVE (re-read per query),
     but anything that rewrites dict/stats underneath a warm handle —
@@ -170,17 +232,6 @@ class Searcher:
                 spark.read.parquet(os.path.join(index_dir, "dict"))
                 .toPandas().set_index("term")
             )
-        # resolved scans, listed ONCE: spark.read.parquet re-lists the
-        # directory and re-reads a footer schema per call (~140 ms at
-        # 14 postings files, r5 profile — the largest warm-query
-        # slice). Safe under the staleness contract above: tombstones
-        # live elsewhere, and purge/merge/rebuild already require a new
-        # Searcher.
-        from datastream_io_spark.operators.build import POSTINGS_SCHEMA
-        self._postings_df = spark.read.schema(POSTINGS_SCHEMA).parquet(
-            os.path.join(index_dir, "postings"))
-        self._docs_df = spark.read.parquet(
-            os.path.join(index_dir, "docs"))
         # warm PLAN cache: building a distributed rank DataFrame costs
         # ~60-100 ms of py4j + Catalyst analysis per call; identical
         # (query, k, mode) requests reuse the lazy plan — every collect
@@ -192,6 +243,24 @@ class Searcher:
         # any tombstone presence bypasses AND clears the cache (cheap
         # existence probes per call).
         self._plan_cache: dict = {}
+
+    # resolved scans, listed ONCE and only on first distributed or
+    # display use: spark.read.parquet re-lists the directory and
+    # re-reads a footer schema per call (~140 ms at 14 postings files,
+    # r5 profile — the largest warm-query slice), and the docs read
+    # infers its schema with a Spark job that a driver-path query never
+    # needs. Safe under the staleness contract above: tombstones live
+    # elsewhere, and purge/merge/rebuild already require a new Searcher.
+    @cached_property
+    def _postings_df(self) -> DataFrame:
+        from datastream_io_spark.operators.build import POSTINGS_SCHEMA
+
+        return self.spark.read.schema(POSTINGS_SCHEMA).parquet(
+            os.path.join(self.index_dir, "postings"))
+
+    @cached_property
+    def _docs_df(self) -> DataFrame:
+        return self.spark.read.parquet(os.path.join(self.index_dir, "docs"))
 
     def _cached_plan(self, key, build):
         tomb = os.path.join(self.index_dir, "tombstones")
@@ -208,10 +277,12 @@ class Searcher:
                 self._plan_cache[key] = df
         return df
 
-    def _empty_scores(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id long, score double")
-
-    def _lookup(self, terms: list[str]) -> list[dict]:
+    def _lookup(self, terms: list[str]) -> list:
+        """Dictionary rows of ``terms`` (absent terms have none): from
+        the driver-cached dict, else :func:`lookup_terms`' pruned
+        read."""
+        if not terms:
+            return []
         if self._dict_pdf is not None:
             hits = self._dict_pdf[self._dict_pdf.index.isin(terms)]
             return [
@@ -219,46 +290,65 @@ class Searcher:
                  "idf": float(r["idf"]), "df": int(r["df"])}
                 for t, r in hits.iterrows()
             ]
-        return [r.asDict() for r in
-                lookup_terms(self.spark, self.index_dir, terms,
-                             int(self.stats["n_buckets"]))]
+        return lookup_terms(self.spark, self.index_dir, list(terms),
+                            int(self.stats["n_buckets"]))
 
-    def search(self, query: str, k: int = 10, mode: str = "and",
-               with_doc_cols: bool = False, where=None) -> DataFrame:
-        if mode not in ("and", "or", "phrase"):
-            raise ValueError(
-                f"mode must be 'and', 'or' or 'phrase', got {mode!r}")
-        if where is None:  # Column predicates aren't hashable cache keys
-            return self._cached_plan(
-                ("search", query, k, mode, with_doc_cols),
-                lambda: self._search_build(query, k, mode, with_doc_cols,
-                                           None))
-        return self._search_build(query, k, mode, with_doc_cols, where)
+    def _plans(self, queries: dict, mode: str, slop: int = 2,
+               ordered: bool = False) -> dict[str, _Plan]:
+        """The query planner: parse every query for ``mode`` ('and' |
+        'or' | 'phrase' | 'near'), look the union of their terms up
+        ONCE, and resolve each query (:func:`_resolve`; None for one
+        that can match nothing)."""
+        parsed = {qid: _plan_terms(q, mode, self.stats, slop, ordered)
+                  for qid, q in queries.items()}
+        found = {r["term"]: r for r in self._lookup(
+            sorted({t for _, ts, _ in parsed.values() for t in ts}))}
+        return {qid: _resolve(m, ts, ph, [found[t] for t in ts
+                                          if t in found])
+                for qid, (m, ts, ph) in parsed.items()}
 
-    def _search_build(self, query: str, k: int, mode: str,
-                      with_doc_cols: bool, where) -> DataFrame:
-        mode, terms, phrase = _plan_terms(query, mode, self.stats)
-        # the empty frame is built LAZILY: createDataFrame costs a py4j
-        # + analysis round-trip (~60 ms) that the hit path must not pay
-        if not terms:
-            return self._empty_scores()
-        rows = self._lookup(terms)
-        if (mode in ("and", "phrase") and len(rows) < len(terms)) or not rows:
-            return self._empty_scores()
-        idf = {r["term"]: float(r["idf"]) for r in rows}
-        buckets = sorted({int(r["term_bucket"]) for r in rows})
-        return _wand_topk(self.spark, self.index_dir, idf, buckets,
-                          float(self.stats["avgdl"]),
-                          len(terms), k, mode, with_doc_cols, phrase,
-                          where, postings_df=self._postings_df,
-                          docs_df=self._docs_df,
-                          est_postings=_est_postings(rows))
+    def _plan(self, query: str, mode: str, slop: int = 2,
+              ordered: bool = False) -> _Plan | None:
+        return self._plans({"": query}, mode, slop, ordered)[""]
 
-    def _expansion_rows(self, mask, max_expansions: int) -> list[dict]:
-        """Warm-path expansion: with the driver-cached dict, wildcard/
-        fuzzy expansion costs ZERO extra Spark jobs (the cold functions
-        pay one dict-scan job per query). Same cap semantics as
-        _expansion_or_topk: highest-df, term-asc tie-break."""
+    def _expand(self, q: str, mode: str, max_dist: int,
+                max_expansions: int) -> list:
+        """Wildcard / fuzzy / regex expansion of ``q``: the dictionary
+        rows of its ``max_expansions`` highest-df terms (df desc, term
+        asc). From the driver-cached dict with zero Spark jobs, else
+        :func:`_expansion_rows_cold`'s sidecar / dictionary scan."""
+        if self._dict_pdf is None:
+            return _expansion_rows_cold(self.spark, self.index_dir, q,
+                                        mode, max_dist, max_expansions)
+        index = self._dict_pdf.index
+        if mode == "regex":
+            if not q:
+                return []
+            import re
+
+            rx = re.compile(q)
+            mask = np.fromiter((rx.fullmatch(t) is not None
+                                for t in index), bool, count=len(index))
+        elif mode == "wildcard":
+            prefix = q.lower().rstrip("*")
+            if not prefix:
+                return []
+            mask = index.str.startswith(prefix)
+        else:
+            q = _fuzzy_term(q)
+            if not q:
+                return []
+            lens = index.str.len()
+            band = np.asarray((lens >= max(1, len(q) - max_dist))
+                              & (lens <= len(q) + max_dist))
+            # distance check only over the band candidates; scatter
+            # back into a full mask (no second whole-vocabulary pass)
+            band_pos = np.flatnonzero(band)
+            keep = np.fromiter((_levenshtein_leq(t, q, max_dist)
+                                for t in index[band_pos]), bool,
+                               count=len(band_pos))
+            mask = np.zeros(len(index), dtype=bool)
+            mask[band_pos[keep]] = True
         hits = (self._dict_pdf[mask]
                 .reset_index()
                 .sort_values(["df", "term"], ascending=[False, True])
@@ -267,280 +357,449 @@ class Searcher:
                  "idf": float(r["idf"]), "df": int(r["df"])}
                 for _, r in hits.iterrows()]
 
-    def search_wildcard(self, prefix: str, k: int = 10,
-                        max_expansions: int = 128,
-                        with_doc_cols: bool = False) -> DataFrame:
-        """Q18 on the warm path — identical results to the module-level
-        :func:`search_wildcard` (parity-tested)."""
-        prefix = prefix.lower().rstrip("*")
-        if not prefix:
-            return _empty_topk(self.spark, with_doc_cols)
-        if self._dict_pdf is None:
-            return search_wildcard(self.spark, self.index_dir, prefix, k,
-                                   max_expansions, with_doc_cols)
-        return self._cached_plan(
-            ("wildcard", prefix, k, max_expansions, with_doc_cols),
-            lambda: self._or_over(
-                self._warm_expansion(prefix, "wildcard", 0,
-                                     max_expansions),
-                k, with_doc_cols))
+    def _expander(self, max_expansions: int = 128):
+        """Boolean wildcard / fuzzy leaf expander over :meth:`_expand`
+        (see :func:`~datastream_io_spark.operators.boolean_search.
+        expand_tree`)."""
+        def expand(mode, base, dist):
+            return [r["term"] for r in
+                    self._expand(base, mode, dist, max_expansions)]
+        return expand
 
-    def search_fuzzy(self, term: str, k: int = 10, max_dist: int = 1,
-                     max_expansions: int = 128,
-                     with_doc_cols: bool = False) -> DataFrame:
-        """Q20 on the warm path — identical results to the module-level
-        :func:`search_fuzzy` (parity-tested). The exact length-band
-        prune shrinks the candidate set before the per-candidate DP."""
-        q = _fuzzy_term(term)
-        if not q:
+    def _topk(self, plan: _Plan | None, k: int, with_doc_cols: bool,
+              where=None) -> DataFrame:
+        if plan is None:
             return _empty_topk(self.spark, with_doc_cols)
-        if self._dict_pdf is None:
-            return search_fuzzy(self.spark, self.index_dir, q, k,
-                                max_dist, max_expansions, with_doc_cols)
-        return self._cached_plan(
-            ("fuzzy", q, k, max_dist, max_expansions, with_doc_cols),
-            lambda: self._or_over(
-                self._warm_expansion(q, "fuzzy", max_dist,
-                                     max_expansions),
-                k, with_doc_cols))
+        return _wand_topk(self.spark, self.index_dir, plan.idf,
+                          plan.buckets, float(self.stats["avgdl"]),
+                          plan.n_terms, k, plan.mode, with_doc_cols,
+                          plan.phrase, where, scans=self,
+                          est_postings=plan.est)
+
+    def _prows(self, buckets: list, terms: list, tomb_join):
+        return _with_tomb(postings_rows(
+            self.spark, self.index_dir, buckets, terms,
+            postings_df=self._postings_df), tomb_join)
+
+    def search(self, query: str, k: int = 10, mode: str = "and",
+               with_doc_cols: bool = False, where=None) -> DataFrame:
+        """:func:`search_indexed` on this handle."""
+        _check_mode(mode)
+
+        def build():
+            return self._topk(self._plan(query, mode), k, with_doc_cols,
+                              where)
+        if where is not None:  # Column predicates aren't hashable keys
+            return build()
+        return self._cached_plan(("search", query, k, mode,
+                                  with_doc_cols), build)
 
     def search_near(self, query: str, k: int = 10, slop: int = 2,
                     ordered: bool = False,
                     with_doc_cols: bool = False) -> DataFrame:
-        """:func:`search_near` on the warm path — all planning from the
-        cached dict; identical results (parity-tested)."""
+        """:func:`search_near` on this handle."""
         return self._cached_plan(
             ("near", query, k, slop, ordered, with_doc_cols),
-            lambda: self._near_build(query, k, slop, ordered,
-                                     with_doc_cols))
+            lambda: self._topk(self._plan(query, "near", slop, ordered),
+                               k, with_doc_cols))
 
-    def _near_build(self, query: str, k: int, slop: int, ordered: bool,
-                    with_doc_cols: bool) -> DataFrame:
-        plan = _near_plan(self.stats, self._lookup, query, slop, ordered)
-        if plan is None:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double")
-        idf, n_terms, qmode, spec, buckets, est = plan
-        return _wand_topk(self.spark, self.index_dir, idf, buckets,
-                          float(self.stats["avgdl"]), n_terms, k, qmode,
-                          with_doc_cols, phrase=spec,
-                          postings_df=self._postings_df,
-                          docs_df=self._docs_df, est_postings=est)
+    def _expansion_search(self, q: str, mode: str, k: int, max_dist: int,
+                          max_expansions: int,
+                          with_doc_cols: bool) -> DataFrame:
+        return self._cached_plan(
+            (mode, q, k, max_dist, max_expansions, with_doc_cols),
+            lambda: self._topk(
+                _or_plan(self._expand(q, mode, max_dist, max_expansions)),
+                k, with_doc_cols))
+
+    def search_wildcard(self, prefix: str, k: int = 10,
+                        max_expansions: int = 128,
+                        with_doc_cols: bool = False) -> DataFrame:
+        """:func:`search_wildcard` on this handle — with the driver
+        dict, expansion costs zero Spark jobs."""
+        return self._expansion_search(prefix, "wildcard", k, 0,
+                                      max_expansions, with_doc_cols)
+
+    def search_fuzzy(self, term: str, k: int = 10, max_dist: int = 1,
+                     max_expansions: int = 128,
+                     with_doc_cols: bool = False) -> DataFrame:
+        """:func:`search_fuzzy` on this handle — with the driver dict,
+        an exact length-band prune shrinks the candidate set before the
+        per-candidate distance DP."""
+        return self._expansion_search(term, "fuzzy", k, max_dist,
+                                      max_expansions, with_doc_cols)
 
     def search_regex(self, pattern: str, k: int = 10,
                      max_expansions: int = 128,
                      with_doc_cols: bool = False) -> DataFrame:
-        """:func:`search_regex` on the warm path — expansion by
-        ``re.fullmatch`` over the driver-cached dict, zero extra Spark
-        jobs. Dialect note: the cold path matches with JVM regex, the
-        warm cache with Python ``re`` — identical on the common syntax
-        subset (parity-tested); exotic constructs may differ between
-        the two, same caveat Lucene documents across its regexp APIs.
-        Patterns are matched verbatim (lowercase terms — see the cold
-        function)."""
-        pat = pattern
-        if not pat:
-            return _empty_topk(self.spark, with_doc_cols)
-        if self._dict_pdf is None:
-            return search_regex(self.spark, self.index_dir, pat, k,
-                                max_expansions, with_doc_cols)
+        """:func:`search_regex` on this handle. Dialect note: with the
+        driver dict, expansion is ``re.fullmatch`` in Python, in Spark
+        mode JVM regex — identical on the common syntax subset
+        (parity-tested); exotic constructs may differ between the two,
+        same caveat Lucene documents across its regexp APIs."""
+        return self._expansion_search(pattern, "regex", k, 0,
+                                      max_expansions, with_doc_cols)
+
+    def search_boolean(self, query: str, k: int = 10,
+                       with_doc_cols: bool = False) -> DataFrame:
+        """:func:`~datastream_io_spark.operators.boolean_search.
+        search_boolean` on this handle — with the driver dict,
+        wildcard / fuzzy leaves expand with zero Spark jobs."""
         return self._cached_plan(
-            ("regex", pat, k, max_expansions, with_doc_cols),
-            lambda: self._or_over(
-                self._warm_expansion(pat, "regex", 0, max_expansions),
-                k, with_doc_cols))
+            ("boolean", query, k, with_doc_cols),
+            lambda: self._boolean_build(query, k, with_doc_cols))
+
+    def _boolean_build(self, query: str, k: int,
+                       with_doc_cols: bool) -> DataFrame:
+        from datastream_io_spark.operators.boolean_search import (
+            plan_boolean,
+            score_tree_split,
+        )
+
+        tree, positives, all_terms = plan_boolean(
+            query, self.stats, expander=self._expander())
+        # one lookup over ALL leaves (NOT leaves included): idf only
+        # needs the positives, but the df sum feeds the single-task
+        # payload gate. Σ df = 0 means no posting row exists: nothing
+        # can match, so no scan (and no Spark job) is planned at all
+        rows = self._lookup(sorted(all_terms))
+        est = sum(int(r["df"]) for r in rows)
+        if est == 0:
+            return _empty_topk(self.spark, with_doc_cols)
+        idf = {r["term"]: float(r["idf"]) for r in rows
+               if r["term"] in positives}
+        buckets = sorted({int(r["term_bucket"]) for r in rows})
+        avgdl = float(self.stats["avgdl"])
+        tomb, tomb_join = _tombstone_state(self.spark, self.index_dir)
+
+        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+            blocks_of = {r.term: list(r.blocks) for r in pdf.itertuples()}
+            tv = _tv_from(pdf, tomb)
+            return score_tree_split(tree, idf, avgdl, k, blocks_of, {}, tv)
+
+        on_driver = _driver_gate(est, tomb_join)
+        if on_driver:
+            cand = _rank_on_driver(self.spark, self.index_dir, buckets,
+                                   sorted(all_terms), kernel, k)
+        else:
+            cand = self._prows(buckets, sorted(all_terms), tomb_join) \
+                .groupBy("split_id").applyInPandas(
+                    kernel, "doc_id long, score double")
+        return global_topk(self.spark, self.index_dir, cand, k,
+                           with_doc_cols,
+                           docs_df=self._docs_df if with_doc_cols else None,
+                           ranked=on_driver)
+
+    def count_boolean(self, query: str) -> int:
+        """:func:`~datastream_io_spark.operators.boolean_search.
+        count_boolean` on this handle."""
+        from datastream_io_spark.operators.boolean_search import (
+            _eval_node,
+            plan_boolean,
+        )
+
+        tree, _positives, all_terms = plan_boolean(
+            query, self.stats, expander=self._expander())
+        all_terms = sorted(t for t in all_terms if t)
+        if not all_terms:
+            return 0
+        n_buckets = int(self.stats["n_buckets"])
+        buckets = sorted({term_bucket(t, n_buckets) for t in all_terms})
+        tomb, tomb_join = _tombstone_state(self.spark, self.index_dir)
+
+        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+            blocks_of = {r.term: list(r.blocks) for r in pdf.itertuples()}
+            tv = _tv_from(pdf, tomb)
+            cand = _drop_dead(_eval_node(tree, blocks_of, {}), tv)
+            return pd.DataFrame({"n": pd.Series([int(cand.size)],
+                                                dtype="int64")})
+
+        rows = (self._prows(buckets, all_terms, tomb_join)
+                .groupBy("split_id")
+                .applyInPandas(kernel, "n long").collect())
+        return int(sum(r["n"] for r in rows))
 
     def more_like_this(self, doc_id: int, k: int = 10,
                        max_terms: int = 20,
                        corpus: DataFrame | None = None,
                        with_doc_cols: bool = False) -> DataFrame:
-        """:func:`more_like_this` on the warm path: the source doc's
-        row comes off the resolved docs scan and idf off the cached
-        dict (no per-call dict job), then the standard warm OR plan at
-        k+1 with the source excluded. Identical results to the cold
-        function (parity-tested); selection logic is the shared
-        :func:`_mlt_selection`."""
-        rows_sel = _mlt_selection(
-            self.spark, self.index_dir, self.stats, doc_id, max_terms,
-            corpus, docs_df=self._docs_df, lookup=self._lookup)
+        """:func:`more_like_this` on this handle: the OR plan at k+1
+        over :meth:`_mlt_selection`, source doc excluded."""
+        rows_sel = self._mlt_selection(doc_id, max_terms, corpus)
         if not rows_sel:
             return _empty_topk(self.spark, with_doc_cols)
-        idf = {r["term"]: float(r["idf"]) for r in rows_sel}
-        buckets = sorted({int(r["term_bucket"]) for r in rows_sel})
-        top = _wand_topk(self.spark, self.index_dir, idf, buckets,
-                         float(self.stats["avgdl"]), len(idf), k + 1,
-                         "or", with_doc_cols,
-                         postings_df=self._postings_df,
-                         docs_df=self._docs_df,
-                         est_postings=_est_postings(rows_sel))
+        top = self._topk(_or_plan(rows_sel), k + 1, with_doc_cols)
         return (top.where(F.col("doc_id") != int(doc_id))
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
-    def _warm_expansion(self, q: str, mode: str, max_dist: int,
-                        max_expansions: int) -> list[dict]:
-        """Wildcard/fuzzy/regex expansion against the driver-cached
-        dict (zero Spark jobs). Same cap semantics as the cold paths."""
-        if mode == "regex":
-            import re
+    def _mlt_selection(self, doc_id: int, max_terms: int,
+                       corpus: DataFrame | None) -> list:
+        """MLT selection: resolve the source doc's content (doc store,
+        else ``corpus`` by (repo, path, commit)), tokenize with the
+        index's tokenizer, weight each distinct term by tf·idf (idf
+        from the index dict — the same values scoring uses) and return
+        the dict rows of the ``max_terms`` heaviest (ties: term asc).
+        ONE docs-row fetch + ONE dict lookup — the returned rows carry
+        term_bucket/idf so callers never look the selection up
+        again."""
+        from collections import Counter
 
-            rx = re.compile(q)
-            mask = np.fromiter(
-                (rx.fullmatch(t) is not None
-                 for t in self._dict_pdf.index), bool,
-                count=len(self._dict_pdf))
-            return self._expansion_rows(mask, max_expansions)
-        if mode == "wildcard":
-            prefix = q.lower().rstrip("*")
-            if not prefix:
-                return []
-            return self._expansion_rows(
-                self._dict_pdf.index.str.startswith(prefix),
-                max_expansions)
-        q = _fuzzy_term(q)
-        if not q:
-            return []
-        lens = self._dict_pdf.index.str.len()
-        band = np.asarray((lens >= max(1, len(q) - max_dist))
-                          & (lens <= len(q) + max_dist))
-        # distance check only over the band candidates; scatter back
-        # into a full mask (no second whole-vocabulary pass)
-        band_pos = np.flatnonzero(band)
-        cand = self._dict_pdf.index[band_pos]
-        keep = np.fromiter((_levenshtein_leq(t, q, max_dist)
-                            for t in cand), bool, count=len(cand))
-        mask = np.zeros(len(self._dict_pdf), dtype=bool)
-        mask[band_pos[keep]] = True
-        return self._expansion_rows(mask, max_expansions)
+        from datastream_io_spark.functions.tokenize import tokenizer_for
+
+        docs = self._docs_df
+        fetch = docs.where(F.col("doc_id") == int(doc_id))
+        split = _split_of_doc(self.stats, int(doc_id))
+        if split is not None and "split_id" in docs.columns:
+            # splits own contiguous doc_id ranges (frozen offsets), so
+            # the single-doc fetch prunes to ONE docs/split_id=N
+            # directory instead of scanning every split's metadata
+            fetch = fetch.where(F.col("split_id") == split)
+
+        def _doc_row():
+            rows = fetch.collect()
+            if not rows:
+                raise ValueError(
+                    f"doc_id {doc_id} not in index {self.index_dir}")
+            return rows[0]
+
+        no_content = (f"index at {self.index_dir} stores no content "
+                      "(built without store_content=True) — pass the "
+                      "source corpus DataFrame")
+        if "content" in docs.columns:
+            row = _doc_row()
+            if row["content"] is not None:
+                text = row["content"]
+            elif corpus is None:
+                raise ValueError(no_content)
+            else:
+                text = _corpus_content(corpus, row, doc_id)
+        elif corpus is not None:
+            # ONE action resolves doc key AND content: the pruned docs
+            # row broadcasts into a corpus probe (not two sequential
+            # collect jobs — docs fetch, then corpus fetch)
+            crows = (corpus.join(
+                F.broadcast(fetch.select("repo", "path", "commit")),
+                ["repo", "path", "commit"]).limit(1).collect())
+            if not crows:
+                row = _doc_row()  # distinguish which side is missing
+                raise ValueError(
+                    f"doc_id {doc_id} ({row['repo']}/{row['path']}) not "
+                    "found in the supplied corpus")
+            text = crows[0]["content"]
+        else:
+            _doc_row()  # raises not-in-index when the doc is absent
+            raise ValueError(no_content)
+        pure, _ = tokenizer_for(self.stats["tokenizer"])
+        tf = Counter(pure(text))
+        return sorted(
+            self._lookup(sorted(tf)),
+            key=lambda r: (-tf[r["term"]] * float(r["idf"]), r["term"]),
+        )[:max_terms]
 
     def search_many(self, queries: dict[str, str], k: int = 10,
                     mode: str = "and", max_dist: int = 1,
                     max_expansions: int = 128, slop: int = 2,
                     ordered: bool = False) -> DataFrame:
-        """Q13 on the warm path — every batched mode with ALL planning
-        (term lookup, boolean idf, wildcard/fuzzy/regex expansion,
-        near windows) resolved from the driver-cached dict: the whole
-        batch costs at most ONE Spark job regardless of mode (none
-        under the single-task gate). Results identical
-        to the module-level :func:`search_many` (parity-tested per
-        mode)."""
+        """:func:`search_many` on this handle — with the driver dict,
+        ALL planning (term lookup, boolean idf, wildcard / fuzzy / regex
+        expansion, near windows) runs off the cache: the whole batch
+        costs at most ONE Spark job regardless of mode (none under the
+        single-task gate)."""
         if mode not in ("and", "or", "phrase", "boolean", "wildcard",
                         "fuzzy", "regex", "near"):
             raise ValueError(
                 "mode must be 'and', 'or', 'phrase', 'boolean', "
                 f"'wildcard', 'fuzzy', 'regex' or 'near', got {mode!r}")
-        if self._dict_pdf is None:
-            return search_many(self.spark, self.index_dir, queries, k,
-                               mode, max_dist, max_expansions,
-                               slop=slop, ordered=ordered)
-        if mode == "near":
-            plans_w, dfs = {}, {}
-            for qid, q in queries.items():
-                plan = _near_plan(self.stats, self._lookup, q, slop,
-                                  ordered)
-                if plan is not None:
-                    idf_q, n_terms, qmode, spec, _, _ = plan
-                    plans_w[qid] = (idf_q, n_terms, qmode, spec)
-            for r in self._lookup(sorted(
-                    {t for fi, _, _, _ in plans_w.values() for t in fi})):
-                dfs[r["term"]] = int(r["df"])
-            return _search_many_wand_tail(
-                self.spark, self.index_dir, self.stats, plans_w, k,
-                postings_df=self._postings_df, df_by_term=dfs)
         if mode == "boolean":
-            from datastream_io_spark.operators.boolean_search import (
-                plan_boolean,
-            )
-
-            def warm_exp(emode, base, dist):
-                return [r["term"] for r in self._warm_expansion(
-                    base, emode, dist, max_expansions)]
-
-            trees, pos_all, all_terms = {}, set(), set()
-            for qid, q in queries.items():
-                tree, pos, terms = plan_boolean(q, self.stats,
-                                                expander=warm_exp)
-                trees[qid] = (tree, pos)
-                pos_all |= pos
-                all_terms |= terms
-            # NOT leaves' rows are scanned too, so the payload estimate
-            # needs df for EVERY leaf term — look up all of them (the
-            # idf map still only keys the positives)
-            rows_all = self._lookup(sorted(all_terms))
-            dfs = {r["term"]: int(r["df"]) for r in rows_all}
-            idf_all = {r["term"]: r["idf"] for r in rows_all
-                       if r["term"] in pos_all}
-            plans_b = {
-                qid: ({t: idf_all[t] for t in pos if t in idf_all}, tree)
-                for qid, (tree, pos) in trees.items()
-            }
-            return _search_many_boolean_tail(
-                self.spark, self.index_dir, self.stats, plans_b,
-                sorted(all_terms), k, postings_df=self._postings_df,
-                df_by_term=dfs)
-        plans_w, dfs = {}, {}
+            return self._boolean_many(queries, k, max_expansions)
         if mode in ("wildcard", "fuzzy", "regex"):
-            for qid, q in queries.items():
-                rows = self._warm_expansion(q, mode, max_dist,
-                                            max_expansions)
-                if rows:
-                    plans_w[qid] = ({r["term"]: r["idf"] for r in rows},
-                                    len(rows), "or", None)
-                    dfs.update({r["term"]: int(r["df"]) for r in rows})
+            plans = {qid: _or_plan(self._expand(q, mode, max_dist,
+                                                max_expansions))
+                     for qid, q in queries.items()}
         else:
-            for qid, q in queries.items():
-                qmode, terms, phrase = _plan_terms(q, mode, self.stats)
-                if not terms:
-                    continue
-                rows = self._lookup(terms)
-                found = {r["term"]: r["idf"] for r in rows}
-                if not found:
-                    continue
-                if qmode in ("and", "phrase") and len(found) < len(terms):
-                    continue
-                plans_w[qid] = (found, len(terms), qmode, phrase)
-                dfs.update({r["term"]: int(r["df"]) for r in rows})
-        return _search_many_wand_tail(self.spark, self.index_dir,
-                                      self.stats, plans_w, k,
-                                      postings_df=self._postings_df,
-                                      df_by_term=dfs)
+            plans = self._plans(queries, mode, slop, ordered)
+        plans = {qid: p for qid, p in plans.items() if p is not None}
+        return _search_many_wand_tail(
+            self.spark, self.index_dir, self.stats,
+            {qid: (p.idf, p.n_terms, p.mode, p.phrase)
+             for qid, p in plans.items()}, k, scans=self,
+            df_by_term={t: df for p in plans.values()
+                        for t, df in p.df.items()})
+
+    def _boolean_many(self, queries: dict[str, str], k: int,
+                      max_expansions: int) -> DataFrame:
+        from datastream_io_spark.operators.boolean_search import (
+            plan_boolean,
+            score_tree_split,
+        )
+
+        expander = self._expander(max_expansions)
+        trees, pos_all, all_terms = {}, set(), set()
+        for qid, q in queries.items():
+            tree, pos, terms = plan_boolean(q, self.stats,
+                                            expander=expander)
+            trees[qid] = (tree, pos)
+            pos_all |= pos
+            all_terms |= terms
+        # NOT leaves' rows are scanned too, so the payload estimate
+        # needs df for EVERY leaf term — look up all of them (the idf
+        # map still only keys the positives). Σ df = 0: no posting row
+        # exists, so no query can match and nothing is scanned
+        rows_all = self._lookup(sorted(all_terms))
+        est = sum(int(r["df"]) for r in rows_all)
+        if est == 0:
+            return _empty_many(self.spark)
+        idf_all = {r["term"]: float(r["idf"]) for r in rows_all
+                   if r["term"] in pos_all}
+        plans_b = {
+            qid: ({t: idf_all[t] for t in pos if t in idf_all}, tree)
+            for qid, (tree, pos) in trees.items()
+        }
+        avgdl = float(self.stats["avgdl"])
+        tomb, tomb_join = _tombstone_state(self.spark, self.index_dir)
+
+        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+            blocks_of = {r.term: list(r.blocks) for r in pdf.itertuples()}
+            decoded: dict = {}  # shared across the batch's queries
+            tv = _tv_from(pdf, tomb)
+            outs = []
+            for qid, (idf_q, tree) in plans_b.items():
+                out = score_tree_split(tree, idf_q, avgdl, k, blocks_of,
+                                       decoded, tv)
+                if len(out):
+                    out.insert(0, "query_id", qid)
+                    outs.append(out)
+            return _concat_query_outs(outs)
+
+        return _rank_many(self.spark, self.index_dir,
+                          sorted({int(r["term_bucket"]) for r in rows_all}),
+                          sorted(all_terms), self, tomb_join, kernel, k, est)
 
     def facet_counts(self, query: str, facet_col: str = "lang",
                      mode: str = "and", where=None) -> DataFrame:
-        """Q19 on the warm path: dict lookups come from the cached
-        dictionary (zero extra Spark jobs when dict_cache='driver');
-        results are identical to the module-level
-        :func:`facet_counts` (parity-tested)."""
+        """:func:`facet_counts` on this handle."""
+        _check_mode(mode)
+
         def build():
-            return _facet_counts_impl(
-                self.spark, self.index_dir, self.stats, query, facet_col,
-                mode, where, self._lookup,
-                postings_df=self._postings_df, docs_df=self._docs_df)
+            return self._facet_build(query, facet_col, mode, where)
         if where is not None:
             return build()
         return self._cached_plan(("facet", query, facet_col, mode),
                                  build)
 
-    def _or_over(self, rows: list[dict], k: int,
-                 with_doc_cols: bool) -> DataFrame:
-        if not rows:
-            return _empty_topk(self.spark, with_doc_cols)
-        idf = {r["term"]: r["idf"] for r in rows}
-        buckets = sorted({r["term_bucket"] for r in rows})
-        return _wand_topk(self.spark, self.index_dir, idf, buckets,
-                          float(self.stats["avgdl"]), len(idf), k, "or",
-                          with_doc_cols, postings_df=self._postings_df,
-                          docs_df=self._docs_df,
-                          est_postings=_est_postings(rows))
+    def _empty_facets(self, facet_col: str) -> DataFrame:
+        # the facet column's REAL type from docs/ (an int facet would
+        # otherwise come back string-typed only when empty)
+        return _empty_frame(self.spark, T.StructType([
+            self._docs_df.schema[facet_col],
+            T.StructField("n_docs", T.LongType(), False)]))
 
+    def _facet_build(self, query: str, facet_col: str, mode: str,
+                     where) -> DataFrame:
+        plan = self._plan(query, mode)
+        if plan is None:
+            return self._empty_facets(facet_col)
+        tomb, tomb_join = _tombstone_state(self.spark, self.index_dir)
+        avgdl = float(self.stats["avgdl"])
 
-def _est_postings(rows) -> int | None:
-    """Σ df over dict rows — the plan-time match-payload estimate the
-    single-task rank gate keys on. None when a row lacks df (callers
-    that can't estimate keep the parallel kernel)."""
-    try:
-        return int(sum(int(r["df"]) for r in rows))
-    except (KeyError, TypeError, ValueError):
-        return None
+        def kernel_all(pdf: pd.DataFrame) -> pd.DataFrame:
+            # membership only: no tf/dl decode, no scoring (facet
+            # counts are score-independent)
+            return _wand_split(pdf, plan.idf, avgdl, None, plan.mode,
+                               plan.n_terms, plan.phrase, tomb=tomb,
+                               score=False)
+
+        if _driver_gate(plan.est, tomb_join):
+            cand = _rank_on_driver(self.spark, self.index_dir,
+                                   plan.buckets, sorted(plan.idf),
+                                   kernel_all, None)
+        else:
+            cand = self._prows(plan.buckets, sorted(plan.idf),
+                               tomb_join).groupBy("split_id") \
+                .applyInPandas(kernel_all, "doc_id long, score double")
+        docs = self._docs_df
+        if where is not None:
+            docs = docs.where(where)
+        # ≤ |facet values| rows survive the aggregation, so the final
+        # order is a single-partition sort (coalesce +
+        # sortWithinPartitions) — identical total order to orderBy
+        # without the range-partitioning Exchange and its sampling pass
+        return (cand.select("doc_id")
+                .join(docs.select("doc_id", facet_col), "doc_id")
+                .groupBy(facet_col)
+                .agg(F.count("*").alias("n_docs"))
+                .repartition(1)
+                .sortWithinPartitions(F.desc("n_docs"), F.asc(facet_col)))
+
+    def match_count(self, query: str, mode: str = "and") -> int:
+        """:func:`match_count` on this handle."""
+        _check_mode(mode)
+        plan = self._plan(query, mode)
+        if plan is None:
+            return 0
+        tomb, tomb_join = _tombstone_state(self.spark, self.index_dir)
+        avgdl = float(self.stats["avgdl"])
+
+        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+            out = _wand_split(pdf, plan.idf, avgdl, None, plan.mode,
+                              plan.n_terms, plan.phrase, tomb=tomb,
+                              score=False)
+            return pd.DataFrame({"n": pd.Series([len(out)],
+                                                dtype="int64")})
+
+        counts = self._prows(plan.buckets, sorted(plan.idf), tomb_join) \
+            .groupBy("split_id").applyInPandas(kernel, "n long")
+        row = counts.agg(F.sum("n").alias("n")).collect()[0]
+        return int(row["n"] or 0)
+
+    def facet_counts_grouped(self, query: str, facet_col: str = "lang",
+                             mode: str = "and") -> DataFrame:
+        """:func:`facet_counts_grouped` on this handle."""
+        _check_mode(mode)
+        facet_field = self._docs_df.schema[facet_col]
+        plan = self._plan(query, mode)
+        if plan is None:
+            return self._empty_facets(facet_col)
+        tomb, tomb_join = _tombstone_state(self.spark, self.index_dir)
+        avgdl = float(self.stats["avgdl"])
+
+        # the split's (doc_id, value) map rides through a COGROUP — one
+        # array row per split next to its posting rows. A plain join
+        # would replicate the array onto every posting row through the
+        # group shuffle (O(terms × n_docs) bytes); cogrouped it crosses
+        # the wire once per split.
+        fmap = self._docs_df.select(
+            "split_id", F.struct(F.col("doc_id"),
+                                 F.col(facet_col).alias("fv")).alias("p"))
+        vtype = facet_field.dataType.simpleString()
+
+        def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+            out = _wand_split(left, plan.idf, avgdl, None, plan.mode,
+                              plan.n_terms, plan.phrase, tomb=tomb,
+                              score=False)
+            emptyf = pd.DataFrame({"fv": pd.Series([], dtype="object"),
+                                   "n": pd.Series([], dtype="int64")})
+            if not len(out) or not len(left) or not len(right):
+                return emptyf
+            fids = np.asarray([p["doc_id"] for p in right["p"]],
+                              dtype=np.int64)
+            order = np.argsort(fids, kind="stable")
+            fids = fids[order]
+            fvals = pd.Series([p["fv"] for p in right["p"]]).iloc[order]
+            pos = np.searchsorted(fids, out["doc_id"].to_numpy())
+            vc = fvals.iloc[pos].value_counts(dropna=False)
+            return pd.DataFrame({"fv": vc.index,
+                                 "n": vc.to_numpy().astype("int64")})
+
+        cand = self._prows(plan.buckets, sorted(plan.idf), tomb_join) \
+            .groupBy("split_id").cogroup(fmap.groupBy("split_id")) \
+            .applyInPandas(kernel, f"fv {vtype}, n long")
+        # ≤ |facet values| rows after the aggregation — single-partition
+        # sort instead of orderBy's range Exchange + sampling pass
+        return (cand.groupBy("fv").agg(F.sum("n").alias("n_docs"))
+                .select(F.col("fv").alias(facet_col), "n_docs")
+                .repartition(1)
+                .sortWithinPartitions(F.desc("n_docs"), F.asc(facet_col)))
 
 
 def _fuzzy_term(term: str) -> str:
@@ -556,8 +815,8 @@ def _fuzzy_term(term: str) -> str:
 
 
 def _levenshtein_leq(a: str, b: str, d: int) -> bool:
-    """Banded Levenshtein ≤ d check (the warm fuzzy path's driver-side
-    twin of the JVM levenshtein-with-threshold)."""
+    """Banded Levenshtein ≤ d check (the driver-cached dict's twin of
+    the JVM levenshtein-with-threshold)."""
     if abs(len(a) - len(b)) > d:
         return False
     prev = list(range(len(b) + 1))
@@ -586,20 +845,31 @@ def _check_format(stats: dict, index_dir: str) -> None:
             "finalize_stream_index)")
 
 
-def _plan_terms(query: str, mode: str,
-                stats: dict) -> tuple[str, list[str], list[str] | None]:
-    """Resolve (mode, lookup terms, phrase sequence). A 1-token phrase
-    degrades to AND (identical semantics, no position decode)."""
-    if mode != "phrase":
+def _plan_terms(query: str, mode: str, stats: dict, slop: int = 2,
+                ordered: bool = False
+                ) -> tuple[str, list[str], list[str] | NearSpec | None]:
+    """Resolve (kernel mode, lookup terms, phrase sequence or
+    :class:`NearSpec`). A 1-token phrase degrades to AND (identical
+    semantics, no position decode). 'near' takes the query's DISTINCT
+    terms in query order; a single one degrades to AND too (any window
+    is trivially satisfied)."""
+    if mode == "near" and slop < 0:
+        raise ValueError(f"slop must be ≥ 0, got {slop}")
+    if mode not in ("phrase", "near"):
         return mode, parse_query(query, stats["tokenizer"]), None
     if not stats.get("positions", False):
         raise ValueError(
-            "phrase search needs a positional index — rebuild with "
+            f"{mode} search needs a positional index — rebuild with "
             "build_index(..., positions=True)")
-    phrase = parse_phrase(query, stats["tokenizer"])
-    if len(phrase) <= 1:
-        return "and", sorted(set(phrase)), None
-    return "phrase", sorted(set(phrase)), phrase
+    seq = parse_phrase(query, stats["tokenizer"])
+    if mode == "near":
+        terms = list(dict.fromkeys(seq))
+        if len(terms) <= 1:
+            return "and", terms, None
+        return "phrase", terms, NearSpec(terms, slop, ordered)
+    if len(seq) <= 1:
+        return "and", sorted(set(seq)), None
+    return "phrase", sorted(set(seq)), seq
 
 
 def _tfn(tf, dl, avgdl: float):
@@ -1109,9 +1379,8 @@ def match_positions(spark: SparkSession, index_dir: str, query: str,
             "match_positions needs a positional index — rebuild with "
             "build_index(..., positions=True)")
     terms = parse_query(query, stats["tokenizer"])
-    empty = spark.createDataFrame([], "doc_id long, term string, pos int")
     if not terms or not doc_ids:
-        return empty
+        return _empty_frame(spark, "doc_id long, term string, pos int")
     n_buckets = int(stats["n_buckets"])
     buckets = sorted({term_bucket(t, n_buckets) for t in terms})
     ids = np.sort(np.asarray(list(doc_ids), np.int64))
@@ -1157,8 +1426,6 @@ def snippets(spark: SparkSession, index_dir: str,
 
     stats = read_stats(index_dir)
     _check_format(stats, index_dir)
-    empty = spark.createDataFrame(
-        [], "doc_id long, score double, snippet string, n_hits int")
     if mode == "near":
         # r5: proximity-gated hit set; windows anchor on the same
         # query-term occurrences (match_positions is term-based)
@@ -1168,7 +1435,8 @@ def snippets(spark: SparkSession, index_dir: str,
         top = search_indexed(spark, index_dir, query, k, mode,
                              with_doc_cols=True).collect()
     if not top:
-        return empty
+        return _empty_frame(
+            spark, "doc_id long, score double, snippet string, n_hits int")
     mp = match_positions(spark, index_dir, query,
                          [r.doc_id for r in top])
     pos_of = mp.groupBy("doc_id").agg(
@@ -1251,118 +1519,21 @@ def search_many(spark: SparkSession, index_dir: str,
     per-query (score desc, doc_id asc) top-k — each query's rows are
     identical to its individual single-query answer (parity-tested per
     mode)."""
-    if mode not in ("and", "or", "phrase", "boolean", "wildcard",
-                    "fuzzy", "regex", "near"):
-        raise ValueError(
-            "mode must be 'and', 'or', 'phrase', 'boolean', 'wildcard', "
-            f"'fuzzy', 'regex' or 'near', got {mode!r}")
-    stats = read_stats(index_dir)
-    _check_format(stats, index_dir)
-    n_buckets = int(stats["n_buckets"])
-    empty = _empty_many(spark)
-
-    if mode == "boolean":
-        from datastream_io_spark.operators.boolean_search import (
-            cold_expander,
-            plan_boolean,
-        )
-
-        exp = cold_expander(spark, index_dir, max_expansions)
-        trees, pos_all, all_terms = {}, set(), set()
-        for qid, q in queries.items():
-            tree, pos, terms = plan_boolean(q, stats, expander=exp)
-            trees[qid] = (tree, pos)
-            pos_all |= pos
-            all_terms |= terms
-        if not all_terms:
-            return empty
-        # the estimate needs df for every leaf (NOT leaves are scanned
-        # too), so the one dict job covers all_terms, not just positives
-        dict_rows = lookup_terms(spark, index_dir, sorted(all_terms),
-                                 n_buckets)
-        dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-        idf_all = {r["term"]: float(r["idf"]) for r in dict_rows
-                   if r["term"] in pos_all}
-        plans_b = {qid: ({t: idf_all[t] for t in pos if t in idf_all},
-                         tree)
-                   for qid, (tree, pos) in trees.items()}
-        return _search_many_boolean_tail(spark, index_dir, stats,
-                                         plans_b, sorted(all_terms), k,
-                                         df_by_term=dfs)
-
-    if mode in ("wildcard", "fuzzy", "regex"):
-        plans_w, dfs = {}, {}
-        for qid, q in queries.items():
-            rows = _expansion_rows_cold(spark, index_dir, q, mode,
-                                        max_dist, max_expansions)
-            if rows:
-                found = {r["term"]: float(r["idf"]) for r in rows}
-                plans_w[qid] = (found, len(found), "or", None)
-                dfs.update({r["term"]: int(r["df"]) for r in rows})
-        return _search_many_wand_tail(spark, index_dir, stats, plans_w,
-                                      k, df_by_term=dfs)
-
-    if mode == "near":
-        # ONE dict job for the union of every query's terms, then each
-        # query plans from the prefetched rows
-        allt: set = set()
-        for q in queries.values():
-            allt.update(parse_phrase(q, stats["tokenizer"]))
-        cache = ({r["term"]: r for r in lookup_terms(
-            spark, index_dir, sorted(allt), n_buckets)} if allt else {})
-
-        def cached_lookup(ts):
-            return [cache[t] for t in ts if t in cache]
-
-        plans_w = {}
-        for qid, q in queries.items():
-            plan = _near_plan(stats, cached_lookup, q, slop, ordered)
-            if plan is not None:
-                idf_q, n_terms, qmode, spec, _, _ = plan
-                plans_w[qid] = (idf_q, n_terms, qmode, spec)
-        dfs = {t: int(r["df"]) for t, r in cache.items()}
-        return _search_many_wand_tail(spark, index_dir, stats, plans_w,
-                                      k, df_by_term=dfs)
-
-    # and / or / phrase all run the _wand_split kernel; _plan_terms
-    # resolves the per-query mode (a 1-token phrase degrades to AND)
-    # and enforces the positional-index requirement
-    plans = {}  # qid -> (terms, qmode, phrase)
-    idf_needed: set = set()
-    for qid, q in queries.items():
-        qmode, terms, phrase = _plan_terms(q, mode, stats)
-        if terms:
-            plans[qid] = (terms, qmode, phrase)
-            idf_needed.update(terms)
-    if not plans:
-        return empty
-    dict_rows = lookup_terms(spark, index_dir, sorted(idf_needed),
-                             n_buckets)
-    idf_all = {r["term"]: float(r["idf"]) for r in dict_rows}
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-    plans_w = {}
-    for qid, (terms, qmode, phrase) in plans.items():
-        found = {t: idf_all[t] for t in terms if t in idf_all}
-        if not found:
-            continue
-        if qmode in ("and", "phrase") and len(found) < len(terms):
-            continue  # a term is absent from the corpus
-        plans_w[qid] = (found, len(terms), qmode, phrase)
-    return _search_many_wand_tail(spark, index_dir, stats, plans_w, k,
-                                  df_by_term=dfs)
+    return Searcher(spark, index_dir, dict_cache="spark").search_many(
+        queries, k, mode, max_dist, max_expansions, slop, ordered)
 
 
 def _empty_many(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [], "query_id string, doc_id long, score double")
+    return _empty_frame(spark, _MANY_SCHEMA)
 
 
 def _expansion_rows_cold(spark: SparkSession, index_dir: str, q: str,
                          mode: str, max_dist: int,
                          max_expansions: int) -> list:
-    """One query's wildcard/fuzzy expansion rows on the cold path —
-    sidecar when fresh, base dictionary otherwise; identical cap
-    semantics to the single-query functions."""
+    """One query's wildcard/fuzzy/regex expansion rows without a
+    driver-cached dict: Spark scan of the sidecar when fresh, of the
+    base dictionary otherwise; same (df desc, term asc) cap as
+    :meth:`Searcher._expand`'s cached path."""
     from datastream_io_spark.operators.dictindex import (
         fuzzy_expansion_rows,
         prefix_expansion_df,
@@ -1401,13 +1572,14 @@ def _expansion_rows_cold(spark: SparkSession, index_dir: str, q: str,
 
 def _search_many_wand_tail(spark: SparkSession, index_dir: str,
                            stats: dict, plans_w: dict,
-                           k: int, postings_df=None,
+                           k: int, scans=None,
                            df_by_term: dict | None = None) -> DataFrame:
-    """Shared execution tail of the batched wand modes (and cold/warm
-    alike): one bucket-pruned scan over the union of every plan's
-    terms, per-split kernels with a shared decode cache, per-query
-    rank window. ``df_by_term`` (df for every dict term the caller
-    looked up) enables the single-task gate — see :func:`_rank_many`."""
+    """Shared execution tail of the batched wand modes: one
+    bucket-pruned scan over the union of every plan's terms, per-split
+    kernels with a shared decode cache, per-query rank window.
+    ``df_by_term`` (df for every dict term the caller looked up)
+    enables the single-task gate — see :func:`_rank_many`; ``scans``
+    as in :func:`_wand_topk`."""
     if not plans_w:
         return _empty_many(spark)
     avgdl = float(stats["avgdl"])
@@ -1437,50 +1609,12 @@ def _search_many_wand_tail(spark: SparkSession, index_dir: str,
 
     est = (None if df_by_term is None
            else sum(df_by_term.get(t, 0) for t in needed))
-    return _rank_many(spark, index_dir, buckets, needed, postings_df,
-                      tomb_join, kernel, k, est)
-
-
-def _search_many_boolean_tail(spark: SparkSession, index_dir: str,
-                              stats: dict, plans_b: dict,
-                              all_terms: list[str], k: int,
-                              postings_df=None,
-                              df_by_term: dict | None = None) -> DataFrame:
-    from datastream_io_spark.operators.boolean_search import (
-        score_tree_split,
-    )
-
-    if not plans_b:
-        return _empty_many(spark)
-    avgdl = float(stats["avgdl"])
-    n_buckets = int(stats["n_buckets"])
-    buckets = sorted({term_bucket(t, n_buckets) for t in all_terms})
-    tomb, tomb_join = _tombstone_state(spark, index_dir)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        blocks_of = {r.term: list(r.blocks) for r in pdf.itertuples()}
-        decoded: dict = {}  # shared across the batch's queries
-        tv = _tv_from(pdf, tomb)
-        outs = []
-        for qid, (idf_q, tree) in plans_b.items():
-            out = score_tree_split(tree, idf_q, avgdl, k, blocks_of,
-                                   decoded, tv)
-            if len(out):
-                out.insert(0, "query_id", qid)
-                outs.append(out)
-        return _concat_query_outs(outs)
-
-    # df_by_term must cover every ALL_TERMS member the dict knows (NOT
-    # leaves included — their postings are read too); absent-from-dict
-    # terms have no posting rows and correctly count 0
-    est = (None if df_by_term is None
-           else sum(df_by_term.get(t, 0) for t in all_terms))
-    return _rank_many(spark, index_dir, buckets, all_terms, postings_df,
+    return _rank_many(spark, index_dir, buckets, needed, scans,
                       tomb_join, kernel, k, est)
 
 
 def _rank_many(spark: SparkSession, index_dir: str, buckets: list,
-               terms: list[str], postings_df, tomb_join, kernel, k: int,
+               terms: list[str], scans, tomb_join, kernel, k: int,
                est_postings: int | None) -> DataFrame:
     """Per-query top-k over a batch's per-split kernel output: on the
     driver under the single-task gate (:func:`_rank_on_driver`), else
@@ -1488,6 +1622,7 @@ def _rank_many(spark: SparkSession, index_dir: str, buckets: list,
     if _driver_gate(est_postings, tomb_join):
         return _rank_on_driver(spark, index_dir, buckets, terms, kernel,
                                k, _MANY_SCHEMA)
+    postings_df = scans._postings_df if scans is not None else None
     prows = _with_tomb(postings_rows(spark, index_dir, buckets, terms,
                                      postings_df=postings_df), tomb_join)
     cand = prows.groupBy("split_id").applyInPandas(
@@ -1758,15 +1893,8 @@ def search_wildcard(spark: SparkSession, index_dir: str, prefix: str,
     highest-df terms (df desc, term asc — deterministic); a hit of the
     cap is the documented approximation at 10^12-file scale: the
     dropped expansions are the rarest, i.e. the smallest score mass."""
-    from datastream_io_spark.operators.dictindex import prefix_expansion_df
-
-    prefix = prefix.lower().rstrip("*")
-    if not prefix:
-        return _empty_topk(spark, with_doc_cols)
-    return _expansion_or_topk(
-        spark, index_dir, F.col("term").startswith(prefix),
-        k, max_expansions, with_doc_cols,
-        expansion_df=prefix_expansion_df(spark, index_dir, prefix))
+    return Searcher(spark, index_dir, dict_cache="spark").search_wildcard(
+        prefix, k, max_expansions, with_doc_cols)
 
 
 _REGEX_META = set(".[]{}()*+?|^$\\")
@@ -1820,13 +1948,8 @@ def search_regex(spark: SparkSession, index_dir: str, pattern: str,
     lowercase (an uppercase literal matches nothing, as in Lucene;
     lowercasing the pattern here would invert escape classes:
     ``\\W``.lower() is ``\\w``)."""
-    pat = pattern
-    if not pat:
-        return _empty_topk(spark, with_doc_cols)
-    return _expansion_or_topk(spark, index_dir, None, k,
-                              max_expansions, with_doc_cols,
-                              expansion_df=_regex_expansion_df(
-                                  spark, index_dir, pat))
+    return Searcher(spark, index_dir, dict_cache="spark").search_regex(
+        pattern, k, max_expansions, with_doc_cols)
 
 
 def _regex_expansion_df(spark: SparkSession, index_dir: str,
@@ -1868,25 +1991,8 @@ def search_fuzzy(spark: SparkSession, index_dir: str, term: str,
     threshold; no UDF), so the distance computation stays distributed.
     Cap semantics match Q18: highest-df expansions kept,
     deterministically."""
-    from datastream_io_spark.operators.dictindex import (
-        fuzzy_expansion_rows,
-    )
-
-    q = _fuzzy_term(term)
-    if not q:
-        return _empty_topk(spark, with_doc_cols)
-    rows = fuzzy_expansion_rows(spark, index_dir, q, max_dist,
-                                max_expansions)
-    if rows is not None:
-        stats = read_stats(index_dir)
-        _check_format(stats, index_dir)
-        return _or_topk_from_rows(spark, index_dir, stats, rows, k,
-                                  with_doc_cols)
-    lo, hi = max(1, len(q) - max_dist), len(q) + max_dist
-    cond = (F.length("term").between(lo, hi)
-            & (F.levenshtein(F.col("term"), F.lit(q), max_dist) >= 0))
-    return _expansion_or_topk(spark, index_dir, cond, k, max_expansions,
-                              with_doc_cols)
+    return Searcher(spark, index_dir, dict_cache="spark").search_fuzzy(
+        term, k, max_dist, max_expansions, with_doc_cols)
 
 
 def _empty_topk(spark: SparkSession, with_doc_cols: bool) -> DataFrame:
@@ -1895,40 +2001,7 @@ def _empty_topk(spark: SparkSession, with_doc_cols: bool) -> DataFrame:
     schema = ("doc_id long, repo string, path string, commit string,"
               " lang string, score double") if with_doc_cols else \
              "doc_id long, score double"
-    return spark.createDataFrame([], schema)
-
-
-def _expansion_or_topk(spark: SparkSession, index_dir: str, dict_cond,
-                       k: int, max_expansions: int,
-                       with_doc_cols: bool,
-                       expansion_df: DataFrame | None = None) -> DataFrame:
-    """Shared tail of the multi-term rewrites (wildcard Q18, fuzzy
-    Q20): expansion scan (``expansion_df`` when a sidecar provides it,
-    else dict/ under ``dict_cond``) → top-``max_expansions`` by
-    (df desc, term asc) → OR-mode BM25 via the normal pruned kernel."""
-    stats = read_stats(index_dir)
-    _check_format(stats, index_dir)
-    if expansion_df is None:
-        expansion_df = spark.read.parquet(
-            os.path.join(index_dir, "dict")).where(dict_cond)
-    rows = (expansion_df
-            .select("term", "df", "idf", "term_bucket")
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(max_expansions).collect())
-    return _or_topk_from_rows(spark, index_dir, stats, rows, k,
-                              with_doc_cols)
-
-
-def _or_topk_from_rows(spark: SparkSession, index_dir: str, stats: dict,
-                       rows: list, k: int,
-                       with_doc_cols: bool) -> DataFrame:
-    if not rows:
-        return _empty_topk(spark, with_doc_cols)
-    idf = {r["term"]: float(r["idf"]) for r in rows}
-    buckets = sorted({int(r["term_bucket"]) for r in rows})
-    return _wand_topk(spark, index_dir, idf, buckets,
-                      float(stats["avgdl"]), len(idf), k, "or",
-                      with_doc_cols, est_postings=_est_postings(rows))
+    return _empty_frame(spark, schema)
 
 
 def facet_counts(spark: SparkSession, index_dir: str, query: str,
@@ -1945,73 +2018,8 @@ def facet_counts(spark: SparkSession, index_dir: str, query: str,
 
     ``where`` optionally restricts the counted docs (facets of a
     filtered result page)."""
-    stats = read_stats(index_dir)
-    _check_format(stats, index_dir)
-    return _facet_counts_impl(
-        spark, index_dir, stats, query, facet_col, mode, where,
-        lambda terms: lookup_terms(spark, index_dir, terms,
-                                   int(stats["n_buckets"])))
-
-
-def _facet_counts_impl(spark, index_dir, stats, query, facet_col, mode,
-                       where, lookup, postings_df=None,
-                       docs_df=None) -> DataFrame:
-    if mode not in ("and", "or", "phrase"):
-        raise ValueError(
-            f"mode must be 'and', 'or' or 'phrase', got {mode!r}")
-    if docs_df is None:
-        docs_df = spark.read.parquet(os.path.join(index_dir, "docs"))
-
-    def empty():
-        # built LAZILY (schema fetch + createDataFrame cost py4j round
-        # trips the hit path must not pay); uses the facet column's
-        # REAL type from docs/ (an int facet would otherwise come back
-        # string-typed only when empty)
-        import pyspark.sql.types as _T
-        facet_field = docs_df.schema[facet_col]
-        return spark.createDataFrame([], _T.StructType([
-            facet_field, _T.StructField("n_docs", _T.LongType(), False)]))
-
-    mode, terms, phrase = _plan_terms(query, mode, stats)
-    if not terms:
-        return empty()
-    dict_rows = lookup(terms)
-    if (mode in ("and", "phrase") and len(dict_rows) < len(terms)) \
-            or not dict_rows:
-        return empty()
-    idf = {r["term"]: float(r["idf"]) for r in dict_rows}
-    buckets = sorted({int(r["term_bucket"]) for r in dict_rows})
-    tomb, tomb_join = _tombstone_state(spark, index_dir)
-    avgdl, n_terms = float(stats["avgdl"]), len(terms)
-
-    def kernel_all(pdf: pd.DataFrame) -> pd.DataFrame:
-        # membership only: no tf/dl decode, no scoring (facet counts
-        # are score-independent)
-        return _wand_split(pdf, idf, avgdl, None, mode, n_terms, phrase,
-                           tomb=tomb, score=False)
-
-    if _driver_gate(_est_postings(dict_rows), tomb_join):
-        cand = _rank_on_driver(spark, index_dir, buckets, sorted(idf),
-                               kernel_all, None)
-    else:
-        prows = _with_tomb(
-            postings_rows(spark, index_dir, buckets, sorted(idf),
-                          postings_df=postings_df), tomb_join)
-        cand = prows.groupBy("split_id").applyInPandas(
-            kernel_all, "doc_id long, score double")
-    cand = cand.select("doc_id")
-    docs = docs_df
-    if where is not None:
-        docs = docs.where(where)
-    # ≤ |facet values| rows survive the aggregation, so the final order
-    # is a single-partition sort (coalesce + sortWithinPartitions) —
-    # identical total order to orderBy without the range-partitioning
-    # Exchange and its sampling pass
-    return (cand.join(docs.select("doc_id", facet_col), "doc_id")
-            .groupBy(facet_col)
-            .agg(F.count("*").alias("n_docs"))
-            .repartition(1)
-            .sortWithinPartitions(F.desc("n_docs"), F.asc(facet_col)))
+    return Searcher(spark, index_dir, dict_cache="spark").facet_counts(
+        query, facet_col, mode, where)
 
 
 def match_count(spark: SparkSession, index_dir: str, query: str,
@@ -2022,34 +2030,8 @@ def match_count(spark: SparkSession, index_dir: str, query: str,
     data crossing the wire is one integer per split at any corpus
     size. The primitive behind partitioned facet counts
     (:func:`~datastream_io_spark.operators.partitioned.facet_counts_partitioned`)."""
-    if mode not in ("and", "or", "phrase"):
-        raise ValueError(
-            f"mode must be 'and', 'or' or 'phrase', got {mode!r}")
-    stats = read_stats(index_dir)
-    _check_format(stats, index_dir)
-    mode, terms, phrase = _plan_terms(query, mode, stats)
-    if not terms:
-        return 0
-    dict_rows = lookup_terms(spark, index_dir, terms,
-                             int(stats["n_buckets"]))
-    if (mode in ("and", "phrase") and len(dict_rows) < len(terms)) \
-            or not dict_rows:
-        return 0
-    idf = {r["term"]: float(r["idf"]) for r in dict_rows}
-    buckets = sorted({int(r["term_bucket"]) for r in dict_rows})
-    tomb, tomb_join = _tombstone_state(spark, index_dir)
-    prows = _with_tomb(
-        postings_rows(spark, index_dir, buckets, sorted(idf)), tomb_join)
-    avgdl, n_terms = float(stats["avgdl"]), len(terms)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = _wand_split(pdf, idf, avgdl, None, mode, n_terms, phrase,
-                          tomb=tomb, score=False)
-        return pd.DataFrame({"n": pd.Series([len(out)], dtype="int64")})
-
-    counts = prows.groupBy("split_id").applyInPandas(kernel, "n long")
-    row = counts.agg(F.sum("n").alias("n")).collect()[0]
-    return int(row["n"] or 0)
+    return Searcher(spark, index_dir, dict_cache="spark").match_count(
+        query, mode)
 
 
 def facet_counts_grouped(spark: SparkSession, index_dir: str,
@@ -2076,71 +2058,8 @@ def facet_counts_grouped(spark: SparkSession, index_dir: str,
     partitioned root (:mod:`~datastream_io_spark.operators.partitioned`)
     amortizes that scan away entirely; this path is the exact answer
     for ad-hoc columns."""
-    if mode not in ("and", "or", "phrase"):
-        raise ValueError(
-            f"mode must be 'and', 'or' or 'phrase', got {mode!r}")
-    stats = read_stats(index_dir)
-    _check_format(stats, index_dir)
-    docs_df = spark.read.parquet(os.path.join(index_dir, "docs"))
-    facet_field = docs_df.schema[facet_col]
-
-    def empty():
-        import pyspark.sql.types as _T
-        return spark.createDataFrame([], _T.StructType([
-            facet_field,
-            _T.StructField("n_docs", _T.LongType(), False)]))
-
-    mode, terms, phrase = _plan_terms(query, mode, stats)
-    if not terms:
-        return empty()
-    dict_rows = lookup_terms(spark, index_dir, terms,
-                             int(stats["n_buckets"]))
-    if (mode in ("and", "phrase") and len(dict_rows) < len(terms)) \
-            or not dict_rows:
-        return empty()
-    idf = {r["term"]: float(r["idf"]) for r in dict_rows}
-    buckets = sorted({int(r["term_bucket"]) for r in dict_rows})
-    tomb, tomb_join = _tombstone_state(spark, index_dir)
-    prows = _with_tomb(
-        postings_rows(spark, index_dir, buckets, sorted(idf)), tomb_join)
-    avgdl, n_terms = float(stats["avgdl"]), len(terms)
-
-    # the split's (doc_id, value) map rides through a COGROUP — one
-    # array row per split next to its posting rows. A plain join would
-    # replicate the array onto every posting row through the group
-    # shuffle (O(terms × n_docs) bytes); cogrouped it crosses the wire
-    # once per split.
-    fmap = docs_df.select(
-        "split_id", F.struct(F.col("doc_id"),
-                             F.col(facet_col).alias("fv")).alias("p"))
-    vtype = facet_field.dataType.simpleString()
-
-    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        out = _wand_split(left, idf, avgdl, None, mode, n_terms, phrase,
-                          tomb=tomb, score=False)
-        emptyf = pd.DataFrame({"fv": pd.Series([], dtype="object"),
-                               "n": pd.Series([], dtype="int64")})
-        if not len(out) or not len(left) or not len(right):
-            return emptyf
-        fids = np.asarray([p["doc_id"] for p in right["p"]],
-                          dtype=np.int64)
-        order = np.argsort(fids, kind="stable")
-        fids = fids[order]
-        fvals = pd.Series([p["fv"] for p in right["p"]]).iloc[order]
-        pos = np.searchsorted(fids, out["doc_id"].to_numpy())
-        vc = fvals.iloc[pos].value_counts(dropna=False)
-        return pd.DataFrame({"fv": vc.index,
-                             "n": vc.to_numpy().astype("int64")})
-
-    cand = prows.groupBy("split_id").cogroup(
-        fmap.groupBy("split_id")).applyInPandas(
-        kernel, f"fv {vtype}, n long")
-    # ≤ |facet values| rows after the aggregation — single-partition
-    # sort instead of orderBy's range Exchange + sampling pass
-    return (cand.groupBy("fv").agg(F.sum("n").alias("n_docs"))
-            .select(F.col("fv").alias(facet_col), "n_docs")
-            .repartition(1)
-            .sortWithinPartitions(F.desc("n_docs"), F.asc(facet_col)))
+    return (Searcher(spark, index_dir, dict_cache="spark")
+            .facet_counts_grouped(query, facet_col, mode))
 
 
 def lookup_terms(spark: SparkSession, index_dir: str, terms: list[str],
@@ -2154,8 +2073,9 @@ def lookup_terms(spark: SparkSession, index_dir: str, terms: list[str],
     When the build recorded a small dictionary (same
     ``AUTO_DICT_DRIVER_MAX_TERMS`` gate as the warm Searcher's driver
     cache), the pruned bucket files are read DIRECTLY with pyarrow —
-    a few ms of driver I/O instead of a whole Spark job per cold
-    query. Large dictionaries keep the distributed lookup."""
+    a few ms of driver I/O instead of a whole Spark job per query
+    of a Searcher without the driver dict. Large dictionaries keep
+    the distributed lookup."""
     if n_buckets is None:
         n_buckets = int(read_stats(index_dir)["n_buckets"])
     buckets = sorted({term_bucket(t, n_buckets) for t in terms})
@@ -2209,26 +2129,8 @@ def search_indexed(
     docs before the global TakeOrdered — correct for any predicate; at
     100-TB scale a HOT filter column belongs in the index key instead
     (one index per lang, same layout), which this API composes with."""
-    if mode not in ("and", "or", "phrase"):
-        raise ValueError(
-            f"mode must be 'and', 'or' or 'phrase', got {mode!r}")
-    stats = read_stats(index_dir)
-    _check_format(stats, index_dir)
-    mode, terms, phrase = _plan_terms(query, mode, stats)
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    dict_rows = lookup_terms(spark, index_dir, terms,
-                             int(stats["n_buckets"]))
-    if ((mode in ("and", "phrase") and len(dict_rows) < len(terms))
-            or not dict_rows):
-        # some term absent from the corpus (or none found)
-        return spark.createDataFrame([], "doc_id long, score double")
-    idf = {r["term"]: float(r["idf"]) for r in dict_rows}
-    buckets = sorted({int(r["term_bucket"]) for r in dict_rows})
-    return _wand_topk(spark, index_dir, idf, buckets,
-                      float(stats["avgdl"]), len(terms), k, mode,
-                      with_doc_cols, phrase, where,
-                      est_postings=_est_postings(dict_rows))
+    return Searcher(spark, index_dir, dict_cache="spark").search(
+        query, k, mode, with_doc_cols, where)
 
 
 def search_near(
@@ -2253,125 +2155,8 @@ def search_near(
     streams (decoded once per (term, block), only for blocks holding
     candidates), per-split k-cut, one global TakeOrdered. Positional
     index required."""
-    stats = read_stats(index_dir)
-    _check_format(stats, index_dir)
-    plan = _near_plan(
-        stats, lambda ts: lookup_terms(spark, index_dir, ts,
-                                       int(stats["n_buckets"])),
-        query, slop, ordered)
-    if plan is None:
-        return spark.createDataFrame([], "doc_id long, score double")
-    idf, n_terms, qmode, spec, buckets, est = plan
-    return _wand_topk(spark, index_dir, idf, buckets,
-                      float(stats["avgdl"]), n_terms, k, qmode,
-                      with_doc_cols, phrase=spec, est_postings=est)
-
-
-def _near_plan(stats: dict, rows_lookup, query: str, slop: int,
-               ordered: bool):
-    """Resolve one near query against any dict-lookup callable (cold
-    job or warm cache): (idf, n_terms, qmode, spec, buckets, est), or
-    None when the query is empty / a term is absent (conjunctive). A
-    single distinct term degrades to AND (any window is trivially
-    satisfied). ``est`` is the Σ-df payload estimate for the
-    single-task rank gate."""
-    if slop < 0:
-        raise ValueError(f"slop must be ≥ 0, got {slop}")
-    if not stats.get("positions", False):
-        raise ValueError(
-            "near search needs a positional index — rebuild with "
-            "build_index(..., positions=True)")
-    seq = parse_phrase(query, stats["tokenizer"])
-    terms = list(dict.fromkeys(seq))  # distinct, query order
-    if not terms:
-        return None
-    rows = rows_lookup(terms)
-    if len(rows) < len(terms):
-        return None  # conjunction — a missing term ends it
-    idf = {r["term"]: float(r["idf"]) for r in rows}
-    buckets = sorted({int(r["term_bucket"]) for r in rows})
-    est = _est_postings(rows)
-    if len(terms) == 1:
-        return idf, 1, "and", None, buckets, est
-    return (idf, len(terms), "phrase", NearSpec(terms, slop, ordered),
-            buckets, est)
-
-
-def _mlt_selection(spark: SparkSession, index_dir: str, stats: dict,
-                   doc_id: int, max_terms: int,
-                   corpus: DataFrame | None,
-                   docs_df: DataFrame | None = None,
-                   lookup=None) -> list:
-    """Shared MLT selection (cold function and warm Searcher alike):
-    resolve the source doc's content (doc store, else ``corpus`` by
-    (repo, path, commit)), tokenize with the index's tokenizer, weight
-    each distinct term by tf·idf (idf from the index dict — the same
-    values scoring uses) and return the dict rows of the ``max_terms``
-    heaviest (ties: term asc). ONE docs-row fetch + ONE dict lookup —
-    the returned rows carry term_bucket/idf so callers never look the
-    selection up again."""
-    from collections import Counter
-
-    from datastream_io_spark.functions.tokenize import tokenizer_for
-
-    docs = (docs_df if docs_df is not None else
-            spark.read.parquet(os.path.join(index_dir, "docs")))
-    fetch = docs.where(F.col("doc_id") == int(doc_id))
-    split = _split_of_doc(stats, int(doc_id))
-    if split is not None and "split_id" in docs.columns:
-        # splits own contiguous doc_id ranges (frozen offsets), so the
-        # single-doc fetch prunes to ONE docs/split_id=N directory
-        # instead of scanning every split's metadata (VERDICT r5 #3)
-        fetch = fetch.where(F.col("split_id") == split)
-
-    def _doc_row():
-        rows = fetch.collect()
-        if not rows:
-            raise ValueError(f"doc_id {doc_id} not in index {index_dir}")
-        return rows[0]
-
-    if "content" in docs.columns:
-        row = _doc_row()
-        if row["content"] is not None:
-            text = row["content"]
-        elif corpus is None:
-            raise ValueError(
-                f"index at {index_dir} stores no content (built "
-                "without store_content=True) — pass the source corpus "
-                "DataFrame")
-        else:
-            text = _corpus_content(corpus, row, doc_id)
-    elif corpus is not None:
-        # ONE action resolves doc key AND content: the pruned docs row
-        # broadcasts into a corpus probe (the old shape paid two
-        # sequential collect jobs — docs fetch, then corpus fetch)
-        crows = (corpus.join(
-            F.broadcast(fetch.select("repo", "path", "commit")),
-            ["repo", "path", "commit"]).limit(1).collect())
-        if not crows:
-            row = _doc_row()  # distinguish which side is missing
-            raise ValueError(
-                f"doc_id {doc_id} ({row['repo']}/{row['path']}) not "
-                "found in the supplied corpus")
-        text = crows[0]["content"]
-    else:
-        _doc_row()  # raises not-in-index when the doc is absent
-        raise ValueError(
-            f"index at {index_dir} stores no content (built without "
-            "store_content=True) — pass the source corpus DataFrame")
-    pure, _ = tokenizer_for(stats["tokenizer"])
-    tf = Counter(pure(text))
-    if not tf:
-        return []
-    if lookup is None:
-        def lookup(ts):
-            return lookup_terms(spark, index_dir, ts,
-                                int(stats["n_buckets"]))
-    lrows = lookup(sorted(tf))
-    return sorted(
-        lrows,
-        key=lambda r: (-tf[r["term"]] * float(r["idf"]), r["term"]),
-    )[:max_terms]
+    return Searcher(spark, index_dir, dict_cache="spark").search_near(
+        query, k, slop, ordered, with_doc_cols)
 
 
 def _corpus_content(corpus: DataFrame, row, doc_id: int) -> str:
@@ -2416,11 +2201,10 @@ def mlt_terms(spark: SparkSession, index_dir: str, doc_id: int,
               max_terms: int = 20,
               corpus: DataFrame | None = None) -> list[str]:
     """The 'interesting terms' of one stored doc (Lucene MoreLikeThis
-    selection) — see :func:`_mlt_selection` for the mechanics."""
-    stats = read_stats(index_dir)
-    _check_format(stats, index_dir)
-    return [r["term"] for r in _mlt_selection(
-        spark, index_dir, stats, doc_id, max_terms, corpus)]
+    selection) — see :meth:`Searcher._mlt_selection` for the mechanics."""
+    return [r["term"] for r in
+            Searcher(spark, index_dir, dict_cache="spark")
+            ._mlt_selection(doc_id, max_terms, corpus)]
 
 
 def more_like_this(
@@ -2439,19 +2223,8 @@ def more_like_this(
     evicting the source can never starve the page), one global
     TakeOrdered. Total Spark jobs: docs-row fetch + dict lookup +
     ranking (the selection rows carry idf/bucket — no re-lookup)."""
-    stats = read_stats(index_dir)
-    _check_format(stats, index_dir)
-    rows_sel = _mlt_selection(spark, index_dir, stats, doc_id,
-                              max_terms, corpus)
-    if not rows_sel:
-        return _empty_topk(spark, with_doc_cols)
-    idf = {r["term"]: float(r["idf"]) for r in rows_sel}
-    buckets = sorted({int(r["term_bucket"]) for r in rows_sel})
-    top = _wand_topk(spark, index_dir, idf, buckets,
-                     float(stats["avgdl"]), len(idf), k + 1, "or",
-                     with_doc_cols, est_postings=_est_postings(rows_sel))
-    return (top.where(F.col("doc_id") != int(doc_id))
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+    return Searcher(spark, index_dir, dict_cache="spark").more_like_this(
+        doc_id, k, max_terms, corpus, with_doc_cols)
 
 
 def postings_rows(spark: SparkSession, index_dir: str, buckets: list,
@@ -2627,10 +2400,16 @@ def _filtered_topk(spark, index_dir, prows, idf, avgdl, n_terms, k,
 
 def _wand_topk(spark, index_dir, idf, buckets, avgdl, n_terms, k,
                mode, with_doc_cols, phrase=None, where=None,
-               postings_df=None, docs_df=None, cand_only=False,
-               est_postings=None):
+               scans=None, cand_only=False, est_postings=None):
+    """Top-k of one planned query: on the driver under the single-task
+    gate, else the per-split kernels. ``scans`` is a warm
+    :class:`Searcher` whose resolved postings / docs scans are reused,
+    each resolved only when this query needs it (None: read the
+    directories)."""
     found_terms = sorted(idf)
     tomb, tomb_join = _tombstone_state(spark, index_dir)
+    docs_df = (scans._docs_df if scans is not None
+               and (with_doc_cols or where is not None) else None)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         return _wand_split(pdf, idf, avgdl, k, mode, n_terms, phrase,
@@ -2651,7 +2430,8 @@ def _wand_topk(spark, index_dir, idf, buckets, avgdl, n_terms, k,
 
     prows = _with_tomb(
         postings_rows(spark, index_dir, buckets, found_terms,
-                      postings_df=postings_df), tomb_join)
+                      postings_df=(scans._postings_df if scans is not None
+                                   else None)), tomb_join)
     if where is not None:
         return _filtered_topk(spark, index_dir, prows, idf, avgdl,
                               n_terms, k, mode, with_doc_cols, phrase,
@@ -2692,8 +2472,8 @@ def explain_query(spark: SparkSession, index_dir: str, query: str,
     computed entirely from dict/stats reads (postings are never
     touched), so it is safe to call against a production index at any
     scale. Returns a plain dict (stable keys, JSON-serializable)."""
-    stats = read_stats(index_dir)
-    _check_format(stats, index_dir)
+    searcher = Searcher(spark, index_dir, dict_cache="spark")
+    stats = searcher.stats
     n_buckets = int(stats["n_buckets"])
     out = {
         "query": query,
@@ -2708,7 +2488,7 @@ def explain_query(spark: SparkSession, index_dir: str, query: str,
     out["n_tombstones"] = int(tomb.value.size) if tomb is not None else 0
 
     def term_rows(terms):
-        rows = lookup_terms(spark, index_dir, sorted(terms), n_buckets)
+        rows = searcher._lookup(sorted(terms))
         return [{"term": r["term"], "df": int(r["df"]),
                  "idf": round(float(r["idf"]), 6),
                  "bucket": int(r["term_bucket"])}
@@ -2716,19 +2496,16 @@ def explain_query(spark: SparkSession, index_dir: str, query: str,
 
     if mode == "boolean":
         from datastream_io_spark.operators.boolean_search import (
-            cold_expander,
             plan_boolean,
         )
 
         tree, positives, all_terms = plan_boolean(
-            query, stats,
-            expander=cold_expander(spark, index_dir, max_expansions))
+            query, stats, expander=searcher._expander(max_expansions))
         out["tree"] = tree
         out["positive_terms"] = sorted(positives)
         rows = term_rows({t for t in all_terms if t})
     elif mode in ("wildcard", "fuzzy", "regex"):
-        exp = _expansion_rows_cold(spark, index_dir, query, mode,
-                                   max_dist, max_expansions)
+        exp = searcher._expand(query, mode, max_dist, max_expansions)
         out["expansion"] = [r["term"] for r in exp]
         out["expansion_capped"] = len(exp) >= max_expansions
         rows = [{"term": r["term"], "df": int(r["df"]),

@@ -36,7 +36,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datastream_io_spark.operators.build import build_index
-from datastream_io_spark.operators.indexed_search import search_indexed
+from datastream_io_spark.operators.indexed_search import (
+    _empty_frame,
+    search_indexed,
+)
 from datastream_io_spark.session import aqe_disabled
 
 _MANIFEST = "partitioned.json"
@@ -163,7 +166,7 @@ def facet_counts_partitioned(
     manifest = read_partitioned(root)
     by = manifest["by"]
     values = sorted(manifest["values"])
-    empty = spark.createDataFrame([], f"{by} string, n_docs long")
+    empty = _empty_frame(spark, f"{by} string, n_docs long")
     if not values:
         return empty
 
@@ -252,7 +255,7 @@ def search_partitioned(
         schema = ("doc_id long, repo string, path string, commit string, "
                   "lang string, score double") if with_doc_cols else \
                  "doc_id long, score double"
-        return spark.createDataFrame([], schema)
+        return _empty_frame(spark, schema)
     return search_indexed(
         spark, _subdir(root, manifest["by"], value), query, k, mode,
         with_doc_cols=with_doc_cols)
@@ -331,7 +334,7 @@ def search_all_partitions(
               + (", ".join(f"{c} string" for c in doc_cols) + ", "
                  if with_doc_cols else "")
               + "score double")
-    empty = spark.createDataFrame([], schema)
+    empty = _empty_frame(spark, schema)
     if not values:
         return empty
 
@@ -534,8 +537,7 @@ def facet_counts_all_partitions(
     for pdf in parts[1:]:
         out = out.unionByName(pdf)
     if out is None:
-        return spark.createDataFrame(
-            [], f"{facet_col} string, n_docs long")
+        return _empty_frame(spark, f"{facet_col} string, n_docs long")
     return (out.groupBy(facet_col)
             .agg(F.sum("n_docs").alias("n_docs"))
             .where(F.col("n_docs") > 0)
@@ -641,7 +643,7 @@ def search_boolean_all_partitions(
               + (", ".join(f"{c} string" for c in doc_cols) + ", "
                  if with_doc_cols else "")
               + "score double")
-    empty = spark.createDataFrame([], schema)
+    empty = _empty_frame(spark, schema)
     if not values:
         return empty
 
@@ -822,7 +824,7 @@ class PartitionedSearcher:
                   + (", ".join(f"{c} string" for c in doc_cols) + ", "
                      if with_doc_cols else "")
                   + "score double")
-        empty = self.spark.createDataFrame([], schema)
+        empty = _empty_frame(self.spark, schema)
         if not self.values or not self.n_docs_g:
             return empty
         stats0 = self.stats_of[self.values[0]]
@@ -857,7 +859,7 @@ class PartitionedSearcher:
             return out
 
         def wand_extra(v):
-            return {"postings_df": self._sub[v]._postings_df}
+            return {"scans": self._sub[v]}
 
         return _rank_all_partitions(
             self.spark, self.root, by, self.values, self.stats_of,
@@ -896,9 +898,9 @@ class PartitionedSearcher:
                 f"mode must be 'and', 'or', 'phrase' or 'near', "
                 f"got {mode!r}")
         by = self.by
-        empty = self.spark.createDataFrame(
-            [], f"query_id string, {by} string, doc_id long, "
-                "score double")
+        empty = _empty_frame(
+            self.spark,
+            f"query_id string, {by} string, doc_id long, score double")
         if not self.values or not self.n_docs_g:
             return empty
         stats0 = self.stats_of[self.values[0]]
@@ -966,7 +968,7 @@ class PartitionedSearcher:
                 self.spark, _subdir(self.root, by, v),
                 {**self.stats_of[v], "avgdl": self.avgdl_g},
                 plans_v, k,
-                postings_df=self._sub[v]._postings_df)
+                scans=self._sub[v])
                 .withColumn(by, F.lit(v)))
         if not outs:
             return empty

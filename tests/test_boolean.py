@@ -286,6 +286,10 @@ def test_boolean_wildcard_fuzzy_leaves(spark, pos_index):
                 (r.doc_id, round(r.score, 9)))
         for qid, q in qs.items():
             assert got.get(qid, []) == topk(q), qid
+    # the warm single-query entry point expands from the cached dict
+    for qid, q in qs.items():
+        assert [(r.doc_id, round(r.score, 9)) for r in
+                warm.search_boolean(q, 10).collect()] == topk(q), qid
     # plan_boolean without an expander refuses expansion leaves loudly
     import pytest as _pytest
 

@@ -33,6 +33,10 @@ def _cases(spark, idx, positional):
             spark, idx, "window AND (agg OR scan) NOT merge", 10),
         "boolean_wild": lambda s: search_boolean(
             spark, idx, "sc* AND NOT window", 10),
+        "warm_boolean": lambda s: s.search_boolean(
+            "window AND (agg OR scan) NOT merge", 10),
+        "warm_boolean_leaves": lambda s: s.search_boolean(
+            "(sc* OR windw~1) AND NOT merge", 10),
         "many_and": lambda s: s.search_many(
             {"a": "window agg", "b": "scan merge", "c": "nosuchterm"},
             10, "and"),
@@ -54,6 +58,8 @@ def _cases(spark, idx, positional):
                                             ordered=True),
             "boolean_phrase": lambda s: search_boolean(
                 spark, idx, '"window agg" OR scan', 10),
+            "warm_boolean_phrase": lambda s: s.search_boolean(
+                '"window agg" OR scan', 10),
             "many_phrase": lambda s: s.search_many(
                 {"a": "window agg", "b": "scan merge"}, 10, "phrase"),
             "facet_phrase": lambda s: s.facet_counts("window agg", "lang",
@@ -129,11 +135,16 @@ def test_driver_equals_distributed_under_tombstones(spark, tomb_index,
 
 def test_gated_queries_launch_no_spark_job(spark, pos_index):
     """A gated query and its collect() run no Spark job, in every mode
-    that needs no display join or Spark-side expansion."""
+    that needs no display join or Spark-side expansion. Neither do a
+    one-shot Searcher's open, the module functions built on it, a warm
+    boolean query whose leaves expand from the cached dict, nor
+    queries that can match nothing (no term in the dictionary, or
+    Σ df = 0 over every leaf)."""
     s = IX.Searcher(spark, pos_index)
     sc = spark.sparkContext
     sc.setJobGroup("driver_path", "gated queries")
     try:
+        IX.Searcher(spark, pos_index, dict_cache="spark")
         got = [
             s.search("window agg", 10, "and").collect(),
             s.search("window agg", 10, "phrase").collect(),
@@ -145,11 +156,24 @@ def test_gated_queries_launch_no_spark_job(spark, pos_index):
                           "or").collect(),
             search_boolean(spark, pos_index, "window AND NOT agg",
                            10).collect(),
+            IX.search_indexed(spark, pos_index, "window agg", 10,
+                              "and").collect(),
+            IX.search_near(spark, pos_index, "window agg", 10,
+                           slop=1).collect(),
+            s.search_boolean("sc* AND NOT windw~1", 10).collect(),
+        ]
+        none = [
+            s.search("zzqqx yyxxq", 10, "or").collect(),
+            s.search_wildcard("zzqqx", 10).collect(),
+            search_boolean(spark, pos_index, "zzqqx AND yyxxq",
+                           10).collect(),
+            s.search_many({"a": "zzqqx AND yyxxq", "b": "zzqqx OR qqz*"},
+                          10, "boolean").collect(),
         ]
     finally:
         sc.setJobGroup(None, None)
     time.sleep(0.5)  # let the listener bus deliver any job start
-    assert all(got)
+    assert all(got) and not any(none)
     assert list(sc.statusTracker().getJobIdsForGroup("driver_path")) == []
 
 
