@@ -126,17 +126,21 @@ def _check_mode(mode: str) -> None:
             f"mode must be 'and', 'or' or 'phrase', got {mode!r}")
 
 
-def _empty_frame(spark: SparkSession, schema) -> DataFrame:
-    """An empty frame of ``schema`` (DDL string or StructType), built
-    from an empty Arrow table: a local relation, so collecting it runs
-    no Spark job (``createDataFrame([], schema)`` is RDD-backed and
-    costs one)."""
+def _empty_frame(spark: SparkSession, schema, rows=()) -> DataFrame:
+    """A frame of ``schema`` (DDL string or StructType) holding ``rows``
+    (tuples in schema order; none by default), built from an Arrow
+    table: a local relation, so collecting it runs no Spark job
+    (``createDataFrame(rows, schema)`` is RDD-backed and costs one)."""
+    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
-    return spark.createDataFrame(to_arrow_schema(schema).empty_table(),
-                                 schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)],
+        schema=arrow), schema)
 
 
 class _Plan(NamedTuple):
@@ -315,7 +319,8 @@ class Searcher:
                 max_expansions: int) -> list:
         """Wildcard / fuzzy / regex expansion of ``q``: the dictionary
         rows of its ``max_expansions`` highest-df terms (df desc, term
-        asc). From the driver-cached dict with zero Spark jobs, else
+        asc; None keeps all). From the driver-cached dict with zero
+        Spark jobs, else
         :func:`_expansion_rows_cold`'s sidecar / dictionary scan."""
         if self._dict_pdf is None:
             return _expansion_rows_cold(self.spark, self.index_dir, q,
@@ -453,7 +458,6 @@ class Searcher:
                        with_doc_cols: bool) -> DataFrame:
         from datastream_io_spark.operators.boolean_search import (
             plan_boolean,
-            score_tree_split,
         )
 
         tree, positives, all_terms = plan_boolean(
@@ -468,8 +472,28 @@ class Searcher:
             return _empty_topk(self.spark, with_doc_cols)
         idf = {r["term"]: float(r["idf"]) for r in rows
                if r["term"] in positives}
-        buckets = sorted({int(r["term_bucket"]) for r in rows})
-        avgdl = float(self.stats["avgdl"])
+        cand, on_driver = self._boolean_cand(
+            tree, idf, float(self.stats["avgdl"]), k,
+            sorted({int(r["term_bucket"]) for r in rows}),
+            sorted(all_terms), est)
+        return global_topk(self.spark, self.index_dir, cand, k,
+                           with_doc_cols,
+                           docs_df=self._docs_df if with_doc_cols else None,
+                           ranked=on_driver)
+
+    def _boolean_cand(self, tree: tuple, idf: dict, avgdl: float, k: int,
+                      buckets: list, terms: list,
+                      est: int | None = None) -> tuple[DataFrame, bool]:
+        """Per-split top-k candidates of a planned boolean ``tree``
+        scored with ``idf`` / ``avgdl`` (this index's, or a partitioned
+        root's global ones): ``(cand, on_driver)`` — ranked on the
+        driver when the payload estimate ``est`` passes the single-task
+        gate, else the per-split kernels over the pruned postings
+        scan."""
+        from datastream_io_spark.operators.boolean_search import (
+            score_tree_split,
+        )
+
         tomb, tomb_join = _tombstone_state(self.spark, self.index_dir)
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -477,18 +501,12 @@ class Searcher:
             tv = _tv_from(pdf, tomb)
             return score_tree_split(tree, idf, avgdl, k, blocks_of, {}, tv)
 
-        on_driver = _driver_gate(est, tomb_join)
-        if on_driver:
-            cand = _rank_on_driver(self.spark, self.index_dir, buckets,
-                                   sorted(all_terms), kernel, k)
-        else:
-            cand = self._prows(buckets, sorted(all_terms), tomb_join) \
-                .groupBy("split_id").applyInPandas(
-                    kernel, "doc_id long, score double")
-        return global_topk(self.spark, self.index_dir, cand, k,
-                           with_doc_cols,
-                           docs_df=self._docs_df if with_doc_cols else None,
-                           ranked=on_driver)
+        if _driver_gate(est, tomb_join):
+            return _rank_on_driver(self.spark, self.index_dir, buckets,
+                                   terms, kernel, k), True
+        cand = self._prows(buckets, terms, tomb_join).groupBy("split_id") \
+            .applyInPandas(kernel, "doc_id long, score double")
+        return cand, False
 
     def count_boolean(self, query: str) -> int:
         """:func:`~datastream_io_spark.operators.boolean_search.
@@ -2380,10 +2398,10 @@ def _filtered_topk(spark, index_dir, prows, idf, avgdl, n_terms, k,
             rows = (cand.join(allowed, "doc_id")
                     .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
                     .select("doc_id", "score").collect())
-            local = spark.createDataFrame(rows,
-                                          "doc_id long, score double")
+            local = _empty_frame(spark, "doc_id long, score double", rows)
             return (global_topk(spark, index_dir, local, k,
-                                with_doc_cols, docs_df=docs_df), False)
+                                with_doc_cols, docs_df=docs_df,
+                                ranked=True), False)
     finally:
         cand.unpersist(blocking=False)
 

@@ -31,11 +31,15 @@ import json
 import os
 import re
 import threading
+from collections import Counter
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datastream_io_spark.operators.build import build_index
+from datastream_io_spark.functions.bm25 import idf_py
+from datastream_io_spark.functions.xxhash import term_bucket
+from datastream_io_spark.operators.build import DICT_SCHEMA, build_index
 from datastream_io_spark.operators.indexed_search import (
     _empty_frame,
     search_indexed,
@@ -147,9 +151,6 @@ def facet_counts_partitioned(
     emits a single count row. Falls back to the per-value loop only
     when a subindex delivers tombstones by join (> the broadcast cap),
     whose per-split attachment is per-index by construction."""
-    import numpy as np
-
-    from datastream_io_spark.functions.xxhash import term_bucket
     from datastream_io_spark.operators.build import read_stats
     from datastream_io_spark.operators.indexed_search import (
         _check_format,
@@ -189,10 +190,10 @@ def facet_counts_partitioned(
             # big-tombstone case)
             rows = [(u, match_count(spark, _subdir(root, by, u), query,
                                     mode)) for u in values]
-            out = spark.createDataFrame(
-                [(u, n) for u, n in rows if n],
-                f"{by} string, n_docs long")
-            return out.orderBy(F.desc("n_docs"), F.asc(by))
+            return _empty_frame(
+                spark, f"{by} string, n_docs long",
+                sorted(((u, n) for u, n in rows if n),
+                       key=lambda r: (-r[1], r[0])))
         # keep the BROADCAST handle (not .value): a captured broadcast
         # pickles as a small stub and workers fetch the array via the
         # broadcast store, whereas materialized arrays (up to 4M ids ×
@@ -230,10 +231,8 @@ def facet_counts_partitioned(
     # the collected result is ≤ V tiny rows, driver-safe by definition.
     rows = _collect_no_aqe(spark, cand, shuffle_partitions=n_groups)
     rows.sort(key=lambda r: (-r["n_docs"], r["_fv"]))
-    out = spark.createDataFrame(
-        [(r["_fv"], r["n_docs"]) for r in rows],
-        f"{by} string, n_docs long")
-    return out
+    return _empty_frame(spark, f"{by} string, n_docs long",
+                        [(r["_fv"], r["n_docs"]) for r in rows])
 
 
 def search_partitioned(
@@ -292,17 +291,20 @@ def search_all_partitions(
     stay valid because block max_tf/min_dl are data properties and the
     idf/avgdl they are scaled by are the ones passed in.
 
-    Plan shape (job-count, not just row-count, is the contract —
-    assertion-tested): ONE planning job (union of every subindex's
-    bucket-pruned, DICT_SCHEMA-resolved dict scan, tagged by value,
-    ≤|q| rows per subindex collected), ONE ranking job (union of
-    per-subindex candidate kernels → a single global TakeOrdered),
-    plus ONE ≤k-row display job under ``with_doc_cols`` (per-branch
-    doc_id pushdown, only hit subindexes read). The union collects run
-    with AQE off (:func:`_collect_no_aqe` — AQE gives each union
-    branch its own job id). A subindex missing some AND/phrase term
-    contributes nothing and is pruned at plan time — its postings are
-    never scanned. Subindexes whose tombstones exceed the broadcast
+    A one-shot :class:`PartitionedSearcher` with ``dict_cache='spark'``
+    (opening it reads each subindex's stats, no Spark job). Plan shape
+    (job-count, not just row-count, is the contract — assertion-tested):
+    ONE planning job (union of every subindex's bucket-pruned,
+    DICT_SCHEMA-resolved dict scan, tagged by value, ≤|q| rows per
+    subindex collected), ONE ranking job (union of per-subindex
+    candidate kernels → a single global TakeOrdered), plus ONE ≤k-row
+    display job under ``with_doc_cols`` (per-branch doc_id pushdown,
+    only hit subindexes read); the result is a local relation, so the
+    caller's collect adds none — 2 jobs, 3 with doc cols. The union
+    collects run with AQE off (:func:`_collect_no_aqe` — AQE gives each
+    union branch its own job id). A subindex missing some AND/phrase
+    term contributes nothing and is pruned at plan time — its postings
+    are never scanned. Subindexes whose tombstones exceed the broadcast
     cap get their per-split join delivery as usual (the tomb column is
     attached per subindex before the union).
 
@@ -311,192 +313,8 @@ def search_all_partitions(
     part of the row identity. ``with_doc_cols`` appends the docs-table
     display columns except ``<by>`` itself when it duplicates one.
     """
-    from datastream_io_spark.functions.xxhash import term_bucket
-    from datastream_io_spark.operators.build import read_stats
-    from datastream_io_spark.operators.indexed_search import (
-        NearSpec,
-        _check_format,
-        _plan_terms,
-        _wand_topk,
-    )
-    from datastream_io_spark.operators.relational_search import parse_phrase
-
-    if mode not in ("and", "or", "phrase", "near"):
-        raise ValueError(
-            f"mode must be 'and', 'or', 'phrase' or 'near', got {mode!r}")
-    if mode == "near" and slop < 0:
-        raise ValueError(f"slop must be \u2265 0, got {slop}")
-    manifest = read_partitioned(root)
-    by = manifest["by"]
-    values = sorted(manifest["values"])
-    doc_cols = [c for c in ("repo", "path", "commit", "lang") if c != by]
-    schema = (f"{by} string, doc_id long, "
-              + (", ".join(f"{c} string" for c in doc_cols) + ", "
-                 if with_doc_cols else "")
-              + "score double")
-    empty = _empty_frame(spark, schema)
-    if not values:
-        return empty
-
-    stats_of, plan = {}, None
-    n_docs_g, sum_dl_g = 0, 0
-    for v in values:
-        sub = _subdir(root, by, v)
-        stats = read_stats(sub)
-        _check_format(stats, sub)
-        if mode == "near":
-            # proximity across the root: same membership predicate per
-            # subindex (mode='phrase' plumbing + NearSpec), scored with
-            # the global statistics like every other mode here
-            if not stats.get("positions", False):
-                raise ValueError(
-                    "near search needs positional subindexes - rebuild "
-                    f"with positions=True ({by}={v} lacks positions)")
-            dterms = list(dict.fromkeys(parse_phrase(
-                query, stats["tokenizer"])))
-            if len(dterms) <= 1:
-                vmode, terms, phrase = "and", dterms, None
-            else:
-                vmode, terms, phrase = ("phrase", sorted(dterms),
-                                        NearSpec(dterms, slop, ordered))
-        else:
-            vmode, terms, phrase = _plan_terms(query, mode, stats)
-        if plan is None:
-            plan = (vmode, terms, phrase, stats["tokenizer"])
-        elif stats["tokenizer"] != plan[3]:
-            raise ValueError(
-                f"subindexes disagree on tokenizer: {by}={v} has "
-                f"{stats['tokenizer']!r}, expected {plan[3]!r}")
-        stats_of[v] = stats
-        n_docs_g += int(stats["n_docs"])
-        sum_dl_g += round(float(stats["avgdl"]) * int(stats["n_docs"]))
-    vmode, terms, phrase, _ = plan
-    if not terms or not n_docs_g:
-        return empty
-    avgdl_g = sum_dl_g / n_docs_g
-
-    # ONE planning job: every subindex's dict rows for the query terms,
-    # bucket-pruned per subindex (n_buckets may differ), value-tagged.
-    # Explicit DICT_SCHEMA (no per-sub footer inference) + AQE off for
-    # the collect (AQE turns each union branch's map stage into its own
-    # job id — the facet path's job-count lesson, r5)
-    def fetch_rows(ts):
-        from datastream_io_spark.operators.build import DICT_SCHEMA
-
-        dict_scans = []
-        for v in values:
-            sub = _subdir(root, by, v)
-            buckets = sorted({term_bucket(t,
-                                          int(stats_of[v]["n_buckets"]))
-                              for t in ts})
-            d = spark.read.schema(DICT_SCHEMA).parquet(
-                os.path.join(sub, "dict"))
-            dict_scans.append(
-                d.where(F.col("term_bucket").isin(buckets)
-                        & F.col("term").isin(ts))
-                .select("term", "df").withColumn("_fv", F.lit(v)))
-        dunion = dict_scans[0]
-        for d in dict_scans[1:]:
-            dunion = dunion.unionByName(d)
-        return [(r["_fv"], r["term"], int(r["df"]))
-                for r in _collect_no_aqe(spark, dunion)]
-
-    return _rank_all_partitions(
-        spark, root, by, values, stats_of, vmode, terms, phrase,
-        n_docs_g, avgdl_g, k, with_doc_cols, doc_cols, schema, empty,
-        fetch_rows)
-
-
-def _rank_all_partitions(spark, root, by, values, stats_of, vmode,
-                         terms, phrase, n_docs_g, avgdl_g, k,
-                         with_doc_cols, doc_cols, schema, empty,
-                         fetch_rows, wand_extra=None):
-    """Shared core of the cold and warm cross-partition rankers:
-    ``fetch_rows(terms) -> [(value, term, df)]`` supplies per-subindex
-    dict rows (one union job cold; zero jobs off warm driver caches),
-    ``wand_extra(value) -> kwargs`` threads a warm Searcher's resolved
-    postings scan into the per-subindex kernels."""
-    import math
-
-    from datastream_io_spark.functions.xxhash import term_bucket
-    from datastream_io_spark.operators.indexed_search import _wand_topk
-
-    df_g = {}
-    terms_of = {v: [] for v in values}
-    for v, t, df in fetch_rows(sorted(terms)):
-        df_g[t] = df_g.get(t, 0) + df
-        terms_of[v].append(t)
-    if vmode in ("and", "phrase") and len(df_g) < len(terms):
-        return empty  # some term absent from the WHOLE corpus
-    if not df_g:
-        return empty
-    idf_g = {t: math.log1p((n_docs_g - df + 0.5) / (df + 0.5))
-             for t, df in df_g.items()}
-
-    cands = []
-    for v in values:
-        found = sorted(terms_of[v])
-        if not found:
-            continue
-        if vmode in ("and", "phrase") and len(found) < len(terms):
-            continue  # this partition cannot satisfy the conjunction
-        sub = _subdir(root, by, v)
-        buckets = sorted({term_bucket(t, int(stats_of[v]["n_buckets"]))
-                          for t in found})
-        extra = wand_extra(v) if wand_extra is not None else {}
-        cand = _wand_topk(
-            spark, sub, {t: idf_g[t] for t in found}, buckets, avgdl_g,
-            len(terms), k, vmode, False, phrase=phrase, cand_only=True,
-            **extra)
-        cands.append(cand.select(F.lit(v).alias(by), "doc_id", "score"))
-    if not cands:
-        return empty
-    n_groups = sum(int(stats_of[v].get("n_splits", 1)) for v in values)
-    return _global_cut(spark, root, by, cands, k, with_doc_cols,
-                       doc_cols, schema, empty, n_groups)
-
-
-def _global_cut(spark, root, by, cands, k, with_doc_cols, doc_cols,
-                schema, empty, n_groups):
-    """Shared ranking tail of the cross-partition searches: ONE job
-    over the union of per-subindex candidate frames (AQE off, shuffle
-    width pinned to the true group count), then an optional ≤k-row
-    display job (per-branch doc_id pushdown, subset schema — no
-    footer-inference job per subindex), assembled driver-side into a
-    k-row local relation."""
-    union = cands[0]
-    for c in cands[1:]:
-        union = union.unionByName(c)
-    rank_rows = _collect_no_aqe(
-        spark, union.orderBy(F.desc("score"), F.asc(by),
-                             F.asc("doc_id")).limit(k),
-        shuffle_partitions=n_groups)
-    if not rank_rows:
-        return empty
-    if not with_doc_cols:
-        return spark.createDataFrame(
-            [(r[by], r["doc_id"], r["score"]) for r in rank_rows],
-            schema)
-    hit_of: dict[str, list[int]] = {}
-    for r in rank_rows:
-        hit_of.setdefault(r[by], []).append(r["doc_id"])
-    display_schema = ("doc_id long, repo string, path string, "
-                      "commit string, lang string")
-    docs = None
-    for v in sorted(hit_of):
-        d = (spark.read.schema(display_schema).parquet(
-                os.path.join(_subdir(root, by, v), "docs"))
-             .where(F.col("doc_id").isin(hit_of[v]))
-             .select(F.lit(v).alias(by), "doc_id", *doc_cols))
-        docs = d if docs is None else docs.unionByName(d)
-    meta = {(r[by], r["doc_id"]): r for r in _collect_no_aqe(spark, docs)}
-    data = [
-        tuple([r[by], r["doc_id"]]
-              + [meta[(r[by], r["doc_id"])][c] for c in doc_cols]
-              + [r["score"]])
-        for r in rank_rows
-    ]
-    return spark.createDataFrame(data, schema)
+    return PartitionedSearcher(spark, root, dict_cache="spark").search(
+        query, k, mode, with_doc_cols, slop, ordered)
 
 
 def facet_counts_all_partitions(
@@ -607,161 +425,32 @@ def search_boolean_all_partitions(
     another expands exactly as it would on the merged dictionary (one
     union-scan job per leaf). A term absent from some subindex simply
     evaluates to the empty set inside that subindex's kernels, which
-    is the correct boolean semantics with no plan-time pruning needed.
+    is the correct boolean semantics; a subindex holding none of the
+    query's terms is skipped at plan time.
 
-    Job count: one dict-union job per expansion leaf + ONE planning
-    job (global df of the positive terms) + ONE ranking job + the
-    ≤k-row display job — the :func:`_global_cut` tail."""
-    import math
-
-    from datastream_io_spark.functions.xxhash import term_bucket
-    from datastream_io_spark.operators.boolean_search import (
-        expand_tree,
-        parse_boolean,
-        score_tree_split,
-        tree_has_expansion,
-        tree_has_phrase,
-        tree_terms,
-    )
-    from datastream_io_spark.operators.build import (
-        DICT_SCHEMA,
-        read_stats,
-    )
-    from datastream_io_spark.operators.indexed_search import (
-        _check_format,
-        _tombstone_state,
-        _tv_from,
-        _with_tomb,
-        postings_rows,
-    )
-
-    manifest = read_partitioned(root)
-    by = manifest["by"]
-    values = sorted(manifest["values"])
-    doc_cols = [c for c in ("repo", "path", "commit", "lang") if c != by]
-    schema = (f"{by} string, doc_id long, "
-              + (", ".join(f"{c} string" for c in doc_cols) + ", "
-                 if with_doc_cols else "")
-              + "score double")
-    empty = _empty_frame(spark, schema)
-    if not values:
-        return empty
-
-    stats_of, tok = {}, None
-    n_docs_g, sum_dl_g = 0, 0
-    for v in values:
-        sub = _subdir(root, by, v)
-        stats = read_stats(sub)
-        _check_format(stats, sub)
-        if tok is None:
-            tok = stats["tokenizer"]
-        elif stats["tokenizer"] != tok:
-            raise ValueError(
-                f"subindexes disagree on tokenizer: {by}={v} has "
-                f"{stats['tokenizer']!r}, expected {tok!r}")
-        stats_of[v] = stats
-        n_docs_g += int(stats["n_docs"])
-        sum_dl_g += round(float(stats["avgdl"]) * int(stats["n_docs"]))
-    if not n_docs_g:
-        return empty
-    avgdl_g = sum_dl_g / n_docs_g
-
-    tree = parse_boolean(query, tok)
-    if tree_has_phrase(tree):
-        for v in values:
-            if not stats_of[v].get("positions", False):
-                raise ValueError(
-                    "quoted/proximity phrases need positional "
-                    f"subindexes — {by}={v} lacks positions")
-
-    def union_expander(emode, base, dist):
-        if emode == "wildcard":
-            cond = F.col("term").startswith(base)
-        else:
-            lo, hi = max(1, len(base) - dist), len(base) + dist
-            cond = (F.length("term").between(lo, hi)
-                    & (F.levenshtein(F.col("term"), F.lit(base),
-                                     dist) >= 0))
-        scans = []
-        for v in values:
-            d = spark.read.schema(DICT_SCHEMA).parquet(
-                os.path.join(_subdir(root, by, v), "dict"))
-            scans.append(d.where(cond).select("term", "df"))
-        u = scans[0]
-        for d in scans[1:]:
-            u = u.unionByName(d)
-        agg: dict[str, int] = {}
-        for r in _collect_no_aqe(spark, u):
-            agg[r["term"]] = agg.get(r["term"], 0) + int(r["df"])
-        ranked = sorted(agg.items(), key=lambda kv: (-kv[1], kv[0]))
-        return [t for t, _ in ranked[:max_expansions]]
-
-    if tree_has_expansion(tree):
-        tree = expand_tree(tree, union_expander)
-    positives, all_terms = tree_terms(tree)
-    all_terms.discard("")  # empty-expansion sentinel, never in a dict
-    if not all_terms:
-        return empty
-
-    # ONE planning job: global df of the positive terms → global idf
-    dict_scans = []
-    for v in values:
-        buckets = sorted({term_bucket(t, int(stats_of[v]["n_buckets"]))
-                          for t in positives} or {0})
-        d = spark.read.schema(DICT_SCHEMA).parquet(
-            os.path.join(_subdir(root, by, v), "dict"))
-        dict_scans.append(
-            d.where(F.col("term_bucket").isin(buckets)
-                    & F.col("term").isin(sorted(positives)))
-            .select("term", "df"))
-    dunion = dict_scans[0]
-    for d in dict_scans[1:]:
-        dunion = dunion.unionByName(d)
-    df_g: dict[str, int] = {}
-    for r in _collect_no_aqe(spark, dunion):
-        df_g[r["term"]] = df_g.get(r["term"], 0) + int(r["df"])
-    idf_g = {t: math.log1p((n_docs_g - df + 0.5) / (df + 0.5))
-             for t, df in df_g.items()}
-
-    cands = []
-    for v in values:
-        sub = _subdir(root, by, v)
-        buckets = sorted({term_bucket(t, int(stats_of[v]["n_buckets"]))
-                          for t in all_terms})
-        tomb, tomb_join = _tombstone_state(spark, sub)
-        prows = _with_tomb(
-            postings_rows(spark, sub, buckets, sorted(all_terms)),
-            tomb_join)
-
-        def make_kernel(_tomb):
-            # a 2-arg function would be (key, pdf) to applyInPandas —
-            # bind the per-subindex tombstones via closure instead
-            def kernel(pdf):
-                blocks_of = {r.term: list(r.blocks)
-                             for r in pdf.itertuples()}
-                tv = _tv_from(pdf, _tomb)
-                return score_tree_split(tree, idf_g, avgdl_g, k,
-                                        blocks_of, {}, tv)
-            return kernel
-
-        cand = prows.groupBy("split_id").applyInPandas(
-            make_kernel(tomb), "doc_id long, score double")
-        cands.append(cand.select(F.lit(v).alias(by), "doc_id", "score"))
-    n_groups = sum(int(stats_of[v].get("n_splits", 1)) for v in values)
-    return _global_cut(spark, root, by, cands, k, with_doc_cols,
-                       doc_cols, schema, empty, n_groups)
+    A one-shot :class:`PartitionedSearcher` with ``dict_cache='spark'``
+    (:meth:`PartitionedSearcher.search_boolean`). Job count: one
+    dict-union job per expansion leaf + ONE planning job (global df of
+    the leaf terms) + ONE ranking job + the ≤k-row display job — the
+    :meth:`PartitionedSearcher._global_cut` tail; the result is a local
+    relation, so the caller's collect adds none."""
+    return PartitionedSearcher(spark, root, dict_cache="spark") \
+        .search_boolean(query, k, with_doc_cols, max_expansions)
 
 
 class PartitionedSearcher:
-    """Warm serving handle over a partitioned root (r5): one warm
+    """Query handle over a partitioned root — the one place a
+    cross-partition query is planned (r5): one
     :class:`~datastream_io_spark.operators.indexed_search.Searcher`
-    per subindex (resolved postings/docs scans, driver dict caches)
-    plus the merged global statistics precomputed once — a
-    cross-partition query then PLANS WITH ZERO SPARK JOBS (per-term df
-    summed off the per-subindex driver caches) and ranks in one, the
-    same 1-job-per-query economy the single-index Searcher gives.
-    Results are identical to :func:`search_all_partitions`
-    (parity-tested), which is itself pinned to an unpartitioned index.
+    per subindex (driver dict caches per ``dict_cache``, scans resolved
+    on first use) plus the merged global statistics computed once. A
+    query parses against every subindex, looks its terms up ONCE — off
+    the driver caches with zero Spark jobs, the un-cached subindexes in
+    one union scan — and ranks in one job, the same economy the
+    single-index Searcher gives. :func:`search_all_partitions` and
+    :func:`search_boolean_all_partitions` are one-shot handles with
+    ``dict_cache='spark'``; results are pinned to an unpartitioned
+    index of the same corpus (parity-tested).
 
     Same staleness contract as Searcher: deletes are live, but
     purge / rebuild / merge under any subindex requires a new handle.
@@ -785,6 +474,9 @@ class PartitionedSearcher:
         if len(toks) > 1:
             raise ValueError(
                 f"subindexes disagree on tokenizer: {sorted(toks)}")
+        # GLOBAL statistics (subindexes partition the corpus):
+        # N = Σ n_docs, sum_dl = Σ round(avgdl · n_docs) — exact, the
+        # true sum_dl is an integer and f64 error ≪ 0.5 below 2^52
         self.stats_of = {v: s.stats for v, s in self._sub.items()}
         self.n_docs_g = sum(int(s["n_docs"])
                             for s in self.stats_of.values())
@@ -798,187 +490,273 @@ class PartitionedSearcher:
         value has no subindex)."""
         return self._sub[str(value)]
 
-    def search(self, query: str, k: int = 10, mode: str = "and",
-               with_doc_cols: bool = False, slop: int = 2,
-               ordered: bool = False) -> DataFrame:
-        """Global cross-partition top-k on the warm path — same
-        semantics (and results) as :func:`search_all_partitions`."""
+    def _dict_scan(self, v: str, cond) -> DataFrame:
+        """Subindex ``v``'s value-tagged ``(term, df, _fv)`` dictionary
+        rows under ``cond`` — explicit DICT_SCHEMA, so no per-subindex
+        footer-inference job."""
+        return (self.spark.read.schema(DICT_SCHEMA)
+                .parquet(os.path.join(self._sub[v].index_dir, "dict"))
+                .where(cond).select("term", "df")
+                .withColumn("_fv", F.lit(v)))
+
+    def _lookup_all(self, terms: list[str]) -> dict[str, list]:
+        """Dictionary rows of ``terms`` per subindex value: a subindex
+        with a driver-cached dict answers from it (no job); all others
+        share ONE union scan, bucket-pruned per subindex (n_buckets may
+        differ), collected with AQE off."""
+        rows_of, scans = {}, []
+        for v, sub in self._sub.items():
+            if sub._dict_pdf is not None or not terms:
+                rows_of[v] = sub._lookup(terms)
+                continue
+            rows_of[v] = []
+            buckets = sorted({term_bucket(t, int(sub.stats["n_buckets"]))
+                              for t in terms})
+            scans.append(self._dict_scan(
+                v, F.col("term_bucket").isin(buckets)
+                & F.col("term").isin(terms)))
+        if scans:
+            for r in _collect_no_aqe(self.spark,
+                                     reduce(DataFrame.unionByName, scans)):
+                rows_of[r["_fv"]].append(r)
+        return rows_of
+
+    def _global_idf(self, rows_of: dict[str, list]) -> dict[str, float]:
+        """GLOBAL idf of every looked-up term: the subindexes partition
+        the corpus, so document frequencies add."""
+        df_g: Counter = Counter()
+        for rows in rows_of.values():
+            for r in rows:
+                df_g[r["term"]] += int(r["df"])
+        return {t: idf_py(df, self.n_docs_g) for t, df in df_g.items()}
+
+    def _expander(self, max_expansions: int):
+        """Boolean wildcard / fuzzy leaf expander over the UNION of the
+        subindex dictionaries, capped by GLOBAL df (df desc, term asc):
+        driver-cached subindexes expand from their caches uncapped
+        (:meth:`Searcher._expand`), all others share ONE union scan."""
+        def expand(emode, base, dist):
+            df_g: Counter = Counter()
+            cold = []
+            for v, sub in self._sub.items():
+                if sub._dict_pdf is None:
+                    cold.append(v)
+                    continue
+                for r in sub._expand(base, emode, dist, None):
+                    df_g[r["term"]] += int(r["df"])
+            if cold:
+                if emode == "wildcard":
+                    cond = F.col("term").startswith(base)
+                else:
+                    lo, hi = max(1, len(base) - dist), len(base) + dist
+                    cond = (F.length("term").between(lo, hi)
+                            & (F.levenshtein(F.col("term"), F.lit(base),
+                                             dist) >= 0))
+                union = reduce(DataFrame.unionByName,
+                               [self._dict_scan(v, cond) for v in cold])
+                for r in _collect_no_aqe(self.spark, union):
+                    df_g[r["term"]] += int(r["df"])
+            ranked = sorted(df_g.items(), key=lambda kv: (-kv[1], kv[0]))
+            return [t for t, _ in ranked[:max_expansions]]
+        return expand
+
+    def _plans(self, queries: dict[str, str], mode: str, slop: int,
+               ordered: bool) -> dict[str, dict]:
+        """The cross-partition planner: parse each query against every
+        subindex's stats (:func:`_plan_terms`, whose positions guard
+        thus runs per subindex), look the union of the terms up ONCE
+        (:meth:`_lookup_all`) into GLOBAL idf, and resolve each
+        (query, subindex) pair's found terms — a conjunctive query
+        (and / phrase / near) missing a term in a subindex is pruned
+        there, its postings never scanned. Returns
+        ``{value: {qid: (idf, n_terms, mode, phrase)}}`` over the
+        subindexes with work."""
         from datastream_io_spark.operators.indexed_search import (
-            NearSpec,
             _plan_terms,
-        )
-        from datastream_io_spark.operators.relational_search import (
-            parse_phrase,
         )
 
         if mode not in ("and", "or", "phrase", "near"):
             raise ValueError(
                 f"mode must be 'and', 'or', 'phrase' or 'near', "
                 f"got {mode!r}")
-        if mode == "near" and slop < 0:
-            raise ValueError(f"slop must be ≥ 0, got {slop}")
-        by = self.by
-        doc_cols = [c for c in ("repo", "path", "commit", "lang")
-                    if c != by]
-        schema = (f"{by} string, doc_id long, "
-                  + (", ".join(f"{c} string" for c in doc_cols) + ", "
-                     if with_doc_cols else "")
-                  + "score double")
-        empty = _empty_frame(self.spark, schema)
-        if not self.values or not self.n_docs_g:
-            return empty
-        stats0 = self.stats_of[self.values[0]]
-        if mode == "near":
+        if not self.n_docs_g:
+            return {}
+        parsed = {}
+        for qid, q in queries.items():
             for v in self.values:
-                if not self.stats_of[v].get("positions", False):
-                    raise ValueError(
-                        "near search needs positional subindexes — "
-                        f"rebuild with positions=True ({by}={v} lacks "
-                        "positions)")
-            dterms = list(dict.fromkeys(parse_phrase(
-                query, stats0["tokenizer"])))
-            if len(dterms) <= 1:
-                vmode, terms, phrase = "and", dterms, None
-            else:
-                vmode, terms, phrase = ("phrase", sorted(dterms),
-                                        NearSpec(dterms, slop, ordered))
-        else:
-            # phrase positions guard applies per subindex
-            if mode == "phrase":
-                for v in self.values:
-                    _plan_terms(query, mode, self.stats_of[v])
-            vmode, terms, phrase = _plan_terms(query, mode, stats0)
-        if not terms:
-            return empty
+                try:
+                    vmode, terms, phrase = _plan_terms(
+                        q, mode, self.stats_of[v], slop, ordered)
+                except ValueError as e:
+                    raise ValueError(f"{self.by}={v}: {e}") from None
+            if terms:
+                parsed[qid] = (vmode, terms, phrase)
+        rows_of = self._lookup_all(
+            sorted({t for _, ts, _ in parsed.values() for t in ts}))
+        idf_g = self._global_idf(rows_of)
+        plans: dict[str, dict] = {}
+        for v, rows in rows_of.items():
+            have = {r["term"] for r in rows}
+            for qid, (vmode, terms, phrase) in parsed.items():
+                found = [t for t in terms if t in have]
+                if not found or (vmode in ("and", "phrase")
+                                 and len(found) < len(terms)):
+                    continue
+                plans.setdefault(v, {})[qid] = (
+                    {t: idf_g[t] for t in found}, len(terms), vmode,
+                    phrase)
+        return plans
 
-        def fetch_rows(ts):
-            out = []
-            for v in self.values:
-                for r in self._sub[v]._lookup(ts):
-                    out.append((v, r["term"], int(r["df"])))
-            return out
+    def search(self, query: str, k: int = 10, mode: str = "and",
+               with_doc_cols: bool = False, slop: int = 2,
+               ordered: bool = False) -> DataFrame:
+        """:func:`search_all_partitions` on this handle — with driver
+        dict caches, planning runs no Spark job."""
+        from datastream_io_spark.operators.indexed_search import _wand_topk
 
-        def wand_extra(v):
-            return {"scans": self._sub[v]}
-
-        return _rank_all_partitions(
-            self.spark, self.root, by, self.values, self.stats_of,
-            vmode, terms, phrase, self.n_docs_g, self.avgdl_g, k,
-            with_doc_cols, doc_cols, schema, empty, fetch_rows,
-            wand_extra=wand_extra)
+        cands = []
+        for v, plans_v in self._plans({"": query}, mode, slop,
+                                      ordered).items():
+            idf, n_terms, vmode, phrase = plans_v[""]
+            sub = self._sub[v]
+            buckets = sorted({term_bucket(t, int(sub.stats["n_buckets"]))
+                              for t in idf})
+            cand = _wand_topk(
+                self.spark, sub.index_dir, idf, buckets, self.avgdl_g,
+                n_terms, k, vmode, False, phrase=phrase, scans=sub,
+                cand_only=True)
+            cands.append(cand.select(F.lit(v).alias(self.by), "doc_id",
+                                     "score"))
+        return self._global_cut(cands, k, with_doc_cols)
 
     def search_many(self, queries: dict[str, str], k: int = 10,
                     mode: str = "and", slop: int = 2,
                     ordered: bool = False) -> DataFrame:
         """Batched global serving (r5): MANY cross-partition queries in
         ONE Spark action — all planning (term parse, per-subindex dict
-        lookups, global df/idf merge) happens driver-side off the warm
-        caches, then each subindex runs the shared batched kernel
+        lookups, global df/idf merge) is :meth:`search`'s planner, then
+        each subindex runs the shared batched kernel
         (:func:`_search_many_wand_tail` with the GLOBAL avgdl pushed
         in) and a final per-query window takes the global top-k over
         the value-tagged union. Each query's rows are identical to its
         individual :meth:`search` answer (parity-tested). Returns
         DF[query_id, <by>, doc_id, score] with per-query
         (score desc, <by> asc, doc_id asc) top-k."""
-        import math
-
         from pyspark.sql import Window
 
         from datastream_io_spark.operators.indexed_search import (
-            NearSpec,
-            _plan_terms,
             _search_many_wand_tail,
         )
-        from datastream_io_spark.operators.relational_search import (
-            parse_phrase,
-        )
 
-        if mode not in ("and", "or", "phrase", "near"):
-            raise ValueError(
-                f"mode must be 'and', 'or', 'phrase' or 'near', "
-                f"got {mode!r}")
         by = self.by
-        empty = _empty_frame(
-            self.spark,
-            f"query_id string, {by} string, doc_id long, score double")
-        if not self.values or not self.n_docs_g:
-            return empty
-        stats0 = self.stats_of[self.values[0]]
-
-        plans = {}  # qid -> (vmode, terms, phrase)
-        for qid, q in queries.items():
-            if mode == "near":
-                if slop < 0:
-                    raise ValueError(f"slop must be ≥ 0, got {slop}")
-                for v in self.values:
-                    if not self.stats_of[v].get("positions", False):
-                        raise ValueError(
-                            "near search needs positional subindexes "
-                            f"({by}={v} lacks positions)")
-                dterms = list(dict.fromkeys(parse_phrase(
-                    q, stats0["tokenizer"])))
-                if not dterms:
-                    continue
-                if len(dterms) <= 1:
-                    plans[qid] = ("and", dterms, None)
-                else:
-                    plans[qid] = ("phrase", sorted(dterms),
-                                  NearSpec(dterms, slop, ordered))
-            else:
-                if mode == "phrase":
-                    for v in self.values:
-                        _plan_terms(q, mode, self.stats_of[v])
-                vmode, terms, phrase = _plan_terms(q, mode, stats0)
-                if terms:
-                    plans[qid] = (vmode, terms, phrase)
-        if not plans:
-            return empty
-
-        all_terms = sorted({t for _, ts, _ in plans.values()
-                            for t in ts})
-        found_of = {}  # value -> {term}
-        df_g: dict[str, int] = {}
-        for v in self.values:
-            rows = self._sub[v]._lookup(all_terms)
-            found_of[v] = {r["term"] for r in rows}
-            for r in rows:
-                df_g[r["term"]] = df_g.get(r["term"], 0) + int(r["df"])
-        idf_g = {t: math.log1p((self.n_docs_g - df + 0.5) / (df + 0.5))
-                 for t, df in df_g.items()}
-
-        outs = []
-        for v in self.values:
-            plans_v = {}
-            for qid, (vmode, terms, phrase) in plans.items():
-                if vmode in ("and", "phrase"):
-                    # conjunctive: the whole corpus must have every
-                    # term, and this subindex must too
-                    if any(t not in df_g for t in terms) or                             any(t not in found_of[v] for t in terms):
-                        continue
-                    found = list(terms)
-                else:
-                    found = [t for t in terms if t in found_of[v]]
-                    if not found:
-                        continue
-                plans_v[qid] = ({t: idf_g[t] for t in found},
-                                len(terms), vmode, phrase)
-            if not plans_v:
-                continue
-            outs.append(_search_many_wand_tail(
-                self.spark, _subdir(self.root, by, v),
-                {**self.stats_of[v], "avgdl": self.avgdl_g},
-                plans_v, k,
-                scans=self._sub[v])
-                .withColumn(by, F.lit(v)))
+        outs = [
+            _search_many_wand_tail(
+                self.spark, self._sub[v].index_dir,
+                {**self.stats_of[v], "avgdl": self.avgdl_g}, plans_v, k,
+                scans=self._sub[v]).withColumn(by, F.lit(v))
+            for v, plans_v in self._plans(queries, mode, slop,
+                                          ordered).items()]
         if not outs:
-            return empty
-        union = outs[0]
-        for o in outs[1:]:
-            union = union.unionByName(o)
+            return _empty_frame(
+                self.spark,
+                f"query_id string, {by} string, doc_id long, score double")
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc(by), F.asc("doc_id"))
-        return (union.withColumn("_rn", F.row_number().over(w))
+        return (reduce(DataFrame.unionByName, outs)
+                .withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") <= k).drop("_rn")
                 .select("query_id", by, "doc_id", "score")
                 .orderBy("query_id", F.desc("score"), F.asc(by),
                          F.asc("doc_id")))
+
+    def search_boolean(self, query: str, k: int = 10,
+                       with_doc_cols: bool = False,
+                       max_expansions: int = 128) -> DataFrame:
+        """:func:`search_boolean_all_partitions` on this handle — with
+        driver dict caches, leaf expansion and the df lookup run no
+        Spark job. Each subindex evaluates the tree through
+        :meth:`Searcher._boolean_cand` under the GLOBAL idf / avgdl (no
+        payload estimate: the per-split kernels stay distributed)."""
+        from datastream_io_spark.operators.boolean_search import (
+            parse_boolean,
+            plan_boolean,
+            tree_has_phrase,
+        )
+
+        if not self.n_docs_g:
+            return self._global_cut([], k, with_doc_cols)
+        stats0 = self.stats_of[self.values[0]]
+        lacking = [v for v, s in self.stats_of.items()
+                   if not s.get("positions", False)]
+        if lacking and tree_has_phrase(
+                parse_boolean(query, stats0["tokenizer"])):
+            raise ValueError(
+                "quoted/proximity phrases need positional subindexes — "
+                f"{self.by}={lacking[0]} lacks positions")
+        tree, positives, all_terms = plan_boolean(
+            query, stats0, expander=self._expander(max_expansions))
+        all_terms.discard("")  # empty-expansion sentinel, never in a dict
+        terms = sorted(all_terms)
+        rows_of = self._lookup_all(terms)
+        # idf keys the terms scored: the positives only
+        idf = {t: x for t, x in self._global_idf(rows_of).items()
+               if t in positives}
+        cands = []
+        for v, rows in rows_of.items():
+            if not rows:
+                continue  # none of the query's terms: no posting rows
+            sub = self._sub[v]
+            buckets = sorted({term_bucket(r["term"],
+                                          int(sub.stats["n_buckets"]))
+                              for r in rows})
+            cand, _ = sub._boolean_cand(tree, idf, self.avgdl_g, k,
+                                        buckets, terms)
+            cands.append(cand.select(F.lit(v).alias(self.by), "doc_id",
+                                     "score"))
+        return self._global_cut(cands, k, with_doc_cols)
+
+    def _global_cut(self, cands: list, k: int,
+                    with_doc_cols: bool) -> DataFrame:
+        """Shared ranking tail of the cross-partition searches: ONE job
+        over the union of per-subindex candidate frames (AQE off,
+        shuffle width pinned to the true group count), then an optional
+        ≤k-row display job (per-branch doc_id pushdown, subset schema —
+        no footer-inference job per subindex), assembled driver-side
+        into a ≤k-row local relation (its collect runs no job). Output:
+        ``(<by>, doc_id, score)``, with the display columns except
+        ``<by>`` before score under ``with_doc_cols``."""
+        by = self.by
+        doc_cols = ([c for c in ("repo", "path", "commit", "lang")
+                     if c != by] if with_doc_cols else [])
+        schema = ", ".join([f"{by} string", "doc_id long"]
+                           + [f"{c} string" for c in doc_cols]
+                           + ["score double"])
+        rank_rows = []
+        if cands:
+            rank_rows = _collect_no_aqe(
+                self.spark,
+                reduce(DataFrame.unionByName, cands)
+                .orderBy(F.desc("score"), F.asc(by), F.asc("doc_id"))
+                .limit(k),
+                shuffle_partitions=sum(int(s.get("n_splits", 1))
+                                       for s in self.stats_of.values()))
+        meta = {}
+        if doc_cols and rank_rows:
+            hit_of: dict[str, list[int]] = {}
+            for r in rank_rows:
+                hit_of.setdefault(r[by], []).append(r["doc_id"])
+            display_schema = ("doc_id long, repo string, path string, "
+                              "commit string, lang string")
+            docs = reduce(DataFrame.unionByName, [
+                self.spark.read.schema(display_schema)
+                .parquet(os.path.join(self._sub[v].index_dir, "docs"))
+                .where(F.col("doc_id").isin(ids))
+                .select(F.lit(v).alias(by), "doc_id", *doc_cols)
+                for v, ids in sorted(hit_of.items())])
+            meta = {(r[by], r["doc_id"]): r
+                    for r in _collect_no_aqe(self.spark, docs)}
+        return _empty_frame(self.spark, schema, [
+            (r[by], r["doc_id"],
+             *(meta[(r[by], r["doc_id"])][c] for c in doc_cols),
+             r["score"])
+            for r in rank_rows])

@@ -565,12 +565,13 @@ def test_search_all_partitions_matches_unpartitioned(
 
     # job-count contract: plan + rank + display = 3 jobs at ANY number
     # of partition values (AQE off for the union collects; explicit
-    # dict/docs schemas — no per-subindex inference jobs)
+    # dict/docs schemas — no per-subindex inference jobs), the caller's
+    # collect included: the result is a local relation
     sc = spark.sparkContext
     st = sc.statusTracker()
     sc.setJobGroup("gap_jobs", "job-count assertion")
-    search_all_partitions(spark, root, "window agg", 5, "and",
-                          with_doc_cols=True)
+    assert search_all_partitions(spark, root, "window agg", 5, "and",
+                                 with_doc_cols=True).collect()
     import time as _time
     _time.sleep(0.5)
     n_jobs = len(st.getJobIdsForGroup("gap_jobs"))
@@ -1008,11 +1009,13 @@ def test_boolean_all_partitions_matches_unpartitioned(
     """r5: the global boolean search over a partitioned root equals
     search_boolean on an unpartitioned index — operators, NOT, quoted
     and proximity phrases, and wildcard/fuzzy leaves (expanded against
-    the union of subindex dictionaries, capped by global df)."""
+    the union of subindex dictionaries, capped by global df) — both the
+    one-shot module function and a warm driver-dict handle."""
     from datastream_io_spark.operators.boolean_search import (
         search_boolean)
     from datastream_io_spark.operators.partitioned import (
-        build_partitioned_index, search_boolean_all_partitions)
+        PartitionedSearcher, build_partitioned_index,
+        search_boolean_all_partitions)
 
     corpus = documents_as_corpus(spark, SF0001)
     root = str(tmp_path / "gbool_root")
@@ -1023,6 +1026,8 @@ def test_boolean_all_partitions_matches_unpartitioned(
     def key(rows):
         return sorted((r["path"], round(r["score"], 9)) for r in rows)
 
+    # the warm handle: leaves expand and df sums off the driver caches
+    ps = PartitionedSearcher(spark, root, dict_cache="driver")
     for q in ["window AND (agg OR scan) NOT merge",
               '"window agg" OR scan',
               '"window agg"~2 NOT merge',
@@ -1032,12 +1037,28 @@ def test_boolean_all_partitions_matches_unpartitioned(
               "zzznope AND window"]:
         g = search_boolean_all_partitions(spark, root, q, 10**6,
                                           with_doc_cols=True).collect()
+        w = ps.search_boolean(q, 10**6, with_doc_cols=True).collect()
         m = search_boolean(spark, pos_index, q, 10**6,
                            with_doc_cols=True).collect()
         assert key(g) == key(m), q
+        assert key(w) == key(m), q
     assert key(search_boolean_all_partitions(
         spark, root, "window AND agg", 10**6,
         with_doc_cols=True).collect())  # non-empty sanity
+
+    # warm boolean economy: expansion and planning off the caches, the
+    # ranking union is the one Spark job, and the caller's collect of
+    # the local-relation result adds none
+    import time as _time
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    sc.setJobGroup("psb_jobs", "warm global boolean query")
+    assert ps.search_boolean("agg AND s*").collect()
+    _time.sleep(0.5)
+    n_jobs = len(st.getJobIdsForGroup("psb_jobs"))
+    sc.setJobGroup(None, None)
+    assert n_jobs == 1, n_jobs
 
 
 def test_partitioned_searcher_matches_cold(spark, tmp_path):
@@ -1079,17 +1100,16 @@ def test_partitioned_searcher_matches_cold(spark, tmp_path):
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
     # one-job economy: planning is driver-side; the ranking collect
-    # (inside ps.search — the result is a k-row local relation) is the
-    # only Spark job. The caller's .collect() on the local relation is
-    # measured OUTSIDE the group.
+    # inside ps.search is the only Spark job. Its result is built from
+    # Arrow (a local relation), so the caller's .collect(), measured
+    # INSIDE the group, adds none.
     sc = spark.sparkContext
     st = sc.statusTracker()
     sc.setJobGroup("ps_jobs", "warm global query")
-    df = ps.search("window agg", 10, "and")
+    assert ps.search("window agg", 10, "and").collect()
     _time.sleep(0.5)
     n_jobs = len(st.getJobIdsForGroup("ps_jobs"))
     sc.setJobGroup(None, None)
-    assert df.collect()
     assert n_jobs <= 1, n_jobs
 
     # routed per-value handle (partition-local statistics)
