@@ -421,14 +421,6 @@ def plan_boolean(query: str, stats: dict,
     return tree, positives, all_terms
 
 
-def cold_expander(spark: SparkSession, index_dir: str,
-                  max_expansions: int = 128):
-    """The dict-backed leaf expander (sidecar-aware, same caps as the
-    standalone wildcard/fuzzy surfaces)."""
-    return Searcher(spark, index_dir, dict_cache="spark")._expander(
-        max_expansions)
-
-
 def search_boolean(spark: SparkSession, index_dir: str, query: str,
                    k: int = 10, with_doc_cols: bool = False) -> DataFrame:
     """Q11 — boolean-filtered BM25 top-k over the built index."""

@@ -19,13 +19,13 @@ Small queries skip Spark entirely. When the dictionary says a query's
 match payload (Σ df over its terms) fits ``SINGLE_TASK_MAX_POSTINGS``,
 the same pruned postings read happens on the driver with pyarrow, the
 same per-split kernels run in-process, and the same (score desc,
-doc_id asc) cut comes back as a local relation: zero Spark jobs for
-the query and for its ``collect()``. One Python task would cost more
-than the kernels it runs — a no-op 10-row ``mapInPandas`` task burns
-~200 ms of worker CPU (4-vCPU host), against 14-32 ms for the WAND
-kernels of a typical and/or/phrase query on the driver. Hot or large
-queries, ``where``-filtered queries and split-joined tombstone sets
-keep the distributed path above.
+doc_id asc) cut comes back as an :class:`ArrowFrame`: zero Spark jobs
+and zero JVM calls for the query and for its ``collect()``. One Python
+task would cost more than the kernels it runs — a no-op 10-row
+``mapInPandas`` task burns ~200 ms of worker CPU (4-vCPU host), against
+14-32 ms for the WAND kernels of a typical and/or/phrase query on the
+driver. Hot or large queries, ``where``-filtered queries and
+split-joined tombstone sets keep the distributed path above.
 
 Block-max usage (Ding & Suel, SIGIR 2011 / Turtle & Flood MaxScore,
 adapted to vectorized batch execution): each block stores
@@ -69,6 +69,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from datastream_io_spark import B, K1
 from datastream_io_spark.operators.build import read_stats
@@ -118,6 +119,11 @@ _SCORES_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType()),
                                T.StructField("score", T.DoubleType())])
 _MANY_SCHEMA = T.StructType([T.StructField("query_id", T.StringType())]
                             + _SCORES_SCHEMA.fields)
+_DOC_COLS_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.LongType())]
+    + [T.StructField(c, T.StringType())
+       for c in ("repo", "path", "commit", "lang")]
+    + [T.StructField("score", T.DoubleType())])
 
 
 def _check_mode(mode: str) -> None:
@@ -126,21 +132,80 @@ def _check_mode(mode: str) -> None:
             f"mode must be 'and', 'or' or 'phrase', got {mode!r}")
 
 
+class ArrowFrame(ClassicDataFrame):
+    """A result computed on the driver: a ``pa.Table`` of ``schema``,
+    built from one sequence (list, numpy array or pandas Series) per
+    field, behind PySpark's DataFrame API. ``collect``, ``count``,
+    ``isEmpty``, ``toArrow``, ``toPandas``, ``schema`` and ``columns``
+    answer from the table and make no JVM call; ``collect`` uses
+    Spark's own Arrow-to-Row converter, so the rows are the ones Spark
+    would return. Every other method runs against the local relation
+    ``spark.createDataFrame(table, schema)``, built on first use, once
+    per frame (under a lock). Holds the flat numeric / string columns
+    the engine builds: no timestamp or nested fields, whose pandas
+    conversion depends on session settings."""
+
+    def __new__(cls, *args, **kwargs):
+        # the classic __new__ takes (jdf, session) and re-runs __init__
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, schema: T.StructType,
+                 columns):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        self._session = spark
+        self._sc = spark._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        arrow = to_arrow_schema(schema)
+        self._table = pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(columns, arrow)],
+            schema=arrow)
+        self._schema = schema
+        self._relation = None
+        self._relation_lock = threading.Lock()
+
+    @property
+    def _jdf(self):
+        with self._relation_lock:
+            if self._relation is None:
+                self._relation = self._session.createDataFrame(
+                    self._table, self._schema)._jdf
+        return self._relation
+
+    @property
+    def schema(self) -> T.StructType:
+        return self._schema
+
+    def collect(self) -> list:
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+        return ArrowTableToRowsConversion.convert(self._table,
+                                                  self._schema)
+
+    def count(self) -> int:
+        return self._table.num_rows
+
+    def isEmpty(self) -> bool:
+        return self._table.num_rows == 0
+
+    def toArrow(self):
+        return self._table
+
+    def toPandas(self) -> pd.DataFrame:
+        return self._table.to_pandas()
+
+
 def _empty_frame(spark: SparkSession, schema, rows=()) -> DataFrame:
     """A frame of ``schema`` (DDL string or StructType) holding ``rows``
-    (tuples in schema order; none by default), built from an Arrow
-    table: a local relation, so collecting it runs no Spark job
-    (``createDataFrame(rows, schema)`` is RDD-backed and costs one)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+    (tuples in schema order; none by default): an :class:`ArrowFrame`,
+    so collecting it makes no JVM call, and any Spark operation on it
+    builds its local relation once."""
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    return spark.createDataFrame(pa.Table.from_arrays(
-        [pa.array(c, f.type) for c, f in zip(cols, arrow)],
-        schema=arrow), schema)
+    return ArrowFrame(spark, schema,
+                      list(zip(*rows)) or [()] * len(schema.fields))
 
 
 class _Plan(NamedTuple):
@@ -181,13 +246,26 @@ def _or_plan(rows: list) -> _Plan | None:
     return _resolve("or", [r["term"] for r in rows], None, rows)
 
 
+def _dict_dataset(index_dir: str):
+    """``dict/`` as a pyarrow dataset; its ``term_bucket=K``
+    directories give the int32 ``term_bucket`` column the Spark read
+    infers."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    return ds.dataset(
+        os.path.join(index_dir, "dict"), format="parquet",
+        partitioning=ds.partitioning(
+            pa.schema([("term_bucket", pa.int32())]), flavor="hive"))
+
+
 class Searcher:
     """Query handle over a built index — the one place a query is
     planned. Stats (and, per ``dict_cache``, the dictionary) load once.
     A query under the single-task gate then runs on the driver and
     costs ZERO Spark jobs (pruned pyarrow postings read → per-split
-    WAND → top-k as a local relation); a query over it costs ONE Spark
-    job (bucket-pruned postings scan → per-split WAND → top-k).
+    WAND → top-k as an :class:`ArrowFrame`); a query over it costs ONE
+    Spark job (bucket-pruned postings scan → per-split WAND → top-k).
     ``with_doc_cols`` adds a broadcast join for the display columns
     either way. The module-level search functions are one-shot
     Searchers with ``dict_cache='spark'``.
@@ -225,17 +303,16 @@ class Searcher:
 
             n_terms = _index_n_terms(index_dir)
             if n_terms is None:
-                n_terms = spark.read.parquet(
-                    os.path.join(index_dir, "dict")).count()
+                n_terms = _dict_dataset(index_dir).count_rows()
             dict_cache = ("driver"
                           if n_terms <= AUTO_DICT_DRIVER_MAX_TERMS
                           else "spark")
         self._dict_pdf = None
         if dict_cache == "driver":
-            self._dict_pdf = (
-                spark.read.parquet(os.path.join(index_dir, "dict"))
-                .toPandas().set_index("term")
-            )
+            # read with pyarrow (no Spark job): the same columns and
+            # dtypes as the Spark read's toPandas, term_bucket last
+            self._dict_pdf = (_dict_dataset(index_dir).to_table()
+                              .to_pandas().set_index("term"))
         # warm PLAN cache: building a distributed rank DataFrame costs
         # ~60-100 ms of py4j + Catalyst analysis per call; identical
         # (query, k, mode) requests reuse the lazy plan — every collect
@@ -1776,11 +1853,12 @@ def delete_docs(spark: SparkSession, index_dir: str,
 TOMB_BROADCAST_MAX_IDS = 4_000_000
 
 
-def _tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    """Read-only tombstone lookup for the QUERY path: takes no lock and
-    repairs nothing. If a maintenance swap is mid-flight (dir renamed
-    aside but not yet back), fall back to the ``_old`` aside — the
-    consistent pre-swap state.
+def _tombstones(index_dir: str, read):
+    """``read(path)`` of the live tombstone set, for the QUERY path:
+    takes no lock and repairs nothing; None when there are no deletes.
+    If a maintenance swap is mid-flight (dir renamed aside but not yet
+    back), fall back to the ``_old`` aside — the consistent pre-swap
+    state.
 
     A reader can observe NEITHER directory for the instant between
     swap_in's two renames (or catch the aside mid-rmtree). stats.json
@@ -1794,10 +1872,10 @@ def _tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
     retries = 20 if expect > 0 else 0
     for _ in range(retries + 1):
         if os.path.exists(tomb_dir):
-            return spark.read.parquet(tomb_dir)
+            return read(tomb_dir)
         if os.path.exists(aside):
             try:
-                return spark.read.parquet(aside)
+                return read(aside)
             except Exception:
                 if os.path.exists(aside):
                     # the aside survived the failed read: this is a real
@@ -1812,32 +1890,57 @@ def _tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
     return None
 
 
+class _Tombs:
+    """A broadcast-size tombstone set: sorted int64 ids in ``.value``,
+    read on the driver with no Spark call, so the in-process kernels use
+    the plain array. A kernel shipped to executors pickles it as a Spark
+    broadcast instead (made on first pickling, once per set): the tasks
+    carry a small stub and fetch the array from the broadcast store,
+    rather than up to 4M ids riding every task's closure."""
+
+    def __init__(self, spark: SparkSession, ids: np.ndarray):
+        self.value = ids
+        self._sc = spark._sc
+        self._broadcast = None
+        self._lock = threading.Lock()
+
+    def __reduce__(self):
+        with self._lock:
+            if self._broadcast is None:
+                self._broadcast = self._sc.broadcast(self.value)
+        return self._broadcast.__reduce__()
+
+
 def _tombstone_state(spark: SparkSession, index_dir: str):
-    """``(broadcast, join_df)`` — how this query delivers tombstones to
+    """``(tombs, join_df)`` — how this query delivers tombstones to
     the kernels. Filtering happens INSIDE the kernels, before θ seeding
     and before the per-split cut — so deletes keep block-max pruning
     sound (a dead high scorer must not inflate θ) and keep the cut
     enabled, instead of degrading every query to a full decode.
 
-    Small sets (≤ TOMB_BROADCAST_MAX_IDS): one sorted numpy broadcast,
-    zero plan changes. Larger sets: ``join_df[split_id, tomb]`` with
-    each split's SORTED ids as one array row — joined onto the postings
-    rows so a kernel only ever holds its own split's tombstones (they
-    are range-partitioned on disk by split, so the groupBy shuffles
-    each split's ids once, to exactly the reducer that serves it).
-    Returns (None, None) when there are no deletes."""
-    df = _tombstones(spark, index_dir)
-    if df is None:
-        return None, None
+    Small sets (≤ TOMB_BROADCAST_MAX_IDS): one sorted id array read
+    with pyarrow (:class:`_Tombs`; a broadcast only once a distributed
+    kernel ships it), zero plan changes. Larger sets:
+    ``join_df[split_id, tomb]`` with each split's SORTED ids as one
+    array row — joined onto the postings rows so a kernel only ever
+    holds its own split's tombstones (they are range-partitioned on
+    disk by split, so the groupBy shuffles each split's ids once, to
+    exactly the reducer that serves it). Returns (None, None) when
+    there are no deletes."""
+    import pyarrow.dataset as ds
+
     n = int(read_stats(index_dir).get("n_tombstones", 0) or 0)
-    if n == 0:
-        n = df.count()
-    if n <= TOMB_BROADCAST_MAX_IDS or "split_id" not in df.columns:
-        arr = np.sort(
-            df.select("doc_id").toPandas()["doc_id"].to_numpy(np.int64))
-        return spark.sparkContext.broadcast(arr), None
-    return None, df.groupBy("split_id").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("tomb"))
+
+    def read(path):
+        d = ds.dataset(path, format="parquet", partitioning="hive")
+        if ((n or d.count_rows()) <= TOMB_BROADCAST_MAX_IDS
+                or "split_id" not in d.schema.names):
+            ids = d.to_table(columns=["doc_id"])["doc_id"].to_numpy()
+            return _Tombs(spark, np.sort(ids.astype(np.int64))), None
+        return None, spark.read.parquet(path).groupBy("split_id").agg(
+            F.sort_array(F.collect_list("doc_id")).alias("tomb"))
+
+    return _tombstones(index_dir, read) or (None, None)
 
 
 def _with_tomb(prows: DataFrame, tomb_join: DataFrame | None) -> DataFrame:
@@ -1849,8 +1952,9 @@ def _with_tomb(prows: DataFrame, tomb_join: DataFrame | None) -> DataFrame:
 
 
 def _tv_from(pdf: pd.DataFrame, tomb) -> np.ndarray | None:
-    """Resolve the kernel's tombstone id array: the global broadcast
-    (small sets) or the split's joined ``tomb`` column (large sets —
+    """Resolve the kernel's tombstone id array: the whole sorted set
+    (small sets: a :class:`_Tombs` on the driver, its broadcast in a
+    task) or the split's joined ``tomb`` column (large sets —
     rows of one kernel invocation all share a split)."""
     if tomb is not None:
         return tomb.value
@@ -2016,10 +2120,8 @@ def search_fuzzy(spark: SparkSession, index_dir: str, term: str,
 def _empty_topk(spark: SparkSession, with_doc_cols: bool) -> DataFrame:
     """Empty results carry the same schema as the hit path, so callers
     can select doc cols without branching on emptiness."""
-    schema = ("doc_id long, repo string, path string, commit string,"
-              " lang string, score double") if with_doc_cols else \
-             "doc_id long, score double"
-    return _empty_frame(spark, schema)
+    return _empty_frame(spark, _DOC_COLS_SCHEMA if with_doc_cols
+                        else _SCORES_SCHEMA)
 
 
 def facet_counts(spark: SparkSession, index_dir: str, query: str,
@@ -2303,11 +2405,11 @@ def _rank_on_driver(spark: SparkSession, index_dir: str, buckets: list,
     the distributed path runs per ``split_id`` group, then apply the
     same cut and order — (score desc, doc_id asc), per ``query_id``
     for batches (``schema`` leads with it); ``k=None`` keeps every
-    row. Returns the rows as a local relation (a LocalTableScan, so
-    its collect launches no job). It holds results, not a plan: the
-    flag it sets keeps the frame out of ``Searcher._cached_plan``."""
-    import pyarrow as pa
-
+    row. Returns the rows as an :class:`ArrowFrame`: its collect,
+    count and toPandas make no JVM call, and a Spark operation on it
+    (a docs join, a facet aggregation) builds its local relation once.
+    It holds results, not a plan: the flag it sets keeps the frame out
+    of ``Searcher._cached_plan``."""
     pdf = _read_postings_local(index_dir, buckets, terms)
     outs = [kernel(g) for _, g in pdf.groupby("split_id", sort=False)]
     names = schema.names
@@ -2321,8 +2423,7 @@ def _rank_on_driver(spark: SparkSession, index_dir: str, buckets: list,
         out = (out.groupby(qid, sort=False).head(k) if qid
                else out.head(k))
     _DRIVER_RAN.flag = True
-    return spark.createDataFrame(
-        pa.Table.from_pandas(out[names], preserve_index=False), schema)
+    return ArrowFrame(spark, schema, [out[c] for c in names])
 
 
 def global_topk(spark: SparkSession, index_dir: str, cand: DataFrame,

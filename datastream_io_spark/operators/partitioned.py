@@ -194,10 +194,10 @@ def facet_counts_partitioned(
                 spark, f"{by} string, n_docs long",
                 sorted(((u, n) for u, n in rows if n),
                        key=lambda r: (-r[1], r[0])))
-        # keep the BROADCAST handle (not .value): a captured broadcast
-        # pickles as a small stub and workers fetch the array via the
-        # broadcast store, whereas materialized arrays (up to 4M ids ×
-        # 8 B per subindex) would ride the closure into every task
+        # keep the handle (not .value): a captured handle pickles as a
+        # broadcast stub and workers fetch the array via the broadcast
+        # store, whereas materialized arrays (up to 4M ids × 8 B per
+        # subindex) would ride the closure into every task
         tomb_of[v] = tomb
         buckets = sorted({term_bucket(t, int(stats["n_buckets"]))
                           for t in terms})
@@ -299,7 +299,7 @@ def search_all_partitions(
     subindex collected), ONE ranking job (union of per-subindex
     candidate kernels → a single global TakeOrdered), plus ONE ≤k-row
     display job under ``with_doc_cols`` (per-branch doc_id pushdown,
-    only hit subindexes read); the result is a local relation, so the
+    only hit subindexes read); the result is an ``ArrowFrame``, so the
     caller's collect adds none — 2 jobs, 3 with doc cols. The union
     collects run with AQE off (:func:`_collect_no_aqe` — AQE gives each
     union branch its own job id). A subindex missing some AND/phrase
@@ -722,7 +722,7 @@ class PartitionedSearcher:
         shuffle width pinned to the true group count), then an optional
         ≤k-row display job (per-branch doc_id pushdown, subset schema —
         no footer-inference job per subindex), assembled driver-side
-        into a ≤k-row local relation (its collect runs no job). Output:
+        into a ≤k-row ``ArrowFrame`` (its collect makes no JVM call). Output:
         ``(<by>, doc_id, score)``, with the display columns except
         ``<by>`` before score under ``with_doc_cols``."""
         by = self.by

@@ -1,4 +1,4 @@
-"""T2–T5 / P3–P4 — token explosion, tf, df, doc_len, doc ids, sha256
+"""T2–T5 / P4 — token explosion, tf, df, doc_len, doc ids
 (SURVEY.md §2.2–2.3).
 
 All pure DataFrame ops: Catalyst plans tf/df/doc_len as partial+final
@@ -13,11 +13,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from datastream_io_spark.functions.tokenize import tokenize_simple_col, tokenizer_for
-
-
-def with_sha256(df: DataFrame, col: str = "content") -> DataFrame:
-    """P3 — per-row invariant hash (BASELINE.json:15), JVM-side, no UDF."""
-    return df.withColumn("content_sha256", F.sha2(F.col(col), 256))
 
 
 def with_tokens(df: DataFrame, text_col: str = "content", mode: str = "simple",
@@ -44,11 +39,6 @@ def doc_terms(tok_df: DataFrame, doc_col: str = "doc_id") -> DataFrame:
 def term_freq(terms_df: DataFrame, doc_col: str = "doc_id") -> DataFrame:
     """T3 — tf per (doc, term); partial+final hash agg."""
     return terms_df.groupBy(doc_col, "term").agg(F.count("*").alias("tf"))
-
-
-def doc_pos_terms(tok_df: DataFrame, doc_col: str = "doc_id") -> DataFrame:
-    """T2 (positional) — one row per (doc, pos, term) occurrence."""
-    return tok_df.select(doc_col, F.posexplode("tokens").alias("pos", "term"))
 
 
 def term_freq_positional(pos_terms_df: DataFrame, doc_col: str = "doc_id",

@@ -61,9 +61,3 @@ def read_restream(spark: SparkSession, dir_path: str, schema: StructType,
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(dir_path)
     )
-
-
-def rate_demo_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Built-in rate source — the pure-synthetic restream variant."""
-    return spark.readStream.format("rate").option(
-        "rowsPerSecond", rows_per_second).load()

@@ -1,3 +1,5 @@
+import contextlib
+
 import pytest
 
 from datastream_io_spark.corpus import corpus_df
@@ -104,6 +106,33 @@ def arrow_reads(monkeypatch):
 
     monkeypatch.setattr(pq, "read_table", spy)
     return seen
+
+
+@contextlib.contextmanager
+def py4j_calls(spark):
+    """Every py4j round trip (one gateway ``send_command``, from any
+    thread) made while the block runs, as the list of commands sent:
+    ``with py4j_calls(spark) as sent: ...; assert sent == []``. Memory
+    deletes are left out: py4j's finalizer thread sends them whenever
+    it gets to proxies that died earlier, and code that made a proxy
+    has already made a call to get it."""
+    from py4j import protocol
+
+    client = spark.sparkContext._gateway._gateway_client
+    sent: list[str] = []
+    real = client.send_command
+    delete = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counted(command, *args, **kwargs):
+        if not command.startswith(delete):
+            sent.append(command)
+        return real(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield sent
+    finally:
+        del client.send_command
 
 
 def bucket_dirs(index_dir, terms, sub="postings"):

@@ -3,7 +3,8 @@ reads its pruned postings on the driver and runs the per-split kernels
 in-process. Its rows, order and scores must equal the distributed
 per-split kernels' (gate forced to 0) in every mode, on positional and
 non-positional indexes and under broadcast tombstones; it must launch
-no Spark job, and its results must never be cached."""
+no Spark job, make no JVM call (its collect included), and its results
+must never be cached."""
 
 import time
 
@@ -11,7 +12,7 @@ import pytest
 
 from datastream_io_spark.operators import indexed_search as IX
 from datastream_io_spark.operators.boolean_search import search_boolean
-from tests.conftest import SF0001, reads_under
+from tests.conftest import SF0001, py4j_calls, reads_under
 
 
 def _rows(df):
@@ -133,6 +134,29 @@ def test_driver_equals_distributed_under_tombstones(spark, tomb_index,
             assert not ids & dead, name
 
 
+def test_tombstones_read_on_driver_ship_as_broadcast(spark, tomb_index):
+    """A broadcast-size tombstone set is read with pyarrow into a plain
+    sorted id array (no JVM call); only a kernel pickled for executors
+    turns it into a Spark broadcast, which pickles as a small stub."""
+    import numpy as np
+    from pyspark.serializers import CloudPickleSerializer
+
+    with py4j_calls(spark) as sent:
+        tomb, tomb_join = IX._tombstone_state(spark, tomb_index)
+    assert sent == [] and tomb_join is None
+    ids = tomb.value
+    assert isinstance(ids, np.ndarray) and ids.dtype == np.int64
+    assert ids.size and (np.diff(ids) > 0).all()
+
+    big = IX._Tombs(spark, np.arange(100_000, dtype=np.int64))
+    try:
+        blob = CloudPickleSerializer().dumps(big)
+    finally:
+        spark.sparkContext._pickled_broadcast_vars.clear()
+    assert len(blob) < 1000
+    assert (big._broadcast.value == big.value).all()
+
+
 def test_gated_queries_launch_no_spark_job(spark, pos_index):
     """A gated query and its collect() run no Spark job, in every mode
     that needs no display join or Spark-side expansion. Neither do a
@@ -199,3 +223,72 @@ def test_repeated_query_rereads_postings(spark, pos_index, arrow_reads,
     c = s.search("window agg", 10, "and")
     assert s.search("window agg", 10, "and") is c
     assert n_reads() == 2 * first and _rows(c) == _rows(a)
+
+
+def _warm_gated(s):
+    """Warm gated queries of every mode, each with its collect()."""
+    return [
+        s.search("window agg", 10, "and").collect(),
+        s.search("window agg scan", 10, "or").collect(),
+        s.search("window agg", 10, "phrase").collect(),
+        s.search_near("window agg", 10, slop=1, ordered=True).collect(),
+        s.search_wildcard("s*", 10).collect(),
+        s.search_fuzzy("windw", 10).collect(),
+        s.search_boolean("window AND (agg OR scan) NOT merge",
+                         10).collect(),
+        s.search_many({"a": "window agg", "b": "scan"}, 10,
+                      "or").collect(),
+    ]
+
+
+@pytest.mark.parametrize("index", ["pos_index", "tomb_index"])
+def test_warm_gated_queries_make_no_jvm_call(spark, index, request):
+    """A warm gated query and its collect() make zero py4j round trips
+    in every mode — with no deletes and with broadcast-size tombstones
+    (read with pyarrow, handed to the in-process kernels as an array) —
+    and so does an all-absent query. Its count / isEmpty / toPandas /
+    toArrow answer from the Arrow table too."""
+    idx = request.getfixturevalue(index)
+    s = IX.Searcher(spark, idx, dict_cache="driver")
+    _warm_gated(s)  # first-call imports stay out of the count
+    with py4j_calls(spark) as sent:
+        got = _warm_gated(s)
+        none = s.search("zzqqx yyxxq", 10, "or").collect()
+        df = s.search("window agg", 10, "or")
+        shape = (df.count(), df.isEmpty(), len(df.toPandas()),
+                 df.toArrow().num_rows, df.columns)
+    assert sent == []
+    assert all(got) and none == []
+    assert shape == (len(df.collect()), False, shape[0], shape[0],
+                     ["doc_id", "score"])
+
+
+def test_driver_dict_open_runs_no_job(spark, pos_index, monkeypatch):
+    """A driver-dict Searcher reads dict/ with pyarrow: zero Spark jobs
+    and zero py4j round trips per open (also when the build recorded no
+    term count and 'auto' has to count the dictionary), and the cached
+    frame has the Spark read's columns, dtypes and rows."""
+    from datastream_io_spark.operators import dictindex
+
+    sc = spark.sparkContext
+    sc.setJobGroup("dict_open", "driver dict open")
+    try:
+        with py4j_calls(spark) as sent:
+            s = IX.Searcher(spark, pos_index, dict_cache="driver")
+            monkeypatch.setattr(dictindex, "_index_n_terms",
+                                lambda index_dir: None)
+            auto = IX.Searcher(spark, pos_index)
+    finally:
+        sc.setJobGroup(None, None)
+    time.sleep(0.5)  # let the listener bus deliver any job start
+    assert sent == []
+    assert list(sc.statusTracker().getJobIdsForGroup("dict_open")) == []
+    assert auto._dict_pdf is not None
+
+    want = (spark.read.parquet(f"{pos_index}/dict").toPandas()
+            .set_index("term"))
+    got = s._dict_pdf
+    assert list(got.columns) == list(want.columns)
+    assert dict(got.dtypes) == dict(want.dtypes)
+    assert got.index.dtype == want.index.dtype
+    assert got.sort_index().equals(want.sort_index())
