@@ -11,6 +11,9 @@ Standard xxHash64 (Collet, public domain, https://xxhash.com), seed 42
 UTF-8 bytes exactly like Spark's UTF8String path. Equality with the JVM
 implementation is pinned in tests/test_plans.py over ASCII, UTF-8
 multibyte, and every length-class branch (<4, <8, <32, ≥32 bytes).
+:func:`xxhash64_cols` chains the seed through several columns like the
+multi-column ``F.xxhash64(c1, c2, ...)``, which assigns a document key
+its build split without a Spark job.
 """
 
 from __future__ import annotations
@@ -77,6 +80,19 @@ def xxhash64_str(s: str, seed: int = 42) -> int:
     """Signed value identical to Spark's ``F.xxhash64(string_col)``."""
     u = xxhash64_bytes(s.encode("utf-8"), seed)
     return u - (1 << 64) if u >= (1 << 63) else u
+
+
+def xxhash64_cols(values, seed: int = 42) -> int:
+    """Signed value identical to Spark's multi-column
+    ``F.xxhash64(c1, c2, ...)`` over string columns, given each value's
+    UTF-8 bytes (or None): each non-null value is hashed with the
+    previous hash as its seed; a null leaves the hash unchanged."""
+    h = seed
+    for v in values:
+        if v is not None:
+            h = xxhash64_bytes(v, h)
+    h &= _MASK
+    return h - (1 << 64) if h >= (1 << 63) else h
 
 
 def term_bucket(term: str, n_buckets: int) -> int:

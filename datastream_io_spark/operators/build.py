@@ -27,19 +27,20 @@ resumable (C6, BASELINE.json:14):
      ``postings/`` partitioned by term_bucket + broadcastable
      ``dict/`` + ``docs/``.
 
-Small corpora skip Spark for all three phases: ``build_index``
-probes the corpus size (rows and content bytes, one tiny result row)
-and, under ``DRIVER_BUILD_MAX_DOCS`` and ``DRIVER_BUILD_MAX_BYTES``,
-collects it in a second Spark job (split id and sha256 computed in the
-JVM select) and runs stage → per-split segments → finalize in-process
-(:mod:`.driver_build`) with the same kernels, writing the same files
-and checkpoints. A 400-file build shrinks from ~16 Spark jobs and ~70
-tasks to those two jobs; below the gate the per-job and per-task fixed
-cost (planning, codegen, the JVM↔Python Arrow crossing) outweighs the
-kernels many times over. Over the gate, with ``bucket_layout=True``,
-or with a source-supplied ``split_id`` column, the distributed phases
-below run unchanged, and every phase function here stays callable on
-its own (fleet workers, the session warm-up).
+Small corpora skip Spark for all three phases: under
+``DRIVER_BUILD_MAX_DOCS`` rows and ``DRIVER_BUILD_MAX_BYTES`` of content
+``build_index`` brings the corpus to the driver and runs stage →
+per-split segments → finalize in-process (:mod:`.driver_build`) with the
+same kernels, writing the same files and checkpoints. A plain scan of
+parquet files is read with pyarrow (zero Spark jobs); any other corpus
+is size-probed and collected in two Spark jobs (split id and sha256
+computed in the JVM select). A 400-file build shrinks from ~16 Spark
+jobs and ~70 tasks to none (two for a non-file source); below the gate
+the per-job and per-task fixed cost (planning, codegen, the JVM↔Python
+Arrow crossing) outweighs the kernels many times over. Over the gate,
+with ``bucket_layout=True``, or with a source-supplied ``split_id``
+column, the distributed phases below run unchanged, and every phase
+function here stays callable on its own (fleet workers).
 
 Design history (each step measured on the 20k/50k-file synthetic
 corpus, local[8] vs local[32]):
@@ -1592,10 +1593,14 @@ def build_index(
     """End-to-end resumable build. ``fail_after_splits`` is a test hook
     (C6 kill-resume test): raise after that many split jobs complete.
 
-    Small corpora build IN-PROCESS (:mod:`.driver_build`). Two Spark
-    jobs over ``corpus.limit(DRIVER_BUILD_MAX_DOCS + 1)``: a probe that
-    returns only the row count and Σ content bytes, then, when both fit
-    (``DRIVER_BUILD_MAX_DOCS`` rows, ``DRIVER_BUILD_MAX_BYTES``), the
+    Small corpora build IN-PROCESS (:mod:`.driver_build`) when they fit
+    ``DRIVER_BUILD_MAX_DOCS`` rows and ``DRIVER_BUILD_MAX_BYTES`` of
+    content. A plain scan of parquet files (``sources.scan_corpus``, a
+    bare ``spark.read.parquet``) is read with pyarrow and gated on its
+    footers' row counts and its content bytes: ZERO Spark jobs. Any
+    other corpus costs two Spark jobs over
+    ``corpus.limit(DRIVER_BUILD_MAX_DOCS + 1)``: a probe that returns
+    only the row count and Σ content bytes, then, when both fit, the
     collect, with split id and sha256 computed in its select. Staging,
     segments and finalize then run on the driver with the same kernels,
     writing the same files and checkpoints — per-job and per-task fixed
@@ -1603,9 +1608,10 @@ def build_index(
     path when the frozen staging fits both caps. Over the gate, with
     ``bucket_layout=True`` (a fleet will finalize these segments), or
     with a source-supplied ``split_id`` column, the distributed phases
-    below run; an over-gate corpus then cost one extra probe job that
-    read at most ``DRIVER_BUILD_MAX_DOCS + 1`` rows per input partition
-    and returned one row.
+    below run; an over-gate corpus that is not a plain parquet scan
+    then cost one extra probe job that read at most
+    ``DRIVER_BUILD_MAX_DOCS + 1`` rows per input partition and
+    returned one row.
 
     ``bucket_layout`` defaults to False here — the single-process build
     finalizes in one job over every segment, so the fleet layout's

@@ -7,16 +7,21 @@ planning and codegen, the JVM↔Python Arrow crossing of every
 ``mapInPandas`` batch), while the kernels themselves take a fraction
 of a CPU-second on such a corpus. Under ``build.DRIVER_BUILD_MAX_DOCS``
 (rows) and ``build.DRIVER_BUILD_MAX_BYTES`` (content bytes) the build
-therefore collects the corpus in two small Spark jobs (a size probe,
-then the rows) and runs the three phases here, in this process, with
-the SAME kernels:
+therefore brings the corpus to the driver and runs the three phases
+here, in this process, with the SAME kernels:
 
-  stage     the collect computes ``split_id`` (``build._doc_key_split``)
-            and ``content_sha256`` (``F.sha2``) in the JVM select, so
-            both are bit-identical to the distributed stage by
-            construction; dedupe (max sha256, max lang survivor) and the
-            split-local dense ids follow the window order of
-            ``build._staged_local_df``.
+  stage     a plain scan of parquet files (``sources.scan_corpus``, a
+            bare ``spark.read.parquet``) is read with pyarrow and runs
+            NO Spark job: the footers' row counts and the content bytes
+            gate it, ``xxhash.xxhash64_cols`` computes ``split_id`` the
+            way ``build._doc_key_split`` does and ``hashlib.sha256``
+            ``content_sha256`` the way ``F.sha2`` does. Any other corpus
+            (in-memory frames, filters, unions, DSv2 sources, partitioned
+            directories, non-string columns) is collected in two small
+            Spark jobs, a size probe and then the rows, with both
+            columns computed in the JVM select. Dedupe (max sha256, max
+            lang survivor) and the split-local dense ids follow the
+            window order of ``build._staged_local_df``.
   segments  ``postings.term_stats_frame`` (the fused tokenize+tf
             kernel), the same range salting, ``build._encode_partitions``
             over the split's (term, salt, doc_id)-sorted rows.
@@ -34,6 +39,7 @@ boundaries (and ``compressed_bytes``) but never the decoded postings."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 
@@ -41,6 +47,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,11 +55,12 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from datastream_io_spark.functions.bm25 import idf_py
-from datastream_io_spark.functions.xxhash import term_bucket
+from datastream_io_spark.functions.xxhash import term_bucket, xxhash64_cols
 from datastream_io_spark.operators import build as B
 from datastream_io_spark.operators.postings import term_stats_frame
 from datastream_io_spark.session import aqe_disabled
 from datastream_io_spark.sources import manifest as M
+from datastream_io_spark.sources.scan import CORPUS_COLS
 
 # zstd-3 like Spark's writer; dictionary pages off and no embedded Arrow
 # schema keep the files as small as Spark's (pyarrow's defaults grew a
@@ -86,7 +94,7 @@ def _write(table: pa.Table, out_dir: str) -> None:
 
 
 def _nulls_first(v):
-    return (v is not None, v or "")
+    return (v is not None, "" if v is None else v)
 
 
 def _dedupe_order(t: pa.Table) -> list[int]:
@@ -133,31 +141,114 @@ def _staged_content_bytes(index_dir: str) -> int:
     return total
 
 
-def stage(spark: SparkSession, corpus: DataFrame, index_dir: str,
-          n_splits: int, n_buckets: int, tokenizer: str, positions: bool,
-          store_content: bool, max_docs: int,
-          max_bytes: int) -> dict | None:
-    """Phase A in-process. Returns the frozen staging info, or None when
-    the corpus is over ``max_docs`` rows or ``max_bytes`` of content
-    (the caller then stages with Spark). An existing staging is resumed
-    (frozen settings checked) when its ``n_docs`` and staged content
-    bytes fit. Otherwise two
-    Spark jobs over ``corpus.limit(max_docs + 1)``: a probe that
-    returns only the row count and Σ content bytes, then, when both
-    fit, the collect (split and sha256 computed in its select); the
-    rows are staged with pyarrow — the same ``staged_corpus/split_id=N``
-    layout, split-local ids, and ``staging.json`` as
-    :func:`build.stage_corpus`."""
-    B.check_not_purged(index_dir, "a staging resume")
-    if os.path.exists(B._staging_path(index_dir)):
-        info = B._read_json(B._staging_path(index_dir))
-        B._check_frozen(info, index_dir, n_splits, n_buckets, tokenizer,
-                        positions, store_content)
-        fits = (info["n_docs"] <= max_docs
-                and _staged_content_bytes(index_dir) <= max_bytes)
-        return info if fits else None
-    if os.path.exists(B._staging_plan_path(index_dir)):
-        return None  # a sharded staging: stage_corpus reports it
+class _NotPlain(Exception):
+    """The corpus's parquet files cannot stand in for its Spark read."""
+
+
+def _seq(jseq) -> list:
+    """A Scala ``Seq`` behind py4j as a Python list."""
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _kind(jobj) -> str:
+    return jobj.getClass().getSimpleName()
+
+
+def _plain_parquet_uris(corpus: DataFrame) -> list[str] | None:
+    """The input file URIs when ``corpus`` is a plain scan of parquet
+    files: a ``LogicalRelation`` over a parquet ``HadoopFsRelation``
+    without partition columns, under nothing but ``SubqueryAlias`` and
+    ``Project``s of bare column references, with the five corpus
+    columns reaching the top unrenamed. None for any other plan (no
+    Spark job either way: the analyzed plan and the relation's file
+    listing are already on the driver)."""
+    top = corpus._jdf.queryExecution().analyzed()
+    plan = top
+    while True:
+        kind = _kind(plan)
+        if kind == "SubqueryAlias" or (
+                kind == "Project"
+                and all(_kind(e) == "AttributeReference"
+                        for e in _seq(plan.projectList()))):
+            plan = plan.child()
+        else:
+            break
+    if kind != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (_kind(rel) != "HadoopFsRelation"
+            or _kind(rel.fileFormat()) != "ParquetFileFormat"
+            or not rel.partitionSchema().isEmpty()):
+        return None
+
+    def ids(p):
+        return {a.name(): a.exprId().id() for a in _seq(p.output())
+                if a.name() in CORPUS_COLS}
+
+    want = ids(plan)
+    if len(want) != len(CORPUS_COLS) or ids(top) != want:
+        return None
+    return list(corpus.inputFiles())
+
+
+def _parquet_rows(uris: list[str], n_splits: int, max_docs: int,
+                  max_bytes: int) -> pa.Table | None:
+    """The corpus read from its parquet files with pyarrow, or None over
+    a cap: the row gate sums the footers' ``num_rows`` (an over-gate
+    corpus reads no content), the byte gate Σ content bytes while row
+    groups are read (stopping at the first row group over it). Raises
+    :class:`_NotPlain` for a filesystem pyarrow cannot open or a file
+    without the five corpus columns as strings."""
+    files, n_rows = [], 0
+    for uri in uris:
+        try:
+            fs, path = pafs.FileSystem.from_uri(uri)
+        except (pa.ArrowInvalid, OSError) as e:
+            raise _NotPlain(uri) from e
+        pf = pq.ParquetFile(path, filesystem=fs)
+        n_rows += pf.metadata.num_rows
+        if n_rows > max_docs:
+            return None
+        schema = pf.schema_arrow
+        if not all(schema.get_field_index(c) >= 0 and schema.field(c).type
+                   in (pa.string(), pa.large_string())
+                   for c in CORPUS_COLS):
+            raise _NotPlain(uri)
+        files.append(pf)
+    want = pa.schema([(c, pa.string()) for c in CORPUS_COLS])
+    parts, n_bytes = [want.empty_table()], 0
+    for pf in files:
+        for g in range(pf.metadata.num_row_groups):
+            t = (pf.read_row_group(g, columns=CORPUS_COLS)
+                 .select(CORPUS_COLS).cast(want))
+            n_bytes += pc.sum(pc.binary_length(t.column("content"))
+                              ).as_py() or 0
+            if n_bytes > max_bytes:
+                return None
+            parts.append(t)
+    t = pa.concat_tables(parts)
+
+    def raw(c):  # UTF-8 bytes, what Spark's xxhash64 and sha2 hash
+        return pc.cast(t.column(c), pa.binary()).to_pylist()
+
+    split_id = [xxhash64_cols(k) % n_splits
+                for k in zip(raw("repo"), raw("path"), raw("commit"))]
+    sha = [None if b is None else hashlib.sha256(b).hexdigest()
+           for b in raw("content")]
+    return pa.table({
+        "split_id": pa.array(split_id, pa.int32()),
+        **{c: t.column(c) for c in _META_COLS},
+        "content_sha256": pa.array(sha, pa.string()),
+        "content": t.column("content"),
+    })
+
+
+def _spark_rows(spark: SparkSession, corpus: DataFrame, n_splits: int,
+                max_docs: int, max_bytes: int) -> pa.Table | None:
+    """The corpus collected by Spark, or None over a cap: two jobs over
+    ``corpus.limit(max_docs + 1)``, a probe that returns only the row
+    count and Σ content bytes, then, when both fit, the collect with
+    ``split_id`` and ``content_sha256`` computed in its select."""
     head = corpus.limit(max_docs + 1)
     # AQE off: it would run each shuffle of the corpus's own plan as a
     # job of its own; without it each collect is one job whatever the
@@ -177,6 +268,50 @@ def stage(spark: SparkSession, corpus: DataFrame, index_dir: str,
                             "content")
                 .toArrow())
     if rows.num_rows > max_docs:  # the source changed since the probe
+        return None
+    return rows
+
+
+def _corpus_rows(spark: SparkSession, corpus: DataFrame, n_splits: int,
+                 max_docs: int, max_bytes: int) -> pa.Table | None:
+    """The corpus as staging rows (``split_id``, repo, path, commit,
+    lang, ``content_sha256``, content), or None when it is over
+    ``max_docs`` rows or ``max_bytes`` of content. A plain scan of
+    parquet files is read with pyarrow and runs no Spark job; any other
+    corpus is collected by Spark."""
+    uris = _plain_parquet_uris(corpus)
+    if uris is not None:
+        try:
+            return _parquet_rows(uris, n_splits, max_docs, max_bytes)
+        except _NotPlain:
+            pass
+    return _spark_rows(spark, corpus, n_splits, max_docs, max_bytes)
+
+
+def stage(spark: SparkSession, corpus: DataFrame, index_dir: str,
+          n_splits: int, n_buckets: int, tokenizer: str, positions: bool,
+          store_content: bool, max_docs: int,
+          max_bytes: int) -> dict | None:
+    """Phase A in-process. Returns the frozen staging info, or None when
+    the corpus is over ``max_docs`` rows or ``max_bytes`` of content
+    (the caller then stages with Spark). An existing staging is resumed
+    (frozen settings checked) when its ``n_docs`` and staged content
+    bytes fit. Otherwise the rows come from :func:`_corpus_rows` (no
+    Spark job for a plain parquet scan, else two) and are staged with
+    pyarrow — the same ``staged_corpus/split_id=N`` layout, split-local
+    ids, and ``staging.json`` as :func:`build.stage_corpus`."""
+    B.check_not_purged(index_dir, "a staging resume")
+    if os.path.exists(B._staging_path(index_dir)):
+        info = B._read_json(B._staging_path(index_dir))
+        B._check_frozen(info, index_dir, n_splits, n_buckets, tokenizer,
+                        positions, store_content)
+        fits = (info["n_docs"] <= max_docs
+                and _staged_content_bytes(index_dir) <= max_bytes)
+        return info if fits else None
+    if os.path.exists(B._staging_plan_path(index_dir)):
+        return None  # a sharded staging: stage_corpus reports it
+    rows = _corpus_rows(spark, corpus, n_splits, max_docs, max_bytes)
+    if rows is None:
         return None
     keep = rows.take(pa.array(_dedupe_order(rows), pa.int64()))
     split_col = keep.column("split_id").to_numpy()

@@ -392,6 +392,22 @@ class Searcher:
               ordered: bool = False) -> _Plan | None:
         return self._plans({"": query}, mode, slop, ordered)[""]
 
+    # wildcard / fuzzy candidates without a whole-vocabulary pass: dict
+    # row positions in term order (a prefix is one searchsorted range)
+    # and in term-length order (the fuzzy length band is one range);
+    # built on the first such query of this handle
+    @cached_property
+    def _terms_sorted(self) -> tuple[np.ndarray, np.ndarray]:
+        terms = self._dict_pdf.index.to_numpy(dtype=object)
+        order = np.argsort(terms, kind="stable")
+        return order, terms[order]
+
+    @cached_property
+    def _lens_sorted(self) -> tuple[np.ndarray, np.ndarray]:
+        lens = self._dict_pdf.index.str.len().to_numpy(np.int64)
+        order = np.argsort(lens, kind="stable")
+        return order, lens[order]
+
     def _expand(self, q: str, mode: str, max_dist: int,
                 max_expansions: int) -> list:
         """Wildcard / fuzzy / regex expansion of ``q``: the dictionary
@@ -409,35 +425,38 @@ class Searcher:
             import re
 
             rx = re.compile(q)
-            mask = np.fromiter((rx.fullmatch(t) is not None
-                                for t in index), bool, count=len(index))
+            pos = np.flatnonzero(np.fromiter(
+                (rx.fullmatch(t) is not None for t in index), bool,
+                count=len(index)))
         elif mode == "wildcard":
             prefix = q.lower().rstrip("*")
             if not prefix:
                 return []
-            mask = index.str.startswith(prefix)
+            order, terms = self._terms_sorted
+            lo = np.searchsorted(terms, prefix, "left")
+            end = _prefix_end(prefix)
+            hi = (len(terms) if end is None
+                  else np.searchsorted(terms, end, "left"))
+            pos = order[lo:hi]
         else:
             q = _fuzzy_term(q)
             if not q:
                 return []
-            lens = index.str.len()
-            band = np.asarray((lens >= max(1, len(q) - max_dist))
-                              & (lens <= len(q) + max_dist))
-            # distance check only over the band candidates; scatter
-            # back into a full mask (no second whole-vocabulary pass)
-            band_pos = np.flatnonzero(band)
-            keep = np.fromiter((_levenshtein_leq(t, q, max_dist)
-                                for t in index[band_pos]), bool,
-                               count=len(band_pos))
-            mask = np.zeros(len(index), dtype=bool)
-            mask[band_pos[keep]] = True
-        hits = (self._dict_pdf[mask]
-                .reset_index()
-                .sort_values(["df", "term"], ascending=[False, True])
-                .iloc[:max_expansions])
-        return [{"term": r["term"], "term_bucket": int(r["term_bucket"]),
-                 "idf": float(r["idf"]), "df": int(r["df"])}
-                for _, r in hits.iterrows()]
+            order, lens = self._lens_sorted
+            band = order[np.searchsorted(lens, max(1, len(q) - max_dist),
+                                         "left"):
+                         np.searchsorted(lens, len(q) + max_dist, "right")]
+            pos = band[np.fromiter((_levenshtein_leq(t, q, max_dist)
+                                    for t in index[band]), bool,
+                                   count=len(band))]
+        hits = self._dict_pdf.iloc[pos]
+        term = hits.index.to_numpy(dtype=object)
+        df, idf, bucket = (hits[c].to_numpy()
+                           for c in ("df", "idf", "term_bucket"))
+        top = sorted(range(len(term)),
+                     key=lambda i: (-df[i], term[i]))[:max_expansions]
+        return [{"term": term[i], "term_bucket": int(bucket[i]),
+                 "idf": float(idf[i]), "df": int(df[i])} for i in top]
 
     def _expander(self, max_expansions: int = 128):
         """Boolean wildcard / fuzzy leaf expander over :meth:`_expand`
@@ -1616,6 +1635,13 @@ def search_many(spark: SparkSession, index_dir: str,
     mode)."""
     return Searcher(spark, index_dir, dict_cache="spark").search_many(
         queries, k, mode, max_dist, max_expansions, slop, ordered)
+
+
+def _prefix_end(prefix: str) -> str | None:
+    """The least string above every string that starts with ``prefix``
+    (code-point order); None when no string is."""
+    p = prefix.rstrip(chr(0x10FFFF))
+    return p[:-1] + chr(ord(p[-1]) + 1) if p else None
 
 
 def _empty_many(spark: SparkSession) -> DataFrame:

@@ -119,69 +119,11 @@ def _warm_python_workers(spark: SparkSession) -> None:
 
     try:
         spark.range(0, n, 1, n).mapInPandas(_imports, "id long").count()
-        _warm_engine_paths(spark)
     except Exception:
         # warmup is best-effort; never fail session creation — but say
         # why the first real job will pay the warm-up cost instead
         logging.getLogger(__name__).warning(
-            "Spark worker/engine warm-up failed; continuing cold",
+            "Spark worker warm-up failed; continuing cold",
             exc_info=True)
     spark._dsio_workers_warm = True
 
-
-def _warm_engine_paths(spark: SparkSession) -> None:
-    """Run a 64-doc throwaway build + one query at session creation so
-    the JVM compiles the engine's plan shapes (sha2/window staging,
-    Arrow tokenize/encode kernels, partitioned parquet writes) and the
-    driver warms its small-query path BEFORE the first real job. The
-    builds call the distributed phases directly: ``build_index`` would
-    build a corpus this small in-process and warm nothing in the JVM.
-    Pure JIT/codegen and commit-protocol warmup over synthetic
-    literals: no user input is read and nothing survives the call —
-    the first production build otherwise pays several seconds of
-    one-time compilation inside its own wall-clock. Disable with
-    SPARK_GRAFT_NO_ENGINE_WARMUP=1 (e.g. short-lived sessions that
-    never build an index)."""
-    if os.environ.get("SPARK_GRAFT_NO_ENGINE_WARMUP"):
-        return
-    import shutil
-    import tempfile
-
-    from datastream_io_spark.operators.build import (
-        build_segment,
-        finalize_index,
-        stage_corpus,
-    )
-    from datastream_io_spark.operators.indexed_search import (
-        Searcher,
-    )
-
-    def build(idx, tokenizer, positions):
-        info = stage_corpus(spark, spark.read.parquet(src), idx, 2, 4,
-                            tokenizer, positions=positions)
-        with aqe_disabled(spark):
-            for s in range(2):
-                build_segment(spark, idx, s, info, bucket_layout=False)
-        finalize_index(spark, idx, info)
-
-    tmp = tempfile.mkdtemp(prefix="dsio_warm_")
-    try:
-        rows = [(f"r{i % 3}", f"p{i}", "c0", "py",
-                 f"alpha beta gamma delta tok{i} tok{i % 7}")
-                for i in range(64)]
-        src = os.path.join(tmp, "src")
-        spark.createDataFrame(
-            rows, "repo string, path string, commit string, "
-                  "lang string, content string"
-        ).repartition(2).write.mode("overwrite").parquet(src)
-        idx = os.path.join(tmp, "idx")
-        build(idx, "simple", True)
-        # the warm-up index is tiny, so this query takes the driver's
-        # small-query path (pyarrow postings read + in-process kernels)
-        Searcher(spark, idx).search("alpha beta", 3, "and").collect()
-        # second micro-build through the code tokenizer (the other
-        # Arrow kernel family) — non-positional, so both codec shapes
-        # are compiled too
-        build(os.path.join(tmp, "idx2"), "code", False)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

@@ -1,12 +1,13 @@
 """The in-process build of small corpora: under
 ``DRIVER_BUILD_MAX_DOCS`` rows and ``DRIVER_BUILD_MAX_BYTES`` of content
-build_index collects the corpus in two Spark jobs (size probe, rows)
-and stages, segments and finalizes on the driver. The index it
-writes must equal the distributed build's (gate forced to 0): decoded
-postings per (term, split_id), df/cf, dict, docs, stats.json, staging
-and per-split manifest metrics. Raw blocks and ``compressed_bytes`` may
-differ only where a Spark encode task cut a run at an Arrow batch
-boundary. Kill-resume must cross the two paths freely."""
+build_index stages, segments and finalizes on the driver. A plain scan
+of parquet files is read with pyarrow in ZERO Spark jobs; any other
+corpus is collected in two (size probe, rows). The index it writes must
+equal the distributed build's (gate forced to 0): decoded postings per
+(term, split_id), df/cf, dict, docs, stats.json, staging and per-split
+manifest metrics. Raw blocks and ``compressed_bytes`` may differ only
+where a Spark encode task cut a run at an Arrow batch boundary.
+Kill-resume must cross the two paths freely."""
 
 import hashlib
 import json
@@ -17,6 +18,7 @@ import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from datastream_io_spark.corpus import corpus_df
 from datastream_io_spark.operators import build as B
@@ -25,7 +27,11 @@ from datastream_io_spark.operators.codec import (
     decode_block_positions,
     decode_blocks,
 )
-from datastream_io_spark.sources.scan import documents_as_corpus
+from datastream_io_spark.sources.scan import (
+    CORPUS_COLS,
+    documents_as_corpus,
+    scan_corpus,
+)
 from tests.conftest import SF0001
 
 GATE = B.DRIVER_BUILD_MAX_DOCS
@@ -302,3 +308,135 @@ def test_content_bytes_over_cap_build_distributed(spark, tmp_path,
         spark, monkeypatch, corpus, broken, GATE, max_bytes=cap,
         **kw))) > 1
     _assert_same_index(ref, broken)
+
+
+def _to_parquet(spark, corpus, path):
+    """``corpus`` as a parquet table whose column order differs from
+    CORPUS_COLS, so ``scan_corpus``'s select is a real projection."""
+    corpus.select(*reversed(CORPUS_COLS)).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_parquet_corpus_builds_with_no_spark_job(spark, tmp_path,
+                                                 monkeypatch, case):
+    """A plain parquet scan, bare or through ``scan_corpus``, is read
+    with pyarrow: the whole build runs no Spark job, and writes the
+    index the distributed build writes (split ids from the chained
+    Python xxhash64, sha256 from hashlib, null content included)."""
+    make, kw = CASES[case]
+    src = str(tmp_path / "src")
+    bare = _to_parquet(spark, make(spark), src)
+    dist = str(tmp_path / "dist")
+    _build(spark, monkeypatch, bare, dist, 0, **kw)
+    for name, corpus in (("bare", bare),
+                         ("scan", scan_corpus(spark, src))):
+        drv = str(tmp_path / name)
+        assert _jobs(spark, f"pq_{case}_{name}", lambda: _build(
+            spark, monkeypatch, corpus, drv, GATE, **kw)) == []
+        _assert_same_index(drv, dist)
+
+
+def _not_plain_sources(spark, tmp_path):
+    """Corpora that must keep the two-job Spark collect, by name."""
+    base = _crafted_corpus(spark)
+    src = str(tmp_path / "plain")
+    pq_corpus = _to_parquet(spark, base, src)
+    hive = str(tmp_path / "hive")  # files carry all five columns too
+    base.withColumn("part", F.col("lang")).write.partitionBy("part"
+                                                            ).parquet(hive)
+    typed = str(tmp_path / "typed")  # commit a long, 0 for p0
+    base.withColumn("commit", (F.length("path") - 2).cast("long")
+                    ).write.parquet(typed)
+    sparse = str(tmp_path / "sparse")  # files without the lang column
+    base.drop("lang").write.parquet(sparse)
+    full_schema = ", ".join(f"{c} string" for c in CORPUS_COLS)
+    other_scheme = spark.read.parquet(src)
+    # a filesystem pyarrow cannot open: Spark still reads the files
+    other_scheme.inputFiles = lambda: ["s3a://bucket/corpus.parquet"]
+    return {
+        "createDataFrame": base,
+        "where": pq_corpus.where(F.col("path") != "p7"),
+        "union": pq_corpus.where(F.col("repo") == "r1").unionByName(
+            pq_corpus.where(F.col("repo") != "r1")),
+        "hive_partitioned": spark.read.parquet(hive),
+        "renamed": pq_corpus.withColumnRenamed("lang", "l")
+                            .withColumnRenamed("l", "lang"),
+        "non_string": spark.read.parquet(typed),
+        "missing_column": spark.read.schema(full_schema).parquet(sparse),
+        "unknown_scheme": other_scheme,
+    }
+
+
+def test_other_sources_keep_two_job_collect(spark, tmp_path, monkeypatch):
+    """Every corpus that is not a plain parquet scan of the five string
+    columns (in-memory frame, filter, union, partition column, a
+    projection that computes a column, a non-string or absent file
+    column, a filesystem pyarrow cannot open) runs exactly the two
+    Spark jobs, to the index the distributed build writes."""
+    kw = dict(n_splits=2, n_buckets=4, tokenizer="simple")
+    sources = _not_plain_sources(spark, tmp_path)
+    # DSv2: with parquet off the V1 list the read is a
+    # DataSourceV2Relation
+    spark.conf.set("spark.sql.sources.useV1SourceList", "")
+    try:
+        sources["dsv2"] = spark.read.parquet(str(tmp_path / "plain"))
+    finally:
+        spark.conf.unset("spark.sql.sources.useV1SourceList")
+    for name, corpus in sources.items():
+        drv, dist = str(tmp_path / f"{name}_drv"), str(tmp_path / name)
+        assert len(_jobs(spark, f"two_{name}", lambda: _build(
+            spark, monkeypatch, corpus, drv, GATE, **kw))) == 2, name
+        _build(spark, monkeypatch, corpus, dist, 0, **kw)
+        _assert_same_index(drv, dist)
+
+
+def test_over_gate_parquet_corpus_builds_distributed(spark, tmp_path,
+                                                     monkeypatch):
+    """A parquet corpus one row over the gate (footer row counts) or
+    over the byte cap builds with the distributed phases and runs no
+    probe job: exactly the jobs of a build with the gate off, to the
+    same index."""
+    corpus = _to_parquet(spark, _crafted_corpus(spark),
+                         str(tmp_path / "src"))
+    n = corpus.count()
+    n_bytes = corpus.selectExpr("sum(octet_length(content))").first()[0]
+    kw = dict(n_splits=2, n_buckets=4, tokenizer="simple")
+    ref = str(tmp_path / "ref")
+    assert _jobs(spark, "pq_at_gate", lambda: _build(
+        spark, monkeypatch, corpus, ref, n, max_bytes=n_bytes,
+        **kw)) == []
+    off = len(_jobs(spark, "pq_gate_off", lambda: _build(
+        spark, monkeypatch, corpus, str(tmp_path / "off"), 0, **kw)))
+    for name, gate, cap in (("rows", n - 1, n_bytes),
+                            ("bytes", n, n_bytes - 1)):
+        over = str(tmp_path / name)
+        jobs = _jobs(spark, f"pq_over_{name}", lambda: _build(
+            spark, monkeypatch, corpus, over, gate, max_bytes=cap, **kw))
+        assert len(jobs) == off > 3, name
+        assert os.path.exists(os.path.join(over, "staged_corpus",
+                                           "_SUCCESS"))
+        _assert_same_index(ref, over)
+
+
+@pytest.mark.parametrize("kill_gate,resume_gate", [(GATE, 0), (0, GATE)])
+def test_parquet_kill_resume_crosses_paths(spark, tmp_path, monkeypatch,
+                                           kill_gate, resume_gate):
+    """A parquet-sourced build killed after one split on either path
+    resumes on the other to the uninterrupted build's index, without
+    rebuilding the done split."""
+    corpus = _to_parquet(spark, documents_as_corpus(spark, SF0001),
+                         str(tmp_path / "src"))
+    kw = dict(n_splits=3, n_buckets=4, tokenizer="simple", positions=True,
+              salt_threshold=50, n_salts=4)
+    broken, clean = str(tmp_path / "broken"), str(tmp_path / "clean")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        _build(spark, monkeypatch, corpus, broken, kill_gate,
+               fail_after_splits=1, max_concurrent_splits=1, **kw)
+    seg0 = os.path.join(broken, "segments", "split_0000")
+    mtime = os.path.getmtime(seg0)
+    _build(spark, monkeypatch, corpus, broken, resume_gate, **kw)
+    assert os.path.getmtime(seg0) == mtime
+    assert _jobs(spark, "pq_clean", lambda: _build(
+        spark, monkeypatch, corpus, clean, GATE, **kw)) == []
+    _assert_same_index(clean, broken)

@@ -135,6 +135,39 @@ def test_python_xxhash64_matches_spark(spark):
         assert xxhash64_str(t) == got[t], repr(t)
 
 
+def test_python_chained_xxhash64_matches_spark(spark):
+    """functions.xxhash.xxhash64_cols must equal the multi-column
+    F.xxhash64("repo", "path", "commit") — the build split of a doc key
+    staged without Spark. Seeds chain column to column and nulls are
+    skipped: rows with null columns in every position, non-ASCII text,
+    and every length-class branch (<4, <8, <32, ≥32 bytes) in each
+    column."""
+    import itertools
+    import random
+    import string
+
+    from datastream_io_spark.functions.xxhash import xxhash64_cols
+
+    values = [None, "", "a", "abc", "abcdefg", "sixteen_chars_ab",
+              "thirtytwo_bytes_string_here_abcd", "été", "中文词项",
+              "x" * 70]
+    rows = list(itertools.product(values, repeat=3))
+    rng = random.Random(13)
+    rows += [tuple("".join(rng.choices(string.printable + "äß中",
+                                       k=rng.randint(0, 80)))
+                   for _ in range(3)) for _ in range(100)]
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string")
+    got = df.select("repo", "path", "commit",
+                    F.xxhash64("repo", "path", "commit").alias("h")
+                    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        key = (r.repo, r.path, r.commit)
+        assert xxhash64_cols(None if v is None else v.encode("utf-8")
+                             for v in key) == r.h, r
+
+
 def test_dict_lookup_prunes_term_buckets(spark, doc_index):
     """Q2 plan: the dict read filters on the DRIVER-computed term
     bucket, so the scan lists only the query's bucket directories."""
