@@ -83,6 +83,7 @@ from datastream_io_spark.operators.codec import (
     POS_BITS as _POS_BITS,  # enforced < 2^22 at encode time (codec.py)
     decode_block_positions,
 )
+from datastream_io_spark.operators.postings_cache import bucket_term_rows
 from datastream_io_spark.operators.relational_search import (
     parse_phrase,
     parse_query,
@@ -110,6 +111,10 @@ AUTO_DICT_DRIVER_MAX_TERMS = 4_000_000
 # whose memory budgets differ.
 SINGLE_TASK_MAX_POSTINGS = int(os.environ.get(
     "SPARK_GRAFT_SINGLE_TASK_MAX_POSTINGS", str(2_000_000)))
+
+# the driver reads' columns, through the term-rows cache
+_POSTINGS_COLS = ("split_id", "term", "blocks")
+_DICT_COLS = ("term", "df", "cf", "idf")
 
 # set by _rank_on_driver: the frame a plan build returned holds
 # RESULTS, so Searcher._cached_plan must not keep it
@@ -280,6 +285,14 @@ class Searcher:
     dictionaries, else a bucket-pruned Spark job) and wildcard / fuzzy
     / regex expansion scans the sidecar or dictionary with Spark.
 
+    Driver-path reads (the postings rows of a gated query, and the
+    ``dict/`` rows :func:`lookup_terms` reads) go through the
+    process-wide term-rows cache of
+    :mod:`~datastream_io_spark.operators.postings_cache`, shared by
+    every Searcher: a warm repeat of a term reads no file. Its entries
+    are keyed on the bucket files' identity, so rewritten files are
+    read afresh; results are never cached.
+
     Staleness contract: tombstone deletes are LIVE (re-read per query),
     but anything that rewrites dict/stats underneath a warm handle —
     purge_deleted, a rebuild at the same path — requires constructing a
@@ -318,7 +331,8 @@ class Searcher:
         # (query, k, mode) requests reuse the lazy plan — every collect
         # still executes from the index files (plans, never results,
         # are cached). A build that ran on the driver returned results,
-        # so it is never cached: the next call re-reads the postings.
+        # so it is never cached: the next call runs the kernels again,
+        # over postings rows the term-rows cache already holds.
         # Only live when the index has no tombstones: tombstone state
         # is resolved at plan-build time and deletes must stay LIVE, so
         # any tombstone presence bypasses AND clears the cache (cheap
@@ -365,11 +379,19 @@ class Searcher:
         if not terms:
             return []
         if self._dict_pdf is not None:
-            hits = self._dict_pdf[self._dict_pdf.index.isin(terms)]
+            # hash probes of the (unique) term index: no pass over the
+            # vocabulary; rows in ``terms`` order, which no caller uses
+            terms = np.asarray(list(dict.fromkeys(terms)), dtype=object)
+            at = self._dict_pdf.index.get_indexer(terms)
+            found = at >= 0
+            at = at[found]
             return [
-                {"term": t, "term_bucket": int(r["term_bucket"]),
-                 "idf": float(r["idf"]), "df": int(r["df"])}
-                for t, r in hits.iterrows()
+                {"term": t, "term_bucket": int(b), "idf": float(i),
+                 "df": int(d)}
+                for t, b, i, d in zip(
+                    terms[found],
+                    *(self._dict_pdf[c].to_numpy()[at]
+                      for c in ("term_bucket", "idf", "df")))
             ]
         return lookup_terms(self.spark, self.index_dir, list(terms),
                             int(self.stats["n_buckets"]))
@@ -443,12 +465,12 @@ class Searcher:
             if not q:
                 return []
             order, lens = self._lens_sorted
-            band = order[np.searchsorted(lens, max(1, len(q) - max_dist),
-                                         "left"):
-                         np.searchsorted(lens, len(q) + max_dist, "right")]
-            pos = band[np.fromiter((_levenshtein_leq(t, q, max_dist)
-                                    for t in index[band]), bool,
-                                   count=len(band))]
+            lo = np.searchsorted(lens, max(1, len(q) - max_dist), "left")
+            hi = np.searchsorted(lens, len(q) + max_dist, "right")
+            band = order[lo:hi]
+            pos = band[_levenshtein_within(
+                index.to_numpy(dtype=object)[band], lens[lo:hi], q,
+                max_dist)]
         hits = self._dict_pdf.iloc[pos]
         term = hits.index.to_numpy(dtype=object)
         df, idf, bucket = (hits[c].to_numpy()
@@ -525,8 +547,9 @@ class Searcher:
                      max_expansions: int = 128,
                      with_doc_cols: bool = False) -> DataFrame:
         """:func:`search_fuzzy` on this handle — with the driver dict,
-        an exact length-band prune shrinks the candidate set before the
-        per-candidate distance DP."""
+        an exact length-band prune shrinks the candidate set, then one
+        vectorized distance DP per term length checks the band
+        (:func:`_levenshtein_within`)."""
         return self._expansion_search(term, "fuzzy", k, max_dist,
                                       max_expansions, with_doc_cols)
 
@@ -929,8 +952,9 @@ def _fuzzy_term(term: str) -> str:
 
 
 def _levenshtein_leq(a: str, b: str, d: int) -> bool:
-    """Banded Levenshtein ≤ d check (the driver-cached dict's twin of
-    the JVM levenshtein-with-threshold)."""
+    """Banded Levenshtein ≤ d check of one pair (the JVM
+    levenshtein-with-threshold's twin): the scalar reference
+    :func:`_levenshtein_within` computes for a whole length band."""
     if abs(len(a) - len(b)) > d:
         return False
     prev = list(range(len(b) + 1))
@@ -945,6 +969,50 @@ def _levenshtein_leq(a: str, b: str, d: int) -> bool:
             return False  # whole row above budget: can only grow
         prev = cur
     return prev[-1] <= d
+
+
+def _code_points(s: str) -> np.ndarray:
+    """``s`` as one uint32 per code point (lone surrogates included, as
+    their own code points — the units Python's ``len`` and ``==``
+    use)."""
+    return np.frombuffer(s.encode("utf-32-le", "surrogatepass"), np.uint32)
+
+
+def _levenshtein_within(terms, lens: np.ndarray, q: str,
+                        d: int) -> np.ndarray:
+    """Mask of ``terms`` (sorted by their lengths ``lens``) within
+    Levenshtein distance ``d`` of ``q`` — :func:`_levenshtein_leq` for
+    every term at once. Per term length L, one Wagner-Fischer DP runs
+    over all the terms of that length as an (m, L) code-point matrix:
+    each term-character row is numpy over (m, |q|+1) cells, the
+    insertion chain a running minimum. Values are capped at d+1 (the
+    band: only cells ≤ d can still lead to a match), terms whose row
+    minimum passes d drop out, and the DP stops when none is left."""
+    qc = _code_points(q)
+    n = qc.size
+    ar = np.arange(n + 1, dtype=np.int32)
+    out = np.zeros(len(terms), bool)
+    for L in np.unique(lens):
+        lo, hi = np.searchsorted(lens, [L, L + 1])
+        at = np.arange(lo, hi)
+        tc = _code_points("".join(terms[lo:hi])).reshape(hi - lo, L)
+        prev = np.broadcast_to(np.minimum(ar, d + 1), (hi - lo, n + 1))
+        for i in range(L):
+            base = np.empty_like(prev)
+            base[:, 0] = min(i + 1, d + 1)
+            np.minimum(prev[:, 1:] + 1,
+                       prev[:, :-1] + (tc[:, i:i + 1] != qc), base[:, 1:])
+            cur = np.minimum(np.minimum.accumulate(base - ar, axis=1) + ar,
+                             d + 1)
+            alive = cur.min(axis=1) <= d
+            if not alive.all():
+                at, tc, cur = at[alive], tc[alive], cur[alive]
+                if not at.size:
+                    break
+            prev = cur
+        else:
+            out[at[prev[:, n] <= d]] = True
+    return out
 
 
 def _check_format(stats: dict, index_dir: str) -> None:
@@ -2218,40 +2286,46 @@ def lookup_terms(spark: SparkSession, index_dir: str, terms: list[str],
 
     When the build recorded a small dictionary (same
     ``AUTO_DICT_DRIVER_MAX_TERMS`` gate as the warm Searcher's driver
-    cache), the pruned bucket files are read DIRECTLY with pyarrow —
-    a few ms of driver I/O instead of a whole Spark job per query
-    of a Searcher without the driver dict. Large dictionaries keep
+    cache), each bucket's terms come from
+    :func:`~datastream_io_spark.operators.postings_cache.bucket_term_rows`:
+    the process-wide term-rows cache, else one pruned pyarrow read of
+    the bucket files — no Spark job, and no read at all for terms
+    looked up before against the same files. Large dictionaries keep
     the distributed lookup."""
     if n_buckets is None:
         n_buckets = int(read_stats(index_dir)["n_buckets"])
-    buckets = sorted({term_bucket(t, n_buckets) for t in terms})
 
     from datastream_io_spark.operators.dictindex import _index_n_terms
     n_terms = _index_n_terms(index_dir)
     if n_terms is not None and n_terms <= AUTO_DICT_DRIVER_MAX_TERMS:
-        import pyarrow.parquet as pq
         from pyspark.sql import Row
 
-        want = set(terms)
         out = []
-        for k in buckets:
+        for k, ts in _terms_by_bucket(terms, n_buckets).items():
             bdir = os.path.join(index_dir, "dict", f"term_bucket={k}")
-            if not os.path.isdir(bdir):
-                continue
-            # row-group min/max on the term-sorted bucket prunes I/O
-            t = pq.read_table(bdir, columns=["term", "df", "cf", "idf"],
-                              filters=[("term", "in", list(want))])
-            for term, df_, cf_, idf_ in zip(
-                    t["term"].to_pylist(), t["df"].to_pylist(),
-                    t["cf"].to_pylist(), t["idf"].to_pylist()):
-                out.append(Row(term=term, df=df_, cf=cf_, idf=idf_,
-                               term_bucket=k))
+            for term, rows in bucket_term_rows(bdir, _DICT_COLS,
+                                               ts).items():
+                for df_, cf_, idf_ in rows:
+                    out.append(Row(term=term, df=df_, cf=cf_, idf=idf_,
+                                   term_bucket=k))
         return out
 
+    buckets = sorted({term_bucket(t, n_buckets) for t in terms})
     d = spark.read.parquet(os.path.join(index_dir, "dict"))
     return d.where(
         F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
     ).collect()
+
+
+def _terms_by_bucket(terms: list[str], n_buckets: int,
+                     buckets=None) -> dict[int, list[str]]:
+    """The distinct ``terms`` grouped by their bucket (sorted buckets,
+    sorted terms), keeping only ``buckets`` when given."""
+    out: dict[int, list[str]] = {}
+    for t in sorted(set(terms)):
+        out.setdefault(term_bucket(t, n_buckets), []).append(t)
+    return {b: out[b] for b in sorted(out)
+            if buckets is None or b in buckets}
 
 
 def search_indexed(
@@ -2403,24 +2477,27 @@ def _driver_gate(est_postings: int | None, tomb_join) -> bool:
 
 def _read_postings_local(index_dir: str, buckets: list,
                          terms: list[str]) -> pd.DataFrame:
-    """:func:`postings_rows` read on the driver: pyarrow opens only the
-    query's ``postings/term_bucket=K`` directories and pushes
-    ``term IN q`` into the row-group statistics — the same pruned read
-    :func:`lookup_terms` makes of ``dict/``."""
-    import pyarrow.parquet as pq
-
-    parts = []
-    for b in buckets:
+    """:func:`postings_rows` read on the driver: the rows of ``terms``
+    in the query's ``postings/term_bucket=K`` directories, each bucket
+    asked only for its own terms, through
+    :func:`~datastream_io_spark.operators.postings_cache.bucket_term_rows`
+    — cached rows cost no read, the rest are one pruned pyarrow read per
+    bucket (``term IN misses`` pushed into the row-group statistics,
+    the same read :func:`lookup_terms` makes of ``dict/``). The rows'
+    block arrays are shared with the cache: read-only."""
+    n_buckets = int(read_stats(index_dir)["n_buckets"])
+    sids, names, blocks = [], [], []
+    for b, ts in _terms_by_bucket(terms, n_buckets, set(buckets)).items():
         bdir = os.path.join(index_dir, "postings", f"term_bucket={b}")
-        if not os.path.isdir(bdir):
-            continue
-        t = pq.read_table(bdir, columns=["split_id", "term", "blocks"],
-                          filters=[("term", "in", list(terms))])
-        if t.num_rows:
-            parts.append(t.to_pandas())
-    if not parts:
-        return pd.DataFrame({"split_id": [], "term": [], "blocks": []})
-    return pd.concat(parts, ignore_index=True)
+        for term, rows in bucket_term_rows(bdir, _POSTINGS_COLS,
+                                           ts).items():
+            for sid, bl in rows:
+                sids.append(sid)
+                names.append(term)
+                blocks.append(bl)
+    return pd.DataFrame({"split_id": np.asarray(sids, np.int32),
+                         "term": pd.Series(names, dtype=object),
+                         "blocks": pd.Series(blocks, dtype=object)})
 
 
 def _rank_on_driver(spark: SparkSession, index_dir: str, buckets: list,

@@ -94,9 +94,14 @@ def docs_with_text(spark, index_dir, corpus):
 @pytest.fixture()
 def arrow_reads(monkeypatch):
     """Every path the driver hands to ``pyarrow.parquet.read_table``
-    while the test runs (the driver-side dict and postings reads)."""
+    while the test runs (the driver-side dict and postings reads). The
+    process-wide term-rows cache is emptied first, so the test's first
+    query of a term reads it whatever earlier tests queried."""
     import pyarrow.parquet as pq
 
+    from datastream_io_spark.operators import postings_cache
+
+    postings_cache.clear()
     seen: list[str] = []
     real = pq.read_table
 

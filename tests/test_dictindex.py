@@ -24,6 +24,7 @@ from datastream_io_spark.operators.dictindex import (
 )
 from datastream_io_spark.operators.indexed_search import (
     _levenshtein_leq,
+    _levenshtein_within,
     search_fuzzy,
     search_wildcard,
     suggest_terms,
@@ -109,6 +110,33 @@ def test_gram_filter_sound_on_repeated_gram_terms(spark, tmp_path):
     want = sorted(t for t in dict_terms
                   if _levenshtein_leq(t, "abcabcabc", 1))
     assert got == want == ["abcabcabc", "abcabcabd"]
+
+
+def test_vectorized_fuzzy_check_matches_scalar_dp():
+    """The driver dict's per-length numpy DP keeps exactly the terms the
+    scalar banded DP keeps: random vocabularies with non-ASCII, astral,
+    U+10FFFF and NUL characters, queries with a lone surrogate, and
+    distances 0-3 over every length band."""
+    import random
+
+    import numpy as np
+
+    rng = random.Random(7)
+    alpha = "abcé\x00\U0010ffff\U00010000z"
+    vocab = sorted({"".join(rng.choice(alpha)
+                            for _ in range(rng.randint(1, 9)))
+                    for _ in range(3000)}, key=len)
+    terms = np.asarray(vocab, dtype=object)
+    lens = np.array([len(t) for t in vocab], np.int64)
+    queries = ["".join(rng.choice(alpha) for _ in range(rng.randint(1, 8)))
+               for _ in range(60)] + ["ab\ud800c", "\udfff"]
+    for q in queries:
+        for d in range(4):
+            lo = np.searchsorted(lens, max(1, len(q) - d), "left")
+            hi = np.searchsorted(lens, len(q) + d, "right")
+            want = [_levenshtein_leq(t, q, d) for t in terms[lo:hi]]
+            got = _levenshtein_within(terms[lo:hi], lens[lo:hi], q, d)
+            assert got.tolist() == want, (q, d)
 
 
 def test_fuzzy_scan_prunes_gram_buckets(spark, sidecar_index):
