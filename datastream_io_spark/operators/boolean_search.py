@@ -39,11 +39,14 @@ contains (sorted term order — same determinism contract as Q3).
 Execution: one bucket-pruned postings scan over ALL tree terms →
 per-split kernel evaluates the tree with sorted-array set ops
 (intersect/union/setdiff) over decoded doc ids, applies positional
-phrase filters, exact-scores ≤k survivors → global top-k. Under the
-single-task gate the scan and kernels run on the driver (zero Spark
-jobs); past it the kernel is a per-split ``applyInPandas``.
+phrase filters, exact-scores ≤k survivors → global top-k. The
+kernels (:func:`tree_kernel`, :func:`trees_kernel`,
+:func:`count_kernel`) are plain-array per-split kernels for the one
+executor, :meth:`~datastream_io_spark.operators.indexed_search.
+Searcher._run`: under the single-task gate the scan and kernels run on
+the driver (zero Spark jobs); past it they run per split in Spark.
 The AST is plain nested tuples, so the kernel closure pickles cleanly.
-Planning and execution live in
+Planning lives in
 :meth:`~datastream_io_spark.operators.indexed_search.Searcher.search_boolean`
 / ``.count_boolean``; this module's functions are one-shot Searchers.
 """
@@ -51,7 +54,6 @@ Planning and execution live in
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from datastream_io_spark.functions.tokenize import tokenizer_for
@@ -60,6 +62,7 @@ from datastream_io_spark.operators.indexed_search import (
     NearSpec,
     Searcher,
     _and_candidates,
+    _batch_columns,
     _near_filter,
     _drop_dead,
     _exact_scores,
@@ -381,23 +384,55 @@ def _eval_node(node: tuple, blocks_of: dict, decoded: dict) -> np.ndarray:
 
 def score_tree_split(tree: tuple, idf: dict[str, float], avgdl: float,
                      k: int, blocks_of: dict, decoded: dict,
-                     tv=None) -> pd.DataFrame:
+                     tv=None) -> tuple[np.ndarray, np.ndarray]:
     """One split's boolean evaluation: select candidates via the AST,
-    drop tombstoned docs, exact-score over the query's positive terms
-    (sorted order), cut to ≤k. Shared by single-query search_boolean
-    and the batched serving path (search_many mode='boolean'), which
-    injects its per-batch shared ``decoded`` cache."""
-    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                          "score": pd.Series([], dtype="float64")})
+    drop tombstoned docs (``tv``), exact-score over the query's
+    positive terms (sorted order), cut to ≤k — ``(doc_ids, scores)`` in
+    (score desc, doc_id asc) order. Shared by single-query
+    search_boolean and the batched serving path (search_many
+    mode='boolean'), which injects its per-batch shared ``decoded``
+    cache."""
     cand = _drop_dead(_eval_node(tree, blocks_of, decoded), tv)
     if cand.size == 0:
-        return empty
+        return cand, np.zeros(0)
     score_rows = [(t, blocks_of[t]) for t in sorted(idf)
                   if t in blocks_of]
     scores = _exact_scores(cand, score_rows, idf, avgdl, decoded)
     sel = np.lexsort((cand, -scores))[:min(k, cand.size)]
-    return pd.DataFrame({"doc_id": cand[sel].astype("int64"),
-                         "score": scores[sel].astype("float64")})
+    return cand[sel], scores[sel]
+
+
+def tree_kernel(tree: tuple, idf: dict[str, float], avgdl: float, k: int):
+    """The executor kernel (:meth:`~datastream_io_spark.operators.
+    indexed_search.Searcher._run`) of one boolean query: ``idf`` keys
+    its positive terms (an index's own idf, or a partitioned root's
+    global one)."""
+    def kernel(term_rows, tv):
+        return score_tree_split(tree, idf, avgdl, k, dict(term_rows), {},
+                                tv)
+    return kernel
+
+
+def trees_kernel(trees: dict, avgdl: float, k: int):
+    """The executor kernel of a boolean batch ``{query_id: (idf,
+    tree)}``: the queries share one block-decode cache per split."""
+    def kernel(term_rows, tv):
+        blocks_of = dict(term_rows)
+        decoded: dict = {}
+        return _batch_columns([
+            (qid, *score_tree_split(tree, idf, avgdl, k, blocks_of,
+                                    decoded, tv))
+            for qid, (idf, tree) in trees.items()])
+    return kernel
+
+
+def count_kernel(tree: tuple):
+    """The executor kernel counting one split's live matches of
+    ``tree`` — membership only: no tf/dl decode, no scoring."""
+    def kernel(term_rows, tv):
+        return (np.array([_drop_dead(_eval_node(tree, dict(term_rows), {}),
+                                     tv).size]),)
+    return kernel
 
 
 def plan_boolean(query: str, stats: dict,

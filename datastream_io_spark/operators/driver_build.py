@@ -1,5 +1,5 @@
 """In-process build of small corpora — the build-side twin of the
-driver query path (``indexed_search._rank_on_driver``).
+driver query path (``indexed_search.Searcher._run``).
 
 A distributed ``build_index`` of a few hundred files runs ~16 Spark jobs
 and ~70 tasks; almost all of that cost is fixed per job/task (JVM

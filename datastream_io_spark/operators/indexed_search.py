@@ -2,30 +2,38 @@
 
 Architecture: document-range-partitioned search. The merged index keeps
 one posting row per (term, split); a split owns a contiguous dense
-doc_id range. A query fans out as
+doc_id range. Every query is the same three steps:
 
-  dict lookup (Q2, tiny broadcast-side read, term_bucket pruning)
-  → postings scan filtered to (term_bucket ∈ q_buckets, term ∈ q)
-      — partition pruning on the ``term_bucket=K`` directory layout
-        means only |q| of B bucket directories are even listed
-  → ``applyInPandas`` per split (Q7): vectorized block-skip
-      intersection (AND) / block-max decode-skipping scoring (OR)
-      emitting ≤k exact-scored candidates per split
-  → global top-k (Q6): ``orderBy(score desc, doc_id asc).limit(k)``
-      → physical TakeOrderedAndProject (no global sort)
-  → optional broadcast join back to docs/ for display columns (J1).
+  plan (:class:`Searcher`): parse, dictionary lookup, term_bucket
+      pruning — the query's terms, their bucket directories and the
+      match-payload estimate Σ df;
+  execute (:meth:`Searcher._run`, the one per-split executor): each
+      split's ``[(term, blocks)]`` rows and the sorted tombstone ids go
+      to a plain-array kernel ``kernel(term_rows, tv)`` — block-skip
+      intersection (AND), block-max decode-skipping scoring (OR),
+      positional filters (phrase / near), boolean trees, membership
+      counts — which returns one array per output column;
+  cut: (score desc, doc_id asc) top-k, per ``query_id`` for batches
+      → physical TakeOrderedAndProject (no global sort) when it runs
+      in Spark; then an optional broadcast join back to docs/ for
+      display columns (J1).
 
-Small queries skip Spark entirely. When the dictionary says a query's
-match payload (Σ df over its terms) fits ``SINGLE_TASK_MAX_POSTINGS``,
-the same pruned postings read happens on the driver with pyarrow, the
-same per-split kernels run in-process, and the same (score desc,
-doc_id asc) cut comes back as an :class:`ArrowFrame`: zero Spark jobs
+The executor is the only code that picks where the kernels run. When
+the query's payload (Σ df) fits ``SINGLE_TASK_MAX_POSTINGS`` and its
+tombstones are a broadcast-size array, it reads the pruned
+``postings/term_bucket=K`` files on the driver with pyarrow (through the
+term-rows cache), groups the rows by split in plain Python, runs the
+kernels in-process and returns an :class:`ArrowFrame`: zero Spark jobs
 and zero JVM calls for the query and for its ``collect()``. One Python
 task would cost more than the kernels it runs — a no-op 10-row
 ``mapInPandas`` task burns ~200 ms of worker CPU (4-vCPU host), against
-14-32 ms for the WAND kernels of a typical and/or/phrase query on the
-driver. Hot or large queries, ``where``-filtered queries and
-split-joined tombstone sets keep the distributed path above.
+a few ms for the WAND kernels of a typical and/or/phrase query on the
+driver. Otherwise the same kernels run as one ``groupBy("split_id")
+.applyInPandas`` over the bucket-pruned postings scan (a single-term
+scan skips the shuffle: ``mapInPandas`` per posting row), behind the
+one adapter :func:`_split_args` — the only code that knows about pandas
+groups, the :class:`_Tombs` broadcast and the join-delivered ``tomb``
+column.
 
 Block-max usage (Ding & Suel, SIGIR 2011 / Turtle & Flood MaxScore,
 adapted to vectorized batch execution): each block stores
@@ -98,7 +106,7 @@ AUTO_DICT_DRIVER_MAX_TERMS = 4_000_000
 
 # single-task rank gate: when the dictionary says a query's total match
 # payload (Σ df over its terms) is at most this many postings, the
-# query runs on the DRIVER (:func:`_rank_on_driver`): the bucket-pruned
+# query runs on the DRIVER (:meth:`Searcher._run`): the bucket-pruned
 # postings files are read with pyarrow and the per-split kernels run
 # in-process — zero Spark jobs, identical results. 2M postings is
 # ~8-20 MB of compressed blocks and a few ms of numpy decode: far
@@ -107,23 +115,31 @@ AUTO_DICT_DRIVER_MAX_TERMS = 4_000_000
 # importlib.invalidate_caches() over pyspark.zip, ~30 ms its per-task
 # gc.collect()). Driven by plan-time dictionary statistics, so the
 # same gate is valid at any corpus scale; hot terms overflow it and
-# keep the parallel per-split kernel. Override via env for drivers
-# whose memory budgets differ.
-SINGLE_TASK_MAX_POSTINGS = int(os.environ.get(
-    "SPARK_GRAFT_SINGLE_TASK_MAX_POSTINGS", str(2_000_000)))
+# keep the parallel per-split kernel. Set it to 0 to run every query
+# distributed.
+SINGLE_TASK_MAX_POSTINGS = 2_000_000
 
 # the driver reads' columns, through the term-rows cache
 _POSTINGS_COLS = ("split_id", "term", "blocks")
 _DICT_COLS = ("term", "df", "cf", "idf")
 
-# set by _rank_on_driver: the frame a plan build returned holds
-# RESULTS, so Searcher._cached_plan must not keep it
+# set by Searcher._run on the driver path: the frame a plan build
+# returned holds RESULTS, so Searcher._cached_plan must not keep it
 _DRIVER_RAN = threading.local()
 
 _SCORES_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType()),
                                T.StructField("score", T.DoubleType())])
 _MANY_SCHEMA = T.StructType([T.StructField("query_id", T.StringType())]
                             + _SCORES_SCHEMA.fields)
+# membership kernels: the matching ids, or one count per split
+_IDS_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
+_COUNT_SCHEMA = T.StructType([T.StructField("n", T.LongType())])
+# two-pass filtered search, pass 1: the split's tag and whether it
+# emitted its whole candidate set
+_FILTER_P1_SCHEMA = T.StructType(
+    _SCORES_SCHEMA.fields
+    + [T.StructField("split_tag", T.LongType()),
+       T.StructField("exhausted", T.BooleanType())])
 _DOC_COLS_SCHEMA = T.StructType(
     [T.StructField("doc_id", T.LongType())]
     + [T.StructField(c, T.StringType())
@@ -232,6 +248,19 @@ class _Plan(NamedTuple):
         on."""
         return sum(self.df.values())
 
+    @property
+    def scan(self) -> tuple[list, list, int]:
+        """The executor's ``(terms, buckets, est)`` of this query."""
+        return sorted(self.idf), self.buckets, self.est
+
+
+def _scan_of(rows: list) -> tuple[list, list, int]:
+    """The executor's ``(terms, buckets, est)`` over dictionary
+    ``rows``: their terms, bucket directories and Σ df."""
+    return (sorted({r["term"] for r in rows}),
+            sorted({int(r["term_bucket"]) for r in rows}),
+            sum(int(r["df"]) for r in rows))
+
 
 def _resolve(mode: str, terms: list, phrase, rows: list) -> _Plan | None:
     """Plan one parsed query from its dictionary ``rows``; None when it
@@ -266,13 +295,16 @@ def _dict_dataset(index_dir: str):
 
 class Searcher:
     """Query handle over a built index — the one place a query is
-    planned. Stats (and, per ``dict_cache``, the dictionary) load once.
-    A query under the single-task gate then runs on the driver and
-    costs ZERO Spark jobs (pruned pyarrow postings read → per-split
-    WAND → top-k as an :class:`ArrowFrame`); a query over it costs ONE
-    Spark job (bucket-pruned postings scan → per-split WAND → top-k).
-    ``with_doc_cols`` adds a broadcast join for the display columns
-    either way. The module-level search functions are one-shot
+    planned, and, through :meth:`_run`, the one place it is executed.
+    Stats (and, per ``dict_cache``, the dictionary) load once. Every
+    ranked, counted or faceted query plans its terms, buckets and Σ df
+    payload estimate, then hands :meth:`_run` a plain-array per-split
+    kernel: under the single-task gate the kernels run on the driver
+    and the query costs ZERO Spark jobs (pruned pyarrow postings read →
+    per-split kernels → top-k as an :class:`ArrowFrame`); over it, ONE
+    Spark job (bucket-pruned postings scan → per-split kernels →
+    top-k). ``with_doc_cols`` adds a broadcast join for the display
+    columns either way. The module-level search functions are one-shot
     Searchers with ``dict_cache='spark'``.
 
     ``dict_cache`` — 'auto' (default) caches the dictionary on the
@@ -309,6 +341,7 @@ class Searcher:
         self.index_dir = index_dir
         self.stats = read_stats(index_dir)
         _check_format(self.stats, index_dir)
+        self.avgdl = float(self.stats["avgdl"])
         if dict_cache == "auto":
             from datastream_io_spark.operators.dictindex import (
                 _index_n_terms,
@@ -489,20 +522,178 @@ class Searcher:
                     self._expand(base, mode, dist, max_expansions)]
         return expand
 
+    def _run(self, terms: list, buckets: list, est: int, kernel,
+             schema: T.StructType, k: int | None) -> DataFrame:
+        """The per-split executor: every ranked, counted and faceted
+        query of this index runs its kernel here.
+
+        ``kernel(term_rows, tv)`` gets one split's ``[(term, blocks)]``
+        rows of ``terms`` (read from the ``buckets`` directories) and
+        the sorted tombstone ids (None without deletes), and returns one
+        array per field of ``schema``. The kernels run on the driver
+        when the payload estimate ``est`` (Σ df over ``terms``) passes
+        the single-task gate and the tombstones are a broadcast-size
+        array — a split-joined set stays with the per-split kernels that
+        own it — and otherwise once per split in Spark. ``k`` then cuts
+        the rows to the top ``k`` by (score desc, doc_id asc), per
+        ``query_id`` when ``schema`` leads with it; None keeps every
+        row. An ``est`` of 0 keeps the kernels in Spark. A driver run
+        returns an :class:`ArrowFrame`: it holds results, not a plan, so
+        the flag it sets keeps the frame out of :meth:`_cached_plan`."""
+        tomb, tomb_join = _tombstone_state(self.spark, self.index_dir)
+        names = schema.names
+        if tomb_join is None and 0 < est <= SINGLE_TASK_MAX_POSTINGS:
+            tv = tomb.value if tomb is not None else None
+            splits: dict[int, list] = {}
+            for b, ts in _terms_by_bucket(
+                    terms, int(self.stats["n_buckets"]),
+                    set(buckets)).items():
+                bdir = os.path.join(self.index_dir, "postings",
+                                    f"term_bucket={b}")
+                for term, rows in bucket_term_rows(bdir, _POSTINGS_COLS,
+                                                   ts).items():
+                    for sid, blocks in rows:
+                        splits.setdefault(sid, []).append(
+                            (term, list(blocks)))
+            outs = [kernel(rows, tv) for rows in splits.values()]
+            cols = [np.concatenate([o[i] for o in outs]) if outs else []
+                    for i in range(len(names))]
+            if k is not None and outs:
+                at = _topk_rows(cols, names, k)
+                cols = [c[at] for c in cols]
+            _DRIVER_RAN.flag = True
+            return ArrowFrame(self.spark, schema, cols)
+
+        prows = postings_rows(self.spark, self.index_dir, buckets, terms,
+                              postings_df=self._postings_df)
+        if tomb_join is not None:
+            prows = prows.join(tomb_join, "split_id", "left")
+        run = _per_split(kernel, tomb, names)
+        if len(terms) == 1:
+            # one posting row per (term, split): each row is its split's
+            # whole input, so it runs where it is scanned — no shuffle
+            def per_row(it):
+                for pdf in it:
+                    for i in range(len(pdf)):
+                        yield run(pdf.iloc[i:i + 1])
+
+            cand = prows.mapInPandas(per_row, schema)
+        else:
+            cand = prows.groupBy("split_id").applyInPandas(run, schema)
+        if k is None:
+            return cand
+        if names[0] != "query_id":
+            return cand.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        # per-query candidates are ≤ k × n_splits rows — the rank window
+        # is over a tiny set, not the corpus; the final presentation
+        # order is likewise over ≤ k × |queries| rows, so a
+        # single-partition sort replaces orderBy's range Exchange +
+        # sampling pass
+        from pyspark.sql import Window
+
+        w = Window.partitionBy("query_id").orderBy(
+            F.desc("score"), F.asc("doc_id"))
+        return (
+            cand.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") <= k).drop("_rn")
+            .repartition(1)
+            .sortWithinPartitions("query_id", F.desc("score"),
+                                  F.asc("doc_id"))
+        )
+
+    def _rank(self, plan: _Plan, k: int, avgdl: float) -> DataFrame:
+        """Top-k of one planned query scored with ``avgdl`` (this
+        index's, or a partitioned root's global one; the plan carries
+        the idf)."""
+        return self._run(*plan.scan, _rank_kernel(plan, avgdl, k),
+                         _SCORES_SCHEMA, k)
+
+    def _many(self, plans: dict, k: int, avgdl: float) -> DataFrame:
+        """Per-query top-k of a batch ``{query_id: plan}``: one scan over
+        the union of the plans' terms, the queries sharing each split's
+        block decodes."""
+        if not plans:
+            return _empty_many(self.spark)
+        df = {t: n for p in plans.values() for t, n in p.df.items()}
+        buckets = sorted({b for p in plans.values() for b in p.buckets})
+        return self._run(sorted(df), buckets, sum(df.values()),
+                         _many_kernel(plans, avgdl, k), _MANY_SCHEMA, k)
+
+    def _display(self, top: DataFrame, with_doc_cols: bool) -> DataFrame:
+        """The optional display join of a ≤k-row top-k: broadcast, so the
+        docs join is shuffle-free, then a single-partition sort (no
+        range Exchange) keeps the (score desc, doc_id asc) order."""
+        if not with_doc_cols:
+            return top
+        return (self._docs_df.select("doc_id", "repo", "path", "commit",
+                                     "lang")
+                .join(F.broadcast(top), "doc_id")
+                .repartition(1)
+                .sortWithinPartitions(F.desc("score"), F.asc("doc_id")))
+
     def _topk(self, plan: _Plan | None, k: int, with_doc_cols: bool,
               where=None) -> DataFrame:
         if plan is None:
             return _empty_topk(self.spark, with_doc_cols)
-        return _wand_topk(self.spark, self.index_dir, plan.idf,
-                          plan.buckets, float(self.stats["avgdl"]),
-                          plan.n_terms, k, plan.mode, with_doc_cols,
-                          plan.phrase, where, scans=self,
-                          est_postings=plan.est)
+        top = (self._rank(plan, k, self.avgdl) if where is None
+               else self._filtered_topk(plan, k, where)[0])
+        return self._display(top, with_doc_cols)
 
-    def _prows(self, buckets: list, terms: list, tomb_join):
-        return _with_tomb(postings_rows(
-            self.spark, self.index_dir, buckets, terms,
-            postings_df=self._postings_df), tomb_join)
+    def _filtered_topk(self, plan: _Plan, k: int,
+                       where) -> tuple[DataFrame, bool]:
+        """Two-pass filtered search (VERDICT r2 what's-wrong #2). Returns
+        ``(topk_df, used_fallback)``.
+
+        Pass 1 runs the NORMAL pruned kernel at k′ = 4k and tags each
+        row with its split and whether the split emitted its whole
+        candidate set (``exhausted``). A split's filtered top-k is
+        provably inside its emitted set when the split is exhausted OR
+        ≥ k of its emitted docs survive the predicate (every non-emitted
+        doc scores ≤ all emitted ones, so k surviving emitted docs
+        dominate it). Only when some split violates BOTH does pass 2
+        rerun with the exact emit-everything kernel — a hot-term
+        filtered query no longer unconditionally decodes the full
+        posting union. Exactness holds for ANY predicate by
+        construction. Both passes pass the executor an ``est`` of 0:
+        the predicate joins the docs table in Spark, so the kernels stay
+        distributed."""
+        kprime = 4 * k
+        rank_p1 = _rank_kernel(plan, self.avgdl, kprime)
+        terms, buckets, _ = plan.scan
+        allowed = self._docs_df.where(where).select("doc_id")
+
+        def kernel_p1(term_rows, tv):
+            ids, scores = rank_p1(term_rows, tv)
+            n = ids.size
+            # the split's tag: its smallest emitted doc id (splits hold
+            # disjoint doc ids)
+            return (ids, scores, np.full(n, ids.min() if n else 0),
+                    np.full(n, n < kprime))
+
+        cand = self._run(terms, buckets, 0, kernel_p1, _FILTER_P1_SCHEMA,
+                         None).persist()
+        try:
+            surv = (cand.join(allowed, "doc_id")
+                    .groupBy("split_tag").agg(F.count("*").alias("n_surv")))
+            flags = cand.groupBy("split_tag").agg(
+                F.min("exhausted").alias("exhausted"))
+            bad = (flags.join(surv, "split_tag", "left")
+                   .where((~F.col("exhausted"))
+                          & (F.coalesce("n_surv", F.lit(0)) < k))
+                   .count())
+            if bad == 0:
+                rows = (cand.join(allowed, "doc_id")
+                        .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+                        .select("doc_id", "score").collect())
+                return _empty_frame(self.spark, _SCORES_SCHEMA, rows), False
+        finally:
+            cand.unpersist(blocking=False)
+
+        # pass 2 — exact fallback: emit every scored candidate, then filter
+        full = self._run(terms, buckets, 0,
+                         _rank_kernel(plan, self.avgdl, None),
+                         _SCORES_SCHEMA, None).join(allowed, "doc_id")
+        return full.orderBy(F.desc("score"), F.asc("doc_id")).limit(k), True
 
     def search(self, query: str, k: int = 10, mode: str = "and",
                with_doc_cols: bool = False, where=None) -> DataFrame:
@@ -573,88 +764,53 @@ class Searcher:
             ("boolean", query, k, with_doc_cols),
             lambda: self._boolean_build(query, k, with_doc_cols))
 
-    def _boolean_build(self, query: str, k: int,
-                       with_doc_cols: bool) -> DataFrame:
+    def _boolean_rows(self, query: str, expander) -> tuple:
+        """``(tree, positives, rows)`` of a boolean query: the planned
+        tree, its positive terms and the dictionary rows of ALL its
+        leaves — NOT leaves included: idf only needs the positives, but
+        their postings are scanned, so Σ df over every leaf is the
+        payload the single-task gate keys on. Σ df = 0 (no rows) means
+        no posting row exists: nothing can match, and callers plan no
+        scan at all."""
         from datastream_io_spark.operators.boolean_search import (
             plan_boolean,
         )
 
-        tree, positives, all_terms = plan_boolean(
-            query, self.stats, expander=self._expander())
-        # one lookup over ALL leaves (NOT leaves included): idf only
-        # needs the positives, but the df sum feeds the single-task
-        # payload gate. Σ df = 0 means no posting row exists: nothing
-        # can match, so no scan (and no Spark job) is planned at all
-        rows = self._lookup(sorted(all_terms))
-        est = sum(int(r["df"]) for r in rows)
-        if est == 0:
+        tree, positives, all_terms = plan_boolean(query, self.stats,
+                                                  expander=expander)
+        return tree, positives, self._lookup(
+            sorted(t for t in all_terms if t))
+
+    def _boolean_build(self, query: str, k: int,
+                       with_doc_cols: bool) -> DataFrame:
+        from datastream_io_spark.operators.boolean_search import (
+            tree_kernel,
+        )
+
+        tree, positives, rows = self._boolean_rows(query, self._expander())
+        if not rows:
             return _empty_topk(self.spark, with_doc_cols)
         idf = {r["term"]: float(r["idf"]) for r in rows
                if r["term"] in positives}
-        cand, on_driver = self._boolean_cand(
-            tree, idf, float(self.stats["avgdl"]), k,
-            sorted({int(r["term_bucket"]) for r in rows}),
-            sorted(all_terms), est)
-        return global_topk(self.spark, self.index_dir, cand, k,
-                           with_doc_cols,
-                           docs_df=self._docs_df if with_doc_cols else None,
-                           ranked=on_driver)
-
-    def _boolean_cand(self, tree: tuple, idf: dict, avgdl: float, k: int,
-                      buckets: list, terms: list,
-                      est: int | None = None) -> tuple[DataFrame, bool]:
-        """Per-split top-k candidates of a planned boolean ``tree``
-        scored with ``idf`` / ``avgdl`` (this index's, or a partitioned
-        root's global ones): ``(cand, on_driver)`` — ranked on the
-        driver when the payload estimate ``est`` passes the single-task
-        gate, else the per-split kernels over the pruned postings
-        scan."""
-        from datastream_io_spark.operators.boolean_search import (
-            score_tree_split,
-        )
-
-        tomb, tomb_join = _tombstone_state(self.spark, self.index_dir)
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            blocks_of = {r.term: list(r.blocks) for r in pdf.itertuples()}
-            tv = _tv_from(pdf, tomb)
-            return score_tree_split(tree, idf, avgdl, k, blocks_of, {}, tv)
-
-        if _driver_gate(est, tomb_join):
-            return _rank_on_driver(self.spark, self.index_dir, buckets,
-                                   terms, kernel, k), True
-        cand = self._prows(buckets, terms, tomb_join).groupBy("split_id") \
-            .applyInPandas(kernel, "doc_id long, score double")
-        return cand, False
+        top = self._run(*_scan_of(rows),
+                        tree_kernel(tree, idf, self.avgdl, k),
+                        _SCORES_SCHEMA, k)
+        return self._display(top, with_doc_cols)
 
     def count_boolean(self, query: str) -> int:
         """:func:`~datastream_io_spark.operators.boolean_search.
         count_boolean` on this handle."""
         from datastream_io_spark.operators.boolean_search import (
-            _eval_node,
-            plan_boolean,
+            count_kernel,
         )
 
-        tree, _positives, all_terms = plan_boolean(
-            query, self.stats, expander=self._expander())
-        all_terms = sorted(t for t in all_terms if t)
-        if not all_terms:
+        tree, _positives, rows = self._boolean_rows(query,
+                                                    self._expander())
+        if not rows:
             return 0
-        n_buckets = int(self.stats["n_buckets"])
-        buckets = sorted({term_bucket(t, n_buckets) for t in all_terms})
-        tomb, tomb_join = _tombstone_state(self.spark, self.index_dir)
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            blocks_of = {r.term: list(r.blocks) for r in pdf.itertuples()}
-            tv = _tv_from(pdf, tomb)
-            cand = _drop_dead(_eval_node(tree, blocks_of, {}), tv)
-            return pd.DataFrame({"n": pd.Series([int(cand.size)],
-                                                dtype="int64")})
-
-        rows = (self._prows(buckets, all_terms, tomb_join)
-                .groupBy("split_id")
-                .applyInPandas(kernel, "n long").collect())
-        return int(sum(r["n"] for r in rows))
+        counts = self._run(*_scan_of(rows), count_kernel(tree),
+                           _COUNT_SCHEMA, None)
+        return int(sum(r["n"] for r in counts.collect()))
 
     def more_like_this(self, doc_id: int, k: int = 10,
                        max_terms: int = 20,
@@ -755,62 +911,30 @@ class Searcher:
                      for qid, q in queries.items()}
         else:
             plans = self._plans(queries, mode, slop, ordered)
-        plans = {qid: p for qid, p in plans.items() if p is not None}
-        return _search_many_wand_tail(
-            self.spark, self.index_dir, self.stats,
-            {qid: (p.idf, p.n_terms, p.mode, p.phrase)
-             for qid, p in plans.items()}, k, scans=self,
-            df_by_term={t: df for p in plans.values()
-                        for t, df in p.df.items()})
+        return self._many({qid: p for qid, p in plans.items()
+                           if p is not None}, k, self.avgdl)
 
     def _boolean_many(self, queries: dict[str, str], k: int,
                       max_expansions: int) -> DataFrame:
         from datastream_io_spark.operators.boolean_search import (
             plan_boolean,
-            score_tree_split,
+            trees_kernel,
         )
 
         expander = self._expander(max_expansions)
-        trees, pos_all, all_terms = {}, set(), set()
-        for qid, q in queries.items():
-            tree, pos, terms = plan_boolean(q, self.stats,
-                                            expander=expander)
-            trees[qid] = (tree, pos)
-            pos_all |= pos
-            all_terms |= terms
-        # NOT leaves' rows are scanned too, so the payload estimate
-        # needs df for EVERY leaf term — look up all of them (the idf
-        # map still only keys the positives). Σ df = 0: no posting row
-        # exists, so no query can match and nothing is scanned
-        rows_all = self._lookup(sorted(all_terms))
-        est = sum(int(r["df"]) for r in rows_all)
-        if est == 0:
+        planned = {qid: plan_boolean(q, self.stats, expander=expander)
+                   for qid, q in queries.items()}
+        # ONE lookup over every query's leaves (see _boolean_rows)
+        rows = self._lookup(sorted({t for _, _, ts in planned.values()
+                                    for t in ts if t}))
+        if not rows:
             return _empty_many(self.spark)
-        idf_all = {r["term"]: float(r["idf"]) for r in rows_all
-                   if r["term"] in pos_all}
-        plans_b = {
-            qid: ({t: idf_all[t] for t in pos if t in idf_all}, tree)
-            for qid, (tree, pos) in trees.items()
-        }
-        avgdl = float(self.stats["avgdl"])
-        tomb, tomb_join = _tombstone_state(self.spark, self.index_dir)
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            blocks_of = {r.term: list(r.blocks) for r in pdf.itertuples()}
-            decoded: dict = {}  # shared across the batch's queries
-            tv = _tv_from(pdf, tomb)
-            outs = []
-            for qid, (idf_q, tree) in plans_b.items():
-                out = score_tree_split(tree, idf_q, avgdl, k, blocks_of,
-                                       decoded, tv)
-                if len(out):
-                    out.insert(0, "query_id", qid)
-                    outs.append(out)
-            return _concat_query_outs(outs)
-
-        return _rank_many(self.spark, self.index_dir,
-                          sorted({int(r["term_bucket"]) for r in rows_all}),
-                          sorted(all_terms), self, tomb_join, kernel, k, est)
+        idf = {r["term"]: float(r["idf"]) for r in rows}
+        trees = {qid: ({t: idf[t] for t in pos if t in idf}, tree)
+                 for qid, (tree, pos, _) in planned.items()}
+        return self._run(*_scan_of(rows),
+                         trees_kernel(trees, self.avgdl, k), _MANY_SCHEMA,
+                         k)
 
     def facet_counts(self, query: str, facet_col: str = "lang",
                      mode: str = "and", where=None) -> DataFrame:
@@ -836,24 +960,10 @@ class Searcher:
         plan = self._plan(query, mode)
         if plan is None:
             return self._empty_facets(facet_col)
-        tomb, tomb_join = _tombstone_state(self.spark, self.index_dir)
-        avgdl = float(self.stats["avgdl"])
-
-        def kernel_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            # membership only: no tf/dl decode, no scoring (facet
-            # counts are score-independent)
-            return _wand_split(pdf, plan.idf, avgdl, None, plan.mode,
-                               plan.n_terms, plan.phrase, tomb=tomb,
-                               score=False)
-
-        if _driver_gate(plan.est, tomb_join):
-            cand = _rank_on_driver(self.spark, self.index_dir,
-                                   plan.buckets, sorted(plan.idf),
-                                   kernel_all, None)
-        else:
-            cand = self._prows(plan.buckets, sorted(plan.idf),
-                               tomb_join).groupBy("split_id") \
-                .applyInPandas(kernel_all, "doc_id long, score double")
+        # membership only: no tf/dl decode, no scoring (facet counts
+        # are score-independent)
+        cand = self._run(*plan.scan, lambda tr, tv: (_members(plan, tr, tv),),
+                         _IDS_SCHEMA, None)
         docs = self._docs_df
         if where is not None:
             docs = docs.where(where)
@@ -861,8 +971,7 @@ class Searcher:
         # order is a single-partition sort (coalesce +
         # sortWithinPartitions) — identical total order to orderBy
         # without the range-partitioning Exchange and its sampling pass
-        return (cand.select("doc_id")
-                .join(docs.select("doc_id", facet_col), "doc_id")
+        return (cand.join(docs.select("doc_id", facet_col), "doc_id")
                 .groupBy(facet_col)
                 .agg(F.count("*").alias("n_docs"))
                 .repartition(1)
@@ -874,20 +983,11 @@ class Searcher:
         plan = self._plan(query, mode)
         if plan is None:
             return 0
-        tomb, tomb_join = _tombstone_state(self.spark, self.index_dir)
-        avgdl = float(self.stats["avgdl"])
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = _wand_split(pdf, plan.idf, avgdl, None, plan.mode,
-                              plan.n_terms, plan.phrase, tomb=tomb,
-                              score=False)
-            return pd.DataFrame({"n": pd.Series([len(out)],
-                                                dtype="int64")})
-
-        counts = self._prows(plan.buckets, sorted(plan.idf), tomb_join) \
-            .groupBy("split_id").applyInPandas(kernel, "n long")
-        row = counts.agg(F.sum("n").alias("n")).collect()[0]
-        return int(row["n"] or 0)
+        counts = self._run(
+            *plan.scan,
+            lambda tr, tv: (np.array([_members(plan, tr, tv).size]),),
+            _COUNT_SCHEMA, None)
+        return int(sum(r["n"] for r in counts.collect()))
 
     def facet_counts_grouped(self, query: str, facet_col: str = "lang",
                              mode: str = "and") -> DataFrame:
@@ -898,7 +998,11 @@ class Searcher:
         if plan is None:
             return self._empty_facets(facet_col)
         tomb, tomb_join = _tombstone_state(self.spark, self.index_dir)
-        avgdl = float(self.stats["avgdl"])
+        terms, buckets, _ = plan.scan
+        prows = postings_rows(self.spark, self.index_dir, buckets, terms,
+                              postings_df=self._postings_df)
+        if tomb_join is not None:
+            prows = prows.join(tomb_join, "split_id", "left")
 
         # the split's (doc_id, value) map rides through a COGROUP — one
         # array row per split next to its posting rows. A plain join
@@ -911,25 +1015,22 @@ class Searcher:
         vtype = facet_field.dataType.simpleString()
 
         def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            out = _wand_split(left, plan.idf, avgdl, None, plan.mode,
-                              plan.n_terms, plan.phrase, tomb=tomb,
-                              score=False)
-            emptyf = pd.DataFrame({"fv": pd.Series([], dtype="object"),
-                                   "n": pd.Series([], dtype="int64")})
-            if not len(out) or not len(left) or not len(right):
-                return emptyf
+            out = (_members(plan, *_split_args(left, tomb)) if len(left)
+                   else np.zeros(0, np.int64))
+            if not out.size or not len(right):
+                return pd.DataFrame({"fv": pd.Series([], dtype="object"),
+                                     "n": pd.Series([], dtype="int64")})
             fids = np.asarray([p["doc_id"] for p in right["p"]],
                               dtype=np.int64)
             order = np.argsort(fids, kind="stable")
             fids = fids[order]
             fvals = pd.Series([p["fv"] for p in right["p"]]).iloc[order]
-            pos = np.searchsorted(fids, out["doc_id"].to_numpy())
-            vc = fvals.iloc[pos].value_counts(dropna=False)
+            vc = fvals.iloc[np.searchsorted(fids, out)].value_counts(
+                dropna=False)
             return pd.DataFrame({"fv": vc.index,
                                  "n": vc.to_numpy().astype("int64")})
 
-        cand = self._prows(plan.buckets, sorted(plan.idf), tomb_join) \
-            .groupBy("split_id").cogroup(fmap.groupBy("split_id")) \
+        cand = prows.groupBy("split_id").cogroup(fmap.groupBy("split_id")) \
             .applyInPandas(kernel, f"fv {vtype}, n long")
         # ≤ |facet values| rows after the aggregation — single-partition
         # sort instead of orderBy's range Exchange + sampling pass
@@ -1456,31 +1557,27 @@ def _and_candidates(term_rows: list, n_terms: int,
     return cand
 
 
-def _wand_split(pdf: pd.DataFrame, idf: dict[str, float], avgdl: float,
-                k: int, mode: str, n_terms: int,
-                phrase: list[str] | None = None,
-                term_rows: list | None = None,
-                decoded: dict | None = None,
-                tomb=None, score: bool = True) -> pd.DataFrame:
-    """Q7 kernel: one document-range split → ≤k exact-scored candidates.
-    ``term_rows``/``decoded`` can be injected by the multi-query driver
-    (Q13) so block decodes are shared across the batch's queries.
-    ``tomb`` (broadcast sorted tombstone ids) filters candidates BEFORE
-    θ seeding and the cut — deletes never weaken pruning soundness.
-    ``score=False`` (only with ``k=None``) emits the match SET without
-    BM25 — membership needs only the doc streams, so facet/count
-    queries skip every tf/dl decode and all scoring arithmetic."""
-    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                          "score": pd.Series([], dtype="float64")})
-    if term_rows is None:
-        term_rows = [(r.term, list(r.blocks)) for r in pdf.itertuples()]
+def _candidates(term_rows: list, mode: str, n_terms: int, phrase=None,
+                tv: np.ndarray | None = None, decoded: dict | None = None,
+                k: int | None = None, idf: dict | None = None,
+                avgdl: float | None = None) -> np.ndarray:
+    """One split's live candidates (sorted doc ids, tombstones ``tv``
+    dropped BEFORE θ seeding, so deletes never weaken pruning
+    soundness): the conjunctive / positional match set for and /
+    phrase / near, the full union for OR when ``k`` is None (membership,
+    and filtered search — where a later predicate can evict high
+    scorers, so θ-pruning is unsound), else the block-max
+    decode-skipping OR candidates that can reach the top ``k`` under
+    ``idf`` / ``avgdl``. Membership needs only the doc streams: no
+    tf/dl decode."""
+    none = np.zeros(0, np.int64)
     if decoded is None:
         decoded = {}
-    tv = _tv_from(pdf, tomb)
-
+    if not term_rows:
+        return none
     if mode == "phrase":
         if len(term_rows) < n_terms:
-            return empty
+            return none
         if n_terms > 1:
             cand = _and_candidates(term_rows, n_terms, decoded)
         else:  # repeated-token phrase of one distinct term
@@ -1492,19 +1589,14 @@ def _wand_split(pdf: pd.DataFrame, idf: dict[str, float], avgdl: float,
                 [decoded[(term0, j)][0] for j in range(len(blocks0))])
         cand = _drop_dead(cand, tv)
         if cand.size == 0:
-            return empty
-        cand = (_near_filter(cand, phrase, dict(term_rows), decoded)
+            return none
+        blocks_of = dict(term_rows)
+        return (_near_filter(cand, phrase, blocks_of, decoded)
                 if isinstance(phrase, NearSpec) else
-                _phrase_filter(cand, phrase, dict(term_rows), decoded))
-        if cand.size == 0:
-            return empty
-    elif mode == "and" and n_terms > 1:
-        cand = _drop_dead(_and_candidates(term_rows, n_terms, decoded), tv)
-        if cand.size == 0:
-            return empty
-    elif k is None:
-        # filtered OR: θ-pruning is unsound when a later predicate can
-        # evict high scorers, so decode the full union
+                _phrase_filter(cand, phrase, blocks_of, decoded))
+    if mode == "and" and n_terms > 1:
+        return _drop_dead(_and_candidates(term_rows, n_terms, decoded), tv)
+    if k is None:
         ids = []
         for term, blocks in term_rows:
             for j in range(len(blocks)):
@@ -1512,37 +1604,98 @@ def _wand_split(pdf: pd.DataFrame, idf: dict[str, float], avgdl: float,
                 if ck not in decoded:
                     decoded[ck] = (decode_block_docs(blocks[j]), None, None)
                 ids.append(decoded[ck][0])
-        cand = _drop_dead(np.unique(np.concatenate(ids)), tv)
-        if cand.size == 0:
-            return empty
-    else:
-        # OR (and single-term AND ≡ OR): decode-skipping block-max
-        cand = _or_candidates(term_rows, idf, avgdl, k, decoded, tv)
-        if cand.size == 0:
-            return empty
-    if k is None and not score:
-        return pd.DataFrame({"doc_id": cand.astype("int64"),
-                             "score": np.zeros(cand.size, "float64")})
-    scores = _exact_scores(cand, term_rows, idf, avgdl, decoded)
+        return _drop_dead(np.unique(np.concatenate(ids)), tv)
+    # OR (and single-term AND ≡ OR): decode-skipping block-max
+    return _or_candidates(term_rows, idf, avgdl, k, decoded, tv)
 
+
+def _wand_split(term_rows: list, idf: dict[str, float], avgdl: float,
+                k: int | None, mode: str, n_terms: int,
+                phrase: list[str] | NearSpec | None = None,
+                decoded: dict | None = None,
+                tv: np.ndarray | None = None
+                ) -> tuple[np.ndarray, np.ndarray]:
+    """Q7 kernel: one document-range split's ``[(term, blocks)]`` rows →
+    ``(doc_ids, scores)`` of its ≤k exact-scored candidates in
+    (score desc, doc_id asc) order (every candidate when ``k`` is None
+    — filtered search cuts after its predicate). ``decoded`` can be
+    injected by a batch kernel (Q13) so block decodes are shared across
+    the batch's queries; ``tv`` is the sorted tombstone id array."""
+    if decoded is None:
+        decoded = {}
+    cand = _candidates(term_rows, mode, n_terms, phrase, tv, decoded, k,
+                       idf, avgdl)
+    if cand.size == 0:
+        return cand, np.zeros(0)
+    scores = _exact_scores(cand, term_rows, idf, avgdl, decoded)
     if k is None:
-        # filtered-search path: a metadata predicate is applied AFTER
-        # this kernel, so the per-split cut must not drop docs the
-        # filter might promote into the top-k — emit every candidate
-        return pd.DataFrame({"doc_id": cand.astype("int64"),
-                             "score": scores.astype("float64")})
+        return cand, scores
     m = min(k, cand.size)
     if cand.size > 4 * k:
         # select everything scoring ≥ the kth score (ALL ties included —
         # the doc_id tie-break must see every tied doc), then lexsort
         kth_neg = np.partition(-scores, m - 1)[m - 1]
         keep = np.flatnonzero(-scores <= kth_neg)
-        sl = np.lexsort((cand[keep], -scores[keep]))[:m]
-        sel = keep[sl]
+        sel = keep[np.lexsort((cand[keep], -scores[keep]))[:m]]
     else:
         sel = np.lexsort((cand, -scores))[:m]
-    return pd.DataFrame({"doc_id": cand[sel].astype("int64"),
-                         "score": scores[sel].astype("float64")})
+    return cand[sel], scores[sel]
+
+
+def _members(plan: _Plan, term_rows: list, tv) -> np.ndarray:
+    """The membership kernel: one split's live matches of ``plan``."""
+    return _candidates(term_rows, plan.mode, plan.n_terms, plan.phrase, tv)
+
+
+def _rank_kernel(plan: _Plan, avgdl: float, k: int | None):
+    """The executor kernel of one planned query: :func:`_wand_split`
+    under the plan's idf (this index's, or a partitioned root's global
+    one) and ``avgdl``."""
+    def kernel(term_rows, tv):
+        return _wand_split(term_rows, plan.idf, avgdl, k, plan.mode,
+                           plan.n_terms, plan.phrase, tv=tv)
+    return kernel
+
+
+def _many_kernel(plans: dict, avgdl: float, k: int):
+    """The executor kernel of a batch ``{query_id: plan}``: each query's
+    :func:`_wand_split` over its own terms' rows, all of them sharing
+    one block-decode cache per split."""
+    def kernel(term_rows, tv):
+        rows_of = dict(term_rows)
+        decoded: dict = {}
+        return _batch_columns([
+            (qid, *_wand_split([(t, rows_of[t]) for t in sorted(p.idf)
+                                if t in rows_of],
+                               p.idf, avgdl, k, p.mode, p.n_terms,
+                               p.phrase, decoded, tv))
+            for qid, p in plans.items()])
+    return kernel
+
+
+def _batch_columns(outs: list) -> tuple:
+    """The ``(query_id, doc_id, score)`` columns of a batch kernel's
+    per-query ``(query_id, doc_ids, scores)`` outputs."""
+    if not outs:
+        return np.zeros(0, object), np.zeros(0, np.int64), np.zeros(0)
+    return (np.concatenate([np.full(ids.size, qid, object)
+                            for qid, ids, _ in outs]),
+            np.concatenate([ids for _, ids, _ in outs]),
+            np.concatenate([scores for _, _, scores in outs]))
+
+
+def _topk_rows(cols: list, names: list, k: int) -> np.ndarray:
+    """Positions of the (score desc, doc_id asc) top ``k`` of driver
+    columns ``cols`` (of fields ``names``) — per query, in query_id
+    order, when the first field is ``query_id``."""
+    doc = cols[names.index("doc_id")]
+    neg = -cols[names.index("score")]
+    if names[0] != "query_id":
+        return np.lexsort((doc, neg))[:k]
+    _, q = np.unique(cols[0], return_inverse=True)
+    order = np.lexsort((doc, neg, q))
+    q = q[order]
+    return order[np.arange(q.size) - np.searchsorted(q, q) < k]
 
 
 def match_positions(spark: SparkSession, index_dir: str, query: str,
@@ -1759,88 +1912,6 @@ def _expansion_rows_cold(spark: SparkSession, index_dir: str, q: str,
             .limit(max_expansions).collect())
 
 
-def _search_many_wand_tail(spark: SparkSession, index_dir: str,
-                           stats: dict, plans_w: dict,
-                           k: int, scans=None,
-                           df_by_term: dict | None = None) -> DataFrame:
-    """Shared execution tail of the batched wand modes: one
-    bucket-pruned scan over the union of every plan's terms, per-split
-    kernels with a shared decode cache, per-query rank window.
-    ``df_by_term`` (df for every dict term the caller looked up)
-    enables the single-task gate — see :func:`_rank_many`; ``scans``
-    as in :func:`_wand_topk`."""
-    if not plans_w:
-        return _empty_many(spark)
-    avgdl = float(stats["avgdl"])
-    n_buckets = int(stats["n_buckets"])
-    buckets = sorted({term_bucket(t, n_buckets)
-                      for fi, _, _, _ in plans_w.values() for t in fi})
-    needed = sorted({t for fi, _, _, _ in plans_w.values() for t in fi})
-    tomb, tomb_join = _tombstone_state(spark, index_dir)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows_by_term = {r.term: (r.term, list(r.blocks))
-                        for r in pdf.itertuples()}
-        decoded: dict = {}  # shared across the batch's queries
-        outs = []
-        for qid, (idf_q, n_terms, qmode, phrase) in plans_w.items():
-            term_rows = [rows_by_term[t] for t in sorted(idf_q)
-                         if t in rows_by_term]
-            if not term_rows:
-                continue
-            out = _wand_split(pdf, idf_q, avgdl, k, qmode, n_terms,
-                              phrase=phrase, term_rows=term_rows,
-                              decoded=decoded, tomb=tomb)
-            if len(out):
-                out.insert(0, "query_id", qid)
-                outs.append(out)
-        return _concat_query_outs(outs)
-
-    est = (None if df_by_term is None
-           else sum(df_by_term.get(t, 0) for t in needed))
-    return _rank_many(spark, index_dir, buckets, needed, scans,
-                      tomb_join, kernel, k, est)
-
-
-def _rank_many(spark: SparkSession, index_dir: str, buckets: list,
-               terms: list[str], scans, tomb_join, kernel, k: int,
-               est_postings: int | None) -> DataFrame:
-    """Per-query top-k over a batch's per-split kernel output: on the
-    driver under the single-task gate (:func:`_rank_on_driver`), else
-    the per-split parallel kernel with a per-query rank window."""
-    if _driver_gate(est_postings, tomb_join):
-        return _rank_on_driver(spark, index_dir, buckets, terms, kernel,
-                               k, _MANY_SCHEMA)
-    postings_df = scans._postings_df if scans is not None else None
-    prows = _with_tomb(postings_rows(spark, index_dir, buckets, terms,
-                                     postings_df=postings_df), tomb_join)
-    cand = prows.groupBy("split_id").applyInPandas(
-        kernel, "query_id string, doc_id long, score double")
-    # per-query candidates are ≤ k × n_splits rows — the rank window is
-    # over a tiny set, not the corpus; the final presentation order is
-    # likewise over ≤ k × |queries| rows, so a single-partition sort
-    # replaces orderBy's range Exchange + sampling pass
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    return (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k).drop("_rn")
-        .repartition(1)
-        .sortWithinPartitions("query_id", F.desc("score"),
-                              F.asc("doc_id"))
-    )
-
-
-def _concat_query_outs(outs: list) -> pd.DataFrame:
-    if not outs:
-        return pd.DataFrame({"query_id": pd.Series([], dtype="object"),
-                             "doc_id": pd.Series([], dtype="int64"),
-                             "score": pd.Series([], dtype="float64")})
-    return pd.concat(outs, ignore_index=True)
-
-
 def delete_docs(spark: SparkSession, index_dir: str,
                 doc_ids: list[int] | None = None,
                 where: str | None = None,
@@ -2037,26 +2108,30 @@ def _tombstone_state(spark: SparkSession, index_dir: str):
     return _tombstones(index_dir, read) or (None, None)
 
 
-def _with_tomb(prows: DataFrame, tomb_join: DataFrame | None) -> DataFrame:
-    """Attach each split's tombstone array to its posting rows (no-op
-    for the broadcast/no-deletes cases)."""
-    if tomb_join is None:
-        return prows
-    return prows.join(tomb_join, "split_id", "left")
-
-
-def _tv_from(pdf: pd.DataFrame, tomb) -> np.ndarray | None:
-    """Resolve the kernel's tombstone id array: the whole sorted set
-    (small sets: a :class:`_Tombs` on the driver, its broadcast in a
-    task) or the split's joined ``tomb`` column (large sets —
-    rows of one kernel invocation all share a split)."""
+def _split_args(pdf: pd.DataFrame, tomb) -> tuple[list, np.ndarray | None]:
+    """The one adapter from a Spark group to a kernel: the postings rows
+    of one split (an ``applyInPandas`` or cogroup group, or one
+    ``mapInPandas`` row) → ``(term_rows, tv)``. ``tv`` is the whole
+    sorted tombstone set (``tomb``, a :class:`_Tombs` — its broadcast
+    inside a task) or, for sets delivered by join, the split's own
+    ``tomb`` column (every row of one split carries the same array)."""
+    term_rows = [(t, list(b)) for t, b in zip(pdf["term"], pdf["blocks"])]
     if tomb is not None:
-        return tomb.value
+        return term_rows, tomb.value
     if "tomb" in pdf.columns and len(pdf):
         v = pdf["tomb"].iloc[0]
         if v is not None and len(v):
-            return np.asarray(v, dtype=np.int64)
-    return None
+            return term_rows, np.asarray(v, dtype=np.int64)
+    return term_rows, None
+
+
+def _per_split(kernel, tomb, names: list):
+    """``kernel`` as the pandas function of one Spark group: its
+    arrays become the columns ``names``."""
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame(dict(zip(names,
+                                     kernel(*_split_args(pdf, tomb)))))
+    return run
 
 
 def _drop_dead(ids: np.ndarray, tv: np.ndarray | None) -> np.ndarray:
@@ -2464,223 +2539,6 @@ def postings_rows(spark: SparkSession, index_dir: str, buckets: list,
     return postings.where(
         F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
     ).select("split_id", "term", "blocks")
-
-
-def _driver_gate(est_postings: int | None, tomb_join) -> bool:
-    """The single-task gate: the query's match payload (Σ df over every
-    term it scans) is known and at most ``SINGLE_TASK_MAX_POSTINGS``,
-    and its tombstones (if any) are a broadcast-size array — a
-    split-joined set stays with the per-split kernels that own it."""
-    return (tomb_join is None and est_postings is not None
-            and 0 < est_postings <= SINGLE_TASK_MAX_POSTINGS)
-
-
-def _read_postings_local(index_dir: str, buckets: list,
-                         terms: list[str]) -> pd.DataFrame:
-    """:func:`postings_rows` read on the driver: the rows of ``terms``
-    in the query's ``postings/term_bucket=K`` directories, each bucket
-    asked only for its own terms, through
-    :func:`~datastream_io_spark.operators.postings_cache.bucket_term_rows`
-    — cached rows cost no read, the rest are one pruned pyarrow read per
-    bucket (``term IN misses`` pushed into the row-group statistics,
-    the same read :func:`lookup_terms` makes of ``dict/``). The rows'
-    block arrays are shared with the cache: read-only."""
-    n_buckets = int(read_stats(index_dir)["n_buckets"])
-    sids, names, blocks = [], [], []
-    for b, ts in _terms_by_bucket(terms, n_buckets, set(buckets)).items():
-        bdir = os.path.join(index_dir, "postings", f"term_bucket={b}")
-        for term, rows in bucket_term_rows(bdir, _POSTINGS_COLS,
-                                           ts).items():
-            for sid, bl in rows:
-                sids.append(sid)
-                names.append(term)
-                blocks.append(bl)
-    return pd.DataFrame({"split_id": np.asarray(sids, np.int32),
-                         "term": pd.Series(names, dtype=object),
-                         "blocks": pd.Series(blocks, dtype=object)})
-
-
-def _rank_on_driver(spark: SparkSession, index_dir: str, buckets: list,
-                    terms: list[str], kernel, k: int | None,
-                    schema: T.StructType = _SCORES_SCHEMA) -> DataFrame:
-    """Answer a gated query in-process: read its pruned postings rows
-    (:func:`_read_postings_local`), run the same per-split ``kernel``
-    the distributed path runs per ``split_id`` group, then apply the
-    same cut and order — (score desc, doc_id asc), per ``query_id``
-    for batches (``schema`` leads with it); ``k=None`` keeps every
-    row. Returns the rows as an :class:`ArrowFrame`: its collect,
-    count and toPandas make no JVM call, and a Spark operation on it
-    (a docs join, a facet aggregation) builds its local relation once.
-    It holds results, not a plan: the flag it sets keeps the frame out
-    of ``Searcher._cached_plan``."""
-    pdf = _read_postings_local(index_dir, buckets, terms)
-    outs = [kernel(g) for _, g in pdf.groupby("split_id", sort=False)]
-    names = schema.names
-    out = (pd.concat(outs, ignore_index=True) if outs
-           else pd.DataFrame({c: [] for c in names}))
-    if k is not None and len(out):
-        qid = names[:-2]
-        out = out.sort_values(qid + ["score", "doc_id"],
-                              ascending=[True] * len(qid) + [False, True],
-                              kind="mergesort")
-        out = (out.groupby(qid, sort=False).head(k) if qid
-               else out.head(k))
-    _DRIVER_RAN.flag = True
-    return ArrowFrame(spark, schema, [out[c] for c in names])
-
-
-def global_topk(spark: SparkSession, index_dir: str, cand: DataFrame,
-                k: int, with_doc_cols: bool,
-                docs_df: DataFrame | None = None,
-                ranked: bool = False) -> DataFrame:
-    """The Q6 cut + optional display join every query path shares —
-    keeps the (score desc, doc_id asc) tie-break contract and the
-    broadcast-small-side convention in one place. ``docs_df`` lets a
-    warm Searcher reuse one resolved docs scan (same directory-listing
-    cost as the postings scan — see :func:`postings_rows`).
-    ``ranked`` marks ``cand`` as an already cut and ordered top-k (a
-    driver-computed frame), so only the display join is planned."""
-    topk = (cand if ranked
-            else cand.orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-    if with_doc_cols:
-        docs = (docs_df if docs_df is not None else spark.read.parquet(
-            os.path.join(index_dir, "docs"))).select(
-            "doc_id", "repo", "path", "commit", "lang")
-        # topk is ≤k rows — broadcast it so the docs join is
-        # shuffle-free, and the ≤k-row display order is a
-        # single-partition sort (no range Exchange)
-        topk = (docs.join(F.broadcast(topk), "doc_id")
-                .repartition(1)
-                .sortWithinPartitions(F.desc("score"), F.asc("doc_id")))
-    return topk
-
-
-def _filtered_topk(spark, index_dir, prows, idf, avgdl, n_terms, k,
-                   mode, with_doc_cols, phrase, where, tomb,
-                   docs_df=None):
-    """Two-pass filtered search (VERDICT r2 what's-wrong #2). Returns
-    ``(topk_df, used_fallback)``.
-
-    Pass 1 runs the NORMAL pruned kernel at k′ = 4k and keeps a
-    per-split ``exhausted`` flag (the split emitted its whole candidate
-    set). A split's filtered top-k is provably inside its emitted set
-    when the split is exhausted OR ≥ k of its emitted docs survive the
-    predicate (every non-emitted doc scores ≤ all emitted ones, so k
-    surviving emitted docs dominate it). Only when some split violates
-    BOTH does pass 2 rerun with the exact emit-everything kernel — a
-    hot-term filtered query no longer unconditionally decodes the full
-    posting union. Exactness holds for ANY predicate by construction."""
-    kprime = 4 * k
-    allowed = (
-        (docs_df if docs_df is not None else spark.read.parquet(
-            os.path.join(index_dir, "docs")))
-        .where(where).select("doc_id")
-    )
-
-    def kernel_p1(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = _wand_split(pdf, idf, avgdl, kprime, mode, n_terms, phrase,
-                          tomb=tomb)
-        sid = int(pdf["split_id"].iloc[0]) if len(pdf) else -1
-        out["split_id"] = np.full(len(out), sid, dtype="int32")
-        out["exhausted"] = np.full(len(out), len(out) < kprime, dtype=bool)
-        return out
-
-    cand = prows.groupBy("split_id").applyInPandas(
-        kernel_p1,
-        "doc_id long, score double, split_id int, exhausted boolean",
-    ).persist()
-    try:
-        surv = (cand.join(allowed, "doc_id")
-                .groupBy("split_id").agg(F.count("*").alias("n_surv")))
-        flags = cand.groupBy("split_id").agg(
-            F.min("exhausted").alias("exhausted"))
-        bad = (flags.join(surv, "split_id", "left")
-               .where((~F.col("exhausted"))
-                      & (F.coalesce("n_surv", F.lit(0)) < k))
-               .count())
-        if bad == 0:
-            rows = (cand.join(allowed, "doc_id")
-                    .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                    .select("doc_id", "score").collect())
-            local = _empty_frame(spark, "doc_id long, score double", rows)
-            return (global_topk(spark, index_dir, local, k,
-                                with_doc_cols, docs_df=docs_df,
-                                ranked=True), False)
-    finally:
-        cand.unpersist(blocking=False)
-
-    # pass 2 — exact fallback: emit every scored candidate, then filter
-    def kernel_all(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _wand_split(pdf, idf, avgdl, None, mode, n_terms, phrase,
-                           tomb=tomb)
-
-    full = prows.groupBy("split_id").applyInPandas(
-        kernel_all, "doc_id long, score double").join(allowed, "doc_id")
-    return global_topk(spark, index_dir, full, k, with_doc_cols,
-                       docs_df=docs_df), True
-
-
-def _wand_topk(spark, index_dir, idf, buckets, avgdl, n_terms, k,
-               mode, with_doc_cols, phrase=None, where=None,
-               scans=None, cand_only=False, est_postings=None):
-    """Top-k of one planned query: on the driver under the single-task
-    gate, else the per-split kernels. ``scans`` is a warm
-    :class:`Searcher` whose resolved postings / docs scans are reused,
-    each resolved only when this query needs it (None: read the
-    directories)."""
-    found_terms = sorted(idf)
-    tomb, tomb_join = _tombstone_state(spark, index_dir)
-    docs_df = (scans._docs_df if scans is not None
-               and (with_doc_cols or where is not None) else None)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _wand_split(pdf, idf, avgdl, k, mode, n_terms, phrase,
-                           tomb=tomb)
-
-    if where is None and _driver_gate(est_postings, tomb_join):
-        # SMALL query, by dictionary statistics (Σ df over the query's
-        # terms): answered on the driver, zero Spark jobs. Large/hot
-        # queries, filtered queries and tombstone split-joins keep the
-        # per-split parallel kernel below — the decode work there is
-        # real and must spread across the cluster.
-        cand = _rank_on_driver(spark, index_dir, buckets, found_terms,
-                               kernel, k)
-        if cand_only:
-            return cand
-        return global_topk(spark, index_dir, cand, k, with_doc_cols,
-                           docs_df=docs_df, ranked=True)
-
-    prows = _with_tomb(
-        postings_rows(spark, index_dir, buckets, found_terms,
-                      postings_df=(scans._postings_df if scans is not None
-                                   else None)), tomb_join)
-    if where is not None:
-        return _filtered_topk(spark, index_dir, prows, idf, avgdl,
-                              n_terms, k, mode, with_doc_cols, phrase,
-                              where, tomb, docs_df=docs_df)[0]
-    if len(found_terms) == 1 and n_terms == 1:
-        # single-term fast path: no cross-term alignment needed, so skip
-        # the per-split shuffle — score each posting row where it is
-        # scanned (mapInPandas straight over the bucket-pruned scan).
-        # Valid for a repeated-single-token phrase too: a phrase lives
-        # inside one doc, and a doc's postings live in one split row.
-        def kernel1(it):
-            for pdf in it:
-                outs = [kernel(pdf.iloc[[i]]) for i in range(len(pdf))]
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        cand = prows.mapInPandas(kernel1, "doc_id long, score double")
-    else:
-        cand = prows.groupBy("split_id").applyInPandas(
-            kernel, "doc_id long, score double")
-    if cand_only:
-        # cross-index merges (partitioned.search_all_partitions) union
-        # the per-index candidate streams and apply ONE global cut —
-        # per-split k-cuts above stay valid (global top-k ⊆ their union)
-        return cand
-    return global_topk(spark, index_dir, cand, k, with_doc_cols,
-                       docs_df=docs_df)
 
 
 def explain_query(spark: SparkSession, index_dir: str, query: str,

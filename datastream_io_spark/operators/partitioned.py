@@ -36,11 +36,13 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from datastream_io_spark.functions.bm25 import idf_py
 from datastream_io_spark.functions.xxhash import term_bucket
 from datastream_io_spark.operators.build import DICT_SCHEMA, build_index
 from datastream_io_spark.operators.indexed_search import (
+    ArrowFrame,
     _empty_frame,
     search_indexed,
 )
@@ -153,10 +155,11 @@ def facet_counts_partitioned(
     whose per-split attachment is per-index by construction."""
     from datastream_io_spark.operators.build import read_stats
     from datastream_io_spark.operators.indexed_search import (
+        _candidates,
         _check_format,
         _plan_terms,
+        _split_args,
         _tombstone_state,
-        _wand_split,
         match_count,
         postings_rows,
     )
@@ -214,11 +217,10 @@ def facet_counts_partitioned(
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         fv = pdf["_fv"].iloc[0]
-        out = _wand_split(pdf, {t: 1.0 for t in pdf["term"]}, 1.0, None,
-                          vmode, n_terms, phrase, tomb=tomb_of[fv],
-                          score=False)
+        term_rows, tv = _split_args(pdf, tomb_of[fv])
+        n = _candidates(term_rows, vmode, n_terms, phrase, tv).size
         return pd.DataFrame({"_fv": pd.Series([fv], dtype="object"),
-                             "n": pd.Series([len(out)], dtype="int64")})
+                             "n": pd.Series([n], dtype="int64")})
 
     cand = (union.groupBy("_fv", "split_id")
             .applyInPandas(kernel, "_fv string, n long")
@@ -500,10 +502,11 @@ class PartitionedSearcher:
                 .withColumn("_fv", F.lit(v)))
 
     def _lookup_all(self, terms: list[str]) -> dict[str, list]:
-        """Dictionary rows of ``terms`` per subindex value: a subindex
-        with a driver-cached dict answers from it (no job); all others
-        share ONE union scan, bucket-pruned per subindex (n_buckets may
-        differ), collected with AQE off."""
+        """Dictionary rows (``term``, ``df``, ``term_bucket``) of
+        ``terms`` per subindex value: a subindex with a driver-cached
+        dict answers from it (no job); all others share ONE union scan,
+        bucket-pruned per subindex (n_buckets may differ), collected
+        with AQE off."""
         rows_of, scans = {}, []
         for v, sub in self._sub.items():
             if sub._dict_pdf is not None or not terms:
@@ -518,7 +521,10 @@ class PartitionedSearcher:
         if scans:
             for r in _collect_no_aqe(self.spark,
                                      reduce(DataFrame.unionByName, scans)):
-                rows_of[r["_fv"]].append(r)
+                nb = int(self.stats_of[r["_fv"]]["n_buckets"])
+                rows_of[r["_fv"]].append(
+                    {"term": r["term"], "df": int(r["df"]),
+                     "term_bucket": term_bucket(r["term"], nb)})
         return rows_of
 
     def _global_idf(self, rows_of: dict[str, list]) -> dict[str, float]:
@@ -569,10 +575,12 @@ class PartitionedSearcher:
         (query, subindex) pair's found terms — a conjunctive query
         (and / phrase / near) missing a term in a subindex is pruned
         there, its postings never scanned. Returns
-        ``{value: {qid: (idf, n_terms, mode, phrase)}}`` over the
-        subindexes with work."""
+        ``{value: {qid: plan}}`` over the subindexes with work; each
+        plan carries the GLOBAL idf and that subindex's df and buckets,
+        so its Σ df gates the subindex's executor."""
         from datastream_io_spark.operators.indexed_search import (
             _plan_terms,
+            _resolve,
         )
 
         if mode not in ("and", "or", "phrase", "near"):
@@ -596,91 +604,64 @@ class PartitionedSearcher:
         idf_g = self._global_idf(rows_of)
         plans: dict[str, dict] = {}
         for v, rows in rows_of.items():
-            have = {r["term"] for r in rows}
+            found = {r["term"]: {**r, "idf": idf_g[r["term"]]}
+                     for r in rows}
             for qid, (vmode, terms, phrase) in parsed.items():
-                found = [t for t in terms if t in have]
-                if not found or (vmode in ("and", "phrase")
-                                 and len(found) < len(terms)):
-                    continue
-                plans.setdefault(v, {})[qid] = (
-                    {t: idf_g[t] for t in found}, len(terms), vmode,
-                    phrase)
+                plan = _resolve(vmode, terms, phrase,
+                                [found[t] for t in terms if t in found])
+                if plan is not None:
+                    plans.setdefault(v, {})[qid] = plan
         return plans
 
     def search(self, query: str, k: int = 10, mode: str = "and",
                with_doc_cols: bool = False, slop: int = 2,
                ordered: bool = False) -> DataFrame:
         """:func:`search_all_partitions` on this handle — with driver
-        dict caches, planning runs no Spark job."""
-        from datastream_io_spark.operators.indexed_search import _wand_topk
-
-        cands = []
-        for v, plans_v in self._plans({"": query}, mode, slop,
-                                      ordered).items():
-            idf, n_terms, vmode, phrase = plans_v[""]
-            sub = self._sub[v]
-            buckets = sorted({term_bucket(t, int(sub.stats["n_buckets"]))
-                              for t in idf})
-            cand = _wand_topk(
-                self.spark, sub.index_dir, idf, buckets, self.avgdl_g,
-                n_terms, k, vmode, False, phrase=phrase, scans=sub,
-                cand_only=True)
-            cands.append(cand.select(F.lit(v).alias(self.by), "doc_id",
-                                     "score"))
-        return self._global_cut(cands, k, with_doc_cols)
+        dict caches, planning runs no Spark job, and a query whose
+        per-subindex Σ df passes the single-task gate runs none at all
+        (each subindex ranks on the driver, the merge is in Python)."""
+        parts = [(v, self._sub[v]._rank(plans_v[""], k, self.avgdl_g))
+                 for v, plans_v in self._plans({"": query}, mode, slop,
+                                               ordered).items()]
+        return self._global_cut(parts, k, with_doc_cols)
 
     def search_many(self, queries: dict[str, str], k: int = 10,
                     mode: str = "and", slop: int = 2,
                     ordered: bool = False) -> DataFrame:
         """Batched global serving (r5): MANY cross-partition queries in
-        ONE Spark action — all planning (term parse, per-subindex dict
-        lookups, global df/idf merge) is :meth:`search`'s planner, then
-        each subindex runs the shared batched kernel
-        (:func:`_search_many_wand_tail` with the GLOBAL avgdl pushed
-        in) and a final per-query window takes the global top-k over
-        the value-tagged union. Each query's rows are identical to its
+        at most ONE Spark job — all planning (term parse, per-subindex
+        dict lookups, global df/idf merge) is :meth:`search`'s planner,
+        then each subindex runs the shared batched kernel
+        (:meth:`Searcher._many` under the GLOBAL avgdl) and the
+        per-query global top-k is cut over the value-tagged results
+        (:meth:`_merge`). Each query's rows are identical to its
         individual :meth:`search` answer (parity-tested). Returns
         DF[query_id, <by>, doc_id, score] with per-query
         (score desc, <by> asc, doc_id asc) top-k."""
-        from pyspark.sql import Window
-
-        from datastream_io_spark.operators.indexed_search import (
-            _search_many_wand_tail,
-        )
-
-        by = self.by
-        outs = [
-            _search_many_wand_tail(
-                self.spark, self._sub[v].index_dir,
-                {**self.stats_of[v], "avgdl": self.avgdl_g}, plans_v, k,
-                scans=self._sub[v]).withColumn(by, F.lit(v))
-            for v, plans_v in self._plans(queries, mode, slop,
-                                          ordered).items()]
-        if not outs:
-            return _empty_frame(
-                self.spark,
-                f"query_id string, {by} string, doc_id long, score double")
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc(by), F.asc("doc_id"))
-        return (reduce(DataFrame.unionByName, outs)
-                .withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") <= k).drop("_rn")
-                .select("query_id", by, "doc_id", "score")
-                .orderBy("query_id", F.desc("score"), F.asc(by),
-                         F.asc("doc_id")))
+        parts = [(v, self._sub[v]._many(plans_v, k, self.avgdl_g))
+                 for v, plans_v in self._plans(queries, mode, slop,
+                                               ordered).items()]
+        return _empty_frame(
+            self.spark, _result_schema(["query_id", self.by]),
+            self._merge(parts, k, batch=True))
 
     def search_boolean(self, query: str, k: int = 10,
                        with_doc_cols: bool = False,
                        max_expansions: int = 128) -> DataFrame:
         """:func:`search_boolean_all_partitions` on this handle — with
         driver dict caches, leaf expansion and the df lookup run no
-        Spark job. Each subindex evaluates the tree through
-        :meth:`Searcher._boolean_cand` under the GLOBAL idf / avgdl (no
-        payload estimate: the per-split kernels stay distributed)."""
+        Spark job. Each subindex evaluates the tree through its
+        executor under the GLOBAL idf / avgdl, gated on that
+        subindex's Σ df over the leaf terms."""
         from datastream_io_spark.operators.boolean_search import (
             parse_boolean,
             plan_boolean,
             tree_has_phrase,
+            tree_kernel,
+        )
+        from datastream_io_spark.operators.indexed_search import (
+            _SCORES_SCHEMA,
+            _scan_of,
         )
 
         if not self.n_docs_g:
@@ -696,55 +677,73 @@ class PartitionedSearcher:
         tree, positives, all_terms = plan_boolean(
             query, stats0, expander=self._expander(max_expansions))
         all_terms.discard("")  # empty-expansion sentinel, never in a dict
-        terms = sorted(all_terms)
-        rows_of = self._lookup_all(terms)
+        rows_of = self._lookup_all(sorted(all_terms))
         # idf keys the terms scored: the positives only
         idf = {t: x for t, x in self._global_idf(rows_of).items()
                if t in positives}
-        cands = []
-        for v, rows in rows_of.items():
-            if not rows:
-                continue  # none of the query's terms: no posting rows
-            sub = self._sub[v]
-            buckets = sorted({term_bucket(r["term"],
-                                          int(sub.stats["n_buckets"]))
-                              for r in rows})
-            cand, _ = sub._boolean_cand(tree, idf, self.avgdl_g, k,
-                                        buckets, terms)
-            cands.append(cand.select(F.lit(v).alias(self.by), "doc_id",
-                                     "score"))
-        return self._global_cut(cands, k, with_doc_cols)
+        kernel = tree_kernel(tree, idf, self.avgdl_g, k)
+        # a subindex with none of the query's terms has no posting rows
+        parts = [(v, self._sub[v]._run(*_scan_of(rows), kernel,
+                                       _SCORES_SCHEMA, k))
+                 for v, rows in rows_of.items() if rows]
+        return self._global_cut(parts, k, with_doc_cols)
 
-    def _global_cut(self, cands: list, k: int,
+    def _merge(self, parts: list, k: int, batch: bool = False) -> list:
+        """The global top-k rows over per-subindex results ``parts``
+        (``[(value, frame)]``, each already cut to its own top-k, so the
+        union holds ≤ k rows per query per subindex): ``(<by>, doc_id,
+        score)`` — led by ``query_id`` for a ``batch``, cut per query —
+        in (score desc, <by> asc, doc_id asc) order. Driver-computed
+        frames are read with no Spark call; any other part makes the
+        union ONE Spark job (AQE off, shuffle width pinned to the true
+        group count)."""
+        lead = ["query_id"] if batch else []
+        if all(isinstance(f, ArrowFrame) for _, f in parts):
+            rows = []
+            for v, f in parts:
+                t = f.toArrow()
+                rows += [(*r[:-2], v, *r[-2:]) for r in zip(
+                    *(t.column(c).to_pylist()
+                      for c in lead + ["doc_id", "score"]))]
+        else:
+            rows = _collect_no_aqe(
+                self.spark,
+                reduce(DataFrame.unionByName, [
+                    f.select(*lead, F.lit(v).alias(self.by), "doc_id",
+                             "score") for v, f in parts]),
+                shuffle_partitions=sum(int(s.get("n_splits", 1))
+                                       for s in self.stats_of.values()))
+        rows = sorted((tuple(r) for r in rows),
+                      key=lambda r: (*r[:-3], -r[-1], r[-3], r[-2]))
+        if not batch:
+            return rows[:k]
+        seen: Counter = Counter()
+        out = []
+        for r in rows:
+            seen[r[0]] += 1
+            if seen[r[0]] <= k:
+                out.append(r)
+        return out
+
+    def _global_cut(self, parts: list, k: int,
                     with_doc_cols: bool) -> DataFrame:
-        """Shared ranking tail of the cross-partition searches: ONE job
-        over the union of per-subindex candidate frames (AQE off,
-        shuffle width pinned to the true group count), then an optional
-        ≤k-row display job (per-branch doc_id pushdown, subset schema —
-        no footer-inference job per subindex), assembled driver-side
-        into a ≤k-row ``ArrowFrame`` (its collect makes no JVM call). Output:
-        ``(<by>, doc_id, score)``, with the display columns except
-        ``<by>`` before score under ``with_doc_cols``."""
+        """Shared ranking tail of the cross-partition searches: the
+        global top-k over the per-subindex results (:meth:`_merge`),
+        then an optional ≤k-row display job (per-branch doc_id
+        pushdown, subset schema — no footer-inference job per
+        subindex), assembled driver-side into a ≤k-row ``ArrowFrame``
+        (its collect makes no JVM call). Output: ``(<by>, doc_id,
+        score)``, with the display columns except ``<by>`` before score
+        under ``with_doc_cols``."""
         by = self.by
         doc_cols = ([c for c in ("repo", "path", "commit", "lang")
                      if c != by] if with_doc_cols else [])
-        schema = ", ".join([f"{by} string", "doc_id long"]
-                           + [f"{c} string" for c in doc_cols]
-                           + ["score double"])
-        rank_rows = []
-        if cands:
-            rank_rows = _collect_no_aqe(
-                self.spark,
-                reduce(DataFrame.unionByName, cands)
-                .orderBy(F.desc("score"), F.asc(by), F.asc("doc_id"))
-                .limit(k),
-                shuffle_partitions=sum(int(s.get("n_splits", 1))
-                                       for s in self.stats_of.values()))
+        rank_rows = self._merge(parts, k)
         meta = {}
         if doc_cols and rank_rows:
             hit_of: dict[str, list[int]] = {}
-            for r in rank_rows:
-                hit_of.setdefault(r[by], []).append(r["doc_id"])
+            for v, doc_id, _ in rank_rows:
+                hit_of.setdefault(v, []).append(doc_id)
             display_schema = ("doc_id long, repo string, path string, "
                               "commit string, lang string")
             docs = reduce(DataFrame.unionByName, [
@@ -755,8 +754,17 @@ class PartitionedSearcher:
                 for v, ids in sorted(hit_of.items())])
             meta = {(r[by], r["doc_id"]): r
                     for r in _collect_no_aqe(self.spark, docs)}
-        return _empty_frame(self.spark, schema, [
-            (r[by], r["doc_id"],
-             *(meta[(r[by], r["doc_id"])][c] for c in doc_cols),
-             r["score"])
-            for r in rank_rows])
+        return _empty_frame(self.spark, _result_schema([by], doc_cols), [
+            (v, doc_id, *(meta[(v, doc_id)][c] for c in doc_cols), score)
+            for v, doc_id, score in rank_rows])
+
+
+def _result_schema(lead: list, doc_cols: list = ()) -> T.StructType:
+    """A cross-partition result's schema: the string columns ``lead``,
+    ``doc_id``, the string ``doc_cols``, ``score``. Built in Python, so
+    a result frame needs no JVM call to parse a DDL string."""
+    return T.StructType(
+        [T.StructField(c, T.StringType()) for c in lead]
+        + [T.StructField("doc_id", T.LongType())]
+        + [T.StructField(c, T.StringType()) for c in doc_cols]
+        + [T.StructField("score", T.DoubleType())])

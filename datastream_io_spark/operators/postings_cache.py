@@ -5,7 +5,7 @@ again and again, and a gated query (Σ df ≤ ``SINGLE_TASK_MAX_POSTINGS``)
 spent ~40% of its driver time re-reading their ``term_bucket=K`` parquet
 files and converting them to pandas. :func:`bucket_term_rows` is the one
 pruned bucket read both driver reads go through — the postings rows
-(``indexed_search._read_postings_local``) and the small-dictionary rows
+(``indexed_search.Searcher._run``) and the small-dictionary rows
 (``indexed_search.lookup_terms``) — and it keeps each term's converted
 rows in memory under a byte budget, so a repeat reads nothing.
 

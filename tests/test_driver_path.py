@@ -1,21 +1,27 @@
 """The driver path for small queries: under the single-task gate a query
 reads its pruned postings on the driver and runs the per-split kernels
-in-process. Its rows, order and scores must equal the distributed
-per-split kernels' (gate forced to 0) in every mode, on positional and
-non-positional indexes and under broadcast tombstones; it must launch
-no Spark job, make no JVM call (its collect included), and its results
-must never be cached."""
+in-process. Its rows, order and scores — and its match counts — must
+equal the distributed per-split kernels' (gate forced to 0) in every
+mode, on positional and non-positional indexes and under broadcast
+tombstones; it must launch no Spark job, make no JVM call (its collect
+included), and its results must never be cached."""
 
 import time
 
 import pytest
 
 from datastream_io_spark.operators import indexed_search as IX
-from datastream_io_spark.operators.boolean_search import search_boolean
+from datastream_io_spark.operators.boolean_search import (
+    count_boolean,
+    search_boolean,
+)
 from tests.conftest import SF0001, py4j_calls, reads_under
 
 
 def _rows(df):
+    """A case's answer: its rows, or a count as it is."""
+    if isinstance(df, int):
+        return df
     return [tuple(r) for r in df.collect()]
 
 
@@ -51,6 +57,18 @@ def _cases(spark, idx, positional):
         "facet": lambda s: s.facet_counts("window agg", "lang", "or"),
         "cold_facet": lambda s: IX.facet_counts(spark, idx, "window",
                                                 "lang", "and"),
+        "where_facet": lambda s: s.facet_counts(
+            "window agg", "lang", "or", where="pmod(doc_id, 2) = 0"),
+        "count_and": lambda s: s.match_count("window agg", "and"),
+        "count_or": lambda s: s.match_count("window agg scan", "or"),
+        "cold_count": lambda s: IX.match_count(spark, idx, "window",
+                                               "and"),
+        "count_boolean": lambda s: s.count_boolean(
+            "window AND (agg OR scan) NOT merge"),
+        "count_boolean_leaves": lambda s: s.count_boolean(
+            "(sc* OR windw~1) AND NOT merge"),
+        "cold_count_boolean": lambda s: count_boolean(
+            spark, idx, "scan OR merge"),
     }
     if positional:
         cases.update({
@@ -65,6 +83,10 @@ def _cases(spark, idx, positional):
                 {"a": "window agg", "b": "scan merge"}, 10, "phrase"),
             "facet_phrase": lambda s: s.facet_counts("window agg", "lang",
                                                      "phrase"),
+            "count_phrase": lambda s: s.match_count("window agg",
+                                                    "phrase"),
+            "count_boolean_phrase": lambda s: s.count_boolean(
+                '"window agg" OR scan'),
         })
     return cases
 
@@ -128,10 +150,18 @@ def test_driver_equals_distributed_under_tombstones(spark, tomb_index,
     driver, dist = _both_paths(spark, tomb_index, True, monkeypatch)
     _assert_same(driver, dist)
     for name, rows in driver.items():
-        if not name.startswith("facet") and not name.endswith("facet"):
+        if "facet" not in name and "count" not in name:
             ids = {r[1] if name.startswith("many") else r[0]
                    for r in rows}
             assert not ids & dead, name
+    # counts are of live docs: the hits of the same query at any depth
+    s = IX.Searcher(spark, tomb_index)
+    for q, mode in [("window agg", "and"), ("window agg scan", "or"),
+                    ("window agg", "phrase")]:
+        live = s.search(q, 10**6, mode).collect()
+        assert s.match_count(q, mode) == len(live), (q, mode)
+    live = s.search_boolean('"window agg" OR scan', 10**6).collect()
+    assert driver["count_boolean_phrase"] == len(live)
 
 
 def test_tombstones_read_on_driver_ship_as_broadcast(spark, tomb_index):
@@ -159,11 +189,12 @@ def test_tombstones_read_on_driver_ship_as_broadcast(spark, tomb_index):
 
 def test_gated_queries_launch_no_spark_job(spark, pos_index):
     """A gated query and its collect() run no Spark job, in every mode
-    that needs no display join or Spark-side expansion. Neither do a
-    one-shot Searcher's open, the module functions built on it, a warm
-    boolean query whose leaves expand from the cached dict, nor
-    queries that can match nothing (no term in the dictionary, or
-    Σ df = 0 over every leaf)."""
+    that needs no display join or Spark-side expansion, and so does a
+    gated match count or boolean count. Neither do a one-shot
+    Searcher's open, the module functions built on it, a warm boolean
+    query whose leaves expand from the cached dict, nor queries that
+    can match nothing (no term in the dictionary, or Σ df = 0 over
+    every leaf)."""
     s = IX.Searcher(spark, pos_index)
     sc = spark.sparkContext
     sc.setJobGroup("driver_path", "gated queries")
@@ -185,9 +216,15 @@ def test_gated_queries_launch_no_spark_job(spark, pos_index):
             IX.search_near(spark, pos_index, "window agg", 10,
                            slop=1).collect(),
             s.search_boolean("sc* AND NOT windw~1", 10).collect(),
+            s.match_count("window agg", "or"),
+            s.count_boolean("sc* AND NOT windw~1"),
+            IX.match_count(spark, pos_index, "window agg", "and"),
+            count_boolean(spark, pos_index, "window AND NOT agg"),
         ]
         none = [
             s.search("zzqqx yyxxq", 10, "or").collect(),
+            s.match_count("zzqqx yyxxq", "or"),
+            s.count_boolean("zzqqx AND yyxxq"),
             s.search_wildcard("zzqqx", 10).collect(),
             search_boolean(spark, pos_index, "zzqqx AND yyxxq",
                            10).collect(),
@@ -239,6 +276,8 @@ def _warm_gated(s):
                          10).collect(),
         s.search_many({"a": "window agg", "b": "scan"}, 10,
                       "or").collect(),
+        s.match_count("window agg scan", "or"),
+        s.count_boolean("window AND (agg OR scan) NOT merge"),
     ]
 
 

@@ -108,7 +108,6 @@ def test_or_kernel_skips_block_decode(monkeypatch):
     kernel must never doc-decode most of the hot term's blocks, while
     returning the exact brute-force top-k."""
     import numpy as np
-    import pandas as pd
 
     from datastream_io_spark import K1, B
     from datastream_io_spark.operators import indexed_search as IX
@@ -124,15 +123,14 @@ def test_or_kernel_skips_block_decode(monkeypatch):
     rare_blocks = mk(np.arange(10), 5)              # 1 block, high idf
     hot_blocks = mk(np.arange(10_000), 1)           # 79 blocks, low idf
     idf = {"rare": 5.0, "hot": 0.2}
-    pdf = pd.DataFrame({"term": ["rare", "hot"],
-                        "blocks": [rare_blocks, hot_blocks]})
+    term_rows = [("rare", rare_blocks), ("hot", hot_blocks)]
 
     calls = []
     real = IX.decode_block_docs
     monkeypatch.setattr(IX, "decode_block_docs",
                         lambda b: (calls.append(1), real(b))[1])
 
-    out = IX._wand_split(pdf, idf, avgdl, 10, "or", 2)
+    ids, scores = IX._wand_split(term_rows, idf, avgdl, 10, "or", 2)
 
     total_blocks = len(rare_blocks) + len(hot_blocks)
     assert len(calls) < total_blocks / 4, (len(calls), total_blocks)
@@ -142,8 +140,8 @@ def test_or_kernel_skips_block_decode(monkeypatch):
         return tf * (K1 + 1) / (tf + K1 * (1 - B + B * dl / avgdl))
 
     exp = 5.0 * tfn(5) + 0.2 * tfn(1)
-    assert list(out["doc_id"]) == list(range(10))
-    np.testing.assert_allclose(out["score"], exp, rtol=1e-12)
+    assert list(ids) == list(range(10))
+    np.testing.assert_allclose(scores, exp, rtol=1e-12)
 
 
 def test_or_kernel_matches_full_decode_on_random_corpus():
@@ -151,7 +149,6 @@ def test_or_kernel_matches_full_decode_on_random_corpus():
     a naive decode-everything scorer on a randomized multi-term corpus
     (ties, singletons, interleaved ranges)."""
     import numpy as np
-    import pandas as pd
 
     from datastream_io_spark.operators import indexed_search as IX
     from datastream_io_spark.operators.codec import decode_blocks, encode_blocks
@@ -166,10 +163,8 @@ def test_or_kernel_matches_full_decode_on_random_corpus():
         dls = rng.integers(4, 40, size=n).astype(np.int64)
         terms[t] = (ids, tfs, dls, idf)
 
-    pdf = pd.DataFrame({
-        "term": list(terms),
-        "blocks": [encode_blocks(i, f, d) for i, f, d, _ in terms.values()],
-    })
+    term_rows = [(t, encode_blocks(i, f, d))
+                 for t, (i, f, d, _) in terms.items()]
     idf = {t: v[3] for t, v in terms.items()}
 
     # naive reference: decode everything, exact-score every doc
@@ -186,9 +181,10 @@ def test_or_kernel_matches_full_decode_on_random_corpus():
     k = 15
     exp = sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
 
-    out = IX._wand_split(pdf, idf, avgdl, k, "or", len(terms))
-    assert list(out["doc_id"]) == [d for d, _ in exp]
-    np.testing.assert_allclose(out["score"], [s for _, s in exp], rtol=1e-12)
+    ids, scores = IX._wand_split(term_rows, idf, avgdl, k, "or",
+                                 len(terms))
+    assert list(ids) == [d for d, _ in exp]
+    np.testing.assert_allclose(scores, [s for _, s in exp], rtol=1e-12)
 
 
 def test_filtered_search_vs_bruteforce(spark, pos_index, pos_pdf):
@@ -255,18 +251,10 @@ def test_filtered_two_pass_skips_full_decode(spark, pos_index, pos_pdf):
     cut) must fall back — and both must stay exact."""
     from datastream_io_spark.operators import indexed_search as IX
 
+    s = IX.Searcher(spark, pos_index, dict_cache="spark")
+
     def run(where, k=5, q="window agg", mode="or"):
-        stats = IX.read_stats(pos_index)
-        mode2, terms, phrase = IX._plan_terms(q, mode, stats)
-        rows = IX.lookup_terms(spark, pos_index, terms,
-                               int(stats["n_buckets"]))
-        idf = {r["term"]: float(r["idf"]) for r in rows}
-        buckets = sorted({int(r["term_bucket"]) for r in rows})
-        prows = IX.postings_rows(spark, pos_index, buckets, sorted(idf))
-        tomb, _ = IX._tombstone_state(spark, pos_index)
-        df, fell_back = IX._filtered_topk(
-            spark, pos_index, prows, idf, float(stats["avgdl"]),
-            len(terms), k, mode2, False, phrase, where, tomb)
+        df, fell_back = s._filtered_topk(s._plan(q, mode), k, where)
         return [(int(r.doc_id), round(float(r.score), 9))
                 for r in df.collect()], fell_back
 
@@ -563,10 +551,12 @@ def test_search_all_partitions_matches_unpartitioned(
     assert search_all_partitions(spark, root, "window agg", 3).columns \
         == ["lang", "doc_id", "score"]
 
-    # job-count contract: plan + rank + display = 3 jobs at ANY number
-    # of partition values (AQE off for the union collects; explicit
-    # dict/docs schemas — no per-subindex inference jobs), the caller's
-    # collect included: the result is a local relation
+    # job-count contract: plan + display = 2 jobs at ANY number of
+    # partition values (AQE off for the union collects; explicit
+    # dict/docs schemas — no per-subindex inference jobs); each
+    # subindex's Σ df passes the single-task gate, so it ranks on the
+    # driver and the merge runs in Python. The caller's collect is
+    # included: the result is a local relation
     sc = spark.sparkContext
     st = sc.statusTracker()
     sc.setJobGroup("gap_jobs", "job-count assertion")
@@ -576,7 +566,7 @@ def test_search_all_partitions_matches_unpartitioned(
     _time.sleep(0.5)
     n_jobs = len(st.getJobIdsForGroup("gap_jobs"))
     sc.setJobGroup(None, None)
-    assert n_jobs <= 3, n_jobs
+    assert n_jobs == 2, n_jobs
 
     # deletes inside one subindex are honored by the global merge
     sub = os.path.join(root, "lang=de")
@@ -1046,9 +1036,10 @@ def test_boolean_all_partitions_matches_unpartitioned(
         spark, root, "window AND agg", 10**6,
         with_doc_cols=True).collect())  # non-empty sanity
 
-    # warm boolean economy: expansion and planning off the caches, the
-    # ranking union is the one Spark job, and the caller's collect of
-    # the local-relation result adds none
+    # warm boolean economy: expansion and planning off the caches, each
+    # subindex ranks on the driver under the single-task gate and the
+    # merge runs in Python — no Spark job, the caller's collect of the
+    # local-relation result included
     import time as _time
 
     sc = spark.sparkContext
@@ -1058,14 +1049,14 @@ def test_boolean_all_partitions_matches_unpartitioned(
     _time.sleep(0.5)
     n_jobs = len(st.getJobIdsForGroup("psb_jobs"))
     sc.setJobGroup(None, None)
-    assert n_jobs == 1, n_jobs
+    assert n_jobs == 0, n_jobs
 
 
 def test_partitioned_searcher_matches_cold(spark, tmp_path):
     """r5: the warm PartitionedSearcher (per-subindex dict caches +
     resolved scans, merged stats precomputed) equals the cold
     cross-partition search on every mode and plans with zero Spark
-    jobs — a global query costs exactly ONE job without display
+    jobs — a gated global query costs no job at all without display
     columns."""
     import time as _time
 
@@ -1099,10 +1090,11 @@ def test_partitioned_searcher_matches_cold(spark, tmp_path):
                               with_doc_cols=True).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
-    # one-job economy: planning is driver-side; the ranking collect
-    # inside ps.search is the only Spark job. Its result is built from
-    # Arrow (a local relation), so the caller's .collect(), measured
-    # INSIDE the group, adds none.
+    # zero-job economy: planning is driver-side, and each subindex's
+    # Σ df passes the single-task gate, so it ranks on the driver and
+    # the merge runs in Python. The result is built from Arrow (a local
+    # relation), so the caller's .collect(), measured INSIDE the group,
+    # adds none.
     sc = spark.sparkContext
     st = sc.statusTracker()
     sc.setJobGroup("ps_jobs", "warm global query")
@@ -1110,7 +1102,7 @@ def test_partitioned_searcher_matches_cold(spark, tmp_path):
     _time.sleep(0.5)
     n_jobs = len(st.getJobIdsForGroup("ps_jobs"))
     sc.setJobGroup(None, None)
-    assert n_jobs <= 1, n_jobs
+    assert n_jobs == 0, n_jobs
 
     # routed per-value handle (partition-local statistics)
     r = ps.route("de").search("window agg", 5, "and").collect()
