@@ -186,6 +186,7 @@ def search_bm25f(
         decode_block_tfs,
     )
     from datastream_io_spark.operators.indexed_search import (
+        _SCORES_SCHEMA,
         _empty_frame,
         _plan_terms,
         postings_rows,
@@ -213,7 +214,7 @@ def search_bm25f(
                 "runtime BM25F does not resolve tombstones on field "
                 f"indexes yet (field={f} has deletes) — purge the "
                 "field indexes or use the compiled repetition index")
-    empty = _empty_frame(spark, "doc_id long, score double")
+    empty = _empty_frame(spark, _SCORES_SCHEMA)
     fields = [f for f in manifest["fields"] if f in field_weights]
     if not fields:
         return empty

@@ -236,7 +236,7 @@ def tree_has_expansion(node: tuple) -> bool:
 def expand_tree(node: tuple, expander) -> tuple:
     """Rewrite wildcard/fuzzy leaves to the OR of their index-term
     expansions via ``expander(mode, base, dist) -> [terms]`` (dict
-    scan, sidecar range scan, or a driver-cached dict — same cap and
+    scan, sidecar range scan, or a driver vocabulary — same cap and
     (df desc, term asc) order as the standalone Q18/Q20 surfaces). An
     empty expansion becomes ``("term", "")`` — the empty string can
     never be an index term, so the leaf evaluates to the empty set
@@ -459,8 +459,8 @@ def plan_boolean(query: str, stats: dict,
 def search_boolean(spark: SparkSession, index_dir: str, query: str,
                    k: int = 10, with_doc_cols: bool = False) -> DataFrame:
     """Q11 — boolean-filtered BM25 top-k over the built index."""
-    return Searcher(spark, index_dir, dict_cache="spark").search_boolean(
-        query, k, with_doc_cols)
+    return Searcher(spark, index_dir).search_boolean(query, k,
+                                                     with_doc_cols)
 
 
 def count_boolean(spark: SparkSession, index_dir: str,
@@ -472,5 +472,4 @@ def count_boolean(spark: SparkSession, index_dir: str,
     :func:`~datastream_io_spark.operators.indexed_search.match_count`
     (the "about N results" display primitive). Wildcard/fuzzy leaves
     and quoted/proximity phrases all apply."""
-    return Searcher(spark, index_dir, dict_cache="spark").count_boolean(
-        query)
+    return Searcher(spark, index_dir).count_boolean(query)

@@ -1524,8 +1524,9 @@ def _purge_deleted_locked(spark: SparkSession, index_dir: str) -> dict:
 
     # merge.json is the lineage the inspect/verify tooling recounts
     # against — keep it true after the rewrite; _INDEX_SUCCESS carries
-    # the recorded n_terms that Searcher(dict_cache='auto') and sidecar
-    # sizing read, and a purge can shrink the dictionary
+    # the recorded n_terms that the dictionary placement
+    # (indexed_search._dict_on_driver) and sidecar sizing read, and a
+    # purge can shrink the dictionary
     n_terms = int(spark.read.parquet(
         os.path.join(index_dir, "dict")).count())
     merge_path = os.path.join(index_dir, "manifest", "merge.json")

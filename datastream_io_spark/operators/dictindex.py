@@ -92,7 +92,8 @@ def _index_n_terms(index_dir: str) -> int | None:
         v = json.load(f).get("n_terms")
     # absent key → None (NOT a sentinel int): callers fall back to
     # counting the dictionary; -1 would read as "tiny dict" and make
-    # dict_cache='auto' pull an arbitrarily large dict into the driver
+    # the dictionary placement pull an arbitrarily large dict into the
+    # driver
     return None if v is None else int(v)
 
 

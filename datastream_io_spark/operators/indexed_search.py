@@ -98,10 +98,13 @@ from datastream_io_spark.operators.relational_search import (
 )
 
 
-# 'auto' dict_cache threshold: a term row in the driver cache is ~50
-# bytes (term + df/cf/idf/bucket in a pandas frame) — 4M terms ≈ 200 MB,
-# comfortably inside a driver heap; past it the dictionary stays in
-# Spark (bucket-pruned lookup job per query, never materialized whole)
+# dictionary placement (:func:`_dict_on_driver`): a dictionary of at
+# most this many terms is read on the driver — lookups through the
+# term-rows cache, expansions over one pyarrow-read vocabulary per
+# handle (~50 bytes a term: 4M terms ≈ 200 MB, inside a driver heap);
+# a larger one stays in Spark (a bucket-pruned lookup job per query,
+# sidecar / dictionary scans for expansion), so a 10^12-file corpus
+# never pulls a 10^9-term dictionary into driver memory
 AUTO_DICT_DRIVER_MAX_TERMS = 4_000_000
 
 # single-task rank gate: when the dictionary says a query's total match
@@ -145,6 +148,14 @@ _DOC_COLS_SCHEMA = T.StructType(
     + [T.StructField(c, T.StringType())
        for c in ("repo", "path", "commit", "lang")]
     + [T.StructField("score", T.DoubleType())])
+# match_positions rows and snippets rows
+_POSITIONS_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType()),
+                                  T.StructField("term", T.StringType()),
+                                  T.StructField("pos", T.IntegerType())])
+_SNIPPETS_SCHEMA = T.StructType(
+    _SCORES_SCHEMA.fields
+    + [T.StructField("snippet", T.StringType()),
+       T.StructField("n_hits", T.IntegerType())])
 
 
 def _check_mode(mode: str) -> None:
@@ -218,13 +229,12 @@ class ArrowFrame(ClassicDataFrame):
         return self._table.to_pandas()
 
 
-def _empty_frame(spark: SparkSession, schema, rows=()) -> DataFrame:
-    """A frame of ``schema`` (DDL string or StructType) holding ``rows``
-    (tuples in schema order; none by default): an :class:`ArrowFrame`,
-    so collecting it makes no JVM call, and any Spark operation on it
-    builds its local relation once."""
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
+def _empty_frame(spark: SparkSession, schema: T.StructType,
+                 rows=()) -> DataFrame:
+    """A frame of ``schema`` holding ``rows`` (tuples in schema order;
+    none by default): an :class:`ArrowFrame`, so collecting it makes no
+    JVM call, and any Spark operation on it builds its local relation
+    once."""
     return ArrowFrame(spark, schema,
                       list(zip(*rows)) or [()] * len(schema.fields))
 
@@ -293,10 +303,51 @@ def _dict_dataset(index_dir: str):
             pa.schema([("term_bucket", pa.int32())]), flavor="hive"))
 
 
+def _dict_on_driver(index_dir: str) -> bool:
+    """Where the dictionary of ``index_dir`` is read: on the driver when
+    the build's recorded ``n_terms`` (counted with pyarrow when absent)
+    is at most ``AUTO_DICT_DRIVER_MAX_TERMS``, else by Spark."""
+    from datastream_io_spark.operators.dictindex import _index_n_terms
+
+    n_terms = _index_n_terms(index_dir)
+    if n_terms is None:
+        n_terms = _dict_dataset(index_dir).count_rows()
+    return n_terms <= AUTO_DICT_DRIVER_MAX_TERMS
+
+
+class _Vocab(NamedTuple):
+    """A driver dictionary's expansion vocabulary: its terms in term
+    order with their df / idf / bucket columns (a prefix is one
+    searchsorted range of ``terms``), and the term positions in length
+    order with those lengths (a fuzzy length band is one range of
+    ``lens``)."""
+
+    terms: np.ndarray
+    df: np.ndarray
+    idf: np.ndarray
+    bucket: np.ndarray
+    by_len: np.ndarray
+    lens: np.ndarray
+
+    @classmethod
+    def read(cls, index_dir: str) -> "_Vocab":
+        """``dict/`` read and sorted with pyarrow (no Spark job)."""
+        import pyarrow.compute as pc
+
+        t = (_dict_dataset(index_dir)
+             .to_table(columns=["term", "df", "idf", "term_bucket"])
+             .sort_by("term"))
+        lens = pc.utf8_length(t.column("term")).to_numpy().astype(np.int64)
+        by_len = np.argsort(lens, kind="stable")
+        return cls(t.column("term").to_numpy(), t.column("df").to_numpy(),
+                   t.column("idf").to_numpy(),
+                   t.column("term_bucket").to_numpy(), by_len, lens[by_len])
+
+
 class Searcher:
     """Query handle over a built index — the one place a query is
     planned, and, through :meth:`_run`, the one place it is executed.
-    Stats (and, per ``dict_cache``, the dictionary) load once. Every
+    Opening one reads ``stats.json`` and ``_INDEX_SUCCESS`` only. Every
     ranked, counted or faceted query plans its terms, buckets and Σ df
     payload estimate, then hands :meth:`_run` a plain-array per-split
     kernel: under the single-task gate the kernels run on the driver
@@ -305,20 +356,19 @@ class Searcher:
     Spark job (bucket-pruned postings scan → per-split kernels →
     top-k). ``with_doc_cols`` adds a broadcast join for the display
     columns either way. The module-level search functions are one-shot
-    Searchers with ``dict_cache='spark'``.
+    Searchers.
 
-    ``dict_cache`` — 'auto' (default) caches the dictionary on the
-    driver when it has ≤ AUTO_DICT_DRIVER_MAX_TERMS terms (read from
-    the build's recorded n_terms; counted once if absent) and keeps it
-    in Spark otherwise, so a 10^12-file corpus can't accidentally pull
-    a 10^9-term dictionary into driver memory. 'driver' / 'spark'
-    force either behavior. In Spark mode term lookup is
-    :func:`lookup_terms` per query (a pruned pyarrow read on small
-    dictionaries, else a bucket-pruned Spark job) and wildcard / fuzzy
-    / regex expansion scans the sidecar or dictionary with Spark.
+    The dictionary's recorded size places it (:func:`_dict_on_driver`,
+    the same rule for warm handles and one-shot calls): at most
+    ``AUTO_DICT_DRIVER_MAX_TERMS`` terms, lookups read the query's
+    ``dict/`` buckets with pyarrow and wildcard / fuzzy / regex
+    expansion scans a vocabulary read once per handle, on its first
+    expansion — zero Spark jobs for either. A larger dictionary stays
+    in Spark: a bucket-pruned lookup job per query, and expansion scans
+    the sidecar or dictionary (:func:`_expansion_rows_cold`).
 
     Driver-path reads (the postings rows of a gated query, and the
-    ``dict/`` rows :func:`lookup_terms` reads) go through the
+    ``dict/`` rows of a driver-dictionary lookup) go through the
     process-wide term-rows cache of
     :mod:`~datastream_io_spark.operators.postings_cache`, shared by
     every Searcher: a warm repeat of a term reads no file. Its entries
@@ -331,34 +381,13 @@ class Searcher:
     new Searcher; the cached idf/avgdl would otherwise be stale.
     """
 
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 dict_cache: str = "auto"):
-        if dict_cache not in ("auto", "driver", "spark"):
-            raise ValueError(
-                f"dict_cache must be 'auto', 'driver' or 'spark', got "
-                f"{dict_cache!r}")
+    def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
         self.stats = read_stats(index_dir)
         _check_format(self.stats, index_dir)
         self.avgdl = float(self.stats["avgdl"])
-        if dict_cache == "auto":
-            from datastream_io_spark.operators.dictindex import (
-                _index_n_terms,
-            )
-
-            n_terms = _index_n_terms(index_dir)
-            if n_terms is None:
-                n_terms = _dict_dataset(index_dir).count_rows()
-            dict_cache = ("driver"
-                          if n_terms <= AUTO_DICT_DRIVER_MAX_TERMS
-                          else "spark")
-        self._dict_pdf = None
-        if dict_cache == "driver":
-            # read with pyarrow (no Spark job): the same columns and
-            # dtypes as the Spark read's toPandas, term_bucket last
-            self._dict_pdf = (_dict_dataset(index_dir).to_table()
-                              .to_pandas().set_index("term"))
+        self._driver_dict = _dict_on_driver(index_dir)
         # warm PLAN cache: building a distributed rank DataFrame costs
         # ~60-100 ms of py4j + Catalyst analysis per call; identical
         # (query, k, mode) requests reuse the lazy plan — every collect
@@ -406,28 +435,9 @@ class Searcher:
         return df
 
     def _lookup(self, terms: list[str]) -> list:
-        """Dictionary rows of ``terms`` (absent terms have none): from
-        the driver-cached dict, else :func:`lookup_terms`' pruned
-        read."""
-        if not terms:
-            return []
-        if self._dict_pdf is not None:
-            # hash probes of the (unique) term index: no pass over the
-            # vocabulary; rows in ``terms`` order, which no caller uses
-            terms = np.asarray(list(dict.fromkeys(terms)), dtype=object)
-            at = self._dict_pdf.index.get_indexer(terms)
-            found = at >= 0
-            at = at[found]
-            return [
-                {"term": t, "term_bucket": int(b), "idf": float(i),
-                 "df": int(d)}
-                for t, b, i, d in zip(
-                    terms[found],
-                    *(self._dict_pdf[c].to_numpy()[at]
-                      for c in ("term_bucket", "idf", "df")))
-            ]
-        return lookup_terms(self.spark, self.index_dir, list(terms),
-                            int(self.stats["n_buckets"]))
+        """Dictionary rows of ``terms`` (absent terms have none)."""
+        return _dict_rows(self.spark, self.index_dir, terms,
+                          int(self.stats["n_buckets"]), self._driver_dict)
 
     def _plans(self, queries: dict, mode: str, slop: int = 2,
                ordered: bool = False) -> dict[str, _Plan]:
@@ -447,33 +457,21 @@ class Searcher:
               ordered: bool = False) -> _Plan | None:
         return self._plans({"": query}, mode, slop, ordered)[""]
 
-    # wildcard / fuzzy candidates without a whole-vocabulary pass: dict
-    # row positions in term order (a prefix is one searchsorted range)
-    # and in term-length order (the fuzzy length band is one range);
-    # built on the first such query of this handle
     @cached_property
-    def _terms_sorted(self) -> tuple[np.ndarray, np.ndarray]:
-        terms = self._dict_pdf.index.to_numpy(dtype=object)
-        order = np.argsort(terms, kind="stable")
-        return order, terms[order]
-
-    @cached_property
-    def _lens_sorted(self) -> tuple[np.ndarray, np.ndarray]:
-        lens = self._dict_pdf.index.str.len().to_numpy(np.int64)
-        order = np.argsort(lens, kind="stable")
-        return order, lens[order]
+    def _vocab(self) -> _Vocab:
+        return _Vocab.read(self.index_dir)
 
     def _expand(self, q: str, mode: str, max_dist: int,
                 max_expansions: int) -> list:
         """Wildcard / fuzzy / regex expansion of ``q``: the dictionary
         rows of its ``max_expansions`` highest-df terms (df desc, term
-        asc; None keeps all). From the driver-cached dict with zero
-        Spark jobs, else
-        :func:`_expansion_rows_cold`'s sidecar / dictionary scan."""
-        if self._dict_pdf is None:
+        asc; None keeps all). From the driver vocabulary with zero Spark
+        jobs, else :func:`_expansion_rows_cold`'s sidecar / dictionary
+        scan."""
+        if not self._driver_dict:
             return _expansion_rows_cold(self.spark, self.index_dir, q,
                                         mode, max_dist, max_expansions)
-        index = self._dict_pdf.index
+        v = self._vocab
         if mode == "regex":
             if not q:
                 return []
@@ -481,37 +479,31 @@ class Searcher:
 
             rx = re.compile(q)
             pos = np.flatnonzero(np.fromiter(
-                (rx.fullmatch(t) is not None for t in index), bool,
-                count=len(index)))
+                (rx.fullmatch(t) is not None for t in v.terms), bool,
+                count=len(v.terms)))
         elif mode == "wildcard":
             prefix = q.lower().rstrip("*")
             if not prefix:
                 return []
-            order, terms = self._terms_sorted
-            lo = np.searchsorted(terms, prefix, "left")
+            lo = np.searchsorted(v.terms, prefix, "left")
             end = _prefix_end(prefix)
-            hi = (len(terms) if end is None
-                  else np.searchsorted(terms, end, "left"))
-            pos = order[lo:hi]
+            hi = (len(v.terms) if end is None
+                  else np.searchsorted(v.terms, end, "left"))
+            pos = np.arange(lo, hi)
         else:
             q = _fuzzy_term(q)
             if not q:
                 return []
-            order, lens = self._lens_sorted
-            lo = np.searchsorted(lens, max(1, len(q) - max_dist), "left")
-            hi = np.searchsorted(lens, len(q) + max_dist, "right")
-            band = order[lo:hi]
-            pos = band[_levenshtein_within(
-                index.to_numpy(dtype=object)[band], lens[lo:hi], q,
-                max_dist)]
-        hits = self._dict_pdf.iloc[pos]
-        term = hits.index.to_numpy(dtype=object)
-        df, idf, bucket = (hits[c].to_numpy()
-                           for c in ("df", "idf", "term_bucket"))
-        top = sorted(range(len(term)),
-                     key=lambda i: (-df[i], term[i]))[:max_expansions]
-        return [{"term": term[i], "term_bucket": int(bucket[i]),
-                 "idf": float(idf[i]), "df": int(df[i])} for i in top]
+            lo = np.searchsorted(v.lens, max(1, len(q) - max_dist), "left")
+            hi = np.searchsorted(v.lens, len(q) + max_dist, "right")
+            band = v.by_len[lo:hi]
+            pos = np.sort(band[_levenshtein_within(
+                v.terms[band], v.lens[lo:hi], q, max_dist)])
+        # positions are in term order, so a stable sort on df desc
+        # breaks ties by term asc
+        top = pos[np.argsort(-v.df[pos], kind="stable")][:max_expansions]
+        return [{"term": v.terms[i], "term_bucket": int(v.bucket[i]),
+                 "idf": float(v.idf[i]), "df": int(v.df[i])} for i in top]
 
     def _expander(self, max_expansions: int = 128):
         """Boolean wildcard / fuzzy leaf expander over :meth:`_expand`
@@ -729,36 +721,37 @@ class Searcher:
     def search_wildcard(self, prefix: str, k: int = 10,
                         max_expansions: int = 128,
                         with_doc_cols: bool = False) -> DataFrame:
-        """:func:`search_wildcard` on this handle — with the driver
-        dict, expansion costs zero Spark jobs."""
+        """:func:`search_wildcard` on this handle — with a driver
+        dictionary, expansion costs zero Spark jobs."""
         return self._expansion_search(prefix, "wildcard", k, 0,
                                       max_expansions, with_doc_cols)
 
     def search_fuzzy(self, term: str, k: int = 10, max_dist: int = 1,
                      max_expansions: int = 128,
                      with_doc_cols: bool = False) -> DataFrame:
-        """:func:`search_fuzzy` on this handle — with the driver dict,
-        an exact length-band prune shrinks the candidate set, then one
-        vectorized distance DP per term length checks the band
-        (:func:`_levenshtein_within`)."""
+        """:func:`search_fuzzy` on this handle — with a driver
+        dictionary, an exact length-band prune shrinks the candidate
+        set, then one vectorized distance DP per term length checks the
+        band (:func:`_levenshtein_within`)."""
         return self._expansion_search(term, "fuzzy", k, max_dist,
                                       max_expansions, with_doc_cols)
 
     def search_regex(self, pattern: str, k: int = 10,
                      max_expansions: int = 128,
                      with_doc_cols: bool = False) -> DataFrame:
-        """:func:`search_regex` on this handle. Dialect note: with the
-        driver dict, expansion is ``re.fullmatch`` in Python, in Spark
-        mode JVM regex — identical on the common syntax subset
-        (parity-tested); exotic constructs may differ between the two,
-        same caveat Lucene documents across its regexp APIs."""
+        """:func:`search_regex` on this handle. Dialect note: a driver
+        dictionary expands with Python ``re.fullmatch``, one past the
+        dictionary gate with JVM regex (``rlike``) — identical on the
+        common syntax subset (parity-tested); exotic constructs may
+        differ between the two, same caveat Lucene documents across its
+        regexp APIs."""
         return self._expansion_search(pattern, "regex", k, 0,
                                       max_expansions, with_doc_cols)
 
     def search_boolean(self, query: str, k: int = 10,
                        with_doc_cols: bool = False) -> DataFrame:
         """:func:`~datastream_io_spark.operators.boolean_search.
-        search_boolean` on this handle — with the driver dict,
+        search_boolean` on this handle — with a driver dictionary,
         wildcard / fuzzy leaves expand with zero Spark jobs."""
         return self._cached_plan(
             ("boolean", query, k, with_doc_cols),
@@ -893,11 +886,11 @@ class Searcher:
                     mode: str = "and", max_dist: int = 1,
                     max_expansions: int = 128, slop: int = 2,
                     ordered: bool = False) -> DataFrame:
-        """:func:`search_many` on this handle — with the driver dict,
-        ALL planning (term lookup, boolean idf, wildcard / fuzzy / regex
-        expansion, near windows) runs off the cache: the whole batch
-        costs at most ONE Spark job regardless of mode (none under the
-        single-task gate)."""
+        """:func:`search_many` on this handle — with a driver
+        dictionary, ALL planning (term lookup, boolean idf, wildcard /
+        fuzzy / regex expansion, near windows) runs on the driver: the
+        whole batch costs at most ONE Spark job regardless of mode (none
+        under the single-task gate)."""
         if mode not in ("and", "or", "phrase", "boolean", "wildcard",
                         "fuzzy", "regex", "near"):
             raise ValueError(
@@ -1715,7 +1708,7 @@ def match_positions(spark: SparkSession, index_dir: str, query: str,
             "build_index(..., positions=True)")
     terms = parse_query(query, stats["tokenizer"])
     if not terms or not doc_ids:
-        return _empty_frame(spark, "doc_id long, term string, pos int")
+        return _empty_frame(spark, _POSITIONS_SCHEMA)
     n_buckets = int(stats["n_buckets"])
     buckets = sorted({term_bucket(t, n_buckets) for t in terms})
     ids = np.sort(np.asarray(list(doc_ids), np.int64))
@@ -1735,7 +1728,7 @@ def match_positions(spark: SparkSession, index_dir: str, query: str,
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    return prows.mapInPandas(kernel, "doc_id long, term string, pos int")
+    return prows.mapInPandas(kernel, _POSITIONS_SCHEMA)
 
 
 def snippets(spark: SparkSession, index_dir: str,
@@ -1770,8 +1763,7 @@ def snippets(spark: SparkSession, index_dir: str,
         top = search_indexed(spark, index_dir, query, k, mode,
                              with_doc_cols=True).collect()
     if not top:
-        return _empty_frame(
-            spark, "doc_id long, score double, snippet string, n_hits int")
+        return _empty_frame(spark, _SNIPPETS_SCHEMA)
     mp = match_positions(spark, index_dir, query,
                          [r.doc_id for r in top])
     pos_of = mp.groupBy("doc_id").agg(
@@ -1783,8 +1775,7 @@ def snippets(spark: SparkSession, index_dir: str,
                 f"index at {index_dir} stores no content (built without "
                 "store_content=True) — pass the source corpus DataFrame")
         scores = spark.createDataFrame(
-            [(r.doc_id, r.score) for r in top],
-            "doc_id long, score double")
+            [(r.doc_id, r.score) for r in top], _SCORES_SCHEMA)
         with_text = (
             docs.join(F.broadcast(scores), "doc_id")
             .join(F.broadcast(pos_of), "doc_id")
@@ -1824,8 +1815,7 @@ def snippets(spark: SparkSession, index_dir: str,
                 outs["n_hits"].append(int(cnt[best]))
             yield pd.DataFrame(outs)
 
-    out = with_text.mapInPandas(
-        kernel, "doc_id long, score double, snippet string, n_hits int")
+    out = with_text.mapInPandas(kernel, _SNIPPETS_SCHEMA)
     return out.orderBy(F.desc("score"), F.asc("doc_id"))
 
 
@@ -1854,7 +1844,7 @@ def search_many(spark: SparkSession, index_dir: str,
     per-query (score desc, doc_id asc) top-k — each query's rows are
     identical to its individual single-query answer (parity-tested per
     mode)."""
-    return Searcher(spark, index_dir, dict_cache="spark").search_many(
+    return Searcher(spark, index_dir).search_many(
         queries, k, mode, max_dist, max_expansions, slop, ordered)
 
 
@@ -1872,10 +1862,10 @@ def _empty_many(spark: SparkSession) -> DataFrame:
 def _expansion_rows_cold(spark: SparkSession, index_dir: str, q: str,
                          mode: str, max_dist: int,
                          max_expansions: int) -> list:
-    """One query's wildcard/fuzzy/regex expansion rows without a
-    driver-cached dict: Spark scan of the sidecar when fresh, of the
-    base dictionary otherwise; same (df desc, term asc) cap as
-    :meth:`Searcher._expand`'s cached path."""
+    """One query's wildcard/fuzzy/regex expansion rows from a
+    dictionary past the driver gate: Spark scan of the sidecar when
+    fresh, of the base dictionary otherwise; same (df desc, term asc)
+    cap as :meth:`Searcher._expand`'s driver vocabulary."""
     from datastream_io_spark.operators.dictindex import (
         fuzzy_expansion_rows,
         prefix_expansion_df,
@@ -2174,8 +2164,11 @@ def search_wildcard(spark: SparkSession, index_dir: str, prefix: str,
     rewrite: a doc's score is the sum of its matching expansions'
     BM25 contributions, MaxScore pruning included for free).
 
-    Expansion reads the term-RANGE-partitioned ``dict_sorted/``
-    companion when present and fresh (build_term_sidecars): the pushed
+    A dictionary placed on the driver (:func:`_dict_on_driver`)
+    expands with one searchsorted range of the handle's term-sorted
+    vocabulary (no Spark job). Past the dictionary gate, expansion
+    reads the term-RANGE-partitioned ``dict_sorted/`` companion when
+    present and fresh (build_term_sidecars): the pushed
     StartsWith predicate then skips every file whose term range misses
     the prefix — footer-only I/O outside the prefix's range files, the
     dictionary-scale path. Otherwise ONE dict/ scan with the predicate
@@ -2184,7 +2177,7 @@ def search_wildcard(spark: SparkSession, index_dir: str, prefix: str,
     highest-df terms (df desc, term asc — deterministic); a hit of the
     cap is the documented approximation at 10^12-file scale: the
     dropped expansions are the rarest, i.e. the smallest score mass."""
-    return Searcher(spark, index_dir, dict_cache="spark").search_wildcard(
+    return Searcher(spark, index_dir).search_wildcard(
         prefix, k, max_expansions, with_doc_cols)
 
 
@@ -2228,18 +2221,22 @@ def search_regex(spark: SparkSession, index_dir: str, pattern: str,
     'config'), then rank with the normal OR-mode kernel, same
     (df desc, term asc) ``max_expansions`` cap as wildcard/fuzzy.
 
-    Scale path: the pattern's literal prefix (chars before the first
-    metacharacter) prunes the expansion scan — via the term-range
-    ``dict_sorted/`` sidecar when fresh (file skipping), else as a
-    pushed StartsWith alongside the rlike (row-group skipping). A
-    prefix-less pattern (``.*ser``) honestly scans the dictionary —
-    the same cost class every engine pays for leading-wildcard terms.
-    Patterns use JVM regex syntax (executor-side ``rlike``) and are
-    matched VERBATIM — index terms are lowercase, so write patterns in
-    lowercase (an uppercase literal matches nothing, as in Lucene;
-    lowercasing the pattern here would invert escape classes:
+    A dictionary placed on the driver (:func:`_dict_on_driver`)
+    expands with Python ``re.fullmatch`` over the handle's vocabulary
+    (no Spark job). Past the dictionary gate, the scale path: the
+    pattern's literal prefix (chars before the first metacharacter)
+    prunes the expansion scan — via the term-range ``dict_sorted/``
+    sidecar when fresh (file skipping), else as a pushed StartsWith
+    alongside the rlike (row-group skipping) — and the pattern runs as
+    JVM regex (executor-side ``rlike``). A prefix-less pattern
+    (``.*ser``) honestly scans the dictionary — the same cost class
+    every engine pays for leading-wildcard terms. Write patterns in the
+    syntax both dialects share (see :meth:`Searcher.search_regex`);
+    they are matched VERBATIM — index terms are lowercase, so write
+    patterns in lowercase (an uppercase literal matches nothing, as in
+    Lucene; lowercasing the pattern here would invert escape classes:
     ``\\W``.lower() is ``\\w``)."""
-    return Searcher(spark, index_dir, dict_cache="spark").search_regex(
+    return Searcher(spark, index_dir).search_regex(
         pattern, k, max_expansions, with_doc_cols)
 
 
@@ -2269,8 +2266,12 @@ def search_fuzzy(spark: SparkSession, index_dir: str, term: str,
     OR-mode BM25 kernel over the expansions (same multi-term rewrite
     as Q18; a doc matching several variants sums their contributions).
 
-    Expansion prefers the ``dict_ngrams/`` gram sidecar when present
-    and fresh (build_term_sidecars): the Gravano-style positional
+    A dictionary placed on the driver (:func:`_dict_on_driver`)
+    expands from the handle's vocabulary: the length band is one
+    searchsorted range, checked by one vectorized distance DP per term
+    length (no Spark job). Past the dictionary gate, expansion prefers
+    the ``dict_ngrams/`` gram sidecar when present and fresh
+    (build_term_sidecars): the Gravano-style positional
     q-gram count filter reads ONLY the query grams' bucket directories
     — a bounded slice at any dictionary size — then verifies survivors
     with the JVM levenshtein. Sound, so results are identical to the
@@ -2282,7 +2283,7 @@ def search_fuzzy(spark: SparkSession, index_dir: str, term: str,
     threshold; no UDF), so the distance computation stays distributed.
     Cap semantics match Q18: highest-df expansions kept,
     deterministically."""
-    return Searcher(spark, index_dir, dict_cache="spark").search_fuzzy(
+    return Searcher(spark, index_dir).search_fuzzy(
         term, k, max_dist, max_expansions, with_doc_cols)
 
 
@@ -2307,7 +2308,7 @@ def facet_counts(spark: SparkSession, index_dir: str, query: str,
 
     ``where`` optionally restricts the counted docs (facets of a
     filtered result page)."""
-    return Searcher(spark, index_dir, dict_cache="spark").facet_counts(
+    return Searcher(spark, index_dir).facet_counts(
         query, facet_col, mode, where)
 
 
@@ -2319,7 +2320,7 @@ def match_count(spark: SparkSession, index_dir: str, query: str,
     data crossing the wire is one integer per split at any corpus
     size. The primitive behind partitioned facet counts
     (:func:`~datastream_io_spark.operators.partitioned.facet_counts_partitioned`)."""
-    return Searcher(spark, index_dir, dict_cache="spark").match_count(
+    return Searcher(spark, index_dir).match_count(
         query, mode)
 
 
@@ -2347,8 +2348,8 @@ def facet_counts_grouped(spark: SparkSession, index_dir: str,
     partitioned root (:mod:`~datastream_io_spark.operators.partitioned`)
     amortizes that scan away entirely; this path is the exact answer
     for ad-hoc columns."""
-    return (Searcher(spark, index_dir, dict_cache="spark")
-            .facet_counts_grouped(query, facet_col, mode))
+    return Searcher(spark, index_dir).facet_counts_grouped(
+        query, facet_col, mode)
 
 
 def lookup_terms(spark: SparkSession, index_dir: str, terms: list[str],
@@ -2359,32 +2360,33 @@ def lookup_terms(spark: SparkSession, index_dir: str, terms: list[str],
     |q| bucket directories the query touches — directory-level
     partition pruning, same trick as the postings scan.
 
-    When the build recorded a small dictionary (same
-    ``AUTO_DICT_DRIVER_MAX_TERMS`` gate as the warm Searcher's driver
-    cache), each bucket's terms come from
-    :func:`~datastream_io_spark.operators.postings_cache.bucket_term_rows`:
-    the process-wide term-rows cache, else one pruned pyarrow read of
-    the bucket files — no Spark job, and no read at all for terms
-    looked up before against the same files. Large dictionaries keep
-    the distributed lookup."""
+    A dictionary placed on the driver (:func:`_dict_on_driver`) is read
+    through :func:`~datastream_io_spark.operators.postings_cache.
+    bucket_term_rows`: the process-wide term-rows cache, else one
+    pruned pyarrow read of the bucket files — no Spark job, and no read
+    at all for terms looked up before against the same files. Larger
+    dictionaries keep the distributed lookup."""
     if n_buckets is None:
         n_buckets = int(read_stats(index_dir)["n_buckets"])
+    return _dict_rows(spark, index_dir, terms, n_buckets,
+                      _dict_on_driver(index_dir))
 
-    from datastream_io_spark.operators.dictindex import _index_n_terms
-    n_terms = _index_n_terms(index_dir)
-    if n_terms is not None and n_terms <= AUTO_DICT_DRIVER_MAX_TERMS:
-        from pyspark.sql import Row
 
-        out = []
-        for k, ts in _terms_by_bucket(terms, n_buckets).items():
-            bdir = os.path.join(index_dir, "dict", f"term_bucket={k}")
-            for term, rows in bucket_term_rows(bdir, _DICT_COLS,
-                                               ts).items():
-                for df_, cf_, idf_ in rows:
-                    out.append(Row(term=term, df=df_, cf=cf_, idf=idf_,
-                                   term_bucket=k))
-        return out
-
+def _dict_rows(spark: SparkSession, index_dir: str, terms: list[str],
+               n_buckets: int, on_driver: bool) -> list:
+    """:func:`lookup_terms` with the placement decided: the rows
+    (``term``, ``df``, ``cf``, ``idf``, ``term_bucket``) of ``terms``,
+    read on the driver when ``on_driver``, else by one Spark job."""
+    if not terms:
+        return []
+    if on_driver:
+        return [{"term": term, "df": df, "cf": cf, "idf": idf,
+                 "term_bucket": k}
+                for k, ts in _terms_by_bucket(terms, n_buckets).items()
+                for term, rows in bucket_term_rows(
+                    os.path.join(index_dir, "dict", f"term_bucket={k}"),
+                    _DICT_COLS, ts).items()
+                for df, cf, idf in rows]
     buckets = sorted({term_bucket(t, n_buckets) for t in terms})
     d = spark.read.parquet(os.path.join(index_dir, "dict"))
     return d.where(
@@ -2424,7 +2426,7 @@ def search_indexed(
     docs before the global TakeOrdered — correct for any predicate; at
     100-TB scale a HOT filter column belongs in the index key instead
     (one index per lang, same layout), which this API composes with."""
-    return Searcher(spark, index_dir, dict_cache="spark").search(
+    return Searcher(spark, index_dir).search(
         query, k, mode, with_doc_cols, where)
 
 
@@ -2450,7 +2452,7 @@ def search_near(
     streams (decoded once per (term, block), only for blocks holding
     candidates), per-split k-cut, one global TakeOrdered. Positional
     index required."""
-    return Searcher(spark, index_dir, dict_cache="spark").search_near(
+    return Searcher(spark, index_dir).search_near(
         query, k, slop, ordered, with_doc_cols)
 
 
@@ -2497,9 +2499,8 @@ def mlt_terms(spark: SparkSession, index_dir: str, doc_id: int,
               corpus: DataFrame | None = None) -> list[str]:
     """The 'interesting terms' of one stored doc (Lucene MoreLikeThis
     selection) — see :meth:`Searcher._mlt_selection` for the mechanics."""
-    return [r["term"] for r in
-            Searcher(spark, index_dir, dict_cache="spark")
-            ._mlt_selection(doc_id, max_terms, corpus)]
+    return [r["term"] for r in Searcher(spark, index_dir)._mlt_selection(
+        doc_id, max_terms, corpus)]
 
 
 def more_like_this(
@@ -2518,7 +2519,7 @@ def more_like_this(
     evicting the source can never starve the page), one global
     TakeOrdered. Total Spark jobs: docs-row fetch + dict lookup +
     ranking (the selection rows carry idf/bucket — no re-lookup)."""
-    return Searcher(spark, index_dir, dict_cache="spark").more_like_this(
+    return Searcher(spark, index_dir).more_like_this(
         doc_id, k, max_terms, corpus, with_doc_cols)
 
 
@@ -2552,7 +2553,7 @@ def explain_query(spark: SparkSession, index_dir: str, query: str,
     computed entirely from dict/stats reads (postings are never
     touched), so it is safe to call against a production index at any
     scale. Returns a plain dict (stable keys, JSON-serializable)."""
-    searcher = Searcher(spark, index_dir, dict_cache="spark")
+    searcher = Searcher(spark, index_dir)
     stats = searcher.stats
     n_buckets = int(stats["n_buckets"])
     out = {

@@ -43,7 +43,9 @@ from datastream_io_spark.functions.xxhash import term_bucket
 from datastream_io_spark.operators.build import DICT_SCHEMA, build_index
 from datastream_io_spark.operators.indexed_search import (
     ArrowFrame,
+    Searcher,
     _empty_frame,
+    _empty_topk,
     search_indexed,
 )
 from datastream_io_spark.session import aqe_disabled
@@ -170,7 +172,8 @@ def facet_counts_partitioned(
     manifest = read_partitioned(root)
     by = manifest["by"]
     values = sorted(manifest["values"])
-    empty = _empty_frame(spark, f"{by} string, n_docs long")
+    schema = _counts_schema(by)
+    empty = _empty_frame(spark, schema)
     if not values:
         return empty
 
@@ -193,10 +196,8 @@ def facet_counts_partitioned(
             # big-tombstone case)
             rows = [(u, match_count(spark, _subdir(root, by, u), query,
                                     mode)) for u in values]
-            return _empty_frame(
-                spark, f"{by} string, n_docs long",
-                sorted(((u, n) for u, n in rows if n),
-                       key=lambda r: (-r[1], r[0])))
+            return _empty_frame(spark, schema, sorted(
+                ((u, n) for u, n in rows if n), key=lambda r: (-r[1], r[0])))
         # keep the handle (not .value): a captured handle pickles as a
         # broadcast stub and workers fetch the array via the broadcast
         # store, whereas materialized arrays (up to 4M ids × 8 B per
@@ -233,7 +234,7 @@ def facet_counts_partitioned(
     # the collected result is ≤ V tiny rows, driver-safe by definition.
     rows = _collect_no_aqe(spark, cand, shuffle_partitions=n_groups)
     rows.sort(key=lambda r: (-r["n_docs"], r["_fv"]))
-    return _empty_frame(spark, f"{by} string, n_docs long",
+    return _empty_frame(spark, schema,
                         [(r["_fv"], r["n_docs"]) for r in rows])
 
 
@@ -251,12 +252,7 @@ def search_partitioned(
     empty partition is an answer, not an error."""
     manifest = read_partitioned(root)
     if str(value) not in manifest["values"]:
-        # same schema as the hit case, so callers can select doc cols
-        # without branching on emptiness
-        schema = ("doc_id long, repo string, path string, commit string, "
-                  "lang string, score double") if with_doc_cols else \
-                 "doc_id long, score double"
-        return _empty_frame(spark, schema)
+        return _empty_topk(spark, with_doc_cols)
     return search_indexed(
         spark, _subdir(root, manifest["by"], value), query, k, mode,
         with_doc_cols=with_doc_cols)
@@ -293,21 +289,23 @@ def search_all_partitions(
     stay valid because block max_tf/min_dl are data properties and the
     idf/avgdl they are scaled by are the ones passed in.
 
-    A one-shot :class:`PartitionedSearcher` with ``dict_cache='spark'``
-    (opening it reads each subindex's stats, no Spark job). Plan shape
-    (job-count, not just row-count, is the contract — assertion-tested):
-    ONE planning job (union of every subindex's bucket-pruned,
-    DICT_SCHEMA-resolved dict scan, tagged by value, ≤|q| rows per
-    subindex collected), ONE ranking job (union of per-subindex
-    candidate kernels → a single global TakeOrdered), plus ONE ≤k-row
-    display job under ``with_doc_cols`` (per-branch doc_id pushdown,
-    only hit subindexes read); the result is an ``ArrowFrame``, so the
-    caller's collect adds none — 2 jobs, 3 with doc cols. The union
-    collects run with AQE off (:func:`_collect_no_aqe` — AQE gives each
-    union branch its own job id). A subindex missing some AND/phrase
-    term contributes nothing and is pruned at plan time — its postings
-    are never scanned. Subindexes whose tombstones exceed the broadcast
-    cap get their per-split join delivery as usual (the tomb column is
+    A one-shot :class:`PartitionedSearcher` (opening it reads each
+    subindex's stats, no Spark job). Job count (the contract —
+    assertion-tested; the result is an ``ArrowFrame``, so the caller's
+    collect adds none): the term lookup reads each driver-placed
+    dictionary with pyarrow (no job), and the subindexes over the
+    dictionary gate share ONE union scan of their bucket-pruned,
+    DICT_SCHEMA-resolved ``dict/`` (≤|q| rows per subindex); a subindex
+    whose Σ df passes the single-task gate ranks on the driver, the
+    others share ONE ranking job (union of per-subindex candidate
+    kernels); ``with_doc_cols`` adds ONE ≤k-row display job (per-branch
+    doc_id pushdown, only hit subindexes read). Small dictionaries and
+    gated payloads: 0 jobs, 1 with doc cols. The union collects run
+    with AQE off (:func:`_collect_no_aqe` — AQE gives each union branch
+    its own job id). A subindex missing some AND/phrase term
+    contributes nothing and is pruned at plan time — its postings are
+    never scanned. Subindexes whose tombstones exceed the broadcast cap
+    get their per-split join delivery as usual (the tomb column is
     attached per subindex before the union).
 
     Output: ``(<by>, doc_id, score)`` ordered (score desc, <by> asc,
@@ -315,7 +313,7 @@ def search_all_partitions(
     part of the row identity. ``with_doc_cols`` appends the docs-table
     display columns except ``<by>`` itself when it duplicates one.
     """
-    return PartitionedSearcher(spark, root, dict_cache="spark").search(
+    return PartitionedSearcher(spark, root).search(
         query, k, mode, with_doc_cols, slop, ordered)
 
 
@@ -338,30 +336,34 @@ def facet_counts_all_partitions(
     :func:`facet_counts_partitioned` (partition-key facets, match
     counters only) for the cross-tenant sidebar case.
 
+    The union is collected in ONE action with AQE off and the shuffle
+    width pinned to Σ n_splits (:func:`_collect_no_aqe`), and the ≤ V
+    rows per subindex are summed, filtered and sorted in Python.
+
     Output: DF[facet_col, n_docs] in (n_docs desc, value asc) order,
     zero-count values omitted — the same contract as every facet
-    surface."""
-    from datastream_io_spark.operators.indexed_search import (
-        facet_counts_grouped,
-    )
-
+    surface — as an ``ArrowFrame`` (its collect makes no JVM call)."""
     if mode not in ("and", "or", "phrase"):
         raise ValueError(
             f"mode must be 'and', 'or' or 'phrase', got {mode!r}")
     manifest = read_partitioned(root)
     by = manifest["by"]
-    values = sorted(manifest["values"])
-    parts = [facet_counts_grouped(spark, _subdir(root, by, v), query,
-                                  facet_col, mode) for v in values]
-    out = parts[0] if parts else None
-    for pdf in parts[1:]:
-        out = out.unionByName(pdf)
-    if out is None:
-        return _empty_frame(spark, f"{facet_col} string, n_docs long")
-    return (out.groupBy(facet_col)
-            .agg(F.sum("n_docs").alias("n_docs"))
-            .where(F.col("n_docs") > 0)
-            .orderBy(F.desc("n_docs"), F.asc(facet_col)))
+    subs = [Searcher(spark, _subdir(root, by, v))
+            for v in sorted(manifest["values"])]
+    if not subs:
+        return _empty_frame(spark, _counts_schema(facet_col))
+    parts = [s.facet_counts_grouped(query, facet_col, mode) for s in subs]
+    totals: Counter = Counter()
+    for value, n in _collect_no_aqe(
+            spark, reduce(DataFrame.unionByName, parts),
+            shuffle_partitions=sum(int(s.stats.get("n_splits", 1))
+                                   for s in subs)):
+        totals[value] += n
+    # (n_docs desc, value asc), nulls first like Spark's ascending sort
+    rows = sorted(((v, n) for v, n in totals.items() if n),
+                  key=lambda r: (-r[1], r[0] is not None, r[0]))
+    return _empty_frame(spark, _counts_schema(
+        facet_col, parts[0].schema[facet_col].dataType), rows)
 
 
 def maintain_all_partitions(spark: SparkSession, root: str, op: str,
@@ -430,29 +432,35 @@ def search_boolean_all_partitions(
     is the correct boolean semantics; a subindex holding none of the
     query's terms is skipped at plan time.
 
-    A one-shot :class:`PartitionedSearcher` with ``dict_cache='spark'``
-    (:meth:`PartitionedSearcher.search_boolean`). Job count: one
-    dict-union job per expansion leaf + ONE planning job (global df of
-    the leaf terms) + ONE ranking job + the ≤k-row display job — the
-    :meth:`PartitionedSearcher._global_cut` tail; the result is a local
-    relation, so the caller's collect adds none."""
-    return PartitionedSearcher(spark, root, dict_cache="spark") \
-        .search_boolean(query, k, with_doc_cols, max_expansions)
+    A one-shot :class:`PartitionedSearcher`
+    (:meth:`PartitionedSearcher.search_boolean`). Job count, the
+    caller's collect included (the result is an ``ArrowFrame``): leaf
+    expansion and the global df lookup read driver-placed dictionaries
+    with no job, and cost one union-scan job each (per expansion leaf,
+    plus one for the lookup) over the subindexes past the dictionary
+    gate; ranking is :func:`search_all_partitions`' — no job for gated
+    subindexes, ONE for the rest — plus the ≤k-row display job under
+    ``with_doc_cols`` (the :meth:`PartitionedSearcher._global_cut`
+    tail). Small dictionaries and gated payloads: 0 jobs, 1 with doc
+    cols."""
+    return PartitionedSearcher(spark, root).search_boolean(
+        query, k, with_doc_cols, max_expansions)
 
 
 class PartitionedSearcher:
     """Query handle over a partitioned root — the one place a
     cross-partition query is planned (r5): one
     :class:`~datastream_io_spark.operators.indexed_search.Searcher`
-    per subindex (driver dict caches per ``dict_cache``, scans resolved
-    on first use) plus the merged global statistics computed once. A
-    query parses against every subindex, looks its terms up ONCE — off
-    the driver caches with zero Spark jobs, the un-cached subindexes in
-    one union scan — and ranks in one job, the same economy the
-    single-index Searcher gives. :func:`search_all_partitions` and
-    :func:`search_boolean_all_partitions` are one-shot handles with
-    ``dict_cache='spark'``; results are pinned to an unpartitioned
-    index of the same corpus (parity-tested).
+    per subindex (each placing its dictionary by its recorded size,
+    scans resolved on first use) plus the merged global statistics
+    computed once. A query parses against every subindex, looks its
+    terms up ONCE — driver-placed dictionaries with zero Spark jobs,
+    the ones past the dictionary gate in one union scan — and ranks in
+    at most one job, the same economy the single-index Searcher gives.
+    :func:`search_all_partitions` and
+    :func:`search_boolean_all_partitions` are one-shot handles; results
+    are pinned to an unpartitioned index of the same corpus
+    (parity-tested).
 
     Same staleness contract as Searcher: deletes are live, but
     purge / rebuild / merge under any subindex requires a new handle.
@@ -460,17 +468,13 @@ class PartitionedSearcher:
     partition-local queries (partition-local statistics — the routed
     contract)."""
 
-    def __init__(self, spark: SparkSession, root: str,
-                 dict_cache: str = "auto"):
-        from datastream_io_spark.operators.indexed_search import Searcher
-
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         manifest = read_partitioned(root)
         self.by = manifest["by"]
         self.values = sorted(manifest["values"])
-        self._sub = {v: Searcher(spark, _subdir(root, self.by, v),
-                                 dict_cache)
+        self._sub = {v: Searcher(spark, _subdir(root, self.by, v))
                      for v in self.values}
         toks = {s.stats["tokenizer"] for s in self._sub.values()}
         if len(toks) > 1:
@@ -503,13 +507,13 @@ class PartitionedSearcher:
 
     def _lookup_all(self, terms: list[str]) -> dict[str, list]:
         """Dictionary rows (``term``, ``df``, ``term_bucket``) of
-        ``terms`` per subindex value: a subindex with a driver-cached
-        dict answers from it (no job); all others share ONE union scan,
-        bucket-pruned per subindex (n_buckets may differ), collected
-        with AQE off."""
+        ``terms`` per subindex value: a subindex whose dictionary is
+        placed on the driver answers from its pruned pyarrow read (no
+        job); all others share ONE union scan, bucket-pruned per
+        subindex (n_buckets may differ), collected with AQE off."""
         rows_of, scans = {}, []
         for v, sub in self._sub.items():
-            if sub._dict_pdf is not None or not terms:
+            if sub._driver_dict or not terms:
                 rows_of[v] = sub._lookup(terms)
                 continue
             rows_of[v] = []
@@ -539,13 +543,14 @@ class PartitionedSearcher:
     def _expander(self, max_expansions: int):
         """Boolean wildcard / fuzzy leaf expander over the UNION of the
         subindex dictionaries, capped by GLOBAL df (df desc, term asc):
-        driver-cached subindexes expand from their caches uncapped
-        (:meth:`Searcher._expand`), all others share ONE union scan."""
+        subindexes with driver dictionaries expand from their
+        vocabularies uncapped (:meth:`Searcher._expand`), all others
+        share ONE union scan."""
         def expand(emode, base, dist):
             df_g: Counter = Counter()
             cold = []
             for v, sub in self._sub.items():
-                if sub._dict_pdf is None:
+                if not sub._driver_dict:
                     cold.append(v)
                     continue
                 for r in sub._expand(base, emode, dist, None):
@@ -616,8 +621,9 @@ class PartitionedSearcher:
     def search(self, query: str, k: int = 10, mode: str = "and",
                with_doc_cols: bool = False, slop: int = 2,
                ordered: bool = False) -> DataFrame:
-        """:func:`search_all_partitions` on this handle — with driver
-        dict caches, planning runs no Spark job, and a query whose
+        """:func:`search_all_partitions` on this handle — with
+        driver-placed dictionaries, planning runs no Spark job, and a
+        query whose
         per-subindex Σ df passes the single-task gate runs none at all
         (each subindex ranks on the driver, the merge is in Python)."""
         parts = [(v, self._sub[v]._rank(plans_v[""], k, self.avgdl_g))
@@ -649,8 +655,8 @@ class PartitionedSearcher:
                        with_doc_cols: bool = False,
                        max_expansions: int = 128) -> DataFrame:
         """:func:`search_boolean_all_partitions` on this handle — with
-        driver dict caches, leaf expansion and the df lookup run no
-        Spark job. Each subindex evaluates the tree through its
+        driver-placed dictionaries, leaf expansion and the df lookup run
+        no Spark job. Each subindex evaluates the tree through its
         executor under the GLOBAL idf / avgdl, gated on that
         subindex's Σ df over the leaf terms."""
         from datastream_io_spark.operators.boolean_search import (
@@ -757,6 +763,14 @@ class PartitionedSearcher:
         return _empty_frame(self.spark, _result_schema([by], doc_cols), [
             (v, doc_id, *(meta[(v, doc_id)][c] for c in doc_cols), score)
             for v, doc_id, score in rank_rows])
+
+
+def _counts_schema(col: str,
+                   dtype: T.DataType = T.StringType()) -> T.StructType:
+    """A facet-count result's schema: ``col`` of ``dtype``, then
+    ``n_docs``."""
+    return T.StructType([T.StructField(col, dtype),
+                         T.StructField("n_docs", T.LongType())])
 
 
 def _result_schema(lead: list, doc_cols: list = ()) -> T.StructType:

@@ -4,6 +4,7 @@ import pytest
 
 from datastream_io_spark.corpus import corpus_df
 from datastream_io_spark.operators import build as B
+from datastream_io_spark.operators import indexed_search as IX
 from datastream_io_spark.session import get_spark
 from datastream_io_spark.sources.scan import documents_as_corpus, load_table
 
@@ -26,6 +27,31 @@ def distributed_build(monkeypatch):
     """Force every build_index of a test through the distributed
     phases."""
     monkeypatch.setattr(B, "DRIVER_BUILD_MAX_DOCS", 0)
+
+
+# the default dictionary placement gate, which driver_dict restores
+_DICT_GATE = IX.AUTO_DICT_DRIVER_MAX_TERMS
+
+
+@pytest.fixture()
+def spark_dict(monkeypatch):
+    """Place every dictionary a test opens past the driver gate
+    (``AUTO_DICT_DRIVER_MAX_TERMS`` = 0): lookups and wildcard / fuzzy /
+    regex expansion take the Spark paths — the bucket-pruned lookup
+    job, the ``dict_sorted/`` and ``dict_ngrams/`` sidecars and the
+    dictionary scans — as on a dictionary too large for the driver."""
+    monkeypatch.setattr(IX, "AUTO_DICT_DRIVER_MAX_TERMS", 0)
+
+
+@contextlib.contextmanager
+def driver_dict():
+    """Inside the block, dictionaries are placed by the default gate
+    (a test index's dictionary on the driver), whatever ``spark_dict``
+    set: the driver-vocabulary answer to compare the Spark paths
+    with."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(IX, "AUTO_DICT_DRIVER_MAX_TERMS", _DICT_GATE)
+        yield
 
 
 @pytest.fixture(scope="session")

@@ -277,7 +277,7 @@ def test_boolean_wildcard_fuzzy_leaves(spark, pos_index):
     # batched + warm parity
     qs = {"b1": "agg AND s*", "b2": '"window agg" OR windoq~1',
           "b3": "agg NOT s*", "b4": '"window agg"~2 NOT scan'}
-    warm = Searcher(spark, pos_index, dict_cache="driver")
+    warm = Searcher(spark, pos_index)
     for df in (search_many(spark, pos_index, qs, 10, "boolean"),
                warm.search_many(qs, 10, "boolean")):
         got = {}
@@ -286,7 +286,7 @@ def test_boolean_wildcard_fuzzy_leaves(spark, pos_index):
                 (r.doc_id, round(r.score, 9)))
         for qid, q in qs.items():
             assert got.get(qid, []) == topk(q), qid
-    # the warm single-query entry point expands from the cached dict
+    # the warm single-query entry point expands from the driver vocabulary
     for qid, q in qs.items():
         assert [(r.doc_id, round(r.score, 9)) for r in
                 warm.search_boolean(q, 10).collect()] == topk(q), qid

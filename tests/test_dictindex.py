@@ -4,7 +4,12 @@ q-gram count filter). Contracts: results IDENTICAL to the full
 dictionary scans, bounded reads (gram-bucket partition pruning,
 StartsWith pushdown on the range files), sound on repeated-gram terms
 (where a distinct-set count filter would falsely prune), and stale
-sidecars fall back with a warning after the dictionary changes."""
+sidecars fall back with a warning after the dictionary changes.
+
+These dictionaries are small, so by default they live on the driver and
+expand from its vocabulary; the tests that exercise the sidecars and the
+Spark dictionary scans place them past the driver gate (``spark_dict``)
+and check that the driver vocabulary gives the same answers."""
 
 import glob
 import json
@@ -23,6 +28,7 @@ from datastream_io_spark.operators.dictindex import (
     prefix_expansion_df,
 )
 from datastream_io_spark.operators.indexed_search import (
+    Searcher,
     _levenshtein_leq,
     _levenshtein_within,
     search_fuzzy,
@@ -31,7 +37,7 @@ from datastream_io_spark.operators.indexed_search import (
 )
 from datastream_io_spark.plans import scan_info
 from datastream_io_spark.sources.scan import documents_as_corpus
-from tests.conftest import SF0001
+from tests.conftest import SF0001, driver_dict
 
 
 @pytest.fixture(scope="module")
@@ -51,10 +57,20 @@ def _topk(spark, df):
     return [(r.doc_id, round(r.score, 9)) for r in df.collect()]
 
 
+def _vocab_terms(spark, idx, q, mode, max_dist=0, cap=None):
+    """The driver vocabulary's expansion of ``q`` (df desc, term asc)."""
+    with driver_dict():
+        s = Searcher(spark, idx)
+        assert s._driver_dict
+        return [r["term"] for r in s._expand(q, mode, max_dist, cap)]
+
+
 def test_wildcard_and_suggest_parity_with_fallback(spark, doc_index,
-                                                   sidecar_index):
+                                                   sidecar_index,
+                                                   spark_dict):
     """Sidecar answers == base-dictionary answers (the two indexes are
-    built identically from the same corpus)."""
+    built identically from the same corpus) == the driver vocabulary's
+    answers."""
     assert prefix_expansion_df(spark, sidecar_index, "s") is not None
     assert prefix_expansion_df(spark, doc_index, "s") is None  # no sidecar
     for prefix in ("s", "w", "me", "zz"):
@@ -62,16 +78,21 @@ def test_wildcard_and_suggest_parity_with_fallback(spark, doc_index,
                                          f"{prefix}*", 10))
         b = _topk(spark, search_wildcard(spark, doc_index,
                                          f"{prefix}*", 10))
-        assert a == b, prefix
+        with driver_dict():
+            c = _topk(spark, search_wildcard(spark, doc_index,
+                                             f"{prefix}*", 10))
+        assert a == b == c, prefix
         sa = [(r.term, r.df) for r in
               suggest_terms(spark, sidecar_index, prefix, 5).collect()]
         sb = [(r.term, r.df) for r in
               suggest_terms(spark, doc_index, prefix, 5).collect()]
         assert sa == sb, prefix
+        assert [t for t, _ in sa] == _vocab_terms(spark, doc_index, prefix,
+                                                  "wildcard", cap=5)
 
 
 def test_fuzzy_parity_and_short_query_fallback(spark, doc_index,
-                                               sidecar_index):
+                                               sidecar_index, spark_dict):
     # "window" (len 6) at d=1 satisfies len ≥ 3+3d → sidecar path
     rows = fuzzy_expansion_rows(spark, sidecar_index, "window", 1, 128)
     assert rows is not None and any(r["term"] == "window" for r in rows)
@@ -83,7 +104,10 @@ def test_fuzzy_parity_and_short_query_fallback(spark, doc_index,
                                       max_dist=d))
         b = _topk(spark, search_fuzzy(spark, doc_index, term, 10,
                                       max_dist=d))
-        assert a == b, (term, d)
+        with driver_dict():
+            c = _topk(spark, search_fuzzy(spark, doc_index, term, 10,
+                                          max_dist=d))
+        assert a == b == c, (term, d)
 
 
 def test_gram_filter_sound_on_repeated_gram_terms(spark, tmp_path):
@@ -139,20 +163,27 @@ def test_vectorized_fuzzy_check_matches_scalar_dp():
             assert got.tolist() == want, (q, d)
 
 
-def test_fuzzy_scan_prunes_gram_buckets(spark, sidecar_index):
+def test_fuzzy_scan_prunes_gram_buckets(spark, sidecar_index, spark_dict):
     """The gram-sidecar candidate scan lists only the query grams'
-    ``gram_bucket=K`` directories (the bounded-read contract)."""
+    ``gram_bucket=K`` directories (the bounded-read contract), and the
+    expansion it feeds equals the driver vocabulary's."""
     df = fuzzy_candidates_df(spark, sidecar_index, "window", 1)
     scans = scan_info(df)
     assert scans, "no FileScan found"
     gram_scans = [s for s in scans if "gram_bucket" in s["PartitionFilters"]]
     assert gram_scans, [s["PartitionFilters"] for s in scans]
+    rows = fuzzy_expansion_rows(spark, sidecar_index, "window", 1, 128)
+    assert [r["term"] for r in rows] == _vocab_terms(
+        spark, sidecar_index, "window", "fuzzy", 1, 128)
 
 
-def test_sorted_dict_prefix_scan_pushes_startswith(spark, sidecar_index):
+def test_sorted_dict_prefix_scan_pushes_startswith(spark, sidecar_index,
+                                                   spark_dict):
     df = prefix_expansion_df(spark, sidecar_index, "s")
     scans = scan_info(df)
     assert scans and "StartsWith(term,s)" in scans[0]["PushedFilters"]
+    assert sorted(r.term for r in df.collect()) == sorted(
+        _vocab_terms(spark, sidecar_index, "s", "wildcard"))
     # range-partitioned: multiple term-sorted files, NOT bucket dirs
     files = glob.glob(os.path.join(sidecar_index, "dict_sorted",
                                    "*.parquet"))
@@ -160,7 +191,7 @@ def test_sorted_dict_prefix_scan_pushes_startswith(spark, sidecar_index):
 
 
 def test_stale_sidecars_fall_back_with_warning(spark, sidecar_index,
-                                               tmp_path):
+                                               tmp_path, spark_dict):
     idx = str(tmp_path / "stale_copy")
     shutil.copytree(sidecar_index, idx)
     # simulate a dictionary change (e.g. a merge wave): n_terms moves
@@ -174,9 +205,12 @@ def test_stale_sidecars_fall_back_with_warning(spark, sidecar_index,
     with pytest.warns(UserWarning, match="stale"):
         assert fuzzy_expansion_rows(spark, idx, "window", 1, 128) is None
     # and the search surfaces still answer (fallback), identically
-    a = _topk(spark, search_wildcard(spark, idx, "s*", 10))
+    with pytest.warns(UserWarning, match="stale"):
+        a = _topk(spark, search_wildcard(spark, idx, "s*", 10))
     b = _topk(spark, search_wildcard(spark, sidecar_index, "s*", 10))
-    assert a == b
+    with driver_dict():
+        c = _topk(spark, search_wildcard(spark, idx, "s*", 10))
+    assert a == b == c
     # rebuilding the sidecars restores freshness
     build_term_sidecars(spark, idx)
     assert prefix_expansion_df(spark, idx, "s") is not None
@@ -247,8 +281,8 @@ def test_merge_and_purge_refresh_sidecars(spark, tmp_path):
 
 def test_index_n_terms_none_when_key_absent(tmp_path):
     """_INDEX_SUCCESS without an n_terms key → None (ADVICE r4: the
-    old -1 sentinel read as 'tiny dict' and made dict_cache='auto'
-    pull an arbitrarily large dictionary into the driver)."""
+    old -1 sentinel read as 'tiny dict' and made the dictionary
+    placement pull an arbitrarily large dictionary into the driver)."""
     import json
     import os
 
@@ -266,10 +300,11 @@ def test_index_n_terms_none_when_key_absent(tmp_path):
 
 
 def test_regex_search_parity_and_bruteforce(spark, doc_index,
-                                            sidecar_index):
-    """r5 regex: sidecar-pruned == base-dict answers; membership and
-    ranking equal an independent python re.fullmatch expansion fed to
-    the brute-force OR scorer; anchoring is full-match."""
+                                            sidecar_index, spark_dict):
+    """r5 regex: sidecar-pruned == base-dict answers (JVM rlike) == the
+    driver vocabulary's (Python re.fullmatch); membership and ranking
+    equal an independent python re.fullmatch expansion fed to the
+    brute-force OR scorer; anchoring is full-match."""
     import re
 
     from datastream_io_spark.golden import brute_force_topk
@@ -298,7 +333,9 @@ def test_regex_search_parity_and_bruteforce(spark, doc_index,
                 "scan|sort", "mer?ge", "zz.*"):
         a = _topk(spark, search_regex(spark, sidecar_index, pat, 10))
         b = _topk(spark, search_regex(spark, doc_index, pat, 10))
-        assert a == b, pat
+        with driver_dict():
+            c = _topk(spark, search_regex(spark, doc_index, pat, 10))
+        assert a == b == c, pat
         exp_terms = [t for t in vocab if re.fullmatch(pat, t)]
         if exp_terms:
             exp = brute_force_topk(pdf, " ".join(exp_terms), k=10,
@@ -316,7 +353,8 @@ def test_regex_search_parity_and_bruteforce(spark, doc_index,
 
 
 def test_regex_expansion_pushes_prefix_and_falls_back(spark,
-                                                      sidecar_index):
+                                                      sidecar_index,
+                                                      spark_dict):
     """r5: a regex with a literal prefix rides the dict_sorted range
     scan (pushed StartsWith → file skipping) when the sidecar is
     fresh; a prefix-less pattern honestly scans — both produce the
@@ -332,3 +370,6 @@ def test_regex_expansion_pushes_prefix_and_falls_back(spark,
     df2 = _regex_expansion_df(spark, sidecar_index, ".*dow")
     scans2 = scan_info(df2)
     assert scans2 and "dict_sorted" not in scans2[0]["raw"]
+    for pat, exp in (("s.*a.*", df), (".*dow", df2)):
+        assert sorted(r.term for r in exp.collect()) == sorted(
+            _vocab_terms(spark, sidecar_index, pat, "regex")), pat

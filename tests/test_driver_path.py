@@ -6,16 +6,30 @@ mode, on positional and non-positional indexes and under broadcast
 tombstones; it must launch no Spark job, make no JVM call (its collect
 included), and its results must never be cached."""
 
+import json
 import time
 
 import pytest
 
 from datastream_io_spark.operators import indexed_search as IX
+from datastream_io_spark.operators import partitioned as P
 from datastream_io_spark.operators.boolean_search import (
     count_boolean,
     search_boolean,
 )
+from datastream_io_spark.sources.scan import documents_as_corpus
 from tests.conftest import SF0001, py4j_calls, reads_under
+
+
+@pytest.fixture(scope="module")
+def part_root(spark, tmp_path_factory):
+    """A positional partitioned root (one subindex per lang) over the
+    documents corpus."""
+    root = str(tmp_path_factory.mktemp("driver_path_root"))
+    P.build_partitioned_index(spark, documents_as_corpus(spark, SF0001),
+                              root, by="lang", n_splits=2, n_buckets=8,
+                              tokenizer="simple", positions=True)
+    return root
 
 
 def _rows(df):
@@ -187,19 +201,21 @@ def test_tombstones_read_on_driver_ship_as_broadcast(spark, tomb_index):
     assert (big._broadcast.value == big.value).all()
 
 
-def test_gated_queries_launch_no_spark_job(spark, pos_index):
+def test_gated_queries_launch_no_spark_job(spark, pos_index, part_root):
     """A gated query and its collect() run no Spark job, in every mode
-    that needs no display join or Spark-side expansion, and so does a
-    gated match count or boolean count. Neither do a one-shot
-    Searcher's open, the module functions built on it, a warm boolean
-    query whose leaves expand from the cached dict, nor queries that
-    can match nothing (no term in the dictionary, or Σ df = 0 over
+    that needs no display join, and so does a gated match count or
+    boolean count. Neither do a Searcher's open, the one-shot module
+    functions built on it — their lookups and wildcard / fuzzy / regex
+    expansions read the small dictionary on the driver, a one-shot
+    cross-partition boolean query's too — a warm boolean query whose
+    leaves expand from the driver vocabulary, an explain, nor queries
+    that can match nothing (no term in the dictionary, or Σ df = 0 over
     every leaf)."""
     s = IX.Searcher(spark, pos_index)
     sc = spark.sparkContext
     sc.setJobGroup("driver_path", "gated queries")
     try:
-        IX.Searcher(spark, pos_index, dict_cache="spark")
+        IX.Searcher(spark, pos_index)
         got = [
             s.search("window agg", 10, "and").collect(),
             s.search("window agg", 10, "phrase").collect(),
@@ -220,6 +236,15 @@ def test_gated_queries_launch_no_spark_job(spark, pos_index):
             s.count_boolean("sc* AND NOT windw~1"),
             IX.match_count(spark, pos_index, "window agg", "and"),
             count_boolean(spark, pos_index, "window AND NOT agg"),
+            IX.search_wildcard(spark, pos_index, "s*", 10).collect(),
+            IX.search_fuzzy(spark, pos_index, "windw", 10).collect(),
+            IX.search_regex(spark, pos_index, "s.*a.*", 10).collect(),
+            search_boolean(spark, pos_index, "window AND s* NOT agg",
+                           10).collect(),
+            IX.explain_query(spark, pos_index, "s*",
+                             mode="wildcard")["expansion"],
+            P.search_boolean_all_partitions(spark, part_root,
+                                            "agg AND s*").collect(),
         ]
         none = [
             s.search("zzqqx yyxxq", 10, "or").collect(),
@@ -289,7 +314,7 @@ def test_warm_gated_queries_make_no_jvm_call(spark, index, request):
     and so does an all-absent query. Its count / isEmpty / toPandas /
     toArrow answer from the Arrow table too."""
     idx = request.getfixturevalue(index)
-    s = IX.Searcher(spark, idx, dict_cache="driver")
+    s = IX.Searcher(spark, idx)
     _warm_gated(s)  # first-call imports stay out of the count
     with py4j_calls(spark) as sent:
         got = _warm_gated(s)
@@ -304,31 +329,58 @@ def test_warm_gated_queries_make_no_jvm_call(spark, index, request):
 
 
 def test_driver_dict_open_runs_no_job(spark, pos_index, monkeypatch):
-    """A driver-dict Searcher reads dict/ with pyarrow: zero Spark jobs
-    and zero py4j round trips per open (also when the build recorded no
-    term count and 'auto' has to count the dictionary), and the cached
-    frame has the Spark read's columns, dtypes and rows."""
+    """Opening a Searcher over a small dictionary places it on the
+    driver without reading it: zero Spark jobs and zero py4j round
+    trips per open (also when the build recorded no term count and the
+    placement counts the dictionary with pyarrow). The vocabulary is
+    read with pyarrow on the first expansion, also with no job and no
+    py4j call, and holds the Spark read's rows in term order."""
     from datastream_io_spark.operators import dictindex
 
+    s = IX.Searcher(spark, pos_index)
+    s.search_wildcard("s*", 10).collect()  # first-call imports
     sc = spark.sparkContext
     sc.setJobGroup("dict_open", "driver dict open")
     try:
         with py4j_calls(spark) as sent:
-            s = IX.Searcher(spark, pos_index, dict_cache="driver")
+            s = IX.Searcher(spark, pos_index)
+            assert "_vocab" not in vars(s)  # opening read no dictionary
+            s.search_wildcard("s*", 10).collect()
             monkeypatch.setattr(dictindex, "_index_n_terms",
                                 lambda index_dir: None)
-            auto = IX.Searcher(spark, pos_index)
+            counted = IX.Searcher(spark, pos_index)
     finally:
         sc.setJobGroup(None, None)
     time.sleep(0.5)  # let the listener bus deliver any job start
     assert sent == []
     assert list(sc.statusTracker().getJobIdsForGroup("dict_open")) == []
-    assert auto._dict_pdf is not None
+    assert s._driver_dict and counted._driver_dict
 
     want = (spark.read.parquet(f"{pos_index}/dict").toPandas()
-            .set_index("term"))
-    got = s._dict_pdf
-    assert list(got.columns) == list(want.columns)
-    assert dict(got.dtypes) == dict(want.dtypes)
-    assert got.index.dtype == want.index.dtype
-    assert got.sort_index().equals(want.sort_index())
+            .sort_values("term", ignore_index=True))
+    v = s._vocab
+    assert v.terms.tolist() == want["term"].tolist()
+    assert v.df.tolist() == want["df"].tolist()
+    assert v.idf.tolist() == want["idf"].tolist()
+    assert v.bucket.tolist() == want["term_bucket"].tolist()
+    assert v.lens.tolist() == sorted(len(t) for t in want["term"])
+    assert [len(t) for t in v.terms[v.by_len]] == v.lens.tolist()
+
+
+def test_unknown_partition_value_makes_no_jvm_call(spark, tmp_path):
+    """search_partitioned of a value with no subindex answers an empty
+    frame of the hit path's schema; building and collecting it makes
+    no py4j round trip (the schema is a StructType: no DDL parse)."""
+    root = tmp_path / "manifest_only"
+    root.mkdir()
+    (root / "partitioned.json").write_text(
+        json.dumps({"by": "lang", "values": {"en": 1}}))
+    for with_doc_cols in (False, True):
+        P.search_partitioned(spark, str(root), "xx", "window",
+                             with_doc_cols=with_doc_cols).collect()
+        with py4j_calls(spark) as sent:
+            df = P.search_partitioned(spark, str(root), "xx", "window",
+                                      with_doc_cols=with_doc_cols)
+            rows = df.collect()
+        assert sent == [] and rows == []
+        assert df.schema == IX._empty_topk(spark, with_doc_cols).schema

@@ -14,24 +14,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from datastream_io_spark.operators import indexed_search as IX
+from datastream_io_spark.operators.partitioned import _result_schema
 
 _FACET = T.StructType([T.StructField("lang", T.StringType()),
                        T.StructField("n_docs", T.LongType(), False)])
-_CUT = ("lang string, doc_id long, repo string, path string, "
-        "commit string, score double")
+_CUT = _result_schema(["lang"], ["repo", "path", "commit"])
 
 # (schema, rows) per locally built schema: scores, query_id-led
 # batches, facet counts (non-nullable n_docs), _global_cut with doc
 # cols, match_positions' int column — each with nulls, and empty
 _TABLES = {
-    "scores": ("doc_id long, score double",
+    "scores": (IX._SCORES_SCHEMA,
                [(3, 1.5), (1, 1.5), (None, 0.25), (7, None)]),
-    "many": ("query_id string, doc_id long, score double",
+    "many": (IX._MANY_SCHEMA,
              [("a", 2, 3.0), ("a", 5, 1.0), (None, 1, 0.5)]),
     "facet": (_FACET, [("go", 3), (None, 1)]),
     "cut_doc_cols": (_CUT, [("de", 4, "r", "p", "c0", 2.5),
                             ("en", 9, None, "q", None, 2.5)]),
-    "positions": ("doc_id long, term string, pos int",
+    "positions": (IX._POSITIONS_SCHEMA,
                   [(1, "agg", 0), (1, None, None)]),
 }
 
@@ -52,7 +52,7 @@ def test_frame_matches_spark_local_relation(spark, name, schema, rows):
 def test_engine_frames_match_spark_local_relation(spark, pos_index):
     """The frames the engine really returns: a gated top-k, a gated
     batch, a facet empty and an empty top-k with doc cols."""
-    s = IX.Searcher(spark, pos_index, dict_cache="driver")
+    s = IX.Searcher(spark, pos_index)
     frames = [s.search("window agg", 10, "or"),
               s.search_many({"a": "window agg", "b": "scan"}, 10, "or"),
               s._empty_facets("lang"),
@@ -86,7 +86,7 @@ def test_spark_methods_work_on_frame(spark, pos_index):
     the with_doc_cols docs join."""
     from pyspark.sql import functions as F
 
-    s = IX.Searcher(spark, pos_index, dict_cache="driver")
+    s = IX.Searcher(spark, pos_index)
     df = s.search("window agg", 10, "or")
     assert isinstance(df, IX.ArrowFrame) and isinstance(df, DataFrame)
     rows = df.collect()
@@ -117,7 +117,7 @@ def test_relation_built_once_across_threads(spark, pos_index,
     """8 threads collecting and joining one frame build its JVM
     relation exactly once, and see the same rows; collect alone never
     builds it."""
-    s = IX.Searcher(spark, pos_index, dict_cache="driver")
+    s = IX.Searcher(spark, pos_index)
     df = s.search("window agg", 10, "or")
     builds = []
     real = spark.createDataFrame

@@ -96,19 +96,18 @@ def test_plan_cache_keeps_deletes_live(spark, tmp_path):
     assert before[0] not in after
 
 
-def test_lookup_terms_fast_path_matches_spark_path(spark, doc_index):
+def test_lookup_terms_fast_path_matches_spark_path(spark, doc_index,
+                                                   spark_dict):
     """The pyarrow pruned-bucket read must return the same dict rows as
     the distributed lookup (which runs when the n_terms gate fails)."""
-    import datastream_io_spark.operators.dictindex as DI
+    from tests.conftest import driver_dict
 
     terms = ["window", "agg", "scan", "nosuchterm"]
-    fast = IX.lookup_terms(spark, doc_index, terms)
-    old = DI._index_n_terms
-    DI._index_n_terms = lambda _p: None  # force the Spark job path
-    try:
-        slow = IX.lookup_terms(spark, doc_index, terms)
-    finally:
-        DI._index_n_terms = old
+    with driver_dict():
+        fast = IX.lookup_terms(spark, doc_index, terms)
+    slow = IX.lookup_terms(spark, doc_index, terms)
+    assert all(isinstance(r, dict) for r in fast)
+    assert not any(isinstance(r, dict) for r in slow)  # collected Rows
 
     def norm(rows):
         return sorted((r["term"], int(r["df"]), int(r["cf"]),

@@ -3,6 +3,7 @@ Column-math and WAND-indexed) must reproduce the brute-force golden
 docIDs exactly and scores to 1e-9, on the all-hot documents corpus and
 the heavy-tailed synthetic code corpus."""
 
+import contextlib
 import json
 import os
 
@@ -12,7 +13,7 @@ from datastream_io_spark.golden import brute_force_topk
 from datastream_io_spark.operators.indexed_search import search_indexed
 from datastream_io_spark.operators.relational_search import search_relational
 from datastream_io_spark.sources.scan import documents_as_corpus
-from tests.conftest import SF0001, docs_with_text
+from tests.conftest import SF0001, docs_with_text, driver_dict
 from tests.queries_golden import CODE_QUERIES, DOC_QUERIES, K
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "golden")
@@ -75,22 +76,28 @@ def test_frozen_golden_files(spark, doc_index, code_index, doc_ctx, code_ctx,
                frozen["topk"])
 
 
-def test_searcher_matches_search_indexed(spark, doc_index, doc_ctx):
-    """Warm Searcher (driver-cached dict, one job per query) must equal
-    the cold path exactly, in both dict_cache modes."""
+def test_searcher_matches_search_indexed(spark, doc_index, doc_ctx,
+                                         spark_dict):
+    """Warm Searcher must equal the cold path exactly, with the
+    dictionary on the driver (the default) and past the gate (Spark
+    lookups) — and the two placements must agree."""
     from datastream_io_spark.operators.indexed_search import Searcher
 
     _, pdf = doc_ctx
-    for cache in ("driver", "spark"):
-        s = Searcher(spark, doc_index, dict_cache=cache)
-        for query, mode in [("window agg", "and"), ("scan", "or"),
-                            ("missingterm scan", "and")]:
-            a = [(r.doc_id, r.score)
-                 for r in s.search(query, K, mode).collect()]
-            b = [(r.doc_id, r.score)
-                 for r in search_indexed(spark, doc_index, query, K,
-                                         mode).collect()]
-            assert a == b
+    answers = []
+    for placement in (driver_dict, contextlib.nullcontext):
+        with placement():
+            s = Searcher(spark, doc_index)
+            for query, mode in [("window agg", "and"), ("scan", "or"),
+                                ("missingterm scan", "and")]:
+                a = [(r.doc_id, r.score)
+                     for r in s.search(query, K, mode).collect()]
+                b = [(r.doc_id, r.score)
+                     for r in search_indexed(spark, doc_index, query, K,
+                                             mode).collect()]
+                assert a == b
+                answers.append(a)
+    assert answers[:3] == answers[3:]
 
 
 def test_display_join(spark, doc_index):
@@ -251,7 +258,7 @@ def test_filtered_two_pass_skips_full_decode(spark, pos_index, pos_pdf):
     cut) must fall back — and both must stay exact."""
     from datastream_io_spark.operators import indexed_search as IX
 
-    s = IX.Searcher(spark, pos_index, dict_cache="spark")
+    s = IX.Searcher(spark, pos_index)
 
     def run(where, k=5, q="window agg", mode="or"):
         df, fell_back = s._filtered_topk(s._plan(q, mode), k, where)
@@ -316,31 +323,30 @@ def test_search_many_phrase_and_boolean(spark, pos_index):
 
 
 def test_dict_cache_auto_selection(spark, doc_index, monkeypatch):
-    """r4 (VERDICT wrong #3): dict_cache='auto' (the new default) picks
-    the driver cache for small dictionaries and Spark mode past the
-    absolute term threshold — with identical answers either way."""
+    """r4 (VERDICT wrong #3): the recorded term count places the
+    dictionary — on the driver for small dictionaries, in Spark past
+    the absolute term threshold — with identical answers either
+    way."""
     import datastream_io_spark.operators.indexed_search as IS
     from datastream_io_spark.operators.indexed_search import Searcher
 
-    small = Searcher(spark, doc_index)  # auto → driver (tiny dict)
-    assert small._dict_pdf is not None
+    small = Searcher(spark, doc_index)  # driver (tiny dict)
+    assert small._driver_dict
     monkeypatch.setattr(IS, "AUTO_DICT_DRIVER_MAX_TERMS", 0)
-    big = Searcher(spark, doc_index)  # auto → spark ("too large")
-    assert big._dict_pdf is None
+    big = Searcher(spark, doc_index)  # spark ("too large")
+    assert not big._driver_dict
     for q, mode in [("window agg", "and"), ("scan merge", "or")]:
         a = [(r.doc_id, round(r.score, 9)) for r in
              small.search(q, 10, mode).collect()]
         b = [(r.doc_id, round(r.score, 9)) for r in
              big.search(q, 10, mode).collect()]
         assert a == b, (q, mode)
-    with pytest.raises(ValueError, match="dict_cache"):
-        Searcher(spark, doc_index, dict_cache="nope")
 
 
 def test_search_many_wildcard_fuzzy_and_warm(spark, tmp_path):
     """r4 (VERDICT Missing #4): batched serving covers wildcard and
     fuzzy, and the warm Searcher batches EVERY mode with planning from
-    the cached dict — all parity-checked against the single-query
+    the driver dictionary — all parity-checked against the single-query
     answers."""
     from datastream_io_spark.operators.build import build_index
     from datastream_io_spark.operators.dictindex import build_term_sidecars
@@ -411,7 +417,7 @@ def test_partitioned_index_routing(spark, tmp_path):
         search_partitioned,
     )
     from datastream_io_spark.sources.scan import documents_as_corpus
-    from tests.conftest import SF0001, docs_with_text
+    from tests.conftest import SF0001, docs_with_text, driver_dict
 
     corpus = documents_as_corpus(spark, SF0001)
     root = str(tmp_path / "part_root")
@@ -551,9 +557,10 @@ def test_search_all_partitions_matches_unpartitioned(
     assert search_all_partitions(spark, root, "window agg", 3).columns \
         == ["lang", "doc_id", "score"]
 
-    # job-count contract: plan + display = 2 jobs at ANY number of
-    # partition values (AQE off for the union collects; explicit
-    # dict/docs schemas — no per-subindex inference jobs); each
+    # job-count contract: the display read is the ONE job at any
+    # number of partition values (AQE off for the union collect;
+    # explicit docs schema — no per-subindex inference job): the
+    # small dictionaries are looked up on the driver, and each
     # subindex's Σ df passes the single-task gate, so it ranks on the
     # driver and the merge runs in Python. The caller's collect is
     # included: the result is a local relation
@@ -566,7 +573,7 @@ def test_search_all_partitions_matches_unpartitioned(
     _time.sleep(0.5)
     n_jobs = len(st.getJobIdsForGroup("gap_jobs"))
     sc.setJobGroup(None, None)
-    assert n_jobs == 2, n_jobs
+    assert n_jobs == 1, n_jobs
 
     # deletes inside one subindex are honored by the global merge
     sub = os.path.join(root, "lang=de")
@@ -686,55 +693,70 @@ def test_fuzzy_matches_bruteforce_or(spark, doc_index, doc_ctx):
         "doc_id", "repo", "path", "commit", "lang", "score"]
 
 
-def test_searcher_wildcard_fuzzy_match_cold_path(spark, doc_index):
-    """Warm Searcher wildcard/fuzzy (driver-cached dict, zero extra
-    Spark jobs for expansion) ≡ the cold module-level functions, in
-    both dict_cache modes."""
+def test_searcher_wildcard_fuzzy_match_cold_path(spark, doc_index,
+                                                 spark_dict):
+    """Warm Searcher wildcard/fuzzy ≡ the cold module-level functions,
+    with the dictionary on the driver (the default: vocabulary
+    expansion, zero extra Spark jobs) and past the gate (Spark
+    expansion scans) — and the two placements agree."""
     from datastream_io_spark.operators.indexed_search import (
         Searcher, search_fuzzy, search_wildcard)
 
-    for cache in ("driver", "spark"):
-        s = Searcher(spark, doc_index, dict_cache=cache)
-        for prefix in ("s", "gr", "zz"):
-            a = [(r.doc_id, r.score)
-                 for r in s.search_wildcard(prefix, K).collect()]
+    answers = {}
+    for placement in (driver_dict, contextlib.nullcontext):
+        with placement():
+            s = Searcher(spark, doc_index)
+            for prefix in ("s", "gr", "zz"):
+                a = [(r.doc_id, r.score)
+                     for r in s.search_wildcard(prefix, K).collect()]
+                b = [(r.doc_id, r.score)
+                     for r in search_wildcard(spark, doc_index, prefix,
+                                              K).collect()]
+                assert a == b, ("wildcard", placement, prefix)
+                answers.setdefault(("wildcard", prefix), []).append(a)
+            for probe, d in (("hast", 2), ("kay", 1), ("qqq", 1)):
+                a = [(r.doc_id, r.score) for r in
+                     s.search_fuzzy(probe, K, max_dist=d).collect()]
+                b = [(r.doc_id, r.score)
+                     for r in search_fuzzy(spark, doc_index, probe, K,
+                                           max_dist=d).collect()]
+                assert a == b, ("fuzzy", placement, probe)
+                answers.setdefault(("fuzzy", probe), []).append(a)
+            # cap parity too (the driver vocabulary reimplements the cap)
+            a = [(r.doc_id, r.score) for r in
+                 s.search_wildcard("s", K, max_expansions=2).collect()]
             b = [(r.doc_id, r.score)
-                 for r in search_wildcard(spark, doc_index, prefix,
-                                          K).collect()]
-            assert a == b, ("wildcard", cache, prefix)
-        for probe, d in (("hast", 2), ("kay", 1), ("qqq", 1)):
-            a = [(r.doc_id, r.score)
-                 for r in s.search_fuzzy(probe, K, max_dist=d).collect()]
-            b = [(r.doc_id, r.score)
-                 for r in search_fuzzy(spark, doc_index, probe, K,
-                                       max_dist=d).collect()]
-            assert a == b, ("fuzzy", cache, probe)
-        # cap parity too (the warm path reimplements the cap)
-        a = [(r.doc_id, r.score)
-             for r in s.search_wildcard("s", K, max_expansions=2).collect()]
-        b = [(r.doc_id, r.score)
-             for r in search_wildcard(spark, doc_index, "s", K,
-                                      max_expansions=2).collect()]
-        assert a == b, ("cap", cache)
+                 for r in search_wildcard(spark, doc_index, "s", K,
+                                          max_expansions=2).collect()]
+            assert a == b, ("cap", placement)
+            answers.setdefault(("cap",), []).append(a)
+    for case, (driver, spark_side) in answers.items():
+        assert driver == spark_side, case
 
 
-def test_searcher_facets_match_cold_path(spark, doc_index):
-    """Warm Searcher facet_counts ≡ the cold function, both cache
-    modes, incl. where= and the empty case."""
+def test_searcher_facets_match_cold_path(spark, doc_index, spark_dict):
+    """Warm Searcher facet_counts ≡ the cold function, with the
+    dictionary on the driver and past the gate, incl. where= and the
+    empty case — and the two placements agree."""
     from datastream_io_spark.operators.indexed_search import (
         Searcher, facet_counts)
 
-    for cache in ("driver", "spark"):
-        s = Searcher(spark, doc_index, dict_cache=cache)
-        for q, mode, where in (("window agg", "and", None),
-                               ("window", "or", "lang <> 'en'"),
-                               ("nosuchterm", "and", None)):
-            a = sorted((r["lang"], r["n_docs"]) for r in
-                       s.facet_counts(q, "lang", mode, where).collect())
-            b = sorted((r["lang"], r["n_docs"]) for r in
-                       facet_counts(spark, doc_index, q, "lang", mode,
-                                    where).collect())
-            assert a == b, (cache, q, mode)
+    answers = []
+    for placement in (driver_dict, contextlib.nullcontext):
+        with placement():
+            s = Searcher(spark, doc_index)
+            for q, mode, where in (("window agg", "and", None),
+                                   ("window", "or", "lang <> 'en'"),
+                                   ("nosuchterm", "and", None)):
+                a = sorted((r["lang"], r["n_docs"]) for r in
+                           s.facet_counts(q, "lang", mode,
+                                          where).collect())
+                b = sorted((r["lang"], r["n_docs"]) for r in
+                           facet_counts(spark, doc_index, q, "lang", mode,
+                                        where).collect())
+                assert a == b, (placement, q, mode)
+                answers.append(a)
+    assert answers[:3] == answers[3:]
 
 
 def test_partitioned_facets_one_job(spark, tmp_path):
@@ -855,7 +877,7 @@ def test_warm_near_regex_and_batched_modes_parity(spark, pos_index):
     from datastream_io_spark.operators.indexed_search import (
         Searcher, search_many, search_near, search_regex)
 
-    s = Searcher(spark, pos_index, dict_cache="driver")
+    s = Searcher(spark, pos_index)
 
     def key(df):
         return [(r.doc_id, round(r.score, 9)) for r in df.collect()]
@@ -924,15 +946,31 @@ def test_facet_counts_all_partitions_matches_global(spark, doc_index,
             spark, doc_index, q, col, mode).collect()]
         assert got == exp, (q, mode, col)
 
+    # job-count contract over the 5 subindexes, the caller's collect
+    # included (the result is an ArrowFrame): one docs schema inference
+    # per subindex, then ONE collect of the union (AQE off)
+    import time as _time
+
+    sc = spark.sparkContext
+    sc.setJobGroup("far_jobs", "cross-partition facet counts")
+    try:
+        assert facet_counts_all_partitions(spark, root, "window agg",
+                                           "repo").collect()
+    finally:
+        sc.setJobGroup(None, None)
+    _time.sleep(0.5)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("far_jobs"))
+    assert n_jobs == 6, n_jobs
+
 
 def test_warm_more_like_this_matches_cold(spark, pos_index):
-    """r5: Searcher.more_like_this (cached dict + resolved docs scan)
+    """r5: Searcher.more_like_this (driver dict + resolved docs scan)
     equals the cold module function, source exclusion included."""
     from datastream_io_spark.operators.indexed_search import (
         Searcher, more_like_this)
 
     corpus = documents_as_corpus(spark, SF0001)
-    s = Searcher(spark, pos_index, dict_cache="driver")
+    s = Searcher(spark, pos_index)
     docs = [r.doc_id for r in spark.read.parquet(
         f"{pos_index}/docs").select("doc_id").orderBy("doc_id")
         .limit(3).collect()]
@@ -1016,8 +1054,8 @@ def test_boolean_all_partitions_matches_unpartitioned(
     def key(rows):
         return sorted((r["path"], round(r["score"], 9)) for r in rows)
 
-    # the warm handle: leaves expand and df sums off the driver caches
-    ps = PartitionedSearcher(spark, root, dict_cache="driver")
+    # the warm handle: leaves expand and df sums off the driver dicts
+    ps = PartitionedSearcher(spark, root)
     for q in ["window AND (agg OR scan) NOT merge",
               '"window agg" OR scan',
               '"window agg"~2 NOT merge',
@@ -1036,7 +1074,7 @@ def test_boolean_all_partitions_matches_unpartitioned(
         spark, root, "window AND agg", 10**6,
         with_doc_cols=True).collect())  # non-empty sanity
 
-    # warm boolean economy: expansion and planning off the caches, each
+    # warm boolean economy: expansion and planning on the driver, each
     # subindex ranks on the driver under the single-task gate and the
     # merge runs in Python — no Spark job, the caller's collect of the
     # local-relation result included
@@ -1053,7 +1091,7 @@ def test_boolean_all_partitions_matches_unpartitioned(
 
 
 def test_partitioned_searcher_matches_cold(spark, tmp_path):
-    """r5: the warm PartitionedSearcher (per-subindex dict caches +
+    """r5: the warm PartitionedSearcher (per-subindex driver dicts +
     resolved scans, merged stats precomputed) equals the cold
     cross-partition search on every mode and plans with zero Spark
     jobs — a gated global query costs no job at all without display
@@ -1069,7 +1107,7 @@ def test_partitioned_searcher_matches_cold(spark, tmp_path):
     build_partitioned_index(spark, corpus, root, by="lang", n_splits=2,
                             n_buckets=8, tokenizer="simple",
                             positions=True)
-    ps = PartitionedSearcher(spark, root, dict_cache="driver")
+    ps = PartitionedSearcher(spark, root)
 
     def key(rows):
         return [(r[0], r[1], round(r[2], 9)) for r in
@@ -1122,7 +1160,7 @@ def test_partitioned_searcher_batched_matches_single(spark, tmp_path):
     build_partitioned_index(spark, corpus, root, by="lang", n_splits=2,
                             n_buckets=8, tokenizer="simple",
                             positions=True)
-    ps = PartitionedSearcher(spark, root, dict_cache="driver")
+    ps = PartitionedSearcher(spark, root)
     qs = {"q1": "window agg", "q2": "scan", "q3": "merge sort window",
           "q4": "zzznope window"}
     for mode, kw in [("and", {}), ("or", {}), ("phrase", {}),
