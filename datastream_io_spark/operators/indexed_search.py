@@ -69,12 +69,13 @@ from __future__ import annotations
 
 import os
 import threading
+from collections import OrderedDict
 from functools import cached_property
 from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
@@ -91,7 +92,10 @@ from datastream_io_spark.operators.codec import (
     POS_BITS as _POS_BITS,  # enforced < 2^22 at encode time (codec.py)
     decode_block_positions,
 )
-from datastream_io_spark.operators.postings_cache import bucket_term_rows
+from datastream_io_spark.operators.postings_cache import (
+    _identity,
+    bucket_term_rows,
+)
 from datastream_io_spark.operators.relational_search import (
     parse_phrase,
     parse_query,
@@ -100,12 +104,22 @@ from datastream_io_spark.operators.relational_search import (
 
 # dictionary placement (:func:`_dict_on_driver`): a dictionary of at
 # most this many terms is read on the driver — lookups through the
-# term-rows cache, expansions over one pyarrow-read vocabulary per
-# handle (~50 bytes a term: 4M terms ≈ 200 MB, inside a driver heap);
-# a larger one stays in Spark (a bucket-pruned lookup job per query,
-# sidecar / dictionary scans for expansion), so a 10^12-file corpus
-# never pulls a 10^9-term dictionary into driver memory
+# term-rows cache, expansions over one pyarrow-read vocabulary shared
+# process-wide (~100 bytes a term: 4M terms ≈ 400 MB, inside a driver
+# heap); a larger one stays in Spark (a bucket-pruned lookup job per
+# query, sidecar / dictionary scans for expansion), so a 10^12-file
+# corpus never pulls a 10^9-term dictionary into driver memory
 AUTO_DICT_DRIVER_MAX_TERMS = 4_000_000
+
+# process-wide expansion vocabularies (:func:`_vocab_of`), keyed on the
+# ``dict/`` files' identity: a one-shot call reuses what an earlier
+# call read of the same files. Least recently used entries are evicted
+# past this many estimated bytes, but the newest is always kept, so a
+# vocabulary near the placement gate stays cached until another
+# index's vocabulary is read
+VOCAB_CACHE_MAX_BYTES = 512 << 20
+_VOCABS: OrderedDict = OrderedDict()
+_VOCABS_LOCK = threading.Lock()
 
 # single-task rank gate: when the dictionary says a query's total match
 # payload (Σ df over its terms) is at most this many postings, the
@@ -318,9 +332,9 @@ def _dict_on_driver(index_dir: str) -> bool:
 class _Vocab(NamedTuple):
     """A driver dictionary's expansion vocabulary: its terms in term
     order with their df / idf / bucket columns (a prefix is one
-    searchsorted range of ``terms``), and the term positions in length
+    searchsorted range of ``terms``), the term positions in length
     order with those lengths (a fuzzy length band is one range of
-    ``lens``)."""
+    ``lens``), and its estimated in-memory bytes."""
 
     terms: np.ndarray
     df: np.ndarray
@@ -328,6 +342,7 @@ class _Vocab(NamedTuple):
     bucket: np.ndarray
     by_len: np.ndarray
     lens: np.ndarray
+    nbytes: int
 
     @classmethod
     def read(cls, index_dir: str) -> "_Vocab":
@@ -339,9 +354,46 @@ class _Vocab(NamedTuple):
              .sort_by("term"))
         lens = pc.utf8_length(t.column("term")).to_numpy().astype(np.int64)
         by_len = np.argsort(lens, kind="stable")
+        # estimated size: per term a str object (49 bytes + its text)
+        # and 44 bytes of array slots — the table's size + 69 a term
         return cls(t.column("term").to_numpy(), t.column("df").to_numpy(),
                    t.column("idf").to_numpy(),
-                   t.column("term_bucket").to_numpy(), by_len, lens[by_len])
+                   t.column("term_bucket").to_numpy(), by_len, lens[by_len],
+                   t.nbytes + 69 * t.num_rows)
+
+
+def _dict_identity(index_dir: str) -> tuple | None:
+    """The file identity of ``dict/``: its realpath with the
+    :func:`~datastream_io_spark.operators.postings_cache._identity` of
+    it and of each of its bucket directories — a rebuild, merge or purge
+    swap changes it. None while an entry vanishes mid-listing."""
+    d = os.path.realpath(os.path.join(index_dir, "dict"))
+    ids = [_identity(d)]
+    ids += [_identity(os.path.join(d, e[0])) for e in ids[0] or ()
+            if e[0].startswith("term_bucket=")]
+    return None if None in ids else (d, *ids)
+
+
+def _vocab_of(index_dir: str) -> _Vocab:
+    """The expansion vocabulary of ``index_dir``'s dictionary, from the
+    process-wide cache when its ``dict/`` files are unchanged, else read
+    (:meth:`_Vocab.read`) and cached; files rewritten during the read
+    have a new identity, so that entry is never hit. A listing that
+    raced a rewrite reads without caching."""
+    ident = _dict_identity(index_dir)
+    if ident is None:
+        return _Vocab.read(index_dir)
+    with _VOCABS_LOCK:
+        if ident in _VOCABS:
+            _VOCABS.move_to_end(ident)
+            return _VOCABS[ident]
+    v = _Vocab.read(index_dir)
+    with _VOCABS_LOCK:
+        _VOCABS[ident] = v
+        while len(_VOCABS) > 1 and sum(
+                x.nbytes for x in _VOCABS.values()) > VOCAB_CACHE_MAX_BYTES:
+            _VOCABS.popitem(last=False)
+    return v
 
 
 class Searcher:
@@ -362,10 +414,12 @@ class Searcher:
     the same rule for warm handles and one-shot calls): at most
     ``AUTO_DICT_DRIVER_MAX_TERMS`` terms, lookups read the query's
     ``dict/`` buckets with pyarrow and wildcard / fuzzy / regex
-    expansion scans a vocabulary read once per handle, on its first
-    expansion — zero Spark jobs for either. A larger dictionary stays
-    in Spark: a bucket-pruned lookup job per query, and expansion scans
-    the sidecar or dictionary (:func:`_expansion_rows_cold`).
+    expansion scans a pyarrow-read vocabulary shared by every handle
+    and one-shot call over the same ``dict/`` files (:func:`_vocab_of`,
+    read on the first expansion) — zero Spark jobs for either. A
+    larger dictionary stays in Spark: a bucket-pruned lookup job per
+    query, and expansion scans the sidecar or dictionary
+    (:func:`_expansion_rows_cold`).
 
     Driver-path reads (the postings rows of a gated query, and the
     ``dict/`` rows of a driver-dictionary lookup) go through the
@@ -459,7 +513,7 @@ class Searcher:
 
     @cached_property
     def _vocab(self) -> _Vocab:
-        return _Vocab.read(self.index_dir)
+        return _vocab_of(self.index_dir)
 
     def _expand(self, q: str, mode: str, max_dist: int,
                 max_expansions: int) -> list:
@@ -2135,24 +2189,19 @@ def _drop_dead(ids: np.ndarray, tv: np.ndarray | None) -> np.ndarray:
 
 def suggest_terms(spark: SparkSession, index_dir: str, prefix: str,
                   k: int = 10) -> DataFrame:
-    """Q14 — query autocomplete: the ``k`` highest-df index terms with
-    the given prefix. One dict/ scan with a StartsWith predicate pushed
-    into parquet (dict rows are sorted by term within each bucket, so
-    row groups outside the prefix range are skipped via min/max stats);
-    TakeOrderedAndProject cuts the top-k. Ties break lexicographically
-    for determinism."""
-    from datastream_io_spark.operators.dictindex import prefix_expansion_df
+    """Q14 — query autocomplete: DF[term, df] of the ``k`` highest-df
+    index terms with the given (lower-cased) prefix, ties broken by
+    term — the wildcard expansion of ``prefix`` capped at ``k``
+    (:meth:`Searcher._expand`): from the driver vocabulary of a
+    dictionary placed there (no Spark job, an :class:`ArrowFrame`),
+    else the sidecar or dict/ scan with the StartsWith predicate pushed
+    into parquet (row groups outside the prefix range are skipped via
+    min/max stats). An empty prefix suggests nothing."""
+    from datastream_io_spark.operators.build import DICT_SCHEMA
 
-    prefix = prefix.lower()
-    hits = prefix_expansion_df(spark, index_dir, prefix)
-    if hits is None:
-        d = spark.read.parquet(os.path.join(index_dir, "dict"))
-        hits = d.where(F.col("term").startswith(prefix))
-    return (
-        hits.select("term", "df")
-        .orderBy(F.desc("df"), F.asc("term"))
-        .limit(k)
-    )
+    rows = Searcher(spark, index_dir)._expand(prefix, "wildcard", 0, k)
+    return _empty_frame(spark, T.StructType(DICT_SCHEMA.fields[:2]),
+                        [(r["term"], int(r["df"])) for r in rows])
 
 
 def search_wildcard(spark: SparkSession, index_dir: str, prefix: str,
@@ -2165,7 +2214,7 @@ def search_wildcard(spark: SparkSession, index_dir: str, prefix: str,
     BM25 contributions, MaxScore pruning included for free).
 
     A dictionary placed on the driver (:func:`_dict_on_driver`)
-    expands with one searchsorted range of the handle's term-sorted
+    expands with one searchsorted range of its term-sorted
     vocabulary (no Spark job). Past the dictionary gate, expansion
     reads the term-RANGE-partitioned ``dict_sorted/`` companion when
     present and fresh (build_term_sidecars): the pushed
@@ -2222,7 +2271,7 @@ def search_regex(spark: SparkSession, index_dir: str, pattern: str,
     (df desc, term asc) ``max_expansions`` cap as wildcard/fuzzy.
 
     A dictionary placed on the driver (:func:`_dict_on_driver`)
-    expands with Python ``re.fullmatch`` over the handle's vocabulary
+    expands with Python ``re.fullmatch`` over its vocabulary
     (no Spark job). Past the dictionary gate, the scale path: the
     pattern's literal prefix (chars before the first metacharacter)
     prunes the expansion scan — via the term-range ``dict_sorted/``
@@ -2267,7 +2316,7 @@ def search_fuzzy(spark: SparkSession, index_dir: str, term: str,
     as Q18; a doc matching several variants sums their contributions).
 
     A dictionary placed on the driver (:func:`_dict_on_driver`)
-    expands from the handle's vocabulary: the length band is one
+    expands from its vocabulary: the length band is one
     searchsorted range, checked by one vectorized distance DP per term
     length (no Spark job). Past the dictionary gate, expansion prefers
     the ``dict_ngrams/`` gram sidecar when present and fresh
@@ -2365,11 +2414,14 @@ def lookup_terms(spark: SparkSession, index_dir: str, terms: list[str],
     bucket_term_rows`: the process-wide term-rows cache, else one
     pruned pyarrow read of the bucket files — no Spark job, and no read
     at all for terms looked up before against the same files. Larger
-    dictionaries keep the distributed lookup."""
+    dictionaries keep the distributed lookup. Either way the rows are
+    ``Row`` objects of (``term``, ``df``, ``cf``, ``idf``,
+    ``term_bucket``)."""
     if n_buckets is None:
         n_buckets = int(read_stats(index_dir)["n_buckets"])
-    return _dict_rows(spark, index_dir, terms, n_buckets,
-                      _dict_on_driver(index_dir))
+    on_driver = _dict_on_driver(index_dir)
+    rows = _dict_rows(spark, index_dir, terms, n_buckets, on_driver)
+    return [Row(**r) for r in rows] if on_driver else rows
 
 
 def _dict_rows(spark: SparkSession, index_dir: str, terms: list[str],
@@ -2568,12 +2620,14 @@ def explain_query(spark: SparkSession, index_dir: str, query: str,
     tomb, _ = _tombstone_state(spark, index_dir)
     out["n_tombstones"] = int(tomb.value.size) if tomb is not None else 0
 
-    def term_rows(terms):
-        rows = searcher._lookup(sorted(terms))
+    def fmt(rows):
         return [{"term": r["term"], "df": int(r["df"]),
                  "idf": round(float(r["idf"]), 6),
-                 "bucket": int(r["term_bucket"])}
-                for r in sorted(rows, key=lambda r: r["term"])]
+                 "bucket": int(r["term_bucket"])} for r in rows]
+
+    def term_rows(terms):
+        return fmt(sorted(searcher._lookup(sorted(terms)),
+                          key=lambda r: r["term"]))
 
     if mode == "boolean":
         from datastream_io_spark.operators.boolean_search import (
@@ -2589,9 +2643,7 @@ def explain_query(spark: SparkSession, index_dir: str, query: str,
         exp = searcher._expand(query, mode, max_dist, max_expansions)
         out["expansion"] = [r["term"] for r in exp]
         out["expansion_capped"] = len(exp) >= max_expansions
-        rows = [{"term": r["term"], "df": int(r["df"]),
-                 "idf": round(float(r["idf"]), 6),
-                 "bucket": int(r["term_bucket"])} for r in exp]
+        rows = fmt(exp)
         out["resolved_mode"] = "or"
     elif mode == "near":
         seq = parse_phrase(query, stats["tokenizer"])

@@ -497,12 +497,12 @@ class PartitionedSearcher:
         return self._sub[str(value)]
 
     def _dict_scan(self, v: str, cond) -> DataFrame:
-        """Subindex ``v``'s value-tagged ``(term, df, _fv)`` dictionary
-        rows under ``cond`` — explicit DICT_SCHEMA, so no per-subindex
-        footer-inference job."""
+        """Subindex ``v``'s value-tagged ``(term, df, term_bucket, _fv)``
+        dictionary rows under ``cond`` — explicit DICT_SCHEMA, so no
+        per-subindex footer-inference job."""
         return (self.spark.read.schema(DICT_SCHEMA)
                 .parquet(os.path.join(self._sub[v].index_dir, "dict"))
-                .where(cond).select("term", "df")
+                .where(cond).select("term", "df", "term_bucket")
                 .withColumn("_fv", F.lit(v)))
 
     def _lookup_all(self, terms: list[str]) -> dict[str, list]:
@@ -525,10 +525,7 @@ class PartitionedSearcher:
         if scans:
             for r in _collect_no_aqe(self.spark,
                                      reduce(DataFrame.unionByName, scans)):
-                nb = int(self.stats_of[r["_fv"]]["n_buckets"])
-                rows_of[r["_fv"]].append(
-                    {"term": r["term"], "df": int(r["df"]),
-                     "term_bucket": term_bucket(r["term"], nb)})
+                rows_of[r["_fv"]].append(r.asDict())
         return rows_of
 
     def _global_idf(self, rows_of: dict[str, list]) -> dict[str, float]:

@@ -33,14 +33,24 @@ def distributed_build(monkeypatch):
 _DICT_GATE = IX.AUTO_DICT_DRIVER_MAX_TERMS
 
 
+@contextlib.contextmanager
+def spark_placed():
+    """Inside the block, every dictionary opened is placed past the
+    driver gate (``AUTO_DICT_DRIVER_MAX_TERMS`` = 0): lookups and
+    wildcard / fuzzy / regex expansion take the Spark paths — the
+    bucket-pruned lookup job, the ``dict_sorted/`` and ``dict_ngrams/``
+    sidecars, the dictionary scans and the cross-partition union scans
+    — as on a dictionary too large for the driver."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(IX, "AUTO_DICT_DRIVER_MAX_TERMS", 0)
+        yield
+
+
 @pytest.fixture()
-def spark_dict(monkeypatch):
-    """Place every dictionary a test opens past the driver gate
-    (``AUTO_DICT_DRIVER_MAX_TERMS`` = 0): lookups and wildcard / fuzzy /
-    regex expansion take the Spark paths — the bucket-pruned lookup
-    job, the ``dict_sorted/`` and ``dict_ngrams/`` sidecars and the
-    dictionary scans — as on a dictionary too large for the driver."""
-    monkeypatch.setattr(IX, "AUTO_DICT_DRIVER_MAX_TERMS", 0)
+def spark_dict():
+    """:func:`spark_placed` for the whole test."""
+    with spark_placed():
+        yield
 
 
 @contextlib.contextmanager

@@ -86,7 +86,10 @@ def test_wildcard_and_suggest_parity_with_fallback(spark, doc_index,
               suggest_terms(spark, sidecar_index, prefix, 5).collect()]
         sb = [(r.term, r.df) for r in
               suggest_terms(spark, doc_index, prefix, 5).collect()]
-        assert sa == sb, prefix
+        with driver_dict():
+            sc = [(r.term, r.df) for r in
+                  suggest_terms(spark, doc_index, prefix, 5).collect()]
+        assert sa == sb == sc, prefix
         assert [t for t, _ in sa] == _vocab_terms(spark, doc_index, prefix,
                                                   "wildcard", cap=5)
 

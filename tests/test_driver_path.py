@@ -207,10 +207,10 @@ def test_gated_queries_launch_no_spark_job(spark, pos_index, part_root):
     boolean count. Neither do a Searcher's open, the one-shot module
     functions built on it — their lookups and wildcard / fuzzy / regex
     expansions read the small dictionary on the driver, a one-shot
-    cross-partition boolean query's too — a warm boolean query whose
-    leaves expand from the driver vocabulary, an explain, nor queries
-    that can match nothing (no term in the dictionary, or Σ df = 0 over
-    every leaf)."""
+    cross-partition boolean query's and an autocomplete's too — a warm
+    boolean query whose leaves expand from the driver vocabulary, an
+    explain, nor queries that can match nothing (no term in the
+    dictionary, or Σ df = 0 over every leaf)."""
     s = IX.Searcher(spark, pos_index)
     sc = spark.sparkContext
     sc.setJobGroup("driver_path", "gated queries")
@@ -243,6 +243,7 @@ def test_gated_queries_launch_no_spark_job(spark, pos_index, part_root):
                            10).collect(),
             IX.explain_query(spark, pos_index, "s*",
                              mode="wildcard")["expansion"],
+            IX.suggest_terms(spark, pos_index, "s", 5).collect(),
             P.search_boolean_all_partitions(spark, part_root,
                                             "agg AND s*").collect(),
         ]
@@ -365,6 +366,54 @@ def test_driver_dict_open_runs_no_job(spark, pos_index, monkeypatch):
     assert v.bucket.tolist() == want["term_bucket"].tolist()
     assert v.lens.tolist() == sorted(len(t) for t in want["term"])
     assert [len(t) for t in v.terms[v.by_len]] == v.lens.tolist()
+
+
+def test_vocabulary_read_once_per_process(spark, pos_index, tmp_path,
+                                          monkeypatch):
+    """One-shot expansions over the same ``dict/`` files share one
+    vocabulary: the first reads it, the rest read nothing. Changed
+    files (another path, a rewritten bucket file) are read afresh, and
+    past ``VOCAB_CACHE_MAX_BYTES`` the least recently used vocabulary
+    is dropped while the newest stays."""
+    import os
+    import shutil
+    from collections import OrderedDict
+
+    monkeypatch.setattr(IX, "_VOCABS", OrderedDict())
+    reads = []
+    real = IX._Vocab.read
+    monkeypatch.setattr(IX._Vocab, "read",
+                        lambda d: (reads.append(d), real(d))[1])
+
+    def expand_all(idx):
+        return [_rows(IX.search_wildcard(spark, idx, "s*", 10)),
+                _rows(IX.search_fuzzy(spark, idx, "windoq", 10)),
+                _rows(IX.search_regex(spark, idx, "ag+", 10))]
+
+    want = expand_all(pos_index)
+    assert expand_all(pos_index) == want
+    assert IX.Searcher(spark, pos_index).search_wildcard(
+        "s*", 10).collect()
+    assert reads == [pos_index]
+
+    copy = str(tmp_path / "copy")
+    shutil.copytree(pos_index, copy)
+    assert expand_all(copy) == want and reads == [pos_index, copy]
+    bdir = os.path.join(copy, "dict", "term_bucket=0")
+    f = os.path.join(bdir, next(n for n in sorted(os.listdir(bdir))
+                                if n.endswith(".parquet")))
+    st = os.stat(f)
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert expand_all(copy) == want and reads == [pos_index, copy, copy]
+    assert len(IX._VOCABS) == 3  # the stale entry ages out by LRU
+
+    monkeypatch.setattr(IX, "VOCAB_CACHE_MAX_BYTES", 1)
+    assert expand_all(pos_index) == want and len(reads) == 3  # a hit
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 2 * 10**9))
+    assert expand_all(copy) == want and len(reads) == 4
+    assert len(IX._VOCABS) == 1  # the read evicted all but itself
+    assert expand_all(pos_index) == want and reads[-1] == pos_index
+    assert len(IX._VOCABS) == 1
 
 
 def test_unknown_partition_value_makes_no_jvm_call(spark, tmp_path):

@@ -99,15 +99,20 @@ def test_plan_cache_keeps_deletes_live(spark, tmp_path):
 def test_lookup_terms_fast_path_matches_spark_path(spark, doc_index,
                                                    spark_dict):
     """The pyarrow pruned-bucket read must return the same dict rows as
-    the distributed lookup (which runs when the n_terms gate fails)."""
+    the distributed lookup (which runs when the n_terms gate fails),
+    as the same Row type."""
+    from pyspark.sql import Row
+
     from tests.conftest import driver_dict
 
     terms = ["window", "agg", "scan", "nosuchterm"]
     with driver_dict():
         fast = IX.lookup_terms(spark, doc_index, terms)
     slow = IX.lookup_terms(spark, doc_index, terms)
-    assert all(isinstance(r, dict) for r in fast)
-    assert not any(isinstance(r, dict) for r in slow)  # collected Rows
+    for rows in (fast, slow):
+        assert rows and all(type(r) is Row for r in rows)
+        assert all(r.__fields__ == ["term", "df", "cf", "idf",
+                                    "term_bucket"] for r in rows)
 
     def norm(rows):
         return sorted((r["term"], int(r["df"]), int(r["cf"]),

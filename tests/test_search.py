@@ -417,7 +417,7 @@ def test_partitioned_index_routing(spark, tmp_path):
         search_partitioned,
     )
     from datastream_io_spark.sources.scan import documents_as_corpus
-    from tests.conftest import SF0001, docs_with_text, driver_dict
+    from tests.conftest import SF0001, docs_with_text
 
     corpus = documents_as_corpus(spark, SF0001)
     root = str(tmp_path / "part_root")
@@ -516,10 +516,15 @@ def test_search_all_partitions_matches_unpartitioned(
     candidates under plan-time GLOBAL statistics (Σdf, Σn_docs,
     Σsum_dl), so it must equal an unpartitioned index over the same
     corpus to 1e-9 — for and/or/phrase, at different n_splits, and
-    with deletes applied to one subindex."""
+    with deletes applied to one subindex — with the dictionaries on the
+    driver (the default) and past the gate (one union scan looks the
+    terms up over every subindex), and the two placements agree."""
+    import time as _time
+
     from datastream_io_spark.operators.indexed_search import delete_docs
     from datastream_io_spark.operators.partitioned import (
         build_partitioned_index, search_all_partitions)
+    from tests.conftest import spark_placed
 
     corpus = documents_as_corpus(spark, SF0001)
     root = str(tmp_path / "gap_root")
@@ -530,14 +535,41 @@ def test_search_all_partitions_matches_unpartitioned(
     def key(rows):
         return sorted((r["path"], round(r["score"], 9)) for r in rows)
 
-    for q, mode in [("window agg", "and"), ("window agg", "or"),
-                    ("window agg", "phrase"), ("scan", "or"),
-                    ("zzznope window", "and")]:
-        g = search_all_partitions(spark, root, q, 10, mode,
-                                  with_doc_cols=True).collect()
-        m = search_indexed(spark, pos_index, q, 10, mode,
-                           with_doc_cols=True).collect()
-        assert key(g) == key(m), (q, mode)
+    # job-count contract: the display read is the ONE job at any
+    # number of partition values (AQE off for the union collect;
+    # explicit docs schema — no per-subindex inference job): the
+    # small dictionaries are looked up on the driver, and each
+    # subindex's Σ df passes the single-task gate, so it ranks on the
+    # driver and the merge runs in Python. Past the dictionary gate the
+    # lookup adds ONE union-scan job. The caller's collect is
+    # included: the result is a local relation
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    answers = {}
+    for placement, n_lookup_jobs in ((contextlib.nullcontext, 0),
+                                     (spark_placed, 1)):
+        with placement():
+            for q, mode in [("window agg", "and"), ("window agg", "or"),
+                            ("window agg", "phrase"), ("scan", "or"),
+                            ("zzznope window", "and")]:
+                g = search_all_partitions(spark, root, q, 10, mode,
+                                          with_doc_cols=True).collect()
+                m = search_indexed(spark, pos_index, q, 10, mode,
+                                   with_doc_cols=True).collect()
+                assert key(g) == key(m), (placement, q, mode)
+                answers.setdefault((q, mode), []).append(key(g))
+
+            group = f"gap_jobs_{n_lookup_jobs}"
+            sc.setJobGroup(group, "job-count assertion")
+            assert search_all_partitions(spark, root, "window agg", 5,
+                                         "and", with_doc_cols=True
+                                         ).collect()
+            _time.sleep(0.5)
+            n_jobs = len(st.getJobIdsForGroup(group))
+            sc.setJobGroup(None, None)
+            assert n_jobs == 1 + n_lookup_jobs, (placement, n_jobs)
+    for case, (driver, spark_side) in answers.items():
+        assert driver == spark_side, case
 
     # r5: proximity across the root == proximity on the mono index
     from datastream_io_spark.operators.indexed_search import search_near
@@ -556,24 +588,6 @@ def test_search_all_partitions_matches_unpartitioned(
                            "score"]
     assert search_all_partitions(spark, root, "window agg", 3).columns \
         == ["lang", "doc_id", "score"]
-
-    # job-count contract: the display read is the ONE job at any
-    # number of partition values (AQE off for the union collect;
-    # explicit docs schema — no per-subindex inference job): the
-    # small dictionaries are looked up on the driver, and each
-    # subindex's Σ df passes the single-task gate, so it ranks on the
-    # driver and the merge runs in Python. The caller's collect is
-    # included: the result is a local relation
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    sc.setJobGroup("gap_jobs", "job-count assertion")
-    assert search_all_partitions(spark, root, "window agg", 5, "and",
-                                 with_doc_cols=True).collect()
-    import time as _time
-    _time.sleep(0.5)
-    n_jobs = len(st.getJobIdsForGroup("gap_jobs"))
-    sc.setJobGroup(None, None)
-    assert n_jobs == 1, n_jobs
 
     # deletes inside one subindex are honored by the global merge
     sub = os.path.join(root, "lang=de")
@@ -1038,12 +1052,17 @@ def test_boolean_all_partitions_matches_unpartitioned(
     search_boolean on an unpartitioned index — operators, NOT, quoted
     and proximity phrases, and wildcard/fuzzy leaves (expanded against
     the union of subindex dictionaries, capped by global df) — both the
-    one-shot module function and a warm driver-dict handle."""
+    one-shot module function and a warm handle, with the dictionaries
+    on the driver (the default) and past the gate (union scans expand
+    the leaves and look the terms up), and the two placements agree."""
+    import time as _time
+
     from datastream_io_spark.operators.boolean_search import (
         search_boolean)
     from datastream_io_spark.operators.partitioned import (
         PartitionedSearcher, build_partitioned_index,
         search_boolean_all_partitions)
+    from tests.conftest import spark_placed
 
     corpus = documents_as_corpus(spark, SF0001)
     root = str(tmp_path / "gbool_root")
@@ -1054,22 +1073,58 @@ def test_boolean_all_partitions_matches_unpartitioned(
     def key(rows):
         return sorted((r["path"], round(r["score"], 9)) for r in rows)
 
-    # the warm handle: leaves expand and df sums off the driver dicts
-    ps = PartitionedSearcher(spark, root)
-    for q in ["window AND (agg OR scan) NOT merge",
-              '"window agg" OR scan',
-              '"window agg"~2 NOT merge',
-              "agg AND s*",
-              "agg AND windoq~1",
-              "agg NOT s*",
-              "zzznope AND window"]:
-        g = search_boolean_all_partitions(spark, root, q, 10**6,
-                                          with_doc_cols=True).collect()
-        w = ps.search_boolean(q, 10**6, with_doc_cols=True).collect()
-        m = search_boolean(spark, pos_index, q, 10**6,
-                           with_doc_cols=True).collect()
-        assert key(g) == key(m), q
-        assert key(w) == key(m), q
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    answers = {}
+    # the one-shot "agg AND s*" costs no job with driver dictionaries;
+    # past the gate, ONE union scan expands s* over every subindex and
+    # ONE looks the terms up (each subindex still ranks on the driver)
+    for placement, n_jobs_want in ((contextlib.nullcontext, 0),
+                                   (spark_placed, 2)):
+        with placement():
+            ps = PartitionedSearcher(spark, root)
+            for q in ["window AND (agg OR scan) NOT merge",
+                      '"window agg" OR scan',
+                      '"window agg"~2 NOT merge',
+                      "agg AND s*",
+                      "agg AND windoq~1",
+                      "agg NOT s*",
+                      "zzznope AND window"]:
+                g = search_boolean_all_partitions(
+                    spark, root, q, 10**6, with_doc_cols=True).collect()
+                w = ps.search_boolean(q, 10**6,
+                                      with_doc_cols=True).collect()
+                m = search_boolean(spark, pos_index, q, 10**6,
+                                   with_doc_cols=True).collect()
+                assert key(g) == key(m), (placement, q)
+                assert key(w) == key(m), (placement, q)
+                answers.setdefault(q, []).append(key(g))
+
+            group = f"psb_oneshot_{n_jobs_want}"
+            sc.setJobGroup(group, "one-shot global boolean query")
+            assert search_boolean_all_partitions(spark, root,
+                                                 "agg AND s*").collect()
+            _time.sleep(0.5)
+            n_jobs = len(st.getJobIdsForGroup(group))
+            sc.setJobGroup(None, None)
+            assert n_jobs == n_jobs_want, (placement, n_jobs)
+    for q, (driver, spark_side) in answers.items():
+        assert driver == spark_side, q
+
+    # a capped leaf keeps the expansions of highest GLOBAL df in both
+    # placements: s* capped at 3 is the unpartitioned index's top 3
+    from datastream_io_spark.operators.indexed_search import Searcher
+
+    top3 = [r["term"] for r in
+            Searcher(spark, pos_index)._expand("s", "wildcard", 0, 3)]
+    want = key(search_boolean(spark, pos_index,
+                              "agg OR " + " OR ".join(top3), 10**6,
+                              with_doc_cols=True).collect())
+    for placement in (contextlib.nullcontext, spark_placed):
+        with placement():
+            assert key(search_boolean_all_partitions(
+                spark, root, "agg OR s*", 10**6, with_doc_cols=True,
+                max_expansions=3).collect()) == want, placement
     assert key(search_boolean_all_partitions(
         spark, root, "window AND agg", 10**6,
         with_doc_cols=True).collect())  # non-empty sanity
@@ -1078,10 +1133,7 @@ def test_boolean_all_partitions_matches_unpartitioned(
     # subindex ranks on the driver under the single-task gate and the
     # merge runs in Python — no Spark job, the caller's collect of the
     # local-relation result included
-    import time as _time
-
-    sc = spark.sparkContext
-    st = sc.statusTracker()
+    ps = PartitionedSearcher(spark, root)
     sc.setJobGroup("psb_jobs", "warm global boolean query")
     assert ps.search_boolean("agg AND s*").collect()
     _time.sleep(0.5)
@@ -1101,6 +1153,7 @@ def test_partitioned_searcher_matches_cold(spark, tmp_path):
     from datastream_io_spark.operators.partitioned import (
         PartitionedSearcher, build_partitioned_index,
         search_all_partitions)
+    from tests.conftest import spark_placed
 
     corpus = documents_as_corpus(spark, SF0001)
     root = str(tmp_path / "ps_root")
@@ -1122,6 +1175,17 @@ def test_partitioned_searcher_matches_cold(spark, tmp_path):
         b = search_all_partitions(spark, root, q, 10, mode,
                                   **kw).collect()
         assert key(a) == key(b), (q, mode)
+    # past the dictionary gate (warm and one-shot lookups are union
+    # scans) both still give the driver dictionaries' answer
+    with spark_placed():
+        cold_ps = PartitionedSearcher(spark, root)
+        for q, mode, kw in cases:
+            want = key(ps.search(q, 10, mode, **kw).collect())
+            assert key(cold_ps.search(q, 10, mode, **kw).collect()) \
+                == want, (q, mode)
+            assert key(search_all_partitions(
+                spark, root, q, 10, mode, **kw).collect()) == want, \
+                (q, mode)
     # doc-col output parity too
     a = ps.search("window agg", 5, "and", with_doc_cols=True).collect()
     b = search_all_partitions(spark, root, "window agg", 5, "and",
