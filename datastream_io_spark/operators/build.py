@@ -9,16 +9,16 @@ resumable (C6, BASELINE.json:14):
      sort), add content_sha256, write the corpus back PARTITIONED BY
      split_id. Doc ids never change across resumes.
   B. per-split SEGMENT jobs: read only that split's staged partition
-     (directory-level partition pruning), tokenize ONCE (vectorized
-     pandas UDF), tf via partial+final hash agg with doc_len carried
-     through the explode (no join), range-salt hot terms (C4, in-split
+     (directory-level partition pruning), tokenize + tf + doc_len in
+     ONE columnar ``mapInArrow`` kernel (``postings.term_stats_fused``,
+     no explode/groupBy shuffle), range-salt hot terms (C4, in-split
      df), and block-encode sorted posting runs (delta + varint,
-     per-block max_tf / min_dl) in a sorted-partition ``mapInPandas``
-     kernel. The durable checkpoint per split is the COMPRESSED
-     segment (~1-2 bytes/posting), not raw tf rows — encoding needs no
-     global statistics because the per-block WAND bound is derived at
-     query time from (max_tf, min_dl, avgdl). Independent jobs →
-     resumable + runnable concurrently.
+     per-block max_tf / min_dl) in a sorted-partition ``mapInArrow``
+     kernel (:func:`_encode_partitions`). The durable checkpoint per
+     split is the COMPRESSED segment (~1-2 bytes/posting), not raw tf
+     rows — encoding needs no global statistics because the per-block
+     WAND bound is derived at query time from (max_tf, min_dl, avgdl).
+     Independent jobs → resumable + runnable concurrently.
   C. finalize: exact global stats from the manifests, merge runs per
      (term, split) IN PURE COLUMN OPS (runs are doc-id-disjoint by
      construction: splits own contiguous id ranges, salted sub-ranges
@@ -50,9 +50,12 @@ corpus, local[8] vs local[32]):
   → the 400k tiny pandas groups cost ~150s alone, and checkpointing
   raw tf rows bottlenecked on single-disk I/O that no core count can
   scale.
-  v3 (this): encode inside the split job via the numpy change-point
+  v3: encode inside the split job via the numpy change-point
   mapInPandas kernel; checkpoints shrink ~10×; finalize only merges
   compressed runs.
+  v4 (this): the tokenize/tf and encode kernels are columnar
+  (``mapInArrow``; Arrow in, Arrow out, the blocks column built over the
+  varint buffers) and shared verbatim with the in-process build.
 At petabyte scale the staging copy is skipped by partitioning the
 source table itself on the split expression (Iceberg partition
 transform) — split jobs then prune on the source directly.
@@ -84,14 +87,18 @@ import json
 import os
 import shutil
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from datastream_io_spark import B, K1
 from datastream_io_spark.operators import postings as P
-from datastream_io_spark.operators.codec import encode_blocks
+from datastream_io_spark.operators.codec import encode_blocks, encode_runs
 from datastream_io_spark.session import aqe_disabled
 from datastream_io_spark.sources import manifest as M
 
@@ -131,6 +138,7 @@ BATCH_SEGMENT_SCHEMA = T.StructType(
     list(SEGMENT_SCHEMA.fields)
     + [T.StructField("payload_bytes", T.LongType())]
 )
+BATCH_SEGMENT_ARROW = to_arrow_schema(BATCH_SEGMENT_SCHEMA)
 
 # the finalized postings layout (term_bucket is the hive partition
 # column). Readers pass it explicitly: inference reads a footer —
@@ -728,56 +736,65 @@ def stage_commit(index_dir: str, plan: dict) -> dict:
     return plan
 
 
-def _encode_partitions(it):
-    """mapInPandas encode kernel (C1+C2). Input batches come from a
+def segment_batch(term: pa.Array, salt: np.ndarray, ids: np.ndarray,
+                  tfs: np.ndarray, dls: np.ndarray, starts: np.ndarray,
+                  ends: np.ndarray,
+                  positions: np.ndarray | None) -> pa.RecordBatch:
+    """Segment rows (:data:`BATCH_SEGMENT_ARROW`) of the runs
+    ``[starts[r], ends[r])`` of (doc_id, tf, dl[, flat positions])
+    rows sorted by (run key, doc_id): ``term`` and ``salt`` are each
+    run's, and the blocks and payload bytes come from ONE
+    :func:`~.codec.encode_runs` call — the one encoder of the Spark
+    segment job, the in-process build and the streaming merge."""
+    enc = encode_runs(ids, tfs, dls, starts, ends, positions=positions)
+    return pa.RecordBatch.from_arrays([
+        term,
+        pa.array(salt, pa.int32()),
+        pa.array(ids[starts], pa.int64()),
+        pa.array(ids[ends - 1], pa.int64()),
+        pa.array(ends - starts, pa.int64()),
+        pa.array(np.add.reduceat(tfs, starts), pa.int64()),
+        enc.blocks,
+        pa.array(enc.payload_bytes, pa.int64()),
+    ], schema=BATCH_SEGMENT_ARROW)
+
+
+def encode_sorted(batch: pa.RecordBatch,
+                  keys: tuple) -> tuple[pa.RecordBatch, np.ndarray]:
+    """:func:`segment_batch` of one Arrow batch of (term, salt, doc_id,
+    tf, dl[, positions]) rows sorted by (*keys, doc_id): a run is a
+    maximal stretch of equal ``keys``, found by Arrow comparisons of
+    each row with the next. Also returns the run starts."""
+    n = batch.num_rows
+    change = np.zeros(max(n - 1, 0), bool)
+    for k in keys:
+        col = batch.column(k)
+        change |= pc.not_equal(col.slice(1), col.slice(0, n - 1)
+                               ).to_numpy(zero_copy_only=False)
+    starts = np.concatenate(([0], np.flatnonzero(change) + 1))
+    ends = np.append(starts[1:], n)
+    positions = (batch.column("positions").flatten().to_numpy()
+                 if "positions" in batch.schema.names else None)
+    return segment_batch(
+        batch.column("term").take(pa.array(starts)),
+        batch.column("salt").to_numpy()[starts],
+        batch.column("doc_id").to_numpy(), batch.column("tf").to_numpy(),
+        batch.column("dl").to_numpy(), starts, ends, positions), starts
+
+
+def _encode_partitions(batches):
+    """mapInArrow encode kernel (C1+C2). Input batches come from a
     partition hash-distributed on (term, salt) and sorted by
-    (term, salt, doc_id): every run is contiguous, found with numpy
-    change-point detection — NO per-group pandas DataFrame (an
-    applyInPandas-per-group variant spent ~150s on 400k tiny groups at
-    50k docs). A run straddling an Arrow batch boundary yields two
+    (term, salt, doc_id): every run is contiguous, found by change-point
+    detection, and the whole batch is encoded in one numpy pass per
+    stream — NO per-group frame (an applyInPandas-per-group variant
+    spent ~150s on 400k tiny groups at 50k docs) and no per-run Python
+    object. A run straddling an Arrow batch boundary yields two
     doc-disjoint runs, which the downstream merge (sort by first_doc_id
     + flatten) handles by construction."""
-    import numpy as np
-
-    from datastream_io_spark.operators.codec import encode_runs
-
-    for pdf in it:
-        if len(pdf) == 0:
-            continue
-        terms = pdf["term"].to_numpy()
-        salts = pdf["salt"].to_numpy()
-        ids = pdf["doc_id"].to_numpy()
-        tfs = pdf["tf"].to_numpy()
-        dls = pdf["dl"].to_numpy()
-        pos_col = (pdf["positions"].to_numpy()
-                   if "positions" in pdf.columns else None)
-        change = np.flatnonzero(
-            (terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(pdf)]))
-        # encode the WHOLE batch in one numpy pass per stream (the
-        # per-run varint calls cost ~100µs/run of call overhead, and
-        # code corpora are dominated by df=1-2 runs)
-        flat_pos = (np.concatenate(pos_col) if pos_col is not None
-                    else None)
-        blocks_per_run = encode_runs(ids, tfs, dls, starts, ends,
-                                     positions=flat_pos)
-        cf_runs = np.add.reduceat(tfs, starts)
-        # payload bytes per run — MUST equal blocks_bytes_col over the
-        # same blocks (the verify tooling recounts with that Column)
-        pay = [
-            sum(len(b["docs"]) + len(b["tfs"]) + len(b["dls"])
-                + len(b["poss"] or b"") for b in blks)
-            for blks in blocks_per_run
-        ]
-        rows = [
-            (terms[s], int(salts[s]), int(ids[s]), int(ids[e - 1]),
-             int(e - s), int(cf_runs[r]), blocks_per_run[r], pay[r])
-            for r, (s, e) in enumerate(zip(starts, ends))
-        ]
-        yield pd.DataFrame(rows, columns=[
-            "term", "salt", "first_doc_id", "last_doc_id",
-            "df_run", "cf_run", "blocks", "payload_bytes"])
+    for batch in batches:
+        if batch.num_rows:
+            yield encode_sorted(batch, ("term", "salt"))[0]
 
 
 def _dedup_doc_dl(it):
@@ -930,7 +947,7 @@ def build_segment(
             salted.select(*run_cols)
             .repartition(fan, "term", "salt")
             .sortWithinPartitions("term", "salt", "doc_id")
-            .mapInPandas(_encode_partitions, BATCH_SEGMENT_SCHEMA)
+            .mapInArrow(_encode_partitions, BATCH_SEGMENT_SCHEMA)
         )
 
         if os.path.exists(tmp_dir):
@@ -985,7 +1002,6 @@ def build_segment(
     # the reads stay split-sized at any corpus scale). payload_bytes is
     # kernel-computed to blocks_bytes_col's definition, so verify
     # recounts still match.
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     def _sum(tbl, col):
@@ -1406,13 +1422,11 @@ def purge_deleted(spark: SparkSession, index_dir: str) -> dict:
 
 
 def _purge_deleted_locked(spark: SparkSession, index_dir: str) -> dict:
-    import numpy as np
-
     from datastream_io_spark.operators.codec import (
         decode_block_dls,
         decode_block_positions,
-        decode_block_tfs,
         decode_blocks,
+        ranges,
     )
 
     if os.path.exists(os.path.join(index_dir, "manifest",
@@ -1460,15 +1474,8 @@ def _purge_deleted_locked(spark: SparkSession, index_dir: str) -> dict:
                 if has_pos:
                     flat = np.concatenate(
                         [decode_block_positions(b) for b in blocks])
-                    lens = tfs
-                    starts = np.cumsum(lens) - lens
-                    sel = np.flatnonzero(keep)
-                    klens = lens[sel]
-                    total = int(klens.sum())
-                    gather = (np.repeat(starts[sel], klens)
-                              + np.arange(total)
-                              - np.repeat(np.cumsum(klens) - klens, klens))
-                    flat_pos = flat[gather]
+                    starts = np.cumsum(tfs) - tfs
+                    flat_pos = flat[ranges(starts[keep], tfs[keep])]
                 new_blocks = encode_blocks(
                     ids[keep], tfs[keep], dls[keep], positions=flat_pos)
                 keep_rows.append(r._replace(

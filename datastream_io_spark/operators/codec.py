@@ -41,13 +41,17 @@ into blocks of ≤128 doc ids; per block we store
                            Powers phrase queries.
 
 Everything is numpy-vectorized (no per-row Python): encode loops only
-over byte-positions (≤10), decode has a fast path for the dominant
+over byte-positions (≤10) and returns the blocks as one Arrow column
+(:class:`EncodedRuns`), decode has a fast path for the dominant
 all-single-byte case and an ``np.add.at`` scatter otherwise.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import numpy as np
+import pyarrow as pa
 
 from datastream_io_spark import BLOCK_SIZE
 
@@ -59,6 +63,25 @@ _U64_0x7F = np.uint64(0x7F)
 # the north-rule corpus bound. Enforced at ENCODE time so the query
 # side can rely on it instead of silently corrupting keys.
 POS_BITS = 22
+
+# one block as Arrow — the ``build.BLOCKS_TYPE`` element as Spark's
+# Arrow conversion types it (pinned by tests/test_columnar.py)
+BLOCK_ARROW = pa.struct(
+    [(f, pa.int64()) for f in ("first_doc_id", "max_doc_id")]
+    + [(f, pa.int32()) for f in ("n", "max_tf", "min_dl")]
+    + [(f, pa.binary()) for f in ("docs", "tfs", "dls", "poss")])
+BLOCKS_ARROW = pa.list_(pa.field("element", BLOCK_ARROW))
+
+
+def ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Indices of the ranges ``[starts[i], starts[i] + lens[i])``, one
+    after another: the gather that reorders or selects variable-length
+    slices (a CSR ``take``) without a Python loop."""
+    lens = np.asarray(lens, np.int64)
+    ends = np.cumsum(lens)
+    total = int(ends[-1]) if ends.size else 0
+    return (np.repeat(np.asarray(starts, np.int64) - (ends - lens), lens)
+            + np.arange(total))
 
 
 def _varint_stream(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -115,6 +138,37 @@ def varint_decode(buf: bytes, n: int) -> np.ndarray:
     return vals
 
 
+class EncodedRuns(Sequence):
+    """The blocks of many runs: ``blocks`` is the segment column, one
+    Arrow list of :data:`BLOCK_ARROW` per run, and ``payload_bytes`` the
+    run's four byte streams summed (``build.blocks_bytes_col``'s
+    definition). As a sequence it is the list-of-dicts form, one list of
+    block dicts per run (converted on first use)."""
+
+    def __init__(self, blocks: pa.ListArray, payload_bytes: np.ndarray):
+        self.blocks = blocks
+        self.payload_bytes = payload_bytes
+        self._rows = None
+
+    def to_pylist(self) -> list[list[dict]]:
+        if self._rows is None:
+            self._rows = self.blocks.to_pylist()
+        return self._rows
+
+    def __len__(self) -> int:
+        return len(self.blocks)
+
+    def __getitem__(self, i):
+        return self.to_pylist()[i]
+
+
+def _binary(buf: np.ndarray, bounds: np.ndarray) -> pa.Array:
+    """Value i = ``buf[bounds[i]:bounds[i + 1]]``, with no copy."""
+    return pa.BinaryArray.from_buffers(
+        pa.binary(), bounds.size - 1,
+        [None, pa.py_buffer(bounds.astype(np.int32)), pa.py_buffer(buf)])
+
+
 def encode_runs(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
@@ -123,18 +177,18 @@ def encode_runs(
     run_ends: np.ndarray,
     positions: np.ndarray | None = None,
     block_size: int = BLOCK_SIZE,
-) -> list[list[dict]]:
+) -> EncodedRuns:
     """C2 batch form — encode MANY contiguous runs in one numpy pass.
 
     ``doc_ids``/``tfs``/``dls`` are the whole sorted batch; run r owns
     rows [run_starts[r], run_ends[r]) and runs tile the batch
     contiguously (run_ends[r] == run_starts[r+1]). ``positions``, when
     given, is the batch-flat ascending within-doc position stream whose
-    posting boundaries are ``tfs``. Returns one blocks-list per run,
-    byte-identical to encoding each run alone: every stream is packed
-    with ONE varint pass over the batch and sliced per block at value
-    boundaries (a code corpus is dominated by df=1-2 runs, where
-    per-run varint calls cost ~100µs/run of pure call overhead).
+    posting boundaries are ``tfs``. Every stream is packed with ONE
+    varint pass over the batch, and each block's bytes are a slice of it
+    at value boundaries: the block columns are built straight over those
+    buffers, so no per-block Python object exists. Each run's blocks are
+    byte-identical to encoding the run alone.
     """
     doc_ids = np.ascontiguousarray(doc_ids, np.int64)
     tfs = np.ascontiguousarray(tfs, np.int64)
@@ -144,7 +198,11 @@ def encode_runs(
     n = doc_ids.size
     nruns = run_starts.size
     if n == 0 or nruns == 0:
-        return [[] for _ in range(nruns)]
+        return EncodedRuns(
+            pa.ListArray.from_arrays(pa.array(np.zeros(nruns + 1, np.int32)),
+                                     pa.array([], BLOCK_ARROW),
+                                     type=BLOCKS_ARROW),
+            np.zeros(nruns, np.int64))
 
     # block boundaries: run r yields ceil(len/bs) blocks, tiling its rows
     nb_run = (run_ends - run_starts + block_size - 1) // block_size
@@ -156,11 +214,6 @@ def encode_runs(
     bend = np.minimum(bstart + block_size, run_ends[run_of_block])
     # runs tile the batch, so blocks do too: bend[i] == bstart[i+1]
     bn = bend - bstart
-
-    firsts = doc_ids[bstart]
-    maxs = doc_ids[bend - 1]
-    max_tf = np.maximum.reduceat(tfs, bstart)
-    min_dl = np.minimum.reduceat(dls, bstart)
 
     # docs stream: within-block deltas (block-first ids are implicit)
     deltas = np.empty(n, np.int64)
@@ -178,6 +231,7 @@ def encode_runs(
     vb = np.concatenate(([0], np.cumsum(bn)))  # == bstart + [n] in value space
     t_bb = np.concatenate(([0], t_ends))[vb]
     l_bb = np.concatenate(([0], l_ends))[vb]
+    block_bytes = np.diff(d_bb) + np.diff(t_bb) + np.diff(l_bb)
 
     if positions is not None:
         positions = np.ascontiguousarray(positions, np.int64)
@@ -199,28 +253,28 @@ def encode_runs(
         p_buf, p_ends = _varint_stream(pd_.astype(np.uint64))
         p_bb = np.concatenate(([0], p_ends))[pbounds[np.concatenate(
             (bstart, [n]))]]
+        poss = _binary(p_buf, p_bb)
+        block_bytes += np.diff(p_bb)
+    else:
+        poss = pa.nulls(total_b, pa.binary())
 
-    out: list[list[dict]] = []
-    b = 0
-    tob = bytes  # local alias
-    for r in range(nruns):
-        blocks = []
-        for _ in range(int(nb_run[r])):
-            blocks.append({
-                "first_doc_id": int(firsts[b]),
-                "max_doc_id": int(maxs[b]),
-                "n": int(bn[b]),
-                "max_tf": int(max_tf[b]),
-                "min_dl": int(min_dl[b]),
-                "docs": tob(d_buf[d_bb[b]:d_bb[b + 1]]),
-                "tfs": tob(t_buf[t_bb[b]:t_bb[b + 1]]),
-                "dls": tob(l_buf[l_bb[b]:l_bb[b + 1]]),
-                "poss": (tob(p_buf[p_bb[b]:p_bb[b + 1]])
-                         if positions is not None else None),
-            })
-            b += 1
-        out.append(blocks)
-    return out
+    blocks = pa.StructArray.from_arrays([
+        pa.array(doc_ids[bstart]),
+        pa.array(doc_ids[bend - 1]),
+        pa.array(bn, pa.int32()),
+        pa.array(np.maximum.reduceat(tfs, bstart), pa.int32()),
+        pa.array(np.minimum.reduceat(dls, bstart), pa.int32()),
+        _binary(d_buf, d_bb),
+        _binary(t_buf, t_bb),
+        _binary(l_buf, l_bb),
+        poss,
+    ], fields=list(BLOCK_ARROW))
+    run_bb = np.concatenate(([0], np.cumsum(nb_run)))  # block bounds
+    cum = np.concatenate(([0], np.cumsum(block_bytes)))
+    return EncodedRuns(
+        pa.ListArray.from_arrays(pa.array(run_bb.astype(np.int32)), blocks,
+                                 type=BLOCKS_ARROW),
+        cum[run_bb[1:]] - cum[run_bb[:-1]])
 
 
 def encode_blocks(
@@ -237,8 +291,8 @@ def encode_blocks(
     posting boundaries are ``tfs`` (posting i owns tfs[i] positions).
     Blocks need no global statistics (see ``min_dl`` above), so segments
     are encodable the moment a split is tokenized. Single-run form of
-    :func:`encode_runs` (used by purge/streaming/tests; the build kernel
-    batches)."""
+    :func:`encode_runs` (used by purge and tests; the build kernels
+    batch)."""
     doc_ids = np.ascontiguousarray(doc_ids, np.int64)
     return encode_runs(
         doc_ids, tfs, dls,

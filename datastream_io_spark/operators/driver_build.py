@@ -3,8 +3,8 @@ driver query path (``indexed_search.Searcher._run``).
 
 A distributed ``build_index`` of a few hundred files runs ~16 Spark jobs
 and ~70 tasks; almost all of that cost is fixed per job/task (JVM
-planning and codegen, the JVM↔Python Arrow crossing of every
-``mapInPandas`` batch), while the kernels themselves take a fraction
+planning and codegen, the JVM↔Python Arrow crossing of every Python
+kernel batch), while the kernels themselves take a fraction
 of a CPU-second on such a corpus. Under ``build.DRIVER_BUILD_MAX_DOCS``
 (rows) and ``build.DRIVER_BUILD_MAX_BYTES`` (content bytes) the build
 therefore brings the corpus to the driver and runs the three phases
@@ -13,21 +13,29 @@ here, in this process, with the SAME kernels:
   stage     a plain scan of parquet files (``sources.scan_corpus``, a
             bare ``spark.read.parquet``) is read with pyarrow and runs
             NO Spark job: the footers' row counts and the content bytes
-            gate it, ``xxhash.xxhash64_cols`` computes ``split_id`` the
-            way ``build._doc_key_split`` does and ``hashlib.sha256``
-            ``content_sha256`` the way ``F.sha2`` does. Any other corpus
-            (in-memory frames, filters, unions, DSv2 sources, partitioned
-            directories, non-string columns) is collected in two small
-            Spark jobs, a size probe and then the rows, with both
-            columns computed in the JVM select. Dedupe (max sha256, max
-            lang survivor) and the split-local dense ids follow the
-            window order of ``build._staged_local_df``.
-  segments  ``postings.term_stats_frame`` (the fused tokenize+tf
-            kernel), the same range salting, ``build._encode_partitions``
-            over the split's (term, salt, doc_id)-sorted rows.
+            gate it, ``xxhash.xxhash64_many`` computes ``split_id`` the
+            way ``build._doc_key_split`` does (one lane-parallel numpy
+            hash per key column, the seed chained column to column) and
+            ``hashlib.sha256`` ``content_sha256`` the way ``F.sha2``
+            does. Any other corpus (in-memory frames, filters, unions,
+            DSv2 sources, partitioned directories, non-string columns)
+            is collected in two small Spark jobs, a size probe and then
+            the rows, with both columns computed in the JVM select.
+            Dedupe (max sha256, max lang survivor) and the split-local
+            dense ids follow the window order of
+            ``build._staged_local_df``.
+  segments  the columnar kernels of the Spark segment job, on the
+            split's Arrow columns: ``postings.term_stats_arrow``
+            (tokenize to term codes, tf and positions by one stable
+            argsort), the same range salting, then one
+            ``build.segment_batch`` (``codec.encode_runs``) over the
+            (term, salt, doc_id)-sorted rows, whose blocks column is
+            written as built: no pandas frame, no per-run or per-block
+            Python object.
   finalize  runs merged per (term, split) by concatenating their block
             lists in first_doc_id order (the distributed
-            sort_array + flatten), ``xxhash.term_bucket``,
+            sort_array + flatten), term buckets from one
+            ``xxhash.xxhash64_many`` over the distinct terms,
             ``bm25.idf_py``, then ``build.finalize_commit``.
 
 Every checkpoint and file of the distributed layout is written (pyarrow,
@@ -44,7 +52,6 @@ import os
 import shutil
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.fs as pafs
@@ -55,9 +62,10 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from datastream_io_spark.functions.bm25 import idf_py
-from datastream_io_spark.functions.xxhash import term_bucket, xxhash64_cols
+from datastream_io_spark.functions.xxhash import xxhash64_many
 from datastream_io_spark.operators import build as B
-from datastream_io_spark.operators.postings import term_stats_frame
+from datastream_io_spark.operators.codec import ranges
+from datastream_io_spark.operators.postings import term_stats_arrow
 from datastream_io_spark.session import aqe_disabled
 from datastream_io_spark.sources import manifest as M
 from datastream_io_spark.sources.scan import CORPUS_COLS
@@ -76,7 +84,6 @@ def _arrow_schema(schema: T.StructType, drop: tuple = ()) -> pa.Schema:
         T.StructType([f for f in schema.fields if f.name not in drop]))
 
 
-SEGMENT_ARROW = _arrow_schema(B.BATCH_SEGMENT_SCHEMA)
 # hive partition columns live in the directory name, not the file
 POSTINGS_ARROW = _arrow_schema(B.POSTINGS_SCHEMA, drop=("term_bucket",))
 DICT_ARROW = _arrow_schema(B.DICT_SCHEMA, drop=("term_bucket",))
@@ -228,15 +235,14 @@ def _parquet_rows(uris: list[str], n_splits: int, max_docs: int,
             parts.append(t)
     t = pa.concat_tables(parts)
 
-    def raw(c):  # UTF-8 bytes, what Spark's xxhash64 and sha2 hash
-        return pc.cast(t.column(c), pa.binary()).to_pylist()
-
-    split_id = [xxhash64_cols(k) % n_splits
-                for k in zip(raw("repo"), raw("path"), raw("commit"))]
+    key = np.uint64(42)  # F.xxhash64(repo, path, commit): chained seeds
+    for c in ("repo", "path", "commit"):
+        key = xxhash64_many(t.column(c), key)
     sha = [None if b is None else hashlib.sha256(b).hexdigest()
-           for b in raw("content")]
+           for b in pc.cast(t.column("content"), pa.binary()).to_pylist()]
     return pa.table({
-        "split_id": pa.array(split_id, pa.int32()),
+        "split_id": pa.array(np.mod(key.view(np.int64), n_splits),
+                             pa.int32()),
         **{c: t.column(c) for c in _META_COLS},
         "content_sha256": pa.array(sha, pa.string()),
         "content": t.column("content"),
@@ -366,32 +372,39 @@ def build_segment(index_dir: str, split_id: int, info: dict,
     positions = bool(info.get("positions", False))
     staged = _read_staged(index_dir, info, split_id,
                           ["content", "content_sha256"])
-    tf = term_stats_frame(
-        pd.DataFrame({"doc_id": staged.column("doc_id").to_numpy(),
-                      "content": staged.column("content").to_pandas()}),
-        info["tokenizer"], positions)
+    tf = term_stats_arrow(staged.column("doc_id").to_numpy(),
+                          staged.column("content"), info["tokenizer"],
+                          positions)
     if tf is None:
-        seg = SEGMENT_ARROW.empty_table()
-        ddl = pd.DataFrame({"doc_id": pd.Series(dtype=np.int64),
-                            "dl": pd.Series(dtype=np.int64)})
+        seg = B.BATCH_SEGMENT_ARROW.empty_table()
+        ddl_ids = ddl_dl = np.zeros(0, np.int64)
         n_terms = 0
     else:
-        ids = tf["doc_id"].to_numpy(np.int64)
-        codes, uniques = pd.factorize(tf["term"])
-        n_terms = len(uniques)
-        salt = np.zeros(len(tf), np.int64)
+        ids, codes = tf.doc_id, tf.code
+        n_terms = len(tf.vocab)
+        salt = np.zeros(ids.size, np.int64)
         if count > salt_threshold:  # else no in-split df can exceed it
             df_seg = np.bincount(codes)
             salted = np.floor((ids - offset) * n_salts
                               / max(count, 1)).astype(np.int64)
             salt = np.where(df_seg[codes] > salt_threshold, salted, 0)
-        order = np.lexsort((ids, salt, codes))
-        runs = tf.iloc[order].reset_index(drop=True)
-        runs.insert(1, "salt", salt[order])
-        enc = list(B._encode_partitions(iter([runs])))
-        seg = pa.Table.from_pandas(enc[0], schema=SEGMENT_ARROW,
-                                   preserve_index=False)
-        ddl = tf.drop_duplicates("doc_id")[["doc_id", "dl"]]
+        # rows are doc-major and a salt rises with the doc id, so a
+        # stable sort on the term code is the (term, salt, doc_id) order
+        order = np.argsort(codes, kind="stable")
+        codes, salt = codes[order], salt[order]
+        ids, tfs, dls = ids[order], tf.tf[order], tf.dl[order]
+        flat_pos = None
+        if positions:
+            flat_pos = tf.positions[ranges((np.cumsum(tf.tf)
+                                            - tf.tf)[order], tfs)]
+        starts = np.flatnonzero(np.concatenate(
+            ([True], (codes[1:] != codes[:-1]) | (salt[1:] != salt[:-1]))))
+        ends = np.append(starts[1:], ids.size)
+        seg = pa.Table.from_batches([B.segment_batch(
+            tf.vocab.take(pa.array(codes[starts])), salt[starts], ids, tfs,
+            dls, starts, ends, flat_pos)])
+        first = np.flatnonzero(np.diff(tf.doc_id, prepend=-1) != 0)
+        ddl_ids, ddl_dl = tf.doc_id[first], tf.dl[first]
 
     seg_dir = os.path.join(index_dir, "segments", f"split_{split_id:04d}")
     tmp_dir = os.path.join(index_dir, "segments",
@@ -404,15 +417,16 @@ def build_segment(index_dir: str, split_id: int, info: dict,
     if os.path.exists(seg_dir):
         shutil.rmtree(seg_dir)
     os.replace(tmp_dir, seg_dir)
-    _write(pa.Table.from_pandas(ddl, preserve_index=False), dl_dir)
+    _write(pa.table({"doc_id": pa.array(ddl_ids, pa.int64()),
+                     "dl": pa.array(ddl_dl, pa.int64())}), dl_dir)
 
     metrics = {
         "n_docs": int(count),
-        "n_docs_tokenized": len(ddl),
+        "n_docs_tokenized": int(ddl_ids.size),
         "n_postings": int(pc.sum(seg.column("df_run")).as_py() or 0),
         "n_terms": n_terms,
         "cf": int(pc.sum(seg.column("cf_run")).as_py() or 0),
-        "sum_dl": int(ddl["dl"].sum()),
+        "sum_dl": int(ddl_dl.sum()),
         "compressed_bytes": int(
             pc.sum(seg.column("payload_bytes")).as_py() or 0),
         "sha_crc_sum": B._sha_crc_sum(
@@ -426,7 +440,7 @@ def build_segment(index_dir: str, split_id: int, info: dict,
 def _read_segments(index_dir: str, n_splits: int) -> pa.Table | None:
     """Every split's runs (either path's files, flat or bucket layout)
     with a ``split_id`` column, cast to one schema."""
-    want = pa.schema([SEGMENT_ARROW.field(c) for c in _MERGE_COLS])
+    want = pa.schema([B.BATCH_SEGMENT_ARROW.field(c) for c in _MERGE_COLS])
     parts = []
     for s in range(n_splits):
         d = os.path.join(index_dir, "segments", f"split_{s:04d}")
@@ -446,19 +460,19 @@ def _merge_runs(segs: pa.Table, n_buckets: int) -> tuple[pa.Table,
     doc-disjoint, so the merge is Σ df/cf, min/max doc id and the block
     lists concatenated in first_doc_id order. Rows come out sorted by
     (term_bucket, term, split_id); returns them with their buckets."""
-    codes, uniques = pd.factorize(
-        segs.column("term").to_numpy(zero_copy_only=False))
-    ubucket = np.array([term_bucket(t, n_buckets) for t in uniques],
-                       np.int32)
-    segs = segs.append_column("term_bucket", pa.array(ubucket[codes]))
-    segs = segs.take(pc.sort_indices(segs, sort_keys=[
-        ("term_bucket", "ascending"), ("term", "ascending"),
-        ("split_id", "ascending"), ("first_doc_id", "ascending")]))
-    term = segs.column("term").to_numpy(zero_copy_only=False)
+    terms = pc.dictionary_encode(segs.column("term").combine_chunks())
+    code = terms.indices.to_numpy()
+    bucket = np.mod(xxhash64_many(terms.dictionary).view(np.int64),
+                    n_buckets).astype(np.int32)[code]
+    order = pc.sort_indices(
+        segs.append_column("term_bucket", pa.array(bucket)),
+        sort_keys=[("term_bucket", "ascending"), ("term", "ascending"),
+                   ("split_id", "ascending"),
+                   ("first_doc_id", "ascending")]).to_numpy()
+    segs, code, bucket = segs.take(order), code[order], bucket[order]
     split = segs.column("split_id").to_numpy()
-    change = np.flatnonzero((term[1:] != term[:-1])
-                            | (split[1:] != split[:-1])) + 1
-    starts = np.concatenate(([0], change)).astype(np.int64)
+    starts = np.flatnonzero(np.concatenate(
+        ([True], (code[1:] != code[:-1]) | (split[1:] != split[:-1]))))
 
     def reduce(col, fn=np.add):
         return fn.reduceat(segs.column(col).to_numpy(), starts)
@@ -480,7 +494,7 @@ def _merge_runs(segs: pa.Table, n_buckets: int) -> tuple[pa.Table,
                                 pa.int64()),
         "blocks": merged_blocks,
     }, schema=POSTINGS_ARROW)
-    return postings, segs.column("term_bucket").to_numpy()[starts]
+    return postings, bucket[starts]
 
 
 def _dictionary(postings: pa.Table, n_docs: int) -> pa.Table:

@@ -396,6 +396,22 @@ def _vocab_of(index_dir: str) -> _Vocab:
     return v
 
 
+def _docs_schema(docs_dir: str) -> T.StructType:
+    """The Spark schema of ``docs/`` from ONE parquet footer and its
+    ``split_id=N`` directories, read with pyarrow — what
+    ``spark.read.parquet`` would infer from the same footer in a Spark
+    job. Every field nullable, as a file source reads them; a hive
+    ``split_id`` is an int, as Spark types a partition of small
+    integers."""
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = from_arrow_schema(
+        ds.dataset(docs_dir, format="parquet", partitioning="hive").schema)
+    return T.StructType([T.StructField(f.name, f.dataType, True)
+                         for f in schema.fields])
+
+
 class Searcher:
     """Query handle over a built index — the one place a query is
     planned, and, through :meth:`_run`, the one place it is executed.
@@ -471,7 +487,8 @@ class Searcher:
 
     @cached_property
     def _docs_df(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.index_dir, "docs"))
+        path = os.path.join(self.index_dir, "docs")
+        return self.spark.read.schema(_docs_schema(path)).parquet(path)
 
     def _cached_plan(self, key, build):
         tomb = os.path.join(self.index_dir, "tombstones")

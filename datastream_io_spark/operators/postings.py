@@ -9,10 +9,18 @@ counts, never raw token streams.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from datastream_io_spark.functions.tokenize import tokenize_simple_col, tokenizer_for
+from datastream_io_spark.functions.tokenize import (
+    tokenize_arrow,
+    tokenize_simple_col,
+    tokenizer_for,
+)
 
 
 def with_tokens(df: DataFrame, text_col: str = "content", mode: str = "simple",
@@ -51,80 +59,89 @@ def term_freq_positional(pos_terms_df: DataFrame, doc_col: str = "doc_id",
         F.sort_array(F.collect_list("pos")).alias("positions"))
 
 
-def term_stats_frame(pdf, mode: str, positions: bool,
-                     doc_col: str = "doc_id"):
-    """The fused tokenize+tf kernel over ONE pandas batch of
-    (doc_id, content): rows (doc_id, term, tf, dl[, positions]) per
-    (doc, term), or None when the batch has no tokens. Module-level so
-    the Spark wrapper (:func:`term_stats_fused`) and the in-process
-    build (``driver_build``) run the same code; a doc's rows depend only
-    on its own content, so batching never changes them."""
-    import numpy as np
-    import pandas as pd
+class TermStats(NamedTuple):
+    """(doc, term) rows of a batch, ordered by doc then term code: the
+    tf of ``vocab[code[r]]`` in doc ``doc_id[r]`` and that doc's length
+    ``dl[r]``. With positions, row r owns the next ``tf[r]`` ascending
+    values of the flat ``positions``."""
+    doc_id: np.ndarray     # int64
+    code: np.ndarray       # int64, into vocab (first-appearance order)
+    vocab: pa.Array        # string
+    tf: np.ndarray         # int64
+    dl: np.ndarray         # int64
+    positions: np.ndarray | None  # int32
 
-    from datastream_io_spark.functions.tokenize import tokenize_series
+    def record_batch(self, doc_col: str = "doc_id") -> pa.RecordBatch:
+        """As ``(doc_col, term, tf, dl[, positions array<int>])`` rows."""
+        cols = {doc_col: pa.array(self.doc_id),
+                "term": self.vocab.take(pa.array(self.code)),
+                "tf": pa.array(self.tf), "dl": pa.array(self.dl)}
+        if self.positions is not None:
+            cols["positions"] = pa.ListArray.from_arrays(
+                pa.array(np.concatenate(([0], np.cumsum(self.tf)))
+                         .astype(np.int32)),
+                pa.array(self.positions))
+        return pa.RecordBatch.from_pydict(cols)
 
-    if len(pdf) == 0:
-        return None
-    toks = tokenize_series(pdf["content"], mode)
-    lens = np.fromiter((len(t) for t in toks), dtype=np.int64,
-                       count=len(toks))
-    total = int(lens.sum())
+
+def term_stats_arrow(doc_ids: np.ndarray, content, mode: str,
+                     positions: bool) -> TermStats | None:
+    """The fused tokenize+tf kernel over ONE batch of (doc_id, content):
+    :func:`~datastream_io_spark.functions.tokenize.tokenize_arrow`, then
+    (doc, term) groups from one stable argsort of
+    ``doc * n_terms + code`` (so each group's positions stay ascending),
+    each token's position being its ordinal minus its doc's start. None
+    when the batch has no tokens. The in-process build
+    (``driver_build``), the Spark wrapper (:func:`term_stats_fused`) and
+    streaming ingest all run it; a doc's rows depend only on its own
+    content, so batching never changes them."""
+    tok = tokenize_arrow(content, mode)
+    total = tok.codes.size
     if total == 0:
         return None
-    doc_ids = pdf[doc_col].to_numpy(np.int64)
-    flat = np.empty(total, dtype=object)
-    k = 0
-    for t in toks:
-        n = len(t)
-        flat[k:k + n] = t
-        k += n
-    doc_idx = np.repeat(np.arange(len(toks)), lens)
-    offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    pos = (np.arange(total) - np.repeat(offs, lens)).astype(np.int32)
-    codes, uniques = pd.factorize(flat)
-    order = np.lexsort((pos, codes, doc_idx))
-    d_s, c_s, p_s = doc_idx[order], codes[order], pos[order]
-    change = np.flatnonzero(
-        (d_s[1:] != d_s[:-1]) | (c_s[1:] != c_s[:-1])) + 1
-    starts = np.concatenate(([0], change))
-    ends = np.concatenate((change, [total]))
-    out = {
-        doc_col: doc_ids[d_s[starts]],
-        "term": uniques.take(c_s[starts]),
-        "tf": (ends - starts).astype(np.int64),
-        "dl": lens[d_s[starts]],
-    }
+    lens = np.diff(tok.bounds)
+    doc = np.repeat(np.arange(lens.size), lens)
+    key = doc * len(tok.vocab) + tok.codes
+    order = np.argsort(key, kind="stable")
+    key = key[order]
+    starts = np.flatnonzero(np.concatenate(([True], key[1:] != key[:-1])))
+    first = order[starts]
+    pos = None
     if positions:
-        out["positions"] = np.split(p_s, change)
-    return pd.DataFrame(out)
+        pos = (np.arange(total) - tok.bounds[doc])[order].astype(np.int32)
+    return TermStats(
+        np.asarray(doc_ids, np.int64)[doc[first]], tok.codes[first],
+        tok.vocab, np.diff(np.append(starts, total)), lens[doc[first]],
+        pos)
 
 
 def term_stats_fused(df: DataFrame, mode: str, positions: bool,
                      doc_col: str = "doc_id") -> DataFrame:
-    """T1+T2+T3(+T4) fused into ONE mapInPandas kernel:
-    (doc_id, content) → (doc_id, term, tf, dl[, positions]) with NO
-    shuffle. Row-for-row identical to
+    """T1+T2+T3(+T4) fused into ONE ``mapInArrow`` kernel
+    (:func:`term_stats_arrow`): (doc_id, content) → (doc_id, term, tf,
+    dl[, positions]) with NO shuffle. Row-for-row identical to
     ``term_freq(_positional)(doc_terms(with_tokens(df, mode)))`` —
     pinned by tests/test_build.py — but where that chain shuffles every
     partially-aggregated (doc, term) row once for the groupBy (plus
     runs collect_list through partial/final merge), this kernel
-    aggregates inside the Arrow batch with numpy (factorize + lexsort +
-    change-point reduce; no per-token Python), so the only shuffle left
-    in a segment build is the (term, salt) repartition the encoder
-    needs anyway. At 10^12 files that deletes the largest shuffle of
-    the build (BASELINE.json north_star: vectorized Arrow/pandas UDFs,
-    partitioning/shuffle handled explicitly)."""
+    aggregates inside the Arrow batch with numpy (no per-token Python,
+    no pandas), so the only shuffle left in a segment build is the
+    (term, salt) repartition the encoder needs anyway. At 10^12 files
+    that deletes the largest shuffle of the build (BASELINE.json
+    north_star: vectorized Arrow/pandas UDFs, partitioning/shuffle
+    handled explicitly). A doc's rows leave the kernel together."""
     out_schema = f"{doc_col} long, term string, tf long, dl long" + (
         ", positions array<int>" if positions else "")
 
-    def kernel(it):
-        for pdf in it:
-            out = term_stats_frame(pdf, mode, positions, doc_col)
-            if out is not None:
-                yield out
+    def kernel(batches):
+        for batch in batches:
+            stats = term_stats_arrow(batch.column(doc_col).to_numpy(),
+                                     batch.column("content"), mode,
+                                     positions)
+            if stats is not None:
+                yield stats.record_batch(doc_col)
 
-    return df.mapInPandas(kernel, out_schema)
+    return df.mapInArrow(kernel, out_schema)
 
 
 def doc_len(tok_df: DataFrame, doc_col: str = "doc_id") -> DataFrame:

@@ -21,12 +21,17 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datastream_io_spark import B, K1
 from datastream_io_spark.operators import postings as P
-from datastream_io_spark.operators.build import SEGMENT_SCHEMA, check_not_purged
+from datastream_io_spark.operators.build import (
+    SEGMENT_SCHEMA,
+    check_not_purged,
+    encode_sorted,
+)
 from datastream_io_spark.sources import manifest as M
 
 
@@ -131,46 +136,19 @@ def ingest_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     _WATERMARK_CACHE[os.path.abspath(index_dir)] = offset + int(n_docs)
 
 
-def _encode_with_split(it):
-    """mapInPandas encode kernel — same change-point scheme as
-    build._encode_partitions, with split_id as an extra group key +
-    output column. Shared by the wholesale finalize and the
-    incremental merge wave."""
-    import numpy as np
-    import pandas as pd
-
-    from datastream_io_spark.operators.codec import encode_blocks
-
-    for pdf in it:
-        if len(pdf) == 0:
+def _encode_with_split(batches):
+    """mapInArrow encode kernel of the wholesale finalize and the
+    incremental merge wave: ``build.encode_sorted`` — the build's one
+    encoder — with split_id as an extra run key, and split_id in place
+    of the payload_bytes column."""
+    for batch in batches:
+        if batch.num_rows == 0:
             continue
-        terms = pdf["term"].to_numpy()
-        splits = pdf["split_id"].to_numpy()
-        salts = pdf["salt"].to_numpy()
-        ids = pdf["doc_id"].to_numpy()
-        tfs = pdf["tf"].to_numpy()
-        dls = pdf["dl"].to_numpy()
-        pos_col = (pdf["positions"].to_numpy()
-                   if "positions" in pdf.columns else None)
-        change = np.flatnonzero(
-            (terms[1:] != terms[:-1]) | (splits[1:] != splits[:-1])
-            | (salts[1:] != salts[:-1])) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(pdf)]))
-        rows = []
-        for s, e in zip(starts, ends):
-            flat_pos = (np.concatenate(pos_col[s:e])
-                        if pos_col is not None else None)
-            rows.append((
-                terms[s], int(salts[s]), int(ids[s]), int(ids[e - 1]),
-                int(e - s), int(tfs[s:e].sum()),
-                encode_blocks(ids[s:e], tfs[s:e], dls[s:e],
-                              positions=flat_pos),
-                int(splits[s]),
-            ))
-        yield pd.DataFrame(rows, columns=[
-            "term", "salt", "first_doc_id", "last_doc_id",
-            "df_run", "cf_run", "blocks", "split_id"])
+        seg, starts = encode_sorted(batch, ("term", "split_id", "salt"))
+        yield pa.RecordBatch.from_arrays(
+            seg.columns[:-1]
+            + [batch.column("split_id").take(pa.array(starts))],
+            names=seg.schema.names[:-1] + ["split_id"])
 
 
 def _merge_run_rows(runs: DataFrame, n_buckets: int) -> DataFrame:
@@ -289,7 +267,7 @@ def finalize_stream_index(spark: SparkSession, index_dir: str,
         .repartition(spark.sparkContext.defaultParallelism,
                      "term", "split_id", "salt")
         .sortWithinPartitions("term", "split_id", "salt", "doc_id")
-        .mapInPandas(_encode_with_split, run_schema)
+        .mapInArrow(_encode_with_split, run_schema)
     )
     merged = _merge_run_rows(runs, n_buckets)
     (merged.repartition("term_bucket").sortWithinPartitions("term")
@@ -567,7 +545,7 @@ def _merge_stream_batches_locked(spark: SparkSession, index_dir: str,
         .repartition(spark.sparkContext.defaultParallelism,
                      "term", "split_id", "salt")
         .sortWithinPartitions("term", "split_id", "salt", "doc_id")
-        .mapInPandas(_encode_with_split, run_schema)
+        .mapInArrow(_encode_with_split, run_schema)
     )
     wave_rows = _merge_run_rows(runs, n_buckets)
     (wave_rows.repartition("term_bucket").sortWithinPartitions("term")

@@ -60,7 +60,7 @@ def main():
     runs = (salted.select("term", "salt", "doc_id", "tf", "dl", "positions")
             .repartition(fan, "term", "salt")
             .sortWithinPartitions("term", "salt", "doc_id")
-            .mapInPandas(B._encode_partitions, B.BATCH_SEGMENT_SCHEMA))
+            .mapInArrow(B._encode_partitions, B.BATCH_SEGMENT_SCHEMA))
     dump("build_segment_encode", runs)
     # dl side table plan
     dump("build_segment_dl", _dl_df(tf, F))

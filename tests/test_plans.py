@@ -136,17 +136,19 @@ def test_python_xxhash64_matches_spark(spark):
 
 
 def test_python_chained_xxhash64_matches_spark(spark):
-    """functions.xxhash.xxhash64_cols must equal the multi-column
-    F.xxhash64("repo", "path", "commit") — the build split of a doc key
-    staged without Spark. Seeds chain column to column and nulls are
-    skipped: rows with null columns in every position, non-ASCII text,
-    and every length-class branch (<4, <8, <32, ≥32 bytes) in each
-    column."""
+    """functions.xxhash.xxhash64_many must equal F.xxhash64 over one
+    column, and with its seeds chained column to column the
+    multi-column F.xxhash64("repo", "path", "commit") — the build split
+    of a doc key staged without Spark. Nulls leave the seed unchanged:
+    rows with null columns in every position, non-ASCII text, and every
+    length-class branch (<4, <8, <32, ≥32 bytes) in each column."""
     import itertools
     import random
     import string
 
-    from datastream_io_spark.functions.xxhash import xxhash64_cols
+    import pyarrow as pa
+
+    from datastream_io_spark.functions.xxhash import xxhash64_many
 
     values = [None, "", "a", "abc", "abcdefg", "sixteen_chars_ab",
               "thirtytwo_bytes_string_here_abcd", "été", "中文词项",
@@ -159,13 +161,20 @@ def test_python_chained_xxhash64_matches_spark(spark):
     df = spark.createDataFrame(
         rows, "repo string, path string, commit string")
     got = df.select("repo", "path", "commit",
+                    F.xxhash64("repo").alias("h1"),
                     F.xxhash64("repo", "path", "commit").alias("h")
                     ).collect()
     assert len(got) == len(rows)
-    for r in got:
-        key = (r.repo, r.path, r.commit)
-        assert xxhash64_cols(None if v is None else v.encode("utf-8")
-                             for v in key) == r.h, r
+    cols = {c: pa.array([r[c] for r in got], pa.string())
+            for c in ("repo", "path", "commit")}
+    one = xxhash64_many(cols["repo"]).view(np.int64)
+    chained = np.uint64(42)
+    for c in ("repo", "path", "commit"):
+        chained = xxhash64_many(cols[c], chained)
+    chained = chained.view(np.int64)
+    for i, r in enumerate(got):
+        assert one[i] == r.h1, r
+        assert chained[i] == r.h, r
 
 
 def test_dict_lookup_prunes_term_buckets(spark, doc_index):

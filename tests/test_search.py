@@ -961,8 +961,9 @@ def test_facet_counts_all_partitions_matches_global(spark, doc_index,
         assert got == exp, (q, mode, col)
 
     # job-count contract over the 5 subindexes, the caller's collect
-    # included (the result is an ArrowFrame): one docs schema inference
-    # per subindex, then ONE collect of the union (AQE off)
+    # included (the result is an ArrowFrame): ONE collect of the union
+    # (AQE off); each subindex's docs schema comes from a pyarrow footer
+    # read, not a Spark inference job
     import time as _time
 
     sc = spark.sparkContext
@@ -974,7 +975,30 @@ def test_facet_counts_all_partitions_matches_global(spark, doc_index,
         sc.setJobGroup(None, None)
     _time.sleep(0.5)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("far_jobs"))
-    assert n_jobs == 6, n_jobs
+    assert n_jobs == 1, n_jobs
+
+
+def test_docs_scan_runs_no_schema_job(spark, doc_index):
+    """``Searcher._docs_df`` reads docs/ with the schema of one footer
+    read by pyarrow (plus the ``split_id`` partition), so a one-shot
+    ``facet_counts`` runs no schema-inference job: 4 jobs, caller's
+    collect included (5 with the inference), and the schema equals the
+    one Spark infers."""
+    import time as _time
+
+    from datastream_io_spark.operators.indexed_search import (
+        Searcher, facet_counts)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("fc_jobs", "one-shot facet counts")
+    try:
+        assert facet_counts(spark, doc_index, "window agg", "repo").collect()
+    finally:
+        sc.setJobGroup(None, None)
+    _time.sleep(0.5)
+    assert len(sc.statusTracker().getJobIdsForGroup("fc_jobs")) == 4
+    inferred = spark.read.parquet(f"{doc_index}/docs").schema
+    assert Searcher(spark, doc_index)._docs_df.schema == inferred
 
 
 def test_warm_more_like_this_matches_cold(spark, pos_index):
