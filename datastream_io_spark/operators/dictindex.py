@@ -34,6 +34,19 @@ finalized dictionary by :func:`build_term_sidecars`:
     counting matters: repeated-gram terms like ``abcabcabc`` violate
     the distinct-set bound and would be falsely pruned.
 
+Where each sidecar is built follows where its dictionary is placed
+(``indexed_search._dict_on_driver``: the recorded term count against
+``AUTO_DICT_DRIVER_MAX_TERMS``). A driver-placed dictionary gets both
+sidecars in-process, with no Spark job: pyarrow reads ``dict/``, sorts
+it by term and writes equal-count range files, and numpy cuts the
+grams (:func:`_gram_rows`), which are written one file per
+``gram_bucket=K`` directory. A dictionary past the gate keeps the Spark
+builder (a range repartition and a hash repartition). Both write the
+same rows, schemas and layout, so either placement reads either
+build's files; a driver-placed dictionary's expansions read only
+``dict_sorted/``, which gives the process's first vocabulary read its
+term order without a sort.
+
 Staleness: each sidecar records a content fingerprint of the
 dictionary at build time (_INDEX_SUCCESS payload + corpus n_docs and
 avgdl — every dict-rewriting operation moves at least one of them).
@@ -53,6 +66,10 @@ import os
 import shutil
 import warnings
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -139,16 +156,26 @@ def build_term_sidecars(spark: SparkSession, index_dir: str,
 def _build_term_sidecars_locked(spark: SparkSession, index_dir: str,
                                 n_range_parts: int | None,
                                 n_gram_buckets: int | None) -> dict:
-    from datastream_io_spark.operators.build import repair_swap, swap_in
+    from datastream_io_spark.operators.indexed_search import (
+        _dict_dataset,
+        _dict_on_driver,
+    )
 
     # fingerprint FIRST: if the dictionary changes while we build (it
     # cannot under the lock, but belt-and-braces), the sidecar reads
     # as stale rather than fresh-over-wrong-data
     fingerprint = _dict_fingerprint(index_dir)
-    d = spark.read.parquet(os.path.join(index_dir, "dict"))
     n_terms = _index_n_terms(index_dir)
-    if n_terms is None:
-        n_terms = d.count()
+    if _dict_on_driver(index_dir):
+        d = (_dict_dataset(index_dir)
+             .to_table(columns=["term", "df", "cf", "idf", "term_bucket"])
+             .sort_by("term"))
+        n_terms = d.num_rows if n_terms is None else n_terms
+        write_sorted, write_grams = _sorted_local, _grams_local
+    else:
+        d = spark.read.parquet(os.path.join(index_dir, "dict"))
+        n_terms = d.count() if n_terms is None else n_terms
+        write_sorted, write_grams = _sorted_spark, _grams_spark
     if n_range_parts is None:
         # ~2M terms per range file: footer-only skipping keeps prefix
         # scans to one or two real file reads at any dictionary size
@@ -156,25 +183,51 @@ def _build_term_sidecars_locked(spark: SparkSession, index_dir: str,
     if n_gram_buckets is None:
         n_gram_buckets = max(16, n_range_parts)
 
-    sorted_path = os.path.join(index_dir, "dict_sorted")
-    tmp = sorted_path + "_tmp"
+    _publish(os.path.join(index_dir, "dict_sorted"), fingerprint,
+             lambda tmp: write_sorted(d, tmp, n_range_parts))
+    _publish(os.path.join(index_dir, "dict_ngrams"), fingerprint,
+             lambda tmp: write_grams(d, tmp, n_gram_buckets),
+             meta={"n_gram_buckets": int(n_gram_buckets), "gram_n": GRAM_N})
+    return {"n_terms": n_terms, "n_range_parts": n_range_parts,
+            "n_gram_buckets": n_gram_buckets}
+
+
+def _publish(path: str, fingerprint: dict, write,
+             meta: dict | None = None) -> None:
+    """Write one sidecar with ``write(tmp)`` into ``<path>_tmp``, stamp
+    it with ``fingerprint`` (and ``meta`` as ``_META.json``), then swap
+    it in (``repair_swap`` first finishes a swap a crash left
+    behind)."""
+    from datastream_io_spark.operators.build import repair_swap, swap_in
+
+    tmp = path + "_tmp"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
+    write(tmp)
+    _write_sync(tmp, fingerprint)
+    if meta is not None:
+        with open(os.path.join(tmp, "_META.json"), "w") as f:
+            json.dump(meta, f)
+    repair_swap(path)
+    if os.path.exists(path):
+        swap_in(path, tmp)
+    else:
+        os.replace(tmp, path)
+
+
+def _sorted_spark(d: DataFrame, tmp: str, n_parts: int) -> None:
+    """``dict_sorted/`` from the Spark dictionary ``d``: a range
+    repartition into ``n_parts`` files, each sorted by term."""
     (d.select("term", "df", "cf", "idf", "term_bucket")
-     .repartitionByRange(n_range_parts, "term")
+     .repartitionByRange(n_parts, "term")
      .sortWithinPartitions("term")
      .write.mode("overwrite").parquet(tmp))
-    _write_sync(tmp, fingerprint)
-    repair_swap(sorted_path)
-    if os.path.exists(sorted_path):
-        swap_in(sorted_path, tmp)
-    else:
-        os.replace(tmp, sorted_path)
 
-    grams_path = os.path.join(index_dir, "dict_ngrams")
-    tmp = grams_path + "_tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
+
+def _grams_spark(d: DataFrame, tmp: str, n_buckets: int) -> None:
+    """``dict_ngrams/`` from the Spark dictionary ``d``: one row per
+    gram occurrence, hash-partitioned into ``gram_bucket=K``
+    directories, each sorted by (gram, term)."""
     # one row per gram OCCURRENCE with its occurrence index: joining on
     # (gram, occ) against the query's occurrence-indexed grams computes
     # Σ_g min(count_term(g), count_query(g)) — the exact multiset
@@ -206,22 +259,141 @@ def _build_term_sidecars_locked(spark: SparkSession, index_dir: str,
         .drop("_grams", "_pos")
         .withColumn("gram_bucket",
                     F.pmod(F.xxhash64("gram"),
-                           F.lit(n_gram_buckets)).cast("int"))
+                           F.lit(n_buckets)).cast("int"))
     )
     (grams.repartition("gram_bucket")
      .sortWithinPartitions("gram", "term")
      .write.mode("overwrite").partitionBy("gram_bucket").parquet(tmp))
-    _write_sync(tmp, fingerprint)
-    with open(os.path.join(tmp, "_META.json"), "w") as f:
-        json.dump({"n_gram_buckets": int(n_gram_buckets),
-                   "gram_n": GRAM_N}, f)
-    repair_swap(grams_path)
-    if os.path.exists(grams_path):
-        swap_in(grams_path, tmp)
-    else:
-        os.replace(tmp, grams_path)
-    return {"n_terms": n_terms, "n_range_parts": n_range_parts,
-            "n_gram_buckets": n_gram_buckets}
+
+
+def _sorted_local(t: pa.Table, tmp: str, n_parts: int) -> None:
+    """``dict_sorted/`` from the term-sorted pyarrow dictionary ``t``:
+    ``n_parts`` equal-count slices, one file each, named in term order
+    (one empty file for an empty dictionary, so the directory keeps its
+    schema)."""
+    cuts = np.linspace(0, t.num_rows, n_parts + 1).astype(np.int64)
+    parts = [(lo, hi) for lo, hi in zip(cuts[:-1], cuts[1:]) if hi > lo]
+    _write_parts([(os.path.join(tmp, f"part-{i:05d}.zstd.parquet"),
+                   lambda lo=lo, hi=hi: t.slice(lo, hi - lo))
+                  for i, (lo, hi) in enumerate(parts or [(0, 0)])])
+
+
+def _grams_local(t: pa.Table, tmp: str, n_buckets: int) -> None:
+    """``dict_ngrams/`` from the term-sorted pyarrow dictionary ``t``:
+    the rows, columns and ``gram_bucket`` of :func:`_grams_spark`, one
+    file per non-empty bucket directory, sorted by (gram, term)."""
+    term, grams, code, occ, bucket = _gram_rows(
+        t.column("term").combine_chunks(), n_buckets)
+    term_len = pc.utf8_length(t.column("term")).cast(pa.int32())
+
+    def rows(lo: int, hi: int) -> pa.Table:
+        at = term[lo:hi]
+        return pa.table({
+            "term": t.column("term").take(at),
+            "df": t.column("df").take(at),
+            "idf": t.column("idf").take(at),
+            "term_bucket": t.column("term_bucket").take(at),
+            "term_len": term_len.take(at),
+            "gram": grams.take(code[lo:hi]),
+            "occ": pa.array(occ[lo:hi], pa.int32()),
+        })
+
+    cuts = np.searchsorted(bucket, np.arange(n_buckets + 1))
+    _write_parts([
+        (os.path.join(tmp, f"gram_bucket={b}", "part-00000.zstd.parquet"),
+         lambda lo=cuts[b], hi=cuts[b + 1]: rows(lo, hi))
+        for b in np.flatnonzero(np.diff(cuts))])
+
+
+# zstd-3 like the session's Spark writer, with its dictionary pages
+_PARQUET_KW = dict(compression="zstd", compression_level=3,
+                   store_schema=False)
+
+
+def _write_parts(parts: list) -> None:
+    """Write ``[(file path, make table)]``, a few files at a time:
+    pyarrow's take and parquet encoding release the GIL."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def write(part) -> None:
+        path, make = part
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(make(), path, **_PARQUET_KW)
+
+    with ThreadPoolExecutor(min(4, os.cpu_count() or 1)) as pool:
+        list(pool.map(write, parts))
+
+
+def _gram_rows(terms: pa.StringArray, n_buckets: int) -> tuple:
+    """Every 3-gram occurrence of ``terms`` (sorted by term), in
+    (gram_bucket, gram, term, position) order: the term index, the
+    distinct grams (a string array in gram order) and each row's index
+    into them, the occurrence index (how many earlier positions of the
+    term hold the same gram) and the ``gram_bucket``
+    (``pmod(xxhash64(gram), n_buckets)``).
+
+    Grams are cut in code points, as Spark's ``substring`` counts them:
+    character starts are the UTF-8 bytes that are not continuation
+    bytes. Each gram is keyed by its three code points packed into one
+    integer (21 bits each); UTF-8 byte order is code-point order, so
+    integer order is Spark's binary string order. One stable sort of
+    the keys orders the rows by (gram, term, position); the distinct
+    grams' runs are then regrouped by bucket."""
+    from datastream_io_spark.functions.xxhash import xxhash64_many
+    from datastream_io_spark.operators.codec import ranges
+
+    n = len(terms)
+    _, obuf, dbuf = terms.buffers()
+    off = np.frombuffer(obuf, np.int32)[terms.offset:terms.offset + n + 1]
+    off = off.astype(np.int64)
+    data = (np.frombuffer(dbuf, np.uint8)[off[0]:off[-1]]
+            if dbuf is not None else np.zeros(0, np.uint8))
+    off -= off[0]
+    starts = np.flatnonzero((data & 0xC0) != 0x80)  # code point starts
+    bounds = np.append(starts, data.size)           # + the buffer end
+    char_off = np.searchsorted(starts, off)         # per term, in chars
+
+    # code points: the lead byte's payload bits, then 6 per continuation
+    width = np.diff(bounds)
+    cp = data[starts].astype(np.int64) & np.select(
+        [width == 1, width == 2, width == 3], [0x7F, 0x1F, 0x0F], 0x07)
+    for j in range(1, 4):
+        more = width > j
+        cp[more] = (cp[more] << 6) | (data[starts[more] + j] & 0x3F)
+
+    # one gram per position 0 .. len-3 of each term of ≥ 3 characters
+    n_grams = np.maximum(np.diff(char_off) - (GRAM_N - 1), 0)
+    first = ranges(char_off[:-1], n_grams)          # first char of each
+    term = np.repeat(np.arange(n, dtype=np.int32), n_grams)
+    key = (cp[first] << 42) | (cp[first + 1] << 21) | cp[first + 2]
+    del cp
+    by_gram = np.argsort(key, kind="stable")        # (gram, term, pos)
+    key = key[by_gram]
+    run = np.flatnonzero(np.concatenate(([True], key[1:] != key[:-1])))
+    run_len = np.diff(np.append(run, key.size))
+    del key
+
+    # the distinct grams' strings (from their first rows) and buckets
+    g0 = first[by_gram[run]]
+    glen = bounds[g0 + GRAM_N] - bounds[g0]
+    grams = pa.StringArray.from_buffers(
+        run.size,
+        pa.py_buffer(np.concatenate([[0], np.cumsum(glen)]).astype(np.int32)),
+        pa.py_buffer(data[ranges(bounds[g0], glen)]))
+    gbucket = xxhash64_many(grams).view(np.int64) % n_buckets
+
+    # the runs regrouped by bucket, grams ascending within each
+    runs = np.argsort(gbucket, kind="stable")
+    order = by_gram[ranges(run[runs], run_len[runs])]
+    code = np.repeat(runs, run_len[runs])
+    term = term[order]
+    # occ: the rank within each (gram, term) run, positions ascending
+    new = np.concatenate(([True], (code[1:] != code[:-1])
+                          | (term[1:] != term[:-1])))
+    pair = np.flatnonzero(new)
+    occ = np.arange(term.size) - np.repeat(pair, np.diff(
+        np.append(pair, term.size)))
+    return term, grams, code, occ, np.repeat(gbucket[runs], run_len[runs])
 
 
 def refresh_sidecars_if_present(spark: SparkSession,

@@ -505,12 +505,15 @@ def _dictionary(postings: pa.Table, n_docs: int) -> pa.Table:
                                             term[1:] != term[:-1])))
     df = np.add.reduceat(postings.column("df").to_numpy(), starts)
     cf = np.add.reduceat(postings.column("cf").to_numpy(), starts)
+    # one idf_py call per distinct df, gathered back: the same libm
+    # log1p the per-term call made, bit for bit
+    dfs, at = np.unique(df, return_inverse=True)
+    idf = np.array([idf_py(int(d), n_docs) for d in dfs], np.float64)[at]
     return pa.table({
         "term": pa.array(term[starts], pa.string()),
         "df": pa.array(df, pa.int64()),
         "cf": pa.array(cf, pa.int64()),
-        "idf": pa.array([idf_py(int(d), n_docs) for d in df],
-                        pa.float64()),
+        "idf": pa.array(idf, pa.float64()),
     }, schema=DICT_ARROW)
 
 

@@ -346,12 +346,16 @@ class _Vocab(NamedTuple):
 
     @classmethod
     def read(cls, index_dir: str) -> "_Vocab":
-        """``dict/`` read and sorted with pyarrow (no Spark job)."""
+        """The dictionary in term order, read with pyarrow (no Spark
+        job): a fresh ``dict_sorted/`` sidecar in file order when its
+        terms check as non-decreasing, else ``dict/`` sorted by term."""
         import pyarrow.compute as pc
 
-        t = (_dict_dataset(index_dir)
-             .to_table(columns=["term", "df", "idf", "term_bucket"])
-             .sort_by("term"))
+        cols = ["term", "df", "idf", "term_bucket"]
+        t = _sorted_sidecar(index_dir, cols)
+        if t is None:
+            t = _dict_dataset(index_dir).to_table(columns=cols).sort_by(
+                "term")
         lens = pc.utf8_length(t.column("term")).to_numpy().astype(np.int64)
         by_len = np.argsort(lens, kind="stable")
         # estimated size: per term a str object (49 bytes + its text)
@@ -360,6 +364,33 @@ class _Vocab(NamedTuple):
                    t.column("idf").to_numpy(),
                    t.column("term_bucket").to_numpy(), by_len, lens[by_len],
                    t.nbytes + 69 * t.num_rows)
+
+
+def _sorted_sidecar(index_dir: str, cols: list):
+    """``cols`` of the fresh ``dict_sorted/`` sidecar of ``index_dir``
+    in file order, or None when it is absent, stale, vanishes mid-read
+    (a refresh swapped it) or is not in term order."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    from datastream_io_spark.operators.dictindex import _sidecar_fresh
+
+    path = os.path.join(index_dir, "dict_sorted")
+    if not _sidecar_fresh(index_dir, "dict_sorted"):
+        return None
+    try:
+        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+        t = ds.dataset(files, format="parquet").to_table(columns=cols)
+    except (OSError, pa.ArrowInvalid):
+        return None
+    terms = t.column("term")
+    if len(terms) > 1 and pc.any(
+            pc.less(terms[1:], terms[:-1])).as_py():
+        return None
+    return t
 
 
 def _dict_identity(index_dir: str) -> tuple | None:
@@ -671,16 +702,19 @@ class Searcher:
         return self._run(*plan.scan, _rank_kernel(plan, avgdl, k),
                          _SCORES_SCHEMA, k)
 
-    def _many(self, plans: dict, k: int, avgdl: float) -> DataFrame:
+    def _many(self, plans: dict, k: int, avgdl: float,
+              cut: bool = True) -> DataFrame:
         """Per-query top-k of a batch ``{query_id: plan}``: one scan over
         the union of the plans' terms, the queries sharing each split's
-        block decodes."""
+        block decodes. ``cut=False`` returns each split's per-query
+        top-k uncut, for a caller that cuts the merged rows itself."""
         if not plans:
             return _empty_many(self.spark)
         df = {t: n for p in plans.values() for t, n in p.df.items()}
         buckets = sorted({b for p in plans.values() for b in p.buckets})
         return self._run(sorted(df), buckets, sum(df.values()),
-                         _many_kernel(plans, avgdl, k), _MANY_SCHEMA, k)
+                         _many_kernel(plans, avgdl, k), _MANY_SCHEMA,
+                         k if cut else None)
 
     def _display(self, top: DataFrame, with_doc_cols: bool) -> DataFrame:
         """The optional display join of a ≤k-row top-k: broadcast, so the

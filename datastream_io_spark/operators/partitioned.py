@@ -635,13 +635,14 @@ class PartitionedSearcher:
         at most ONE Spark job — all planning (term parse, per-subindex
         dict lookups, global df/idf merge) is :meth:`search`'s planner,
         then each subindex runs the shared batched kernel
-        (:meth:`Searcher._many` under the GLOBAL avgdl) and the
-        per-query global top-k is cut over the value-tagged results
-        (:meth:`_merge`). Each query's rows are identical to its
-        individual :meth:`search` answer (parity-tested). Returns
-        DF[query_id, <by>, doc_id, score] with per-query
-        (score desc, <by> asc, doc_id asc) top-k."""
-        parts = [(v, self._sub[v]._many(plans_v, k, self.avgdl_g))
+        (:meth:`Searcher._many` under the GLOBAL avgdl, each split's
+        candidates left uncut) and the per-query global top-k is cut
+        over the value-tagged results (:meth:`_merge`). Each query's
+        rows are identical to its individual :meth:`search` answer
+        (parity-tested). Returns DF[query_id, <by>, doc_id, score] with
+        per-query (score desc, <by> asc, doc_id asc) top-k."""
+        parts = [(v, self._sub[v]._many(plans_v, k, self.avgdl_g,
+                                        cut=False))
                  for v, plans_v in self._plans(queries, mode, slop,
                                                ordered).items()]
         return _empty_frame(
@@ -693,13 +694,13 @@ class PartitionedSearcher:
 
     def _merge(self, parts: list, k: int, batch: bool = False) -> list:
         """The global top-k rows over per-subindex results ``parts``
-        (``[(value, frame)]``, each already cut to its own top-k, so the
-        union holds ≤ k rows per query per subindex): ``(<by>, doc_id,
-        score)`` — led by ``query_id`` for a ``batch``, cut per query —
-        in (score desc, <by> asc, doc_id asc) order. Driver-computed
-        frames are read with no Spark call; any other part makes the
-        union ONE Spark job (AQE off, shuffle width pinned to the true
-        group count)."""
+        (``[(value, frame)]``, each cut to its own top-k per split or
+        per subindex, so the union holds ≤ k rows per query per split):
+        ``(<by>, doc_id, score)`` — led by ``query_id`` for a ``batch``,
+        cut per query — in (score desc, <by> asc, doc_id asc) order.
+        Driver-computed frames are read with no Spark call; any other
+        part makes the union ONE Spark job (AQE off, shuffle width
+        pinned to the true group count)."""
         lead = ["query_id"] if batch else []
         if all(isinstance(f, ArrowFrame) for _, f in parts):
             rows = []

@@ -3,11 +3,16 @@
 Defaults follow SURVEY.md §4.4: AQE on, Arrow on, shuffle partitions
 sized to cores (not 200), UTC session timezone so DuckDB oracle
 comparisons are stable, zstd parquet.
+
+:func:`get_spark` starts the JVM and runs no Spark job. Python workers
+are forked by the first job that runs a Python UDF (the distributed
+build's ``mapInArrow``, a streaming ingest, an over-the-gate query
+kernel), as Spark does by default; a session whose builds, queries
+and sidecars stay under the in-process gates never forks one.
 """
 
 from __future__ import annotations
 
-import logging
 import os
 import threading
 from contextlib import contextmanager
@@ -63,7 +68,6 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _warm_python_workers(spark)
     return spark
 
 
@@ -96,34 +100,4 @@ def aqe_disabled(spark: SparkSession):
             if scope[0] == 0:
                 del _AQE_SCOPES[key]
                 spark.conf.set("spark.sql.adaptive.enabled", scope[1])
-
-
-def _warm_python_workers(spark: SparkSession) -> None:
-    """Spawn the session's Python worker pool once, at session
-    creation: one task per core imports numpy/pandas/pyarrow so the
-    fork + import cost (~2-4 s across a 32-core pool) is paid during
-    initialization, not inside the first real mapInPandas/UDF stage of
-    whatever job runs first. Workers are reused across tasks
-    (spark.python.worker.reuse default), so the pool stays warm for
-    the session's lifetime. No data is touched and nothing is cached —
-    this is runtime warmup, the Python-side analogue of JVM warmup."""
-    if getattr(spark, "_dsio_workers_warm", False):
-        return
-    n = spark.sparkContext.defaultParallelism
-
-    def _imports(it):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-        import pyarrow  # noqa: F401
-        yield from it
-
-    try:
-        spark.range(0, n, 1, n).mapInPandas(_imports, "id long").count()
-    except Exception:
-        # warmup is best-effort; never fail session creation — but say
-        # why the first real job will pay the warm-up cost instead
-        logging.getLogger(__name__).warning(
-            "Spark worker warm-up failed; continuing cold",
-            exc_info=True)
-    spark._dsio_workers_warm = True
 

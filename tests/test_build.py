@@ -310,28 +310,6 @@ def test_freeze_golden_ids_are_global(spark, doc_index):
     assert got == want
 
 
-def test_warm_up_failure_is_logged(caplog):
-    """Session warm-up stays best-effort, but a failure is logged with
-    its cause instead of vanishing."""
-    import logging
-
-    from datastream_io_spark.session import _warm_python_workers
-
-    class _Session:
-        class sparkContext:
-            defaultParallelism = 1
-
-        def range(self, *args):
-            raise RuntimeError("no workers here")
-
-    fake = _Session()
-    with caplog.at_level(logging.WARNING):
-        _warm_python_workers(fake)
-    assert fake._dsio_workers_warm
-    assert "warm-up failed" in caplog.text
-    assert "no workers here" in caplog.text
-
-
 def test_aqe_scope_is_reentrant_across_threads(spark):
     """Overlapping AQE-off scopes on one session (concurrent builds,
     finalize inside a build) share one saved value: a scope that leaves

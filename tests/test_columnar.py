@@ -1,8 +1,9 @@
 """Spark-free property tests of the columnar build kernels against their
 independent scalar oracles: the Arrow token stream vs the per-string
 tokenizers, the lane-parallel XXH64 vs the scalar one, the columnar
-block encoder vs its single-run dict form, and the fused tf kernel vs a
-token-by-token count."""
+block encoder vs its single-run dict form, the fused tf kernel vs a
+token-by-token count, and the dictionary's idf column vs one
+``idf_py`` call per term."""
 
 import random
 from collections import defaultdict
@@ -12,6 +13,7 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
+from datastream_io_spark.functions.bm25 import idf_py
 from datastream_io_spark.functions.tokenize import (
     tokenize_arrow,
     tokenize_code,
@@ -27,6 +29,7 @@ from datastream_io_spark.operators.codec import (
     encode_blocks,
     encode_runs,
 )
+from datastream_io_spark.operators.driver_build import _dictionary
 from datastream_io_spark.operators.postings import term_stats_arrow
 
 ORACLE = {"code": tokenize_code, "simple": tokenize_simple}
@@ -211,3 +214,24 @@ def test_term_stats_equals_token_count(mode):
     assert got == want
     assert term_stats_arrow(np.arange(2), pa.array([None, " "]), mode,
                             False) is None
+
+
+@pytest.mark.parametrize("n_docs", [1, 400, 7_654_321])
+def test_dictionary_idf_equals_per_term_idf_py(n_docs):
+    """The idf column, computed once per distinct df, is bit for bit the
+    per-term ``idf_py`` (the same libm ``log1p``); df sums over several
+    posting runs of a term, and most dfs repeat."""
+    rng = np.random.default_rng(n_docs)
+    n_terms = 3000
+    runs = rng.integers(1, 4, n_terms)
+    run_df = rng.integers(1, min(n_docs, 60) + 1, int(runs.sum()))
+    terms = np.repeat([f"t{i:05d}" for i in range(n_terms)], runs)
+    postings = pa.table({"term": pa.array(terms, pa.string()),
+                         "df": pa.array(run_df, pa.int64()),
+                         "cf": pa.array(2 * run_df, pa.int64())})
+    d = _dictionary(postings, n_docs)
+    df = d.column("df").to_numpy()
+    want = np.array([idf_py(int(x), n_docs) for x in df], np.float64)
+    assert d.num_rows == n_terms and len(np.unique(df)) < n_terms / 10
+    assert np.array_equal(d.column("idf").to_numpy().view(np.int64),
+                          want.view(np.int64))

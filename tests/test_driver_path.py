@@ -433,3 +433,37 @@ def test_unknown_partition_value_makes_no_jvm_call(spark, tmp_path):
             rows = df.collect()
         assert sent == [] and rows == []
         assert df.schema == IX._empty_topk(spark, with_doc_cols).schema
+
+
+def test_partitioned_batch_over_gate_skips_subindex_cut(spark, part_root,
+                                                        monkeypatch):
+    """Over the single-task gate, ``PartitionedSearcher.search_many``
+    runs one Spark job, and its subindexes hand ``_merge`` their
+    per-split candidates uncut: ``_merge`` cuts each query's global
+    top-k in Python, so a per-subindex rank window and single-partition
+    sort would be work it redoes. The answers equal the driver path's,
+    and the task count is pinned."""
+    qs = {"a": "window agg", "b": "scan", "c": "merge sort window"}
+
+    def rows(ps):
+        return sorted(tuple(r) for r in ps.search_many(qs, 10,
+                                                       "or").collect())
+
+    want = rows(P.PartitionedSearcher(spark, part_root))
+    monkeypatch.setattr(IX, "SINGLE_TASK_MAX_POSTINGS", 0)
+    ps = P.PartitionedSearcher(spark, part_root)
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    sc.setJobGroup("ps_many", "over-the-gate batch")
+    try:
+        got = rows(ps)
+    finally:
+        sc.setJobGroup(None, None)
+    time.sleep(0.5)  # let the listener bus deliver the job end
+    jobs = list(st.getJobIdsForGroup("ps_many"))
+    tasks = sum(st.getStageInfo(s).numCompletedTasks
+                for j in jobs for s in st.getJobInfo(j).stageIds
+                if st.getStageInfo(s) is not None)
+    assert got == want
+    # 121 tasks with the per-subindex window and single-partition sort
+    assert (len(jobs), tasks) == (1, 70)
